@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-capture utility for the optimization rounds: writes
@@ -16,6 +16,14 @@ import org.apache.spark.sql.execution.ExplainMode
   * capture those selectively.
   */
 object PlanDump {
+  /** The plan text of `df`: with `exec`, `df`'s own QueryExecution runs
+    * first, so the text is the AQE-final plan (`isFinalPlan=true`). */
+  private[graft] def planText(df: DataFrame, exec: Boolean): String =
+    if (exec) {
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
+      df.queryExecution.executedPlan.toString
+    } else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val out = args(1)
@@ -31,18 +39,13 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    // SPARK_GRAFT_PLANDUMP_EXEC=1: EXECUTE the query (noop sink) first
-    // and dump the AQE-FINAL executed plan instead of the initial one —
-    // the evidence mode for claims AQE decides at runtime (stage reuse,
-    // join rewrites, coalescing).
+    // SPARK_GRAFT_PLANDUMP_EXEC=1: execute each query and dump its
+    // AQE-final plan — the evidence mode for claims AQE decides at
+    // runtime (stage reuse, join rewrites, coalescing)
     val exec = sys.env.get("SPARK_GRAFT_PLANDUMP_EXEC").isDefined
     for (n <- names; fn <- SparkEntry.queries.get(n)) {
       try {
-        val df = fn(spark, dir)
-        val p = if (exec) {
-          df.write.format("noop").mode("overwrite").save()
-          df.queryExecution.executedPlan.toString
-        } else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val p = planText(fn(spark, dir), exec)
         java.nio.file.Files.writeString(java.nio.file.Paths.get(out, s"$n.txt"), p)
         println(s"[plandump] $n ok (${p.linesIterator.size} lines)")
       } catch {

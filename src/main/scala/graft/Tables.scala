@@ -35,7 +35,7 @@ object Tables {
     * NTZ note: naive timestamps are interpreted as UTC (the same rule
     * DuckDB's `epoch_ms` applies); sessions must run with
     * `spark.sql.session.timeZone=UTC`, which every entrypoint
-    * (Verify/Bench/Profile/specs) sets.
+    * (Verify/Bench/specs) sets.
     */
   private[graft] def tsMillis(dt: DataType): Column = dt match {
     case LongType         => expr("ts div 1000000") // raw nanos via nanosAsLong

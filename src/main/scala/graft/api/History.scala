@@ -189,7 +189,8 @@ object History {
       s.smoothing match {
         case Some("sma") =>
           val n = s.smoothingParam.map(_.toInt).getOrElse(10)
-          df.withColumn(s.columnName, smaOver(col(s.columnName), n))
+          // quoted: a dotted SignalK path must not parse as struct access
+          df.withColumn(s.columnName, smaOver(col(s"`${s.columnName}`"), n))
         case Some("ema") => df // applied below, all ema specs in one pass
         case None => df
         case Some(other) =>

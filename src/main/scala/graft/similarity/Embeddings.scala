@@ -565,10 +565,13 @@ object Embeddings {
     * to the r20 shape (same graft_dot / sqrt / r6 rounding per
     * (vector, centroid) pair); the fold keeps a strictly-greater ccos
     * and iterates cids ascending (array_sort on the cid-first struct),
-    * which is exactly min_by's (ccos DESC, cid ASC) order. Spec-pinned
-    * zero-exchange in PlanAuditSpec. */
+    * which is exactly min_by's (ccos DESC, cid ASC) order. A degenerate
+    * centroid never captures a row: a zero-norm one has no direction
+    * (its cosine divides by zero) and is dropped before the fold, and
+    * a NaN cosine (non-finite input) never wins it (DegenerateInputSpec).
+    * Spec-pinned zero-exchange in PlanAuditSpec. */
   private[graft] def kmeansEStep(e: DataFrame, cents: DataFrame): DataFrame = {
-    val centsArr = cents.agg(
+    val centsArr = cents.where(col("cnorm2") > 0).agg(
       array_sort(collect_list(struct(col("cid"), col("vc"), col("cnorm2")))).as("cs"))
     e.crossJoin(broadcast(centsArr))
       .withColumn("best", expr(
@@ -577,7 +580,7 @@ object Embeddings {
           |    'ccos', round((graft_dot(v, c.vc) / (sqrt(norm2) * sqrt(c.cnorm2))) * 1e6, 0) / 1e6,
           |    'cid', c.cid)),
           |  named_struct('ccos', cast(-10.0 as double), 'cid', cast(-1 as bigint)),
-          |  (acc, s) -> if(s.ccos > acc.ccos, s, acc))""".stripMargin))
+          |  (acc, s) -> if(NOT isnan(s.ccos) AND s.ccos > acc.ccos, s, acc))""".stripMargin))
       .select(col("vec_id"), col("v"), col("best.cid").as("cid"),
         col("best.ccos").as("ccos"))
   }

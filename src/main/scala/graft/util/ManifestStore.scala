@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StructType
   *   root/<table>/part-*.parquet             — unpartitioned table
   *   root/_shards/<dir>_v<N>_<uniq>.list     — immutable per-dir file list
   *   root/_shards/idx<B>_v<N>_<uniq>.list    — one dir-hash range's dir → shard lines
-  *   root/_manifest_v<N>                     — "#R <buckets>" + bucket → index shard
+  *   root/_manifest_v<N>                     — "#R <buckets> <dirs>" + bucket → index shard
   *   root/_commit_v<N>                       — atomic publish marker
   *   root/_lease                             — fenced single-writer lease
   *
@@ -113,12 +113,13 @@ object ManifestStore {
   /** On-disk protocol format version. Folded into every staged store's
     * fingerprint ([[graft.sources.Staging.stagedDir]]): a protocol
     * format change restages automatically instead of silently serving
-    * a stale-layout store from a previous JVM. (4: the manifest header
-    * gained the dir count — `#R <buckets> <dirs>` — so a publish can
-    * check index growth without flattening the index. 5: index-shard
-    * lines carry each dir's FILE COUNT — `dirKey\tshard\tn` — so the
-    * incremental compactor finds its hot dirs from O(index buckets)
-    * metadata reads, never by reading every dir shard.) */
+    * a stale-layout store from a previous JVM. The layout: the manifest
+    * header carries the dir count — `#R <buckets> <dirs>` — so a
+    * publish checks index growth without flattening the index, and
+    * index-shard lines carry each dir's FILE COUNT — `dirKey\tshard\tn`
+    * — so the incremental compactor finds its hot dirs from O(index
+    * buckets) metadata reads, never by reading every dir shard. Any
+    * other layout fails loudly on read; nothing reinterprets it. */
   private[graft] val LayoutVersion = 5
 
   /** Injected crash points for the crash-window specs:
@@ -194,17 +195,16 @@ object ManifestStore {
       dir => writePartitioned(data(), partCol, dir))
 
   /** The scheduled small-file sweep for one table, INCREMENTAL: only
-    * the HOT dirs — more than `maxFiles` committed files, or a file
-    * count the index predates (legacy lines) — are read and collapsed
-    * to one `sortCols`-sorted file each; an already-compact dir is not
-    * read, not rewritten, and its shard + index line carry forward
-    * verbatim. The hot set is decided UNDER the publish lease from the
-    * manifest's per-dir file counts alone (O(index buckets) metadata
-    * reads, zero data reads), so the sweep's cost tracks the
-    * small-file PROBLEM — O(touched) — never the store size. A fully
-    * compact table publishes NOTHING (no version bump). An
-    * unpartitioned table keeps the whole-table shape (its one dir IS
-    * the table). */
+    * the HOT dirs — more than `maxFiles` committed files — are read
+    * and collapsed to one `sortCols`-sorted file each; an already-
+    * compact dir is not read, not rewritten, and its shard + index
+    * line carry forward verbatim. The hot set is decided UNDER the
+    * publish lease from the manifest's per-dir file counts alone
+    * (O(index buckets) metadata reads, zero data reads), so the
+    * sweep's cost tracks the small-file PROBLEM — O(touched) — never
+    * the store size. A fully compact table publishes NOTHING (no
+    * version bump). An unpartitioned table keeps the whole-table shape
+    * (its one dir IS the table). */
   def compactOp(spark: SparkSession, root: String, table: String,
       partCol: String, sortCols: Seq[String], schema: StructType,
       maxFiles: Int = 1): TableOp =
@@ -221,8 +221,7 @@ object ManifestStore {
         val fs = Fs.of(spark, root)
         val v = committedVersion(fs, root)
         indexIx(fs, root, v)
-          .filter(l => l.dk.startsWith(prefix) &&
-            (l.n < 0 || l.n > maxFiles))
+          .filter(l => l.dk.startsWith(prefix) && l.n > maxFiles)
           .map(_.dk)
       }
       TableOp(table, partCol,
@@ -332,49 +331,47 @@ object ManifestStore {
   }
 
   /** One version's manifest file, parsed: the bucket count `r`, the
-    * store's dir count (−1 when the header predates the count field),
-    * and the (bucket → index-shard) lines. `r` == 0 marks a LEGACY
-    * single-level manifest whose lines are (dirKey → dir-shard)
-    * directly (its count is exact: the line count). */
-  private final case class ManifestIx(r: Int, count: Int,
-      buckets: Seq[(Int, String)], legacy: Seq[(String, String)]) {
-    def exists: Boolean = r > 0 || legacy.nonEmpty
+    * store's dir count, and the (bucket → index-shard) lines. */
+  private final case class ManifestIx(r: Int, count: Int, buckets: Seq[(Int, String)]) {
     /** O(1) bucket → index-shard lookup (ADVICE r20: the per-(version,
       * dir) cleanup/GC paths called a linear collectFirst per lookup). */
     lazy val bucketMap: Map[Int, String] = buckets.toMap
   }
-  private val EmptyManifest = ManifestIx(0, 0, Seq.empty, Seq.empty)
+  private val EmptyManifest = ManifestIx(0, 0, Seq.empty)
 
-  private def splitTab(l: String, mp: Path): (String, String) = {
-    val i = l.indexOf('\t')
-    require(i > 0, s"malformed manifest line at $mp: $l")
-    (l.substring(0, i), l.substring(i + 1))
+  /** The `n` tab-separated fields of one manifest or index line; any
+    * other shape is a layout this store never writes. */
+  private def fields(l: String, n: Int, what: String, at: Path): Array[String] = {
+    val f = l.split('\t')
+    require(f.length == n,
+      s"unsupported $what layout at $at (layout v$LayoutVersion: $n fields): $l")
+    f
   }
 
+  /** Version `v`'s manifest: the `#R <buckets> <dirs>` header, then
+    * one `bucket → index shard` line per bucket. */
   private def readManifest(fs: FileSystem, root: String, v: Int): ManifestIx = {
     val mp = manifestPath(root, v)
     if (v <= 0 || !fs.exists(mp)) EmptyManifest
-    else readLines(fs, mp) match {
-      case head +: rest if head.startsWith("#R\t") =>
-        val hf = head.split('\t')
-        ManifestIx(hf(1).toInt, if (hf.length > 2) hf(2).toInt else -1,
-          rest.map(l => { val (b, s) = splitTab(l, mp); (b.toInt, s) }), Seq.empty)
-      case lines => // legacy single-level manifest: readable, never written
-        ManifestIx(0, lines.size, Seq.empty, lines.map(splitTab(_, mp)))
+    else {
+      val lines = readLines(fs, mp)
+      val hf = fields(lines.headOption.getOrElse(""), 3, "manifest header", mp)
+      require(hf(0) == "#R", s"unsupported manifest layout at $mp: no '#R' header")
+      ManifestIx(hf(1).toInt, hf(2).toInt, lines.tail.map { l =>
+        val f = fields(l, 2, "manifest line", mp)
+        (f(0).toInt, f(1))
+      })
     }
   }
 
   /** One parsed index-shard line: dir key, the dir's shard file, and
-    * (LayoutVersion ≥ 5) the dir's committed FILE COUNT — the metadata
-    * the incremental compactor selects its hot dirs by. `n` = −1 for
-    * lines written before the count field existed. */
+    * the dir's committed FILE COUNT — the metadata the incremental
+    * compactor selects its hot dirs by. */
   private[graft] final case class IxLine(dk: String, shard: String, n: Int)
 
   private def parseIx(l: String, mp: Path): IxLine = {
-    val parts = l.split('\t')
-    require(parts.length >= 2, s"malformed index line at $mp: $l")
-    IxLine(parts(0), parts(1),
-      if (parts.length > 2) parts(2).toInt else -1)
+    val f = fields(l, 3, "index line", mp)
+    IxLine(f(0), f(1), f(2).toInt)
   }
 
   /** Parsed (dk → IxLine) map of one index shard, memoized per (root,
@@ -414,8 +411,7 @@ object ManifestStore {
     * versions) as absent. */
   private def dirShardOf(fs: FileSystem, root: String, m: ManifestIx,
       dk: String, lax: Boolean = false): Option[String] =
-    if (m.r == 0) m.legacy.collectFirst { case (k, s) if k == dk => s }
-    else m.bucketMap.get(bucketOf(dk, m.r)).flatMap { ix =>
+    m.bucketMap.get(bucketOf(dk, m.r)).flatMap { ix =>
       ixMapOf(fs, root, ix, lax).flatMap(_.get(dk)).map(_.shard)
     }
 
@@ -425,19 +421,11 @@ object ManifestStore {
     * [[dirShardOf]]. */
   private def indexIx(fs: FileSystem, root: String, v: Int): Seq[IxLine] = {
     val m = readManifest(fs, root, v)
-    if (m.r == 0) m.legacy.map { case (dk, s) => IxLine(dk, s, -1) }
-    else {
-      val fetched = fetchShards(fs, root, m.buckets.map(_._2))
-      m.buckets.flatMap { case (_, idxShard) =>
-        fetched(idxShard)
-          .map(parseIx(_, new Path(shardsDir(root), idxShard)))
-      }
+    val fetched = fetchShards(fs, root, m.buckets.map(_._2))
+    m.buckets.flatMap { case (_, idxShard) =>
+      fetched(idxShard).map(parseIx(_, new Path(shardsDir(root), idxShard)))
     }
   }
-
-  /** Version `v`'s index: ordered (dirKey, dirShardName) pairs. */
-  private def indexAt(fs: FileSystem, root: String, v: Int): Seq[(String, String)] =
-    indexIx(fs, root, v).map(l => l.dk -> l.shard)
 
   /** The committed (bucket count, bucket → index shard) level — the
     * index-sharding contract's observable surface. */
@@ -557,28 +545,31 @@ object ManifestStore {
     * actually ran, and that the small-store path never pays it). */
   private[graft] val resolveJobRuns = new java.util.concurrent.atomic.AtomicLong
 
-  /** Resolve many shard files as a Spark job: executors read and line-
-    * split each shard; contents return to the driver exactly as the
-    * serial path would produce them (the driver must hold the resolved
-    * snapshot either way — this distributes the READS, not the list).
-    * Falls back to the pool when no session is active. */
+  /** Resolve many shard files as a Spark job: each task opens its
+    * shards through the store's FileSystem with [[readLines]], so
+    * contents return exactly as the serial path reads them (the driver
+    * holds the resolved snapshot either way — this distributes the
+    * READS, not the list). Shard names travel as data, never as a path
+    * string, so any root resolves as it does serially. A missing shard
+    * is left out. Falls back to the pool when no session is active. */
   private def fetchShardsJob(fs: FileSystem, root: String,
       misses: Seq[String]): Option[Map[String, Seq[String]]] =
     SparkSession.getActiveSession.map { sp =>
       resolveJobRuns.incrementAndGet()
       // qualified against the STORE's filesystem, not the session default
-      val paths = misses.map(s =>
-        fs.makeQualified(new Path(shardsDir(root), s)).toString)
-      val minParts = math.min(misses.size,
+      val dir = fs.makeQualified(shardsDir(root))
+      val conf = new org.apache.spark.util.SerializableConfiguration(fs.getConf)
+      val parts = math.min(misses.size,
         math.max(sp.sparkContext.defaultParallelism, 1))
-      val byPath = sp.sparkContext
-        .wholeTextFiles(paths.mkString(","), minParts)
-        .collect()
+      val got = sp.sparkContext.parallelize(misses, parts).mapPartitions { names =>
+        val dfs = dir.getFileSystem(conf.value)
+        names.flatMap { s =>
+          try Some(s -> readLines(dfs, new Path(dir, s)))
+          catch { case _: java.io.FileNotFoundException => None }
+        }
+      }.collect()
       shardDiskReads.addAndGet(misses.size)
-      byPath.map { case (p, content) =>
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        name -> content.linesIterator.map(_.trim).filter(_.nonEmpty).toList
-      }.toMap
+      got.toMap
     }
 
   /** Read many shards, fetching cache misses in parallel — on the
@@ -622,9 +613,9 @@ object ManifestStore {
 
   /** The root-relative data-file list of version `v`. */
   private[graft] def filesAt(fs: FileSystem, root: String, v: Int): Seq[String] = {
-    val ix = indexAt(fs, root, v)
-    val fetched = fetchShards(fs, root, ix.map(_._2))
-    ix.flatMap { case (_, shard) => fetched(shard) }
+    val shards = indexIx(fs, root, v).map(_.shard)
+    val fetched = fetchShards(fs, root, shards)
+    shards.flatMap(fetched)
   }
 
   // ----------------------------------------------------------------
@@ -697,7 +688,7 @@ object ManifestStore {
     * untouched dirs' shards). */
   private[graft] def shardIndex(spark: SparkSession, root: String): Seq[(String, String)] = {
     val fs = Fs.of(spark, root)
-    indexAt(fs, root, committedVersion(fs, root))
+    indexIx(fs, root, committedVersion(fs, root)).map(l => l.dk -> l.shard)
   }
 
   // ----------------------------------------------------------------
@@ -810,16 +801,32 @@ object ManifestStore {
       // every manifest still on disk — committed, grace, or a crashed
       // publish's (its own cleanup belongs to the next publish, not
       // this sweep) — protects the shards it references
-      val live: Set[String] = manifestVersions(fs, root).flatMap { w =>
-        val m = readManifest(fs, root, w)
-        val idx = m.buckets.map(_._2)
-        idx ++ idx.flatMap(ix => shardLinesLax(fs, root, ix)
-          .map(parseIx(_, new Path(shardsDir(root), ix)).shard))
-      }.toSet
-      for (s <- fs.listStatus(shardsDir(root)).map(_.getPath.getName)
-          if !live.contains(s))
-        fs.delete(new Path(shardsDir(root), s), false)
+      val vs = manifestVersions(fs, root)
+      val committed = vs.filter(w => fs.exists(markerPath(root, w)))
+      val v = committed.maxOption.getOrElse(0)
+      sweepShards(fs, root, vs, w => w < v - 1 || !committed.contains(w))
     } finally releaseLease(fs, root, token)
+  }
+
+  /** Delete every `_shards` file no manifest of `versions` references,
+    * as an index shard or as a dir shard one lists. A non-`lax` version
+    * (committed live or grace) fails loudly on a missing index shard
+    * rather than shrink the live set, which is complete before the
+    * first delete: a store this cannot read loses no file. */
+  private def sweepShards(fs: FileSystem, root: String, versions: Seq[Int],
+      lax: Int => Boolean): Unit = {
+    val live: Set[String] = versions.flatMap { w =>
+      val idx = readManifest(fs, root, w).buckets.map(_._2)
+      val lines: Seq[(String, Seq[String])] =
+        if (lax(w)) idx.map(ix => ix -> shardLinesLax(fs, root, ix))
+        else fetchShards(fs, root, idx).toSeq
+      idx ++ lines.flatMap { case (ix, ls) =>
+        ls.map(parseIx(_, new Path(shardsDir(root), ix)).shard)
+      }
+    }.toSet
+    for (s <- fs.listStatus(shardsDir(root)).map(_.getPath.getName)
+        if !live.contains(s))
+      fs.delete(new Path(shardsDir(root), s), false)
   }
 
   // ----------------------------------------------------------------
@@ -904,28 +911,19 @@ object ManifestStore {
       // shards verbatim, so only the index shards no committed manifest
       // references can hold its own work — read those, not the store
       // (ADVICE r18: deleting carried shards broke every untouched dir;
-      // the per-line committed check below spares them). Reads are
-      // missing-tolerant, so a cleanup interrupted mid-delete re-runs
-      // idempotently instead of throwing on a half-cleaned manifest.
+      // the per-line committed check spares them). Reads of an
+      // uncommitted manifest are missing-tolerant, so a cleanup
+      // interrupted mid-delete re-runs idempotently ([[retire]]).
       // Markers whose manifest is gone (a fenced straggler's leftovers)
       // are dangling — readers already ignore them; delete them so the
-      // version they squatted on publishes cleanly.
+      // version they squatted on publishes cleanly. A crash inside the
+      // manifest write tears it (no marker can follow a torn manifest):
+      // it is dropped unread, its own shards left to sweepStrandedShards.
       for (w <- allVs if !committedVs.contains(w)) {
-        val mw = readManifest(fs, root, w)
-        val ownIdx = mw.buckets.map(_._2).filterNot(committedIdxShards.contains)
-        val ownLines: Seq[(String, String)] =
-          if (mw.r == 0) mw.legacy
-          else ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
-            .map(l => { val p = parseIx(l, new Path(shardsDir(root), ix))
-              (p.dk, p.shard) }))
-        for ((dk, ds) <- ownLines
-            if !committedDirShards(dk).exists(_._2 == ds)) {
-          for (f <- shardLinesLax(fs, root, ds) if !referencedIn(dk).contains(f))
-            fs.delete(new Path(root, f), false)
-          fs.delete(new Path(shardsDir(root), ds), false)
-        }
-        ownIdx.foreach(ix => fs.delete(new Path(shardsDir(root), ix), false))
-        fs.delete(manifestPath(root, w), false)
+        val mw = try readManifest(fs, root, w)
+          catch { case _: IllegalArgumentException => EmptyManifest }
+        retire(fs, root, w, mw, committedIdxShards,
+          (dk, ds) => committedDirShards(dk).exists(_._2 == ds), referencedIn)
       }
       for (n <- fs.listStatus(new Path(root)).map(_.getPath.getName)
           if n.startsWith("_commit_v") &&
@@ -1029,28 +1027,21 @@ object ManifestStore {
         dk -> (kept ++ newFilesOf.getOrElse(dk, Seq.empty))
       }.toMap
       // dir-count bookkeeping WITHOUT flattening the index: the header
-      // carries the committed count; a pre-count manifest pays one full
-      // resolution and the count is written forward from here on
-      val curCount: Int =
-        if (!curM.exists) 0
-        else if (curM.r == 0 || curM.count < 0) curIndexFull.size
-        else curM.count
+      // carries the committed count
       val dirWasThere: Map[String, Boolean] = changedDirs.map { dk =>
-        dk -> (curM.exists && dirShardOf(fs, root, curM, dk).isDefined)
+        dk -> dirShardOf(fs, root, curM, dk).isDefined
       }.toMap
-      val newCount = curCount +
+      val newCount = curM.count +
         changedDirs.count(dk => !dirWasThere(dk) && mergedOf(dk).nonEmpty) -
         changedDirs.count(dk => dirWasThere(dk) && mergedOf(dk).isEmpty)
       val newR = math.max(math.max(curM.r, 1), targetBuckets(newCount))
       def idxShardName(b: Int): String =
         s"idx${b}_v${vNew}_${java.util.UUID.randomUUID().toString.take(8)}.list"
-      // index lines carry each dir's file count forward (−1 = unknown,
-      // a pre-v5 line carried through a growth step)
+      // index lines carry each dir's file count forward
       def writeIdxShard(b: Int, lines: Seq[IxLine]): String = {
         val s = idxShardName(b)
         writeLines(fs, new Path(shardsDir(root), s),
-          lines.sortBy(_.dk).map(l =>
-            if (l.n >= 0) s"${l.dk}\t${l.shard}\t${l.n}" else s"${l.dk}\t${l.shard}"))
+          lines.sortBy(_.dk).map(l => s"${l.dk}\t${l.shard}\t${l.n}"))
         s
       }
       // INDEX-LEVEL sharding: the manifest file is (bucket → index
@@ -1061,7 +1052,7 @@ object ManifestStore {
       // growth step (powers of two, ~indexBucketTarget dirs/bucket)
       // re-buckets everything once, amortized over the doublings.
       val bucketLines: Seq[(Int, String)] =
-        if (curM.exists && curM.r == newR) {
+        if (curM.r == newR) {
           val byBucket: Map[Int, Seq[String]] =
             changedDirs.groupBy(dk => bucketOf(dk, newR))
           val curBuckets: Map[Int, String] = curM.buckets.toMap
@@ -1092,7 +1083,7 @@ object ManifestStore {
             }
           }
         } else {
-          // growth / first publish / legacy upgrade: one full re-bucket
+          // growth / first publish: one full re-bucket
           val changedSet = changedDirs.toSet
           val newIndex = scala.collection.mutable.LinkedHashMap[String, IxLine]()
           for (l <- curIndexFull if !changedSet(l.dk))
@@ -1151,31 +1142,13 @@ object ManifestStore {
       // (never present in an expiring w — the new-file listing filtered
       // every committed reference) — so diffing an expiring w against v
       // alone is sufficient, and only the shards w does NOT share with
-      // v are read at file level. Reads are missing-tolerant: a GC
-      // interrupted mid-delete re-runs idempotently on the next publish
-      // (the manifest is deleted LAST, so w stays discoverable).
-      for (w <- committedVs if w < vNew - 1) {
-        val mw = committedMs(w)
-        val curIdxNames: Set[String] = curM.buckets.map(_._2).toSet
-        val ownIdx = mw.buckets.map(_._2).filterNot(curIdxNames.contains)
-        val ownLines: Seq[(String, String)] =
-          if (mw.r == 0) mw.legacy
-          else ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
-            .map(l => { val p = parseIx(l, new Path(shardsDir(root), ix))
-              (p.dk, p.shard) }))
-        for ((dk, ds) <- ownLines) {
-          val curDs = dirShardOf(fs, root, curM, dk)
-          if (!curDs.contains(ds)) {
-            val keep: Set[String] =
-              curDs.toSeq.flatMap(s => shardFiles(fs, root, s)).toSet
-            for (f <- shardLinesLax(fs, root, ds) if !keep.contains(f))
-              fs.delete(new Path(root, f), false)
-            fs.delete(new Path(shardsDir(root), ds), false)
-          }
-        }
-        ownIdx.foreach(ix => fs.delete(new Path(shardsDir(root), ix), false))
-        fs.delete(manifestPath(root, w), false)
-      }
+      // v are read at file level. A GC interrupted mid-delete re-runs
+      // idempotently on the next publish ([[retire]]).
+      val curIdx: Set[String] = curM.buckets.map(_._2).toSet
+      for (w <- committedVs if w < vNew - 1)
+        retire(fs, root, w, committedMs(w), curIdx,
+          (dk, ds) => dirShardOf(fs, root, curM, dk).contains(ds),
+          dk => curFilesOf(dk).toSet)
       // stale markers (including data-less ones a crashed GC stranded)
       for (n <- fs.listStatus(new Path(root)).map(_.getPath.getName)
           if n.startsWith("_commit_v") &&
@@ -1194,17 +1167,32 @@ object ManifestStore {
       // O(touched). Static partition-scoped stores' crash residue is
       // caught by [[sweepStrandedShards]], the explicit operator
       // deep-clean.
-      if ((ops.exists(o => o.touched.isEmpty && o.partCol.nonEmpty) ||
-            !(curM.exists && curM.r == newR)) &&
-          fs.exists(shardsDir(root))) {
-        val liveIx = bucketLines.map(_._2).toSet ++ curM.buckets.map(_._2)
-        val liveDir = (indexAt(fs, root, vNew).iterator ++
-          indexAt(fs, root, v).iterator).map(_._2).toSet
-        for (s <- fs.listStatus(shardsDir(root)).map(_.getPath.getName)
-            if !liveIx.contains(s) && !liveDir.contains(s))
-          fs.delete(new Path(shardsDir(root), s), false)
-      }
+      if (ops.exists(o => o.touched.isEmpty && o.partCol.nonEmpty) ||
+          curM.r != newR)
+        sweepShards(fs, root, Seq(v, vNew), _ => false)
     } finally releaseLease(fs, root, token)
+  }
+
+  /** Retire version `w`: its index shards outside `liveIdx`, the dir
+    * shards they list that `liveDirShard(dk, ds)` rejects with those
+    * shards' files outside `liveFiles(dk)`, then the manifest LAST.
+    * Reads of `w` are missing-tolerant, so a retire that crashed
+    * mid-delete re-runs idempotently on the next publish. */
+  private def retire(fs: FileSystem, root: String, w: Int, mw: ManifestIx,
+      liveIdx: Set[String], liveDirShard: (String, String) => Boolean,
+      liveFiles: String => Set[String]): Unit = {
+    val ownIdx = mw.buckets.map(_._2).filterNot(liveIdx)
+    for (ix <- ownIdx; l <- shardLinesLax(fs, root, ix)) {
+      val p = parseIx(l, new Path(shardsDir(root), ix))
+      if (!liveDirShard(p.dk, p.shard)) {
+        lazy val keep = liveFiles(p.dk)
+        for (f <- shardLinesLax(fs, root, p.shard) if !keep(f))
+          fs.delete(new Path(root, f), false)
+        fs.delete(new Path(shardsDir(root), p.shard), false)
+      }
+    }
+    ownIdx.foreach(ix => fs.delete(new Path(shardsDir(root), ix), false))
+    fs.delete(manifestPath(root, w), false)
   }
 
   // ----------------------------------------------------------------

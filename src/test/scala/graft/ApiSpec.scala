@@ -191,6 +191,19 @@ class ApiSpec extends SparkSpec {
     assert(plain.length > 2)
   }
 
+  test("sma over a dotted SignalK path matches a hand-computed trailing mean") {
+    import spark.implicits._
+    val path = "navigation.speedOverGround"
+    val series = Seq(1.0, 2.0, 3.0, 4.0, 5.0).zipWithIndex.map { case (x, i) =>
+      ("v1", path, i * 1000L, x, i.toLong)
+    }.toDF("context", "path", "ts_ms", "value", "order_id")
+    val spec = PathSpec.parse(s"$path:average:sma:3")
+    val out = History.values(series, "v1", Seq(spec), 0L, 5000L, 1000L)
+      .collect().map(r => (r.getLong(0), r.getAs[Double](spec.columnName))).toSeq
+    // trailing 3-bucket mean of 1..5
+    assert(out == Seq(0L -> 1.0, 1000L -> 1.5, 2000L -> 2.0, 3000L -> 3.0, 4000L -> 4.0), out)
+  }
+
   test("unknown smoothing and empty specs are rejected") {
     intercept[IllegalArgumentException](PathSpec.parse("p:average:loess:0.5"))
     intercept[IllegalArgumentException] {

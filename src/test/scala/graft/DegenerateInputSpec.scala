@@ -162,4 +162,20 @@ class DegenerateInputSpec extends SparkSpec {
       .write.mode("overwrite").parquet(one + "/documents.parquet")
     assert(graft.dedup.KmvOverlap.kmvOverlap(spark, one).count() === 0)
   }
+
+  test("kmeans E-step: a zero-norm or NaN centroid never captures a row") {
+    graft.functions.DotProduct.register(spark)
+    val e = Seq((1L, Seq(1.0, 0.0), 1.0), (2L, Seq(0.0, 1.0), 1.0))
+      .toDF("vec_id", "v", "norm2")
+    // cids 1 and 2 fold first: cid 1 has norm 0 (its cosine is 0/0),
+    // cid 2 a NaN element (its cosine is NaN, which Spark orders above
+    // every number)
+    val cents = Seq((1L, Seq(0.0, 0.0), 0.0),
+        (2L, Seq(Double.NaN, 1.0), Double.NaN), (3L, Seq(1.0, 1.0), 2.0))
+      .toDF("cid", "vc", "cnorm2")
+    val got = graft.similarity.Embeddings.kmeansEStep(e, cents)
+      .select("vec_id", "cid", "ccos").orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got == Seq((1L, 3L, 0.707107), (2L, 3L, 0.707107)), got)
+  }
 }

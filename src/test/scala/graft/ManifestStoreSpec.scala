@@ -718,4 +718,81 @@ class ManifestStoreSpec extends SparkSpec {
       "no dynamic partition pruning on the manifest scan:\n" + plan.take(2000))
     assert(joined.collect().map(_.getLong(1)).toSet == Set(2L))
   }
+
+  test("only the written layout is read: a headerless manifest, a count-less header or a 2-field index line fails loudly, and sweepStrandedShards then deletes no file") {
+    def allFiles(root: String): Set[String] = {
+      val fs = graft.util.Fs.of(spark, root)
+      val b = Set.newBuilder[String]
+      val it = fs.listFiles(new Path(root), true)
+      while (it.hasNext) b += it.next().getPath.toString
+      b.result()
+    }
+    def rewrite(root: String, rel: String)(f: Seq[String] => Seq[String]): Unit = {
+      val fs = graft.util.Fs.of(spark, root)
+      val p = new Path(root, rel)
+      val in = fs.open(p)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      val out = fs.create(p, true)
+      try out.write(f(lines).mkString("\n").getBytes("UTF-8")) finally out.close()
+    }
+    def store(): String = {
+      val root = tmp()
+      ManifestStore.append(spark, root, "b", df((1L, 1.0, 0), (2L, 2.0, 1)))
+      root
+    }
+    // single-level manifest: (dirKey → dir shard) lines, no header
+    val headerless = store()
+    val dirLines = ManifestStore.shardIndex(spark, headerless)
+      .map { case (dk, s) => s"$dk\t$s" }
+    rewrite(headerless, "_manifest_v1")(_ => dirLines)
+    // a header without the dir count
+    val countless = store()
+    rewrite(countless, "_manifest_v1")(ls => ls.head.split('\t').take(2).mkString("\t") +: ls.tail)
+    // index lines without the per-dir file count
+    val twoField = store()
+    val (_, buckets) = ManifestStore.bucketIndex(spark, twoField)
+    rewrite(twoField, s"_shards/${buckets.head._2}")(
+      _.map(_.split('\t').take(2).mkString("\t")))
+    for ((root, what) <- Seq(headerless -> "manifest header",
+        countless -> "manifest header", twoField -> "index line")) {
+      ManifestStore.clearShardCache()
+      val e = intercept[IllegalArgumentException](ManifestStore.files(spark, root))
+      assert(e.getMessage.contains(s"unsupported $what layout"), e.getMessage)
+      val before = allFiles(root)
+      intercept[IllegalArgumentException](ManifestStore.sweepStrandedShards(spark, root))
+      assert(allFiles(root) == before, s"the sweep deleted files of an unreadable store ($what)")
+    }
+  }
+
+  test("a manifest torn by a crash inside its write (empty, no marker) is dropped by the next publish") {
+    val root = tmp()
+    ManifestStore.append(spark, root, "b", df((1L, 1.0, 0)))
+    val fs = graft.util.Fs.of(spark, root)
+    fs.create(new Path(root, "_manifest_v2"), false).close() // created, never written
+    ManifestStore.clearShardCache()
+    ManifestStore.append(spark, root, "b", df((2L, 2.0, 1)))
+    assert(ManifestStore.committedVersion(fs, root) == 2)
+    assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,1]"))
+  }
+
+  test("cold job-path resolution of a root holding ',' and '[' is bit-identical to the pool path") {
+    val root = tmp() + "/a,b[1]"
+    ManifestStore.append(spark, root, "b",
+      df((0 until 24).map(i => (i.toLong, i.toDouble, i)): _*))
+    val savedThr = ManifestStore.resolveJobThreshold
+    try {
+      ManifestStore.resolveJobThreshold = Int.MaxValue
+      ManifestStore.clearShardCache()
+      val serialFiles = ManifestStore.files(spark, root)
+      ManifestStore.resolveJobThreshold = 8
+      ManifestStore.clearShardCache()
+      val jobsBefore = ManifestStore.resolveJobRuns.get()
+      val jobFiles = ManifestStore.files(spark, root)
+      assert(ManifestStore.resolveJobRuns.get() > jobsBefore,
+        "cold resolution above the threshold did not use the job path")
+      assert(serialFiles.size == 24)
+      assert(jobFiles == serialFiles, "job-path snapshot differs from the pool path")
+    } finally ManifestStore.resolveJobThreshold = savedThr
+  }
 }
