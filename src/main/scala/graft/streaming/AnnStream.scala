@@ -4,7 +4,6 @@ import graft.similarity.{Embeddings, StoredIndex}
 import graft.util.{DeleteLog, ManifestStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live IVFADC index maintenance — the streaming twin of
   * [[StoredIndex.annIvfPqStored]], closing the one index family that
@@ -81,18 +80,9 @@ object AnnStream {
     // metadata a real deployment ships before ingest starts)
     centroids.write.mode("overwrite").parquet(s"$base/centroids")
     codebook.write.mode("overwrite").parquet(s"$base/codebook")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch.sparkSession, base, batch)
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt_ann").toString))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Slices.drain(spark, srcDir, schema, checkpoint) { (batch, _) =>
+      ingestBatch(batch.sparkSession, base, batch)
+    }
   }
 
   /** One trigger's ingest — ONE atomic publish spanning lists AND

@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live two-level threshold watch — the streaming twin of
   * [[graft.operators.Sessions.thresholdBand]]: the Schmitt-trigger
@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.Trigger
   * carry-in row that sorts strictly first (ts = −1 against real epoch
   * timestamps) and is decisive AT the carried state; the batch then
   * reruns the batch operator's window core and appends its transitions
-  * to a result store before the atomic state swap. Carried state makes
+  * to a result table in the state's own commit. Carried state makes
   * trigger-at-a-time ≡ one-shot (the carry row reproduces exactly the
   * prefix's last-non-null), so the drained transition log is
   * bit-identical to the batch operator and the 16b oracle carries
@@ -33,74 +33,48 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object BandStream {
 
-  private val tableRef = new java.util.concurrent.atomic.AtomicReference[String]()
-
   // --------------------------------------------------------------- #78
   def streamThresholdBand(spark: SparkSession, dir: String): DataFrame = {
     val (lo, hi) = (50.0, 150.0)
     val ev = graft.Tables.events(spark, dir)
       .where(col("event_type") === "error")
       .select("user_id", "ts_ms", "event_id", "value")
-    val sch = ev.schema
+    val stateSchema = ev.select(col("user_id"), col("event_id").as("cur_state")).schema
+    val transSchema = ev.select(col("user_id"), col("ts_ms"),
+      lit("").as("transition"), col("value")).schema
     val srcDir = Slices.stage(ev, "band", 3)
-    val base = java.nio.file.Files.createTempDirectory("graft_band_store").toString
-    val stateStore = base + "/state"; val transStore = base + "/trans"
-    ev.limit(0).select(col("user_id"), col("event_id").as("cur_state"))
-      .write.parquet(stateStore)
-    ev.limit(0).select(col("user_id"), col("ts_ms"),
-      lit("").as("transition"), col("value"))
-      .write.parquet(transStore)
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-    }
-    val q = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        // carry-in: one pseudo-row per known user, sorting strictly
-        // first (ts −1 < any epoch ts) and decisive AT the carried
-        // state — the batch's first real row lags against it
-        val carry = sp.read.parquet(stateStore)
-          .select(col("user_id"), lit(-1L).as("ts_ms"), lit(-1L).as("event_id"),
-            lit(null).cast("double").as("value"), col("cur_state").as("decisive"))
-        val u = batch.localCheckpoint()
-          .withColumn("decisive",
-            when(col("value") < lo, 1).when(col("value") > hi, 0))
-          .unionByName(carry)
-        val w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
-        val wp = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val st = u
-          .withColumn("state", coalesce(last("decisive", ignoreNulls = true).over(wp), lit(0)))
-          .withColumn("prev_state", coalesce(lag("state", 1).over(w), lit(0)))
-          .localCheckpoint()
+    val root = java.nio.file.Files.createTempDirectory("graft_band_store").toString
+    Slices.drainInto(spark, srcDir, ev.schema, root) { (batch, snap) =>
+      // carry-in: one pseudo-row per known user, sorting strictly
+      // first (ts −1 < any epoch ts) and decisive AT the carried
+      // state — the batch's first real row lags against it
+      val carry = snap.read("state", stateSchema)
+        .select(col("user_id"), lit(-1L).as("ts_ms"), lit(-1L).as("event_id"),
+          lit(null).cast("double").as("value"), col("cur_state").as("decisive"))
+      val u = batch.localCheckpoint()
+        .withColumn("decisive",
+          when(col("value") < lo, 1).when(col("value") > hi, 0))
+        .unionByName(carry)
+      val w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
+      val wp = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val st = u
+        .withColumn("state", coalesce(last("decisive", ignoreNulls = true).over(wp), lit(0)))
+        .withColumn("prev_state", coalesce(lag("state", 1).over(w), lit(0)))
+        .localCheckpoint()
+      Seq(
         // a carry row is never itself a transition (its change was
         // emitted by the trigger that produced it)
-        val trans = st.where(col("ts_ms") >= 0 && col("state") =!= col("prev_state"))
-          .select(col("user_id"), col("ts_ms"),
-            when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
-            col("value"))
-        trans.coalesce(1).write.mode("append").parquet(transStore)
+        ManifestStore.appendOp("trans", "", () => Nil, () =>
+          st.where(col("ts_ms") >= 0 && col("state") =!= col("prev_state"))
+            .select(col("user_id"), col("ts_ms"),
+              when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
+              col("value"))),
         // new per-user state = the last row's running state
-        val newState = st
+        ManifestStore.replaceTableOp("state", "", () => st
           .groupBy("user_id")
-          .agg(max_by(col("state"), struct(col("ts_ms"), col("event_id"))).as("cur_state"))
-        val sTmp = stateStore + "_next"
-        newState.coalesce(1).write.mode("overwrite").parquet(sTmp)
-        swap(sTmp, stateStore)
-        ()
-      }
-      .option("checkpointLocation", {
-        val d = java.nio.file.Files.createTempDirectory("graft_ckpt_band")
-        tableRef.set(d.toString); d.toString
-      })
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(transStore)
+          .agg(max_by(col("state"), struct(col("ts_ms"), col("event_id"))).as("cur_state"))))
+    }
+    ManifestStore.readTable(spark, root, "trans", transSchema)
       .orderBy("user_id", "ts_ms")
   }
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.operators.Funnel
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live funnel maintenance — the streaming twin of
   * [[graft.operators.Funnel.funnel]]: per-stage conversion kept
@@ -20,11 +20,11 @@ import org.apache.spark.sql.streaming.Trigger
   * purchase — ≤ 3 rows per converting user): a non-chosen event can
   * never become a stage minimum later, so carrying only the chosen
   * rows is lossless, and each trigger simply reruns the batch
-  * operator's chained-window core over state ∪ batch. Store swaps
-  * atomically per trigger (tier-maintenance discipline); the final
-  * drain reuses the BATCH oracle verbatim. At 100 TB/day the state is
-  * ≤ 3 rows per user — user-count-bounded like the
-  * [[MarkovStream]] carry-in, never throughput-bounded.
+  * operator's chained-window core over state ∪ batch, committed
+  * through [[Slices.commit]]; the final drain reuses the BATCH oracle
+  * verbatim. At 100 TB/day the state is ≤ 3 rows per user —
+  * user-count-bounded like the [[MarkovStream]] carry-in, never
+  * throughput-bounded.
   */
 object FunnelStream {
 
@@ -34,9 +34,7 @@ object FunnelStream {
       .where(col("event_type").isin("view", "click", "purchase"))
       .select("user_id", "event_type", "ts_ms", "value")
     val srcDir = Slices.stage(ev, "funnel", 3)
-    val store = java.nio.file.Files.createTempDirectory("graft_funnel_store").toString + "/state"
-    ev.limit(0).write.parquet(store)
-    val fs = graft.util.Fs.of(spark, store)
+    val root = java.nio.file.Files.createTempDirectory("graft_funnel_store").toString
     def staged(u: DataFrame): DataFrame = {
       val w = Window.partitionBy("user_id")
       u.withColumn("t1", min(when(col("event_type") === "view", col("ts_ms"))).over(w))
@@ -45,35 +43,19 @@ object FunnelStream {
         .withColumn("t3", min(when(col("event_type") === "purchase" &&
           col("value") > 150.0 && col("ts_ms") >= col("t2"), col("ts_ms"))).over(w))
     }
-    val q = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val st = staged(sp.read.parquet(store).unionByName(batch.localCheckpoint()))
-        // keep only the argmin event rows — the lossless funnel state
-        val next = st.where(
-            (col("event_type") === "view" && col("ts_ms") === col("t1")) ||
-            (col("event_type") === "click" && col("value") > 120.0 &&
-              col("ts_ms") === col("t2")) ||
-            (col("event_type") === "purchase" && col("value") > 150.0 &&
-              col("ts_ms") === col("t3")))
-          .select("user_id", "event_type", "ts_ms", "value")
-        val tmp = store + "_next"
-        next.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store))
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt_funnel").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Slices.drainInto(spark, srcDir, ev.schema, root) { (batch, snap) =>
+      val st = staged(snap.read("state", ev.schema).unionByName(batch.localCheckpoint()))
+      // keep only the argmin event rows — the lossless funnel state
+      Seq(ManifestStore.replaceTableOp("state", "", () => st.where(
+          (col("event_type") === "view" && col("ts_ms") === col("t1")) ||
+          (col("event_type") === "click" && col("value") > 120.0 &&
+            col("ts_ms") === col("t2")) ||
+          (col("event_type") === "purchase" && col("value") > 150.0 &&
+            col("ts_ms") === col("t3")))
+        .select("user_id", "event_type", "ts_ms", "value")))
+    }
     // drain: the batch operator's roll-up over the argmin state rows
-    val perUser = staged(spark.read.parquet(store))
+    val perUser = staged(ManifestStore.readTable(spark, root, "state", ev.schema))
       .groupBy("user_id")
       .agg(min("t1").as("t1"), min("t2").as("t2"), min("t3").as("t3"))
     perUser.agg(

@@ -4,7 +4,6 @@ import graft.similarity.{Embeddings, GraphStore, KnnGraph}
 import graft.util.{DeleteLog, ManifestStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Incremental kNN-graph maintenance — the streaming twin of
@@ -104,18 +103,9 @@ object GraphStream {
     graft.functions.BoundedTopK.register(spark)
     graft.functions.DotProduct.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch.sparkSession, base, batch)
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt_graph").toString))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Slices.drain(spark, srcDir, schema, checkpoint) { (batch, _) =>
+      ingestBatch(batch.sparkSession, base, batch)
+    }
   }
 
   /** One trigger's maintenance, IDEMPOTENT under micro-batch

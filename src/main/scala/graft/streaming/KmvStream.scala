@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.dedup.KmvOverlap
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live corpus-overlap maintenance — the streaming twin of
   * [[KmvOverlap.kmvOverlap]]: per-source KMV bottom-k sketches kept
@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.Trigger
   * trigger-at-a-time maintenance is bit-equal to the one-shot batch
   * sketch over the concatenated slices, and the BATCH oracle carries
   * over verbatim. The store is S rows × ≤ k longs, independent of
-  * throughput; the raw stream is never retained. Store swaps are
-  * atomic per trigger (the tier-maintenance discipline).
+  * throughput; the raw stream is never retained. Each trigger commits
+  * through [[Slices.commit]].
   */
 object KmvStream {
 
@@ -38,43 +38,22 @@ object KmvStream {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_kmv_src").toString
     docs.repartitionByRange(3, col("doc_id"))
       .write.mode("overwrite").parquet(srcDir)
-    val base = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString
-    val store = base + "/sketches"
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
+    val root = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString
+    val skSchema = KmvOverlap.sketches(docs).schema
+    Slices.drainInto(spark, srcDir, docs.schema, root) { (batch, snap) =>
+      val sp = batch.sparkSession
+      graft.functions.NGrams.register(sp)
+      graft.functions.PolyHash.register(sp)
+      graft.functions.KmvSketch.register(sp)
+      // union-and-resketch: explode both ≤k-long arrays and fold them
+      // back through graft_kmv — the bounded sketch union
+      Seq(ManifestStore.replaceTableOp("sketches", "", () =>
+        snap.read("sketches", skSchema).unionByName(KmvOverlap.sketches(batch))
+          .select(col("source"), explode(col("sk")).as("h"))
+          .groupBy("source")
+          .agg(expr(s"graft_kmv(h, ${KmvOverlap.K})").as("sk"))))
     }
-    val q = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        graft.functions.NGrams.register(sp)
-        graft.functions.PolyHash.register(sp)
-        graft.functions.KmvSketch.register(sp)
-        val delta = KmvOverlap.sketches(batch)
-        val merged =
-          if (fs.exists(new org.apache.hadoop.fs.Path(store)))
-            // union-and-resketch: explode both ≤k-long arrays and fold
-            // them back through graft_kmv — the bounded sketch union
-            sp.read.parquet(store).unionByName(delta)
-              .select(col("source"), explode(col("sk")).as("h"))
-              .groupBy("source")
-              .agg(expr(s"graft_kmv(h, ${KmvOverlap.K})").as("sk"))
-          else delta
-        val tmp = store + "_next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap(tmp, store)
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt_kmv").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    KmvOverlap.estimator(spark.read.parquet(store))
+    KmvOverlap.estimator(ManifestStore.readTable(spark, root, "sketches", skSchema))
   }
 
   // -------------------------------------------------------------- #109
@@ -126,21 +105,10 @@ object KmvStream {
     * live-delete choreography interleaves deletes between drains). */
   private[graft] def drainBm25Into(spark: SparkSession, srcDir: String,
       schema: org.apache.spark.sql.types.StructType, base: String,
-      checkpoint: Option[String] = None): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Bm25Store.appendBatch(
-          batch.sparkSession, base, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt_bm25").toString))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: Option[String] = None): Unit =
+    Slices.drain(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      graft.similarity.Bm25Store.appendBatch(batch.sparkSession, base, batch, batchId)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_kmv_overlap" -> (streamKmvOverlap _),

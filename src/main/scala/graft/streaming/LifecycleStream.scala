@@ -1,8 +1,8 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live automation lifecycle and multi-threshold watch — the streaming
   * twins of [[graft.operators.Sessions.automationLifecycle]] /
@@ -20,40 +20,10 @@ import org.apache.spark.sql.streaming.Trigger
   * and the carry IS its prefix value, so slice-at-a-time ≡ one-shot
   * and the batch oracles carry verbatim (LifecycleStreamSpec pins
   * bit-equality for both). Stores are user-count-sized (×k watchers
-  * for the registry twin), swapped atomically per trigger; history is
-  * never rescanned.
+  * for the registry twin), committed per trigger through
+  * [[Slices.commit]]; history is never rescanned.
   */
 object LifecycleStream {
-
-  private val ckptRef = new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def swapFn(spark: SparkSession): (String, String) => Unit = {
-    // Resolve per swap FROM the destination path: a store rooted on
-    // s3a://… / hdfs://… swaps on its own filesystem, not the local one.
-    (tmp: String, dst: String) => {
-      val fs = graft.util.Fs.of(spark, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-      ()
-    }
-  }
-
-  private def runSliced(spark: SparkSession, ev: DataFrame, tag: String)
-      (onBatch: DataFrame => Unit): Unit = {
-    val srcDir = Slices.stage(ev, tag, 3)
-    val q = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
-      .option("checkpointLocation", {
-        val d = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag")
-        ckptRef.set(d.toString); d.toString
-      })
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   // --------------------------------------------------------------- #80
   def streamAutomationLifecycle(spark: SparkSession, dir: String): DataFrame = {
@@ -61,20 +31,15 @@ object LifecycleStream {
     val ev = graft.Tables.events(spark, dir)
       .where(col("event_type").isin("error", "signup"))
       .select("user_id", "ts_ms", "event_id", "event_type", "value")
-    val base = java.nio.file.Files.createTempDirectory("graft_lifecycle_store").toString
-    val carryStore = base + "/carry"; val transStore = base + "/trans"
-    Sessions.emptyLifecycleCarry(spark).write.parquet(carryStore)
-    ev.limit(0).select(col("user_id"), col("ts_ms"), lit("").as("transition"),
-      lit("").as("trigger"), col("value")).write.parquet(transStore)
-    val swap = swapFn(spark)
+    val carrySchema = Sessions.emptyLifecycleCarry(spark).schema
+    val transSchema = ev.select(col("user_id"), col("ts_ms"), lit("").as("transition"),
+      lit("").as("trigger"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
-    runSliced(spark, ev, "lifecycle") { batch =>
-      val sp = batch.sparkSession
-      val carry = sp.read.parquet(carryStore)
+    val root = java.nio.file.Files.createTempDirectory("graft_lifecycle_store").toString
+    Slices.drainInto(spark, Slices.stage(ev, "lifecycle", 3), ev.schema, root) { (batch, snap) =>
+      val carry = snap.read("carry", carrySchema)
       val ann = Sessions.lifecycleAnnotated(batch.localCheckpoint(), carry)
         .localCheckpoint()
-      Sessions.lifecycleTransitions(ann)
-        .coalesce(1).write.mode("append").parquet(transStore)
       // new carry: the batch's last running values where present,
       // the old carry where the user was silent this trigger
       val lastRow = ann.groupBy("user_id").agg(
@@ -83,18 +48,17 @@ object LifecycleStream {
       val lastErr = ann.where(col("event_type") === "error")
         .groupBy("user_id")
         .agg(max_by(col("value"), ord).as("n_last_val"))
-      val merged = carry
-        .join(lastRow, Seq("user_id"), "full_outer")
-        .join(lastErr, Seq("user_id"), "full_outer")
-        .select(col("user_id"),
-          coalesce(col("n_enabled"), col("enabled0"), lit(0)).as("enabled0"),
-          coalesce(col("n_last_val"), col("last_val0")).as("last_val0"),
-          coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))
-      val tmp = carryStore + "_next"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      swap(tmp, carryStore)
+      Seq(
+        ManifestStore.appendOp("trans", "", () => Nil, () => Sessions.lifecycleTransitions(ann)),
+        ManifestStore.replaceTableOp("carry", "", () => carry
+          .join(lastRow, Seq("user_id"), "full_outer")
+          .join(lastErr, Seq("user_id"), "full_outer")
+          .select(col("user_id"),
+            coalesce(col("n_enabled"), col("enabled0"), lit(0)).as("enabled0"),
+            coalesce(col("n_last_val"), col("last_val0")).as("last_val0"),
+            coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))))
     }
-    spark.read.parquet(transStore).orderBy("user_id", "ts_ms")
+    ManifestStore.readTable(spark, root, "trans", transSchema).orderBy("user_id", "ts_ms")
   }
 
   // --------------------------------------------------------------- #81
@@ -103,34 +67,30 @@ object LifecycleStream {
     val ev = graft.Tables.events(spark, dir)
       .where(col("event_type") === "click")
       .select("user_id", "ts_ms", "event_id", "event_type", "value")
-    val base = java.nio.file.Files.createTempDirectory("graft_multithr_store").toString
-    val carryStore = base + "/carry"; val transStore = base + "/trans"
-    Sessions.emptyWatcherCarry(spark).write.parquet(carryStore)
-    ev.limit(0).select(col("user_id"), lit("").as("watcher_id"), col("ts_ms"),
-      lit("").as("transition"), col("value")).write.parquet(transStore)
-    val swap = swapFn(spark)
+    val carrySchema = Sessions.emptyWatcherCarry(spark).schema
+    val transSchema = ev.select(col("user_id"), lit("").as("watcher_id"), col("ts_ms"),
+      lit("").as("transition"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
-    runSliced(spark, ev, "multithr") { batch =>
-      val sp = batch.sparkSession
-      val carry = sp.read.parquet(carryStore)
+    val root = java.nio.file.Files.createTempDirectory("graft_multithr_store").toString
+    Slices.drainInto(spark, Slices.stage(ev, "multithr", 3), ev.schema, root) { (batch, snap) =>
+      val carry = snap.read("carry", carrySchema)
       val ann = Sessions.multiThresholdAnnotated(batch.localCheckpoint(), carry)
         .localCheckpoint()
-      ann.where(col("state") =!= col("prev_state"))
-        .select(col("user_id"), col("watcher_id"), col("ts_ms"),
-          when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
-          col("value"))
-        .coalesce(1).write.mode("append").parquet(transStore)
       val lastRow = ann.groupBy("user_id", "watcher_id")
         .agg(max_by(col("state"), ord).as("n_state"))
-      val merged = carry
-        .join(lastRow, Seq("user_id", "watcher_id"), "full_outer")
-        .select(col("user_id"), col("watcher_id"),
-          coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))
-      val tmp = carryStore + "_next"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      swap(tmp, carryStore)
+      Seq(
+        ManifestStore.appendOp("trans", "", () => Nil, () =>
+          ann.where(col("state") =!= col("prev_state"))
+            .select(col("user_id"), col("watcher_id"), col("ts_ms"),
+              when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
+              col("value"))),
+        ManifestStore.replaceTableOp("carry", "", () => carry
+          .join(lastRow, Seq("user_id", "watcher_id"), "full_outer")
+          .select(col("user_id"), col("watcher_id"),
+            coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))))
     }
-    spark.read.parquet(transStore).orderBy("user_id", "watcher_id", "ts_ms")
+    ManifestStore.readTable(spark, root, "trans", transSchema)
+      .orderBy("user_id", "watcher_id", "ts_ms")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Live transition-matrix maintenance — the streaming twin of
   * [[graft.operators.Markov.transitionMatrix]]: the empirical
@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.Trigger
   * batch's own LAG window, plus an O(types²) transition-count store
   * the per-batch pair counts ADD into (integer adds — associative, so
   * trigger-at-a-time ≡ one-shot over the concatenated slices and the
-  * BATCH oracle carries over verbatim). Both stores swap atomically
-  * per trigger (the tier-maintenance discipline). At 100 TB/day the
+  * BATCH oracle carries over verbatim). Both stores commit together
+  * per trigger ([[Slices.commit]]). At 100 TB/day the
   * carry-in store is user-count-sized and the count store stays
   * types², independent of throughput — the corpus is never rescanned.
   *
@@ -32,66 +32,36 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object MarkovStream {
 
-  private val tableRef = new java.util.concurrent.atomic.AtomicReference[String]()
-
   // --------------------------------------------------------------- #74
   def streamTransitionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val sch = graft.Tables.events(spark, dir)
-      .select("user_id", "ts_ms", "event_id", "event_type").schema
     val ev = graft.Tables.events(spark, dir)
       .select("user_id", "ts_ms", "event_id", "event_type")
+    val countSchema = ev.select(col("event_type").as("from_type"),
+      col("event_type").as("to_type"), col("event_id").as("n")).schema
     val srcDir = Slices.stage(ev, "markov", 3)
-    val base = java.nio.file.Files.createTempDirectory("graft_markov_store").toString
-    val lastStore = base + "/last"; val countStore = base + "/counts"
-    ev.limit(0).write.parquet(lastStore)
-    ev.limit(0).select(col("event_type").as("from_type"),
-      col("event_type").as("to_type"), col("event_id").as("n"))
-      .write.parquet(countStore)
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-    }
-    val q = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val carry = sp.read.parquet(lastStore)
-        // carry-in rows sort strictly first per user (slice time
-        // ranges are disjoint), so their own lag stays null and the
-        // batch's first event pairs with them — the cross-trigger seam
-        val u = carry.unionByName(batch.localCheckpoint())
-        val ww = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
-        val pairs = u.withColumn("from_type", lag(col("event_type"), 1).over(ww))
-          .where(col("from_type").isNotNull)
-          .groupBy(col("from_type"), col("event_type").as("to_type"))
-          .agg(count(lit(1)).as("n"))
-        val mergedCounts = sp.read.parquet(countStore)
-          .unionByName(pairs)
-          .groupBy("from_type", "to_type").agg(sum("n").as("n"))
-        val cTmp = countStore + "_next"
-        mergedCounts.coalesce(1).write.mode("overwrite").parquet(cTmp)
-        val newLast = u
+    val root = java.nio.file.Files.createTempDirectory("graft_markov_store").toString
+    Slices.drainInto(spark, srcDir, ev.schema, root) { (batch, snap) =>
+      // carry-in rows sort strictly first per user (slice time
+      // ranges are disjoint), so their own lag stays null and the
+      // batch's first event pairs with them — the cross-trigger seam
+      val u = snap.read("last", ev.schema).unionByName(batch.localCheckpoint())
+      val ww = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
+      val pairs = u.withColumn("from_type", lag(col("event_type"), 1).over(ww))
+        .where(col("from_type").isNotNull)
+        .groupBy(col("from_type"), col("event_type").as("to_type"))
+        .agg(count(lit(1)).as("n"))
+      Seq(
+        ManifestStore.replaceTableOp("counts", "", () =>
+          snap.read("counts", countSchema).unionByName(pairs)
+            .groupBy("from_type", "to_type").agg(sum("n").as("n"))),
+        ManifestStore.replaceTableOp("last", "", () => u
           .groupBy("user_id")
           .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type")),
             struct(col("ts_ms"), col("event_id"))).as("m"))
-          .select(col("user_id"), col("m.ts_ms"), col("m.event_id"), col("m.event_type"))
-        val lTmp = lastStore + "_next"
-        newLast.coalesce(1).write.mode("overwrite").parquet(lTmp)
-        swap(cTmp, countStore); swap(lTmp, lastStore)
-        ()
-      }
-      .option("checkpointLocation", {
-        val d = java.nio.file.Files.createTempDirectory("graft_ckpt_markov")
-        tableRef.set(d.toString); d.toString
-      })
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          .select(col("user_id"), col("m.ts_ms"), col("m.event_id"), col("m.event_type"))))
+    }
     val perFrom = Window.partitionBy("from_type")
-    spark.read.parquet(countStore)
+    ManifestStore.readTable(spark, root, "counts", countSchema)
       .withColumn("p", graft.funcs.r6(col("n") / sum(col("n")).over(perFrom)))
       .orderBy("from_type", "to_type")
   }

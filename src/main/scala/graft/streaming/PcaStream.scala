@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.similarity.{Embeddings, Pca}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.ManifestStore
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 
 /** Live PCA moment maintenance — the streaming twin of
   * [[Pca.embedPca]]: the fixed-size raw-moment buffer (Σxᵢ, Σxᵢxⱼ)
@@ -43,61 +44,48 @@ object PcaStream {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_pca_src").toString
     emb.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
-    val base = java.nio.file.Files.createTempDirectory("graft_pca_store").toString
-    val store = base + "/moments"
-    maintainMoments(spark, srcDir, emb.schema, store)
-    val st = spark.read.parquet(store).head()
+    val root = java.nio.file.Files.createTempDirectory("graft_pca_store").toString
+    val st = maintainMoments(spark, srcDir, emb.schema, root)
     // projection over the accumulated corpus with the STORE's moments
     val vecs = Embeddings.vecsOf(spark.read.parquet(srcDir))
       .select("vec_id", "label", "v")
     Pca.projectWith(vecs, st.getSeq[Long](0).toArray, st.getLong(1))
   }
 
-  /** Drain `srcDir` into the one-row moment store at `store` — the
-    * maintenance loop, shared with [[streamDriftReport]]. */
+  private val momentsSchema = StructType(Seq(
+    StructField("m", ArrayType(LongType)), StructField("n", LongType)))
+
+  /** Drain `srcDir` into the one-row moment store at `root` and return
+    * the drained row — the maintenance loop, shared with
+    * [[streamDriftReport]]. */
   private[graft] def maintainMoments(spark: SparkSession, srcDir: String,
-      schema: org.apache.spark.sql.types.StructType, store: String): Unit = {
-    val fs = graft.util.Fs.of(spark, store)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        graft.functions.GramMatrix.register(sp)
-        graft.functions.DotProduct.register(sp)
-        val row = Embeddings.vecsOf(batch).select("v")
-          .agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
-        val delta = row.getSeq[Long](0).toArray
-        val dn = row.getLong(1)
-        val p = new org.apache.hadoop.fs.Path(store)
-        val (m, n) =
-          if (fs.exists(p)) {
-            val prev = sp.read.parquet(store).head()
-            val pm = prev.getSeq[Long](0).toArray
-            require(pm(0) == delta(0), "stream_pca_moments: dimension drift")
-            // metadata-sized exact merge: elementwise Long add (slot 0
-            // carries d, identical on both sides)
-            val merged = pm.clone()
-            var i = 1
-            while (i < merged.length) {
-              merged(i) = Math.addExact(merged(i), delta(i)); i += 1
-            }
-            (merged, prev.getLong(1) + dn)
-          } else (delta, dn)
-        import sp.implicits._
-        val tmp = store + "_next"
-        Seq((m.toSeq, n)).toDF("m", "n")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(p, true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-        ()
+      schema: StructType, root: String): Row = {
+    Slices.drainInto(spark, srcDir, schema, root) { (batch, snap) =>
+      val sp = batch.sparkSession
+      graft.functions.GramMatrix.register(sp)
+      graft.functions.DotProduct.register(sp)
+      val row = Embeddings.vecsOf(batch).select("v")
+        .agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
+      val delta = row.getSeq[Long](0).toArray
+      val dn = row.getLong(1)
+      val (m, n) = snap.read("moments", momentsSchema).collect().headOption match {
+        case Some(prev) =>
+          val pm = prev.getSeq[Long](0).toArray
+          require(pm(0) == delta(0), "stream_pca_moments: dimension drift")
+          // metadata-sized exact merge: elementwise Long add (slot 0
+          // carries d, identical on both sides)
+          val merged = pm.clone()
+          var i = 1
+          while (i < merged.length) {
+            merged(i) = Math.addExact(merged(i), delta(i)); i += 1
+          }
+          (merged, prev.getLong(1) + dn)
+        case None => (delta, dn)
       }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt_pca").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      import sp.implicits._
+      Seq(ManifestStore.replaceTableOp("moments", "", () => Seq((m.toSeq, n)).toDF("m", "n")))
+    }
+    ManifestStore.readTable(spark, root, "moments", momentsSchema).head()
   }
 
   // -------------------------------------------------------------- #116
@@ -120,9 +108,8 @@ object PcaStream {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_drift_src").toString
     ref.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
-    val store = java.nio.file.Files.createTempDirectory("graft_drift_store").toString + "/moments"
-    maintainMoments(spark, srcDir, ref.schema, store)
-    val st = spark.read.parquet(store).head()
+    val root = java.nio.file.Files.createTempDirectory("graft_drift_store").toString
+    val st = maintainMoments(spark, srcDir, ref.schema, root)
     graft.similarity.DriftMonitor.reportFromMoments(
       spark, dir, 0.5, st.getSeq[Long](0).toArray, st.getLong(1))
   }

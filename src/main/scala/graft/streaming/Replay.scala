@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   * Spark-first shape: the pacing is a SOURCE property, not a driver
   * loop. [[stage]] carves the archived window into consecutive
   * archive-time slices, one file per slice in replay order;
-  * `readStream` over the staged directory with `maxFilesPerTrigger=1`
+  * [[Slices.source]] over the staged directory (one file per trigger)
   * then makes each micro-batch exactly one slice — Structured
   * Streaming's native rate-control knob standing in for the wall-clock
   * interval (at demo scale Trigger.AvailableNow drains the slices
@@ -85,13 +85,8 @@ object Replay {
   }
 
   /** One-slice-per-trigger stream over a staged replay directory. */
-  def replayStream(spark: SparkSession, staged: Staged): DataFrame = {
-    val schema = spark.read.parquet(staged.dir).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(staged.dir)
-  }
+  def replayStream(spark: SparkSession, staged: Staged): DataFrame =
+    Slices.source(spark, staged.dir, spark.read.parquet(staged.dir).schema)
 
   // --------------------------------------------------------------- #52
   /** Gated query: replay 15 archived days ([2024-01-05, 2024-01-20))

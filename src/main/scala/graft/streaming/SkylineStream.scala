@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.Skyline
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental skyline maintenance — the streaming twin of
   * [[graft.operators.Skyline]]: the pareto frontier kept current as
@@ -16,10 +16,10 @@ import org.apache.spark.sql.streaming.Trigger
   * final frontier. The state is therefore ONLY the current frontier
   * (result-sized — for a 2-D skyline, at most one point per distinct
   * frontier price), each batch runs the batch operator's prefix-max
-  * core over frontier ∪ batch, and the store swaps atomically
-  * (tier-maintenance discipline). Batch order is irrelevant
-  * (set-union commutes), so slices hash-split; trigger-at-a-time ≡
-  * one-shot and the BATCH oracle carries over verbatim. At 100 TB the
+  * core over frontier ∪ batch, committed through [[Slices.commit]].
+  * Batch order is irrelevant (set-union commutes), so slices
+  * hash-split; trigger-at-a-time ≡ one-shot and the BATCH oracle
+  * carries over verbatim. At 100 TB the
   * arriving batch dominates the cost and the frontier rides along as
   * a tiny union — the stream never rescans history.
   */
@@ -33,30 +33,12 @@ object SkylineStream {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_sky_src").toString
     p.repartition(3, pmod(col("p_partkey"), lit(3)))
       .write.mode("overwrite").parquet(srcDir)
-    val store = java.nio.file.Files.createTempDirectory("graft_sky_store").toString + "/frontier"
-    p.limit(0).write.parquet(store)
-    val fs = graft.util.Fs.of(spark, store)
-    val q = spark.readStream.schema(p.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val next = Skyline.skylineOf(
-          sp.read.parquet(store).unionByName(batch))
-        val tmp = store + "_next"
-        next.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store))
-        ()
-      }
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt_sky").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(store)
+    val root = java.nio.file.Files.createTempDirectory("graft_sky_store").toString
+    Slices.drainInto(spark, srcDir, p.schema, root) { (batch, snap) =>
+      Seq(ManifestStore.replaceTableOp("frontier", "", () =>
+        Skyline.skylineOf(snap.read("frontier", p.schema).unionByName(batch))))
+    }
+    ManifestStore.readTable(spark, root, "frontier", p.schema)
       .select(col("p_partkey"), col("price").as("p_retailprice"),
         col("size").as("p_size"))
       .orderBy("p_partkey")

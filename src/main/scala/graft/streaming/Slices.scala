@@ -1,20 +1,39 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.util.ManifestStore
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
-/** Shared staging for time-ordered replay slices: carve a frame with
-  * a `ts_ms` column into `n` consecutive archive-time ranges, one
-  * parquet file per slice, mod-time-stamped in replay order so the
-  * file source (`maxFilesPerTrigger=1`, `latestFirst=false`) delivers
-  * one slice per trigger in time order — the [[Replay.stage]]
-  * mechanism for operators that need their own column set. At
-  * warehouse scale this is a metadata walk over time partitions; here
-  * the test archive is one file, so each slice write is a row-group-
-  * pruned scan (the slice is a bounded replay quantum, not a corpus
-  * shuffle). */
-private[streaming] object Slices {
+/** The one trigger-to-store path of the file-fed streams: [[stage]]
+  * carves a time-ordered replay into slice files, [[source]] delivers
+  * one file per micro-batch, [[drain]] runs a batch function over
+  * every file under Trigger.AvailableNow, and [[drainInto]] commits
+  * each trigger's store tables through [[commit]].
+  *
+  * The store guarantee, stated once for every store-backed stream: a
+  * trigger's tables AND its batch id land in ONE ManifestStore
+  * publish. A reader resolves one committed snapshot, so it sees the
+  * whole trigger or none of it — a crash before the flip leaves only
+  * uncommitted files, which the next publish clears. `foreachBatch` is
+  * at-least-once: a crash after the flip but before Spark's own commit
+  * log re-delivers the same batch id on restart, and the gate finds
+  * that id committed and skips the batch, so no sum doubles and no
+  * transition repeats. One store root belongs to one query (one
+  * checkpoint): the gate reads the snapshot outside the publish lease,
+  * which is safe because that query is the root's only writer.
+  */
+private[graft] object Slices {
 
+  /** Carve a frame with a `ts_ms` column into `n` consecutive
+    * archive-time ranges, one parquet file per slice, mod-time-stamped
+    * in replay order so [[source]] delivers one slice per trigger in
+    * time order — the [[Replay.stage]] mechanism for operators that
+    * need their own column set. At warehouse scale this is a metadata
+    * walk over time partitions; here the test archive is one file, so
+    * each slice write is a row-group-pruned scan (the slice is a
+    * bounded replay quantum, not a corpus shuffle). */
   def stage(df: DataFrame, tag: String, nSlices: Int): String = {
     val bounds = df.agg(min("ts_ms"), max("ts_ms")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -35,4 +54,63 @@ private[streaming] object Slices {
     }
     srcDir
   }
+
+  /** One file of `srcDir` per micro-batch, oldest modification time
+    * first. */
+  def source(spark: SparkSession, srcDir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+      .parquet(srcDir)
+
+  /** Run `onBatch(batch, batchId)` over every file in `srcDir`, one
+    * trigger per file, and return once the source is drained. A caller
+    * that restarts a crashed drain passes the same `checkpoint`;
+    * otherwise each drain gets a fresh one. */
+  def drain(spark: SparkSession, srcDir: String, schema: StructType,
+      checkpoint: Option[String] = None)(onBatch: (DataFrame, Long) => Unit): Unit = {
+    val q = source(spark, srcDir, schema)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
+      .option("checkpointLocation", checkpoint.getOrElse(
+        java.nio.file.Files.createTempDirectory("graft_ckpt").toString))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
+
+  /** [[drain]] into the ManifestStore at `root`: each trigger's
+    * `step(batch, snapshot)` returns its table ops, read against the
+    * committed snapshot (an unpublished table reads as empty), and
+    * [[commit]] publishes them. */
+  def drainInto(spark: SparkSession, srcDir: String, schema: StructType,
+      root: String, checkpoint: Option[String] = None)(
+      step: (DataFrame, ManifestStore.Snapshot) => Seq[ManifestStore.TableOp]): Unit =
+    drain(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      commit(batch.sparkSession, root, batchId)(step(batch, _))
+    }
+
+  /** One trigger's commit: unless `batchId` is already committed at
+    * `root`, publish `ops(snapshot)` together with the batch record.
+    * `ops` runs only past the gate, so a skipped batch starts no
+    * Spark job. */
+  def commit(sp: SparkSession, root: String, batchId: Long)(
+      ops: ManifestStore.Snapshot => Seq[ManifestStore.TableOp]): Unit = {
+    val snap = ManifestStore.snapshot(sp, root)
+    if (committedBatch(snap).forall(_ < batchId))
+      ManifestStore.publishOps(sp, root, ops(snap) :+ batchOp(sp, batchId))
+  }
+
+  /** The batch record is the name of the `batch` table's single empty
+    * file, so writing and reading it start no Spark job. */
+  private val BatchTable = "batch"
+
+  /** The last batch id committed at `snap`, if any trigger committed. */
+  def committedBatch(snap: ManifestStore.Snapshot): Option[Long] =
+    snap.tableFiles(BatchTable).map(_.stripPrefix("batch-").toLong).maxOption
+
+  private def batchOp(sp: SparkSession, batchId: Long): ManifestStore.TableOp =
+    ManifestStore.TableOp(BatchTable, "", None, replace = true, { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir, s"batch-$batchId")
+      graft.util.Fs.of(sp, dir).create(p, true).close()
+    })
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -30,6 +31,13 @@ object Streaming {
   /** Epoch-ms `ts_ms` from the physical `ts`, whatever its type. */
   private def withTsMs(df: DataFrame): DataFrame =
     df.withColumn("ts_ms", graft.Tables.tsMillis(df.schema("ts").dataType))
+
+  /** The live tier stores' partials of raw events: decimal sums widened
+    * to the (38, 6) the merge writes, so every trigger's table has one
+    * schema. */
+  private def tierPartials(raw: DataFrame, resolutionMs: Long): DataFrame =
+    graft.operators.TimeSeries.tierPartials(withTsMs(raw), resolutionMs)
+      .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
 
   /** Scoped nanosAsLong for a full stream run. Unlike the batch reader
     * (Tables.events), a stream re-plans its parquet scan every
@@ -405,8 +413,8 @@ object Streaming {
     * events roll into 5-min decimal partials and merge into the
     * persistent tier store via [[graft.operators.TimeSeries
     * .mergeTierPartials]] (touched buckets re-aggregate, untouched
-    * mass passes through a broadcast anti-join untouched; the store
-    * swap is atomic tmp+rename). Because the partials carry exact
+    * mass passes through a broadcast anti-join untouched), committed
+    * through [[Slices.commit]]. Because the partials carry exact
     * decimal sums, ANY batch boundary placement yields a final tier
     * bit-identical to a full batch recompute — which is precisely what
     * the oracle checks. The source is split into four files consumed
@@ -415,40 +423,18 @@ object Streaming {
   def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.TimeSeries
     val srcDir = java.nio.file.Files.createTempDirectory("graft_tier_src").toString
-    val store = java.nio.file.Files.createTempDirectory("graft_tier_store").toString + "/tier5m"
+    val root = java.nio.file.Files.createTempDirectory("graft_tier_store").toString
     val sch = eventsSchema(spark, dir)
     spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
       .parquet(dir).repartition(4)
       .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, store)
-    val q = withTsMs(spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = TimeSeries.tierPartials(batch, 300000L)
-          .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-        val storePath = new org.apache.hadoop.fs.Path(store)
-        val merged =
-          if (fs.exists(storePath))
-            TimeSeries.mergeTierPartials(batch.sparkSession.read.parquet(store), delta)
-          else delta
-        val tmp = store + "_next"
-        // the tier is ~bucket-count sized (tiny next to raw); at demo
-        // scale one file per swap keeps the 4 rewrite cycles cheap —
-        // at warehouse scale drop the coalesce and let the store
-        // partition by (context, day) like the batch tiers
-        merged.withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-          .coalesce(2)
-          .write.mode("overwrite").parquet(tmp)
-        fs.delete(storePath, true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), storePath)
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("tiermaint"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(store)
+    val tierSchema = tierPartials(spark.read.schema(sch).parquet(srcDir), 300000L).schema
+    Slices.drainInto(spark, srcDir, sch, root) { (batch, snap) =>
+      Seq(ManifestStore.replaceTableOp("tier5m", "", () =>
+        TimeSeries.mergeTierPartials(snap.read("tier5m", tierSchema),
+          tierPartials(batch, 300000L))))
+    }
+    ManifestStore.readTable(spark, root, "tier5m", tierSchema)
       .withColumn("value_avg", col("value_sum").cast("double") / col("sample_count"))
       .select("user_id", "event_type", "bucket_ms", "value_avg", "value_min",
         "value_max", "sample_count", "first_ts_ms", "last_ts_ms")
@@ -482,20 +468,12 @@ object Streaming {
     val quotes = withTsMs(spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
       .parquet(dir).where(col("event_type") === "view"))
       .select("user_id", "ts_ms", "value", "event_id")
-    val q = withTsMs(spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.plans.AsOfJoinNative.asOfJoin(
-          batch.select("event_id", "user_id", "ts_ms", "value"),
-          quotes, "user_id", "ts_ms", "value", "event_id")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("stream_asof"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Slices.drain(spark, srcDir, sch) { (batch, _) =>
+      graft.plans.AsOfJoinNative.asOfJoin(
+        withTsMs(batch).select("event_id", "user_id", "ts_ms", "value"),
+        quotes, "user_id", "ts_ms", "value", "event_id")
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("event_id")
   }
 
@@ -503,87 +481,86 @@ object Streaming {
   /** Late-data tier correction as a STREAM — the streaming twin of
     * [[graft.operators.TimeSeries.tierCorrection]] and the live form
     * of the reference's lastProcessed rewind (aggregation-service.ts:
-    * 405-421): late raw events arrive over 3 triggers (hash-split so
-    * triggers genuinely collide on buckets); each batch (a) merges its
-    * partials into the persisted 1 h store via the same touched-only
+    * 405-421): late raw events arrive over 3 triggers (split by
+    * event_id mod 3, so triggers genuinely collide on buckets); each
+    * trigger (a) merges
+    * its partials into the 1 h `tier1h` table via the same touched-only
     * [[graft.operators.TimeSeries.mergeTierPartials]] discipline (the
     * untouched mass passes through an anti-join, never re-aggregated),
     * (b) APPENDS a CDC row per touched bucket — (old, corrected) as of
-    * that trigger — before atomically swapping the store. Because the
-    * partials carry decimal sums, applying late batches one trigger at
-    * a time is associatively identical to applying them all at once:
-    * the final store ≡ a full rebuild, so the driver-facing output
-    * (original published vs final store over all touched buckets)
-    * reuses the BATCH operator's oracle verbatim. The per-trigger CDC
-    * trail is spec-asserted (buckets corrected in several triggers
-    * emit several rows whose last value is the final one). */
-  def streamTierCorrection(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
-    import graft.operators.TimeSeries
+    * that trigger, tagged with the store `version` the trigger commits
+    * — in the same [[Slices.commit]], so a CDC row is visible exactly
+    * when its store change is. Because the partials carry decimal
+    * sums, applying late batches one trigger at a time is
+    * associatively identical to applying them all at once: the final
+    * store ≡ a full rebuild, so the query's output (original
+    * published vs final store over all touched buckets) reuses the
+    * BATCH operator's oracle verbatim. */
+  def streamTierCorrection(spark: SparkSession, dir: String): DataFrame = {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_corr_src").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_corr_store").toString
-    val pubDir = base + "/published"; val store = base + "/tier1h"
-    val cdcDir = base + "/cdc"
-    val keys = Seq("user_id", "event_type", "bucket_ms")
+    val root = java.nio.file.Files.createTempDirectory("graft_corr_store").toString
+    tierCorrectionInto(spark, srcDir, tierCorrectionStage(spark, dir, srcDir, root), root)
+  }
+
+  /** Publish the on-time 1 h tier at `root` as both `published` and the
+    * working `tier1h`, and stage the late arrivals at `srcDir` as three
+    * files (three triggers); returns the staged files' schema. */
+  private[graft] def tierCorrectionStage(spark: SparkSession, dir: String,
+      srcDir: String, root: String): StructType = withNanos(spark) {
     val isLate = col("event_id") % 17 === 3
     val sch = eventsSchema(spark, dir)
-    val all = withTsMs(spark.read.option("pathGlobFilter", "events.parquet")
-      .schema(sch).parquet(dir))
-    // publish the on-time 1 h tier once; the working store starts there
-    TimeSeries.tierPartials(all.where(!isLate), 3600000L)
-      .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-      .coalesce(2).write.mode("overwrite").parquet(pubDir)
-    spark.read.parquet(pubDir).write.mode("overwrite").parquet(store)
-    // late arrivals: hash-split into 3 files = 3 AvailableNow triggers
-    all.where(isLate).drop("ts_ms")
-      .repartition(3, pmod(col("event_id"), lit(3)))
-      .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, store)
+    val all = spark.read.option("pathGlobFilter", "events.parquet").schema(sch).parquet(dir)
+    val onTime = tierPartials(all.where(!isLate), 3600000L).localCheckpoint()
+    ManifestStore.publishOps(spark, root, Seq(
+      ManifestStore.replaceTableOp("published", "", () => onTime),
+      ManifestStore.replaceTableOp("tier1h", "", () => onTime)))
+    // one file per event_id residue mod 3, written in turn: three
+    // triggers, each carrying rows (a hash repartition on the residue
+    // can put two residues in one file and leave another empty)
+    for (r <- 0 until 3)
+      all.where(isLate && pmod(col("event_id"), lit(3)) === r)
+        .coalesce(1).write.mode("append").parquet(srcDir)
+    sch
+  }
+
+  /** Drain the staged late arrivals into `root` and read the corrected
+    * buckets back. `checkpoint` is caller-supplied so a crashed drain
+    * can restart on the same one (the drainBm25Into seam). */
+  private[graft] def tierCorrectionInto(spark: SparkSession, srcDir: String,
+      schema: StructType, root: String,
+      checkpoint: Option[String] = None): DataFrame = withNanos(spark) {
+    val keys = Seq("user_id", "event_type", "bucket_ms")
+    val tierSchema = tierPartials(spark.read.schema(schema).parquet(srcDir), 3600000L).schema
     def avgCols(df: DataFrame, avg: String, n: String): DataFrame =
       df.select(col("user_id"), col("event_type"), col("bucket_ms"),
         (col("value_sum").cast("double") / col("sample_count")).as(avg),
         col("sample_count").as(n))
-    val q = withTsMs(spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        // pinned: feeds the touched-key set and the merge
-        val delta = TimeSeries.tierPartials(batch, 3600000L)
-          .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-          .localCheckpoint()
-        val touched = delta.select(keys.map(col): _*)
-        val cur = sp.read.parquet(store)
-        val tmp = store + "_next"
-        val (pass, reagg) = TimeSeries.mergeTierPartialParts(cur, delta)
-        // the CDC's new side IS the merge's reagg branch (the merged
-        // store semi-joined on touched keys selects exactly those
-        // rows: the pass branch is anti-joined on the same set), so
-        // the CDC append no longer re-reads the just-written store —
-        // and both jobs read only (cur, checkpointed delta), so the
-        // store rewrite and the CDC append run CONCURRENTLY
-        // (guide §2.6). Both complete before the swap, as before.
-        inParallel(
-          () => pass.unionByName(reagg)
-            .coalesce(2).write.mode("overwrite").parquet(tmp),
-          () => avgCols(reagg, "new_avg", "new_n")
+    Slices.drainInto(spark, srcDir, schema, root, checkpoint) { (batch, snap) =>
+      // pinned: feeds the touched-key set and the merge
+      val delta = tierPartials(batch, 3600000L).localCheckpoint()
+      val touched = delta.select(keys.map(col): _*)
+      val cur = snap.read("tier1h", tierSchema)
+      val (pass, reagg) = graft.operators.TimeSeries.mergeTierPartialParts(cur, delta)
+      // the CDC's new side IS the merge's reagg branch (the merged
+      // store semi-joined on touched keys selects exactly those rows:
+      // the pass branch is anti-joined on the same set), so both
+      // writes read only (cur, checkpointed delta) and run concurrently
+      Seq(
+        ManifestStore.replaceTableOp("tier1h", "", () => pass.unionByName(reagg)),
+        ManifestStore.appendOp("cdc", "", () => Nil, () =>
+          avgCols(reagg, "new_avg", "new_n")
             .join(avgCols(cur.join(broadcast(touched), keys, "left_semi"),
               "old_avg", "old_n"), keys, "left")
-            .write.mode("append").parquet(cdcDir))
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store))
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("tiercorr"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+            .withColumn("version", lit(snap.version + 1L))))
+    }
     // driver-facing output ≡ the one-shot batch answer: original
     // published vs final store over every bucket any trigger touched
-    val touchedAll = spark.read.parquet(cdcDir).select(keys.map(col): _*).distinct()
-    avgCols(spark.read.parquet(store).join(broadcast(touchedAll), keys, "left_semi"),
+    val snap = ManifestStore.snapshot(spark, root)
+    val touchedAll = snap.read("cdc", StructType(tierSchema.filter(f => keys.contains(f.name))))
+      .distinct()
+    avgCols(snap.read("tier1h", tierSchema).join(broadcast(touchedAll), keys, "left_semi"),
         "new_avg", "new_n")
-      .join(avgCols(spark.read.parquet(pubDir).join(broadcast(touchedAll), keys, "left_semi"),
+      .join(avgCols(snap.read("published", tierSchema).join(broadcast(touchedAll), keys, "left_semi"),
         "old_avg", "old_n"), keys, "left")
       .select(col("user_id"), col("event_type"), col("bucket_ms"),
         col("old_avg"), col("old_n"), col("new_avg"), col("new_n"))
@@ -629,86 +606,55 @@ object Streaming {
       .repartitionByRange(3, col("doc_id"))
       .write.mode("overwrite").parquet(srcDir)
     val fs = graft.util.Fs.of(spark, base)
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        // the batch feeds three distinct plans (within-pairs, band
-        // keys, tokens) — pin it so the file scan runs once
-        val b = batch.select("doc_id", "text").localCheckpoint()
-        // unsorted pairs: the store sorts once at the final read — a
-        // per-trigger range exchange would be pure fixed cost
-        val within = Dedup.minHashLshPairs(b).select("id_a", "id_b", "jaccard")
-        val bBands = Dedup.bandRows(b)
-        val bToks = b.select(col("doc_id"), Dedup.tokens.as("toks"))
-        // cands feeds two plans (the store-token semi-join prune and
-        // the verify spine) — cached for the batch only: a long-running
-        // stream must not accumulate one candidate table per
-        // micro-batch in executor memory, so the batch's writes run
-        // under try/finally and the cache is dropped once they land
-        var cached: Option[DataFrame] = None
-        try {
-          val cross = if (fs.exists(new org.apache.hadoop.fs.Path(bandsDir))) {
-            val storeBands = sp.read.parquet(bandsDir)
-            val cands = broadcast(bBands.toDF("batch_id", "band_idx", "band_key"))
-              .join(storeBands.toDF("store_id", "band_idx", "band_key"),
-                Seq("band_idx", "band_key"))
-              .select("batch_id", "store_id").distinct().cache()
-            cached = Some(cands)
-            val storeToks = sp.read.parquet(toksDir)
-              .join(broadcast(cands.select("store_id").distinct()),
-                col("doc_id") === col("store_id"), "leftsemi")
-              .toDF("store_id", "toks_b")
-            cands
-              .join(broadcast(bToks.toDF("batch_id", "toks_a")), "batch_id")
-              .join(broadcast(storeToks), "store_id")
-              // same slack size-ratio prefilter as minHashLsh
-              .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-                lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-              .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
-              .where(col("jaccard") >= 0.95)
-              .select(least(col("batch_id"), col("store_id")).as("id_a"),
-                greatest(col("batch_id"), col("store_id")).as("id_b"),
-                col("jaccard"))
-          } else within.limit(0)
-          within.unionAll(cross).write.mode("append").parquet(outDir)
-          // ingest: the batch joins the store
-          bBands.write.mode("append").parquet(bandsDir)
-          bToks.write.mode("append").parquet(toksDir)
-        } finally cached.foreach(_.unpersist())
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("stream_dedup_lsh"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Slices.drain(spark, srcDir, docSchema) { (batch, _) =>
+      val sp = batch.sparkSession
+      // the batch feeds three distinct plans (within-pairs, band
+      // keys, tokens) — pin it so the file scan runs once
+      val b = batch.select("doc_id", "text").localCheckpoint()
+      // unsorted pairs: the store sorts once at the final read — a
+      // per-trigger range exchange would be pure fixed cost
+      val within = Dedup.minHashLshPairs(b).select("id_a", "id_b", "jaccard")
+      val bBands = Dedup.bandRows(b)
+      val bToks = b.select(col("doc_id"), Dedup.tokens.as("toks"))
+      // cands feeds two plans (the store-token semi-join prune and
+      // the verify spine) — cached for the batch only: a long-running
+      // stream must not accumulate one candidate table per
+      // micro-batch in executor memory, so the batch's writes run
+      // under try/finally and the cache is dropped once they land
+      var cached: Option[DataFrame] = None
+      try {
+        val cross = if (fs.exists(new org.apache.hadoop.fs.Path(bandsDir))) {
+          val storeBands = sp.read.parquet(bandsDir)
+          val cands = broadcast(bBands.toDF("batch_id", "band_idx", "band_key"))
+            .join(storeBands.toDF("store_id", "band_idx", "band_key"),
+              Seq("band_idx", "band_key"))
+            .select("batch_id", "store_id").distinct().cache()
+          cached = Some(cands)
+          val storeToks = sp.read.parquet(toksDir)
+            .join(broadcast(cands.select("store_id").distinct()),
+              col("doc_id") === col("store_id"), "leftsemi")
+            .toDF("store_id", "toks_b")
+          cands
+            .join(broadcast(bToks.toDF("batch_id", "toks_a")), "batch_id")
+            .join(broadcast(storeToks), "store_id")
+            // same slack size-ratio prefilter as minHashLsh
+            .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
+              lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
+            .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
+            .where(col("jaccard") >= 0.95)
+            .select(least(col("batch_id"), col("store_id")).as("id_a"),
+              greatest(col("batch_id"), col("store_id")).as("id_b"),
+              col("jaccard"))
+        } else within.limit(0)
+        within.unionAll(cross).write.mode("append").parquet(outDir)
+        // ingest: the batch joins the store
+        bBands.write.mode("append").parquet(bandsDir)
+        bToks.write.mode("append").parquet(toksDir)
+      } finally cached.foreach(_.unpersist())
+    }
     spark.read.parquet(outDir).orderBy("id_a", "id_b")
   }
 
-  /** Stateful demo streams pay per-PARTITION state-store overhead
-    * (instances × per-commit files), not per-row: the range join took
-    * 8 s at 32 shuffle partitions and 3 s at 8 on identical data. Pin
-    * the demo streams to 8 (scoped: the conf is restored after the
-    * query starts — a stream reads it once at its first batch). At
-    * production volume the number is sized to throughput instead. */
-  // ------------------------------------------------------------- #42k
-  /** LIVE SKETCH MAINTENANCE: the HLL register store (graft.operators
-    * .Hll) kept current by a stream — each micro-batch reduces to its
-    * own ≤ m-row register partial, max-merges into the persisted
-    * store, and atomically swaps it (the tier-maintenance pattern
-    * applied to a sketch). Because max is associative/commutative and
-    * the register pipeline is integer-exact, trigger-at-a-time
-    * maintenance is INDISTINGUISHABLE from a full batch rebuild — the
-    * final estimate reuses `sketch_hll_distinct`'s oracle verbatim.
-    * The exact-count accuracy column is maintained the same way: a
-    * persisted distinct (event_type, user_id) store unioned per batch
-    * (the state dropDuplicates would hold, made visible).
-    *
-    * At 100 TB/day this is THE distinct-counting shape: the raw
-    * stream is never retained, the store is m rows per group, and
-    * any historical slice question max-merges stored registers.
-    */
   // --------------------------------------------------------------- #56
   private val sessionTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
@@ -748,59 +694,49 @@ object Streaming {
     spark.table(sessionTable.get()).orderBy("user_id", "session_start_ms")
   }
 
+  // ------------------------------------------------------------- #42k
+  /** LIVE SKETCH MAINTENANCE: the HLL register store (graft.operators
+    * .Hll) kept current by a stream — each micro-batch reduces to its
+    * own ≤ m-row register partial, max-merges into the persisted
+    * store, and commits it through [[Slices.commit]] (the
+    * tier-maintenance pattern applied to a sketch). Because max is
+    * associative/commutative and the register pipeline is
+    * integer-exact, trigger-at-a-time maintenance is
+    * INDISTINGUISHABLE from a full batch rebuild — the final estimate
+    * reuses `sketch_hll_distinct`'s oracle verbatim.
+    * The exact-count accuracy column is maintained the same way: a
+    * persisted distinct (event_type, user_id) store unioned per batch
+    * (the state dropDuplicates would hold, made visible).
+    *
+    * At 100 TB/day this is THE distinct-counting shape: the raw
+    * stream is never retained, the store is m rows per group, and
+    * any historical slice question max-merges stored registers.
+    */
   def streamHll(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.Hll
     val srcDir = java.nio.file.Files.createTempDirectory("graft_hll_src").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_hll_store").toString
-    val regStore = base + "/regs"
-    val exactStore = base + "/pairs"
+    val root = java.nio.file.Files.createTempDirectory("graft_hll_store").toString
     val sch = eventsSchema(spark, dir)
     spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
       .parquet(dir).repartition(4)
       .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, base)
-    def swapIn(df: DataFrame, path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_next")
-      df.coalesce(2).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
+    val pairSchema = StructType(Seq(
+      StructField("event_type", StringType), StructField("user_id", LongType)))
+    val regSchema = Hll.registers(spark.read.schema(pairSchema).parquet(srcDir)).schema
+    Slices.drainInto(spark, srcDir, sch, root) { (batch, snap) =>
+      val ev = batch.select(col("event_type"), col("user_id"))
+      // two independent read-merge-write jobs: they run concurrently
+      Seq(
+        ManifestStore.replaceTableOp("regs", "", () =>
+          snap.read("regs", regSchema).unionByName(Hll.registers(ev))
+            .groupBy("event_type", "idx").agg(max("mj").as("mj"))),
+        ManifestStore.replaceTableOp("pairs", "", () =>
+          snap.read("pairs", pairSchema).unionByName(ev).distinct()))
     }
-    val q = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val ev = batch.select(col("event_type"), col("user_id"))
-        // register store and exact-pair store are independent: their
-        // read-merge-write jobs overlap instead of serializing
-        inParallel(
-          () => {
-            val regDelta = Hll.registers(ev)
-            val regMerged =
-              if (fs.exists(new org.apache.hadoop.fs.Path(regStore)))
-                s.read.parquet(regStore).unionByName(regDelta)
-                  .groupBy("event_type", "idx").agg(max("mj").as("mj"))
-              else regDelta
-            swapIn(regMerged, regStore)
-          },
-          () => {
-            val pairDelta = ev.distinct()
-            val pairMerged =
-              if (fs.exists(new org.apache.hadoop.fs.Path(exactStore)))
-                s.read.parquet(exactStore).unionByName(pairDelta).distinct()
-              else pairDelta
-            swapIn(pairMerged, exactStore)
-          })
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("streamhll"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val exact = spark.read.parquet(exactStore).groupBy("event_type")
+    val snap = ManifestStore.snapshot(spark, root)
+    val exact = snap.read("pairs", pairSchema).groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_distinct"))
-    Hll.estimateRegisters(spark.read.parquet(regStore))
+    Hll.estimateRegisters(snap.read("regs", regSchema))
       .join(exact, "event_type")
       .select("event_type", "n_hit", "s_scaled", "hll_estimate", "exact_distinct")
       .orderBy("event_type")
@@ -822,69 +758,37 @@ object Streaming {
     import graft.operators.Cms
     graft.functions.NGrams.register(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("graft_cms_src").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_cms_store").toString
-    val cntStore = base + "/counters"
-    val gramStore = base + "/grams"
+    val root = java.nio.file.Files.createTempDirectory("graft_cms_store").toString
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val sch = docs.schema
     docs.repartition(4).write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, base)
-    def swapIn(df: DataFrame, path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_next")
-      df.coalesce(2).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
+    val gramSchema = Cms.gramCounts(docs).schema
+    val cntSchema = Cms.hashed(Cms.gramCounts(docs))
+      .groupBy("salt", "idx").agg(sum("n").as("c")).schema
+    def addInto(snap: ManifestStore.Snapshot, table: String, schema: StructType,
+        delta: DataFrame, keys: Seq[String], cnt: String): ManifestStore.TableOp =
+      ManifestStore.replaceTableOp(table, "", () =>
+        snap.read(table, schema).unionByName(delta)
+          .groupBy(keys.map(col): _*).agg(sum(cnt).as(cnt)))
+    Slices.drainInto(spark, srcDir, docs.schema, root) { (batch, snap) =>
+      // both tables read only the checkpointed batch delta and their
+      // own committed rows, so their writes run concurrently
+      val counts = Cms.gramCounts(batch).localCheckpoint()
+      Seq(
+        addInto(snap, "grams", gramSchema, counts, Seq("gram"), "n"),
+        addInto(snap, "counters", cntSchema,
+          Cms.hashed(counts).groupBy("salt", "idx").agg(sum("n").as("c")),
+          Seq("salt", "idx"), "c"))
     }
-    def mergeAdd(store: String, delta: DataFrame, keys: Seq[String], cnt: String): Unit = {
-      val s = delta.sparkSession
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(store)))
-          s.read.parquet(store).unionByName(delta)
-            .groupBy(keys.map(col): _*).agg(sum(cnt).as(cnt))
-        else delta
-      swapIn(merged, store)
-    }
-    val q = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val counts = Cms.gramCounts(batch).localCheckpoint()
-        // the two stores are independent (both read only the
-        // checkpointed batch delta + their own table): their
-        // read-merge-write jobs overlap instead of serializing
-        inParallel(
-          () => mergeAdd(gramStore, counts, Seq("gram"), "n"),
-          () => mergeAdd(cntStore,
-            Cms.hashed(counts).groupBy("salt", "idx").agg(sum("n").as("c")),
-            Seq("salt", "idx"), "c"))
-        ()
-      }
-      .option("checkpointLocation", tmpCheckpoint("streamcms"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Cms.probeTopK(spark.read.parquet(gramStore), spark.read.parquet(cntStore))
+    val snap = ManifestStore.snapshot(spark, root)
+    Cms.probeTopK(snap.read("grams", gramSchema), snap.read("counters", cntSchema))
   }
 
-  /** Run independent per-trigger store writes CONCURRENTLY (guide
-    * §2.6: actions are only sequential because driver code calls them
-    * sequentially; a later job's tasks back-fill executors freed by
-    * the earlier job's tail). Every task runs to completion before the
-    * trigger returns — a failure in any rethrows after all finish, so
-    * no write can straggle past its trigger. The same move
-    * ManifestStore.publishOps applies to multi-table publishes,
-    * extended to the two pre-manifest sketch stores. */
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs = tasks.map(t => Future(scala.util.Try(t())))
-      Await.result(Future.sequence(fs), scala.concurrent.duration.Duration.Inf)
-        .foreach(_.get)
-    }
-
+  /** Stateful demo streams pay per-PARTITION state-store overhead
+    * (instances × per-commit files), not per-row: the range join took
+    * 8 s at 32 shuffle partitions and 3 s at 8 on identical data. Pin
+    * the demo streams to 8 (scoped: the conf is restored after the
+    * query starts — a stream reads it once at its first batch). At
+    * production volume the number is sized to throughput instead. */
   private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
