@@ -38,34 +38,6 @@ object HiveStore {
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** Compaction (compaction-service.ts analog): rewrite each hive
-    * partition's small files into one file per partition. Same layout,
-    * same rows, ~1 file per (tier, context, path, year, day).
-    *
-    * Publish is rename-aside (dir → dir_precompact, tmp → dir, drop
-    * aside), never delete-then-rename: the source stays on disk until
-    * the rewrite is in place, and a crash inside the two-rename window
-    * is repaired by the recovery step at the head of the next run. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val fs = graft.util.Fs.of(spark, dir)
-    val (root, aside, tmp) = (new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "_precompact"),
-      new org.apache.hadoop.fs.Path(dir + "_compacting"))
-    // Recovery: a previous run crashed between its two renames.
-    if (!fs.exists(root) && fs.exists(aside)) fs.rename(aside, root)
-    fs.delete(aside, true)
-    fs.delete(tmp, true)
-    val df = read(spark, dir)
-    df.repartition(32, col("tier"), col("context"), col("path"), col("year"), col("day"))
-      .sortWithinPartitions("tier", "context", "path", "year", "day")
-      .write.mode("overwrite")
-      .partitionBy("tier", "context", "path", "year", "day")
-      .parquet(tmp.toString)
-    fs.rename(root, aside)
-    fs.rename(tmp, root)
-    fs.delete(aside, true)
-  }
-
   /** Retention sweep — aggregation-service.ts:cleanupOldData: delete
     * partitions whose day is older than the per-tier retention,
     * comparing at day granularity (midnight UTC) so a 1-day retention

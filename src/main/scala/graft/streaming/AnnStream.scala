@@ -56,9 +56,8 @@ object AnnStream {
     val emb = graft.Tables.embeddings(spark, dir)
     // three vec_id-range slices, one file per trigger (slice order is
     // immaterial: per-vector assignment is independent of batching)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ann_src").toString
-    emb.repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_ann_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_ann_store").toString
     buildStore(spark, dir, srcDir, emb.schema, base)
     searchStore(spark, dir, base)
@@ -165,9 +164,8 @@ object AnnStream {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_annc_src").toString
-    emb.repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_annc_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_annc_store").toString
     buildStore(spark, dir, srcDir, emb.schema, base)
     compactIndexStore(spark, base)

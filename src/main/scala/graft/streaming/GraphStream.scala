@@ -71,9 +71,8 @@ object GraphStream {
     graft.functions.BoundedTopK.register(spark)
     graft.functions.DotProduct.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_graph_src").toString
-    emb.repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_graph_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_graph_store").toString
     buildStore(spark, dir, srcDir, emb.schema, base)
     // serve from the maintained store: mutual filter + presentation sort

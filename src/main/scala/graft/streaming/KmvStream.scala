@@ -35,9 +35,8 @@ object KmvStream {
     // three doc_id-range slices, one file per trigger (the
     // streamDedupLsh staging; slice order is immaterial here — the
     // sketch union is fully order-free)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_kmv_src").toString
-    docs.repartitionByRange(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(docs.repartitionByRange(3, col("doc_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_kmv_src").toString)
     val root = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString
     val skSchema = KmvOverlap.sketches(docs).schema
     Slices.drainInto(spark, srcDir, docs.schema, root) { (batch, snap) =>
@@ -93,9 +92,8 @@ object KmvStream {
   private[graft] def drainBm25(spark: SparkSession, dir: String): String = {
     graft.functions.BoundedTopK.register(spark)
     val docs = graft.Tables.documents(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_bm25_src").toString
-    docs.repartitionByRange(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(docs.repartitionByRange(3, col("doc_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_bm25_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_bm25_store").toString
     drainBm25Into(spark, srcDir, docs.schema, base)
     base

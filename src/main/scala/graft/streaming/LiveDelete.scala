@@ -22,11 +22,12 @@ import org.apache.spark.sql.functions._
   *   - the compaction sweep carries the deletion through its rewrite
   *     (it compacts the committed survivor snapshot).
   *
-  * The two-phase drain shares ONE streaming checkpoint, so the second
-  * drain resumes exactly where the first stopped — the same query,
-  * interrupted by maintenance, as in production. Specs additionally
-  * pin ordering convergence (delete-then-append ≡ append-then-delete)
-  * per family.
+  * The two-phase drain shares ONE source dir and ONE streaming
+  * checkpoint: [[Slices.stage]] queues the post-delete slice behind
+  * the two already drained, so the second drain resumes exactly where
+  * the first stopped — the same query, interrupted by maintenance, as
+  * in production. Specs additionally pin ordering convergence
+  * (delete-then-append ≡ append-then-delete) per family.
   *
   * Reference: signalk-parquet's retention (utils/retention-rules.ts)
   * deletes raw partitions only; composing deletion with live derived
@@ -37,22 +38,14 @@ object LiveDelete {
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(p).toString
 
-  /** Write phase-1 (ids < boundary, two trigger files) into `srcDir`;
-    * returns the boundary. Phase 2 appends the remainder later. */
-  private def stagePhase1(df: DataFrame, idCol: String, srcDir: String): Long = {
+  /** The arrival split around the delete: the lowest two thirds of
+    * the ids arrive before it, the rest after it. */
+  private def arrivals(df: DataFrame, idCol: String): (DataFrame, DataFrame) = {
     val n = df.count()
     val boundary = df.select(idCol).orderBy(col(idCol))
       .limit((n * 2 / 3).toInt).agg(max(idCol)).head().getLong(0) + 1
-    df.where(col(idCol) < boundary)
-      .repartitionByRange(2, col(idCol))
-      .write.mode("append").parquet(srcDir)
-    boundary
+    (df.where(col(idCol) < boundary), df.where(col(idCol) >= boundary))
   }
-
-  private def stagePhase2(df: DataFrame, idCol: String, boundary: Long,
-      srcDir: String): Unit =
-    df.where(col(idCol) >= boundary).coalesce(1)
-      .write.mode("append").parquet(srcDir)
 
   // -------------------------------------------------------------- #122
   /** IVFADC: two trigger batches → delete (touched-cell repair + log)
@@ -70,11 +63,12 @@ object LiveDelete {
     val srcDir = tmp("graft_lived_ann_src")
     val base = tmp("graft_lived_ann_store")
     val ckpt = Some(tmp("graft_lived_ann_ckpt"))
-    val boundary = stagePhase1(emb, "vec_id", srcDir)
+    val (before, after) = arrivals(emb, "vec_id")
+    Slices.stage(before.repartitionByRange(2, col("vec_id")), spark_partition_id(), 2, srcDir)
     AnnStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
     DeleteRepair.deleteFromIvfPq(spark, base,
       Embeddings.vecsOf(graft.Tables.embeddings(spark, dir)).where(DeleteRepair.delVecPred))
-    stagePhase2(emb, "vec_id", boundary, srcDir)
+    Slices.stage(after, lit(0), 1, srcDir)
     AnnStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
     AnnStream.compactIndexStore(spark, base)
     base
@@ -94,11 +88,12 @@ object LiveDelete {
     val srcDir = tmp("graft_lived_knn_src")
     val base = tmp("graft_lived_knn_store")
     val ckpt = Some(tmp("graft_lived_knn_ckpt"))
-    val boundary = stagePhase1(emb, "vec_id", srcDir)
+    val (before, after) = arrivals(emb, "vec_id")
+    Slices.stage(before.repartitionByRange(2, col("vec_id")), spark_partition_id(), 2, srcDir)
     GraphStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
     DeleteRepair.deleteFromGraph(spark, base,
       Embeddings.vecsOf(graft.Tables.embeddings(spark, dir)).where(DeleteRepair.delVecPred))
-    stagePhase2(emb, "vec_id", boundary, srcDir)
+    Slices.stage(after, lit(0), 1, srcDir)
     GraphStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
     GraphStream.compactGraphStore(spark, base)
     GraphStore.mutualFromTopk(GraphStream.readTopk(spark, base))
@@ -117,10 +112,11 @@ object LiveDelete {
     val srcDir = tmp("graft_lived_bm_src")
     val base = tmp("graft_lived_bm_store")
     val ckpt = Some(tmp("graft_lived_bm_ckpt"))
-    val boundary = stagePhase1(docs, "doc_id", srcDir)
+    val (before, after) = arrivals(docs, "doc_id")
+    Slices.stage(before.repartitionByRange(2, col("doc_id")), spark_partition_id(), 2, srcDir)
     KmvStream.drainBm25Into(spark, srcDir, docs.schema, base, ckpt)
     Bm25Store.delete(spark, base, docs.where(DeleteRepair.delDocPred))
-    stagePhase2(docs, "doc_id", boundary, srcDir)
+    Slices.stage(after, lit(0), 1, srcDir)
     KmvStream.drainBm25Into(spark, srcDir, docs.schema, base, ckpt)
     Bm25Store.compact(spark, base)
     Bm25Store.score(spark, dir, base)

@@ -41,9 +41,8 @@ object PcaStream {
     // registered explicitly
     graft.functions.DotProduct.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_pca_src").toString
-    emb.repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_pca_src").toString)
     val root = java.nio.file.Files.createTempDirectory("graft_pca_store").toString
     val st = maintainMoments(spark, srcDir, emb.schema, root)
     // projection over the accumulated corpus with the STORE's moments
@@ -105,9 +104,8 @@ object PcaStream {
     graft.functions.DotProduct.register(spark)
     val ref = graft.Tables.embeddings(spark, dir)
       .where(pmod(col("vec_id"), lit(4L)) =!= 3L)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_drift_src").toString
-    ref.repartitionByRange(3, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(ref.repartitionByRange(3, col("vec_id")),
+      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_drift_src").toString)
     val root = java.nio.file.Files.createTempDirectory("graft_drift_store").toString
     val st = maintainMoments(spark, srcDir, ref.schema, root)
     graft.similarity.DriftMonitor.reportFromMoments(

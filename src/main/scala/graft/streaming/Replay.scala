@@ -33,54 +33,36 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Scale note: at warehouse scale the archive is time-partitioned, so
   * staging is a METADATA operation — each slice is the set of existing
-  * partition directories in its range, and the replay source lists
-  * them in time order without copying bytes. Here the test archive is
-  * a single file, so [[stage]] physically slices it (each slice write
-  * is a pruned scan: the range predicate is on the native `ts` column,
-  * row-group pruning applies). Slice writes run through one
-  * `repartition(1)` each — the slice is a bounded replay quantum, not
-  * a full-corpus shuffle.
+  * partition directories in its range. Here the test archive is a
+  * single file, so [[stage]] physically slices it through the one
+  * stager, [[Slices.stage]]: one pruned scan of the window, each row
+  * tagged with its slice's replay position, all slices in one job.
   */
 object Replay {
 
   case class Staged(dir: String, nSlices: Int, sliceMs: Long, startMs: Long, endMs: Long)
 
-  /** Stage `[startMs, endMs)` of the events archive as one parquet
-    * file per `sliceMs` of archive time, named and modification-
-    * stamped in replay order (the file source orders by mod time;
-    * explicit stamps make the order deterministic even when two slice
-    * writes land in the same clock ms). `ts_ms` is normalized to
-    * BIGINT at stage time so the replay stream is encoding-agnostic. */
-  /** `order`: replay position → ARCHIVE slice index (identity when
-    * empty) — a non-identity permutation replays slices out of
-    * archive-time order, the input shape [[LateData]] needs. */
+  /** Stage `[startMs, endMs)` of the events archive as one slice file
+    * per `sliceMs` of archive time, in replay order. `ts_ms` is
+    * normalized to BIGINT at stage time so the replay stream is
+    * encoding-agnostic; the range predicate is on the native `ts`
+    * column, so row-group pruning applies. `order`: replay position →
+    * ARCHIVE slice index (identity when empty) — a non-identity
+    * permutation replays slices out of archive-time order, the input
+    * shape [[LateData]] needs. */
   def stage(spark: SparkSession, dir: String, startMs: Long, endMs: Long,
             sliceMs: Long, order: Seq[Int] = Seq.empty): Staged = {
-    val out = java.nio.file.Files.createTempDirectory("graft_replay_stage").toString
-    val raw = graft.Tables.table(spark, dir, "events")
-    val tsType = raw.schema("ts").dataType
+    val tsType = graft.Tables.table(spark, dir, "events").schema("ts").dataType
     val nSlices = ((endMs - startMs + sliceMs - 1) / sliceMs).toInt
     require(order.isEmpty || order.sorted == (0 until nSlices),
       s"order must permute 0 until $nSlices")
-    var i = 0
-    while (i < nSlices) {
-      val archiveIdx = if (order.isEmpty) i else order(i)
-      val s = startMs + archiveIdx * sliceMs
-      val e = math.min(s + sliceMs, endMs)
-      val sliceDir = s"$out/work_$i"
-      graft.Tables.events(spark, dir)
-        .where(graft.Tables.tsRange(tsType, s, e))
-        .select(col("ts_ms"), col("event_type"), col("value"), col("user_id"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(sliceDir)
-      val part = new java.io.File(sliceDir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(out, f"slice_$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000000000L + i * 60000L)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sliceDir))
-      i += 1
-    }
+    // archive slice index → replay position: the inverse of `order`
+    val position = if (order.isEmpty) 0 until nSlices else order.indices.sortBy(order)
+    val out = Slices.stage(
+      graft.Tables.events(spark, dir).where(graft.Tables.tsRange(tsType, startMs, endMs))
+        .select(col("ts_ms"), col("event_type"), col("value"), col("user_id")),
+      element_at(lit(position.toArray), expr(s"(ts_ms - $startMs) div $sliceMs").cast("int") + 1),
+      nSlices, java.nio.file.Files.createTempDirectory("graft_replay_stage").toString)
     Staged(out, nSlices, sliceMs, startMs, endMs)
   }
 

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * (result-sized — for a 2-D skyline, at most one point per distinct
   * frontier price), each batch runs the batch operator's prefix-max
   * core over frontier ∪ batch, committed through [[Slices.commit]].
-  * Batch order is irrelevant (set-union commutes), so slices
-  * hash-split; trigger-at-a-time ≡ one-shot and the BATCH oracle
-  * carries over verbatim. At 100 TB the
+  * Batch order is irrelevant (set-union commutes), so the slices are
+  * the partkey residues mod 3; trigger-at-a-time ≡ one-shot and the
+  * BATCH oracle carries over verbatim. At 100 TB the
   * arriving batch dominates the cost and the frontier rides along as
   * a tiny union — the stream never rescans history.
   */
@@ -30,9 +30,8 @@ object SkylineStream {
     val p = graft.Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_retailprice").as("price"),
         col("p_size").as("size"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sky_src").toString
-    p.repartition(3, pmod(col("p_partkey"), lit(3)))
-      .write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(p, pmod(col("p_partkey"), lit(3)), 3,
+      java.nio.file.Files.createTempDirectory("graft_sky_src").toString)
     val root = java.nio.file.Files.createTempDirectory("graft_sky_store").toString
     Slices.drainInto(spark, srcDir, p.schema, root) { (batch, snap) =>
       Seq(ManifestStore.replaceTableOp("frontier", "", () =>

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.util.ManifestStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** The one trigger-to-store path of the file-fed streams: [[stage]]
-  * carves a time-ordered replay into slice files, [[source]] delivers
+  * writes a frame as one slice file per trigger, [[source]] delivers
   * one file per micro-batch, [[drain]] runs a batch function over
   * every file under Trigger.AvailableNow, and [[drainInto]] commits
   * each trigger's store tables through [[commit]].
@@ -26,33 +26,46 @@ import org.apache.spark.sql.types.StructType
   */
 private[graft] object Slices {
 
-  /** Carve a frame with a `ts_ms` column into `n` consecutive
-    * archive-time ranges, one parquet file per slice, mod-time-stamped
-    * in replay order so [[source]] delivers one slice per trigger in
-    * time order — the [[Replay.stage]] mechanism for operators that
-    * need their own column set. At warehouse scale this is a metadata
-    * walk over time partitions; here the test archive is one file, so
-    * each slice write is a row-group-pruned scan (the slice is a
-    * bounded replay quantum, not a corpus shuffle). */
+  /** The one stager: write `df` into `dir` as `n` files
+    * `slice_%04d.parquet`, `slice` giving each row its replay position
+    * in `[0, n)`. ONE Spark job writes every slice — a repartition on
+    * the slice column, then a write partitioned by it, so a slice is
+    * one file even when two slices share a task — and each file is
+    * then moved up and mtime-stamped in replay order, the order
+    * [[source]] delivers. Into a dir that already holds slices,
+    * numbering and stamps carry on after the last one. An empty slice
+    * (a trigger that tests nothing) or a row outside `[0, n)` fails
+    * the stage by name before anything moves. Returns `dir`. */
+  def stage(df: DataFrame, slice: Column, n: Int, dir: String): String = {
+    val (sc, work) = ("graft_slice", new java.io.File(dir, "_work"))
+    try {
+      df.withColumn(sc, slice).repartition(n, col(sc))
+        .write.mode("overwrite").partitionBy(sc).parquet(work.toString)
+      val parts = work.listFiles().filter(_.isDirectory).map { d =>
+        d.getName.stripPrefix(s"$sc=") -> d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      }.toMap
+      val stray = parts.keySet -- (0 until n).map(_.toString)
+      require(stray.isEmpty, s"rows outside slices [0, $n): ${stray.mkString(", ")}")
+      val empty = (0 until n).filterNot(i => parts.contains(i.toString))
+      require(empty.isEmpty, s"slice ${empty.mkString(", ")} of $n is empty")
+      val first = new java.io.File(dir).list().count(_.matches("slice_\\d{4}\\.parquet"))
+      for (i <- 0 until n) {
+        val Seq(file) = parts(i.toString)
+        val dst = new java.io.File(dir, f"slice_${first + i}%04d.parquet")
+        java.nio.file.Files.move(file.toPath, dst.toPath)
+        dst.setLastModified(1000000000000L + (first + i) * 60000L)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(work)
+    dir
+  }
+
+  /** [[stage]] a frame with a `ts_ms` column as `nSlices` consecutive
+    * equal-width archive-time ranges, into a fresh dir tagged `tag`. */
   def stage(df: DataFrame, tag: String, nSlices: Int): String = {
     val bounds = df.agg(min("ts_ms"), max("ts_ms")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val w = (hi - lo) / nSlices + 1
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_src").toString
-    var i = 0
-    while (i < nSlices) {
-      val sliceDir = s"$srcDir/work_$i"
-      df.where(col("ts_ms") >= lo + i * w && col("ts_ms") < lo + (i + 1) * w)
-        .repartition(1).write.mode("overwrite").parquet(sliceDir)
-      val part = new java.io.File(sliceDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(srcDir, f"slice_$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000000000L + i * 60000L)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sliceDir))
-      i += 1
-    }
-    srcDir
+    stage(df, expr(s"(ts_ms - $lo) div ${(hi - lo) / nSlices + 1}"), nSlices,
+      java.nio.file.Files.createTempDirectory(s"graft_${tag}_src").toString)
   }
 
   /** One file of `srcDir` per micro-batch, oldest modification time

@@ -62,10 +62,13 @@ object Streaming {
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
   }
 
-  private def tmpCheckpoint(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag")
-    d.toString
-  }
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+
+  /** The events table as a batch frame under the stream schema. */
+  private def rawEvents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.option("pathGlobFilter", "events.parquet").schema(eventsSchema(spark, dir))
+      .parquet(dir)
 
   private val runCounter = new java.util.concurrent.atomic.AtomicLong()
 
@@ -95,7 +98,7 @@ object Streaming {
       .writeStream
       .format("memory").queryName({ val n = uniqueName("stream_bucket"); bucketTable.set(n); n })
       .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", tmpCheckpoint("bucket"))
+      .option("checkpointLocation", tmp("ckpt_bucket"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -148,7 +151,7 @@ object Streaming {
       .writeStream
       .format("memory").queryName({ val n = uniqueName("stream_threshold"); thresholdTable.set(n); n })
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmpCheckpoint("threshold"))
+      .option("checkpointLocation", tmp("ckpt_threshold"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -188,7 +191,7 @@ object Streaming {
     val q = deduped.writeStream
       .format("memory").queryName({ val n = uniqueName("stream_dedup"); dedupTable.set(n); n })
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmpCheckpoint("dedup"))
+      .option("checkpointLocation", tmp("ckpt_dedup"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -248,7 +251,7 @@ object Streaming {
       .writeStream
       .format("memory").queryName({ val n = uniqueName("stream_episodes"); episodesTable.set(n); n })
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmpCheckpoint("episodes"))
+      .option("checkpointLocation", tmp("ckpt_episodes"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -286,8 +289,8 @@ object Streaming {
     * run exports nothing. Counts double (and the hash compare fails)
     * if recovery re-processes. */
   def streamExportSink(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
-    val out = java.nio.file.Files.createTempDirectory("graft_export_sink").toString
-    val ckpt = tmpCheckpoint("export")
+    val out = tmp("export_sink")
+    val ckpt = tmp("ckpt_export")
     def runOnce(): Unit = {
       val q = eventStream(spark, dir)
         .select("event_id", "user_id", "event_type", "ts_ms", "value")
@@ -342,7 +345,7 @@ object Streaming {
       .format("memory")
       .queryName({ val n = uniqueName("stream_static_dedup"); staticDedupTable.set(n); n })
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmpCheckpoint("static_dedup"))
+      .option("checkpointLocation", tmp("ckpt_static_dedup"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -390,7 +393,7 @@ object Streaming {
       .writeStream
       .format("memory").queryName({ val n = uniqueName("stream_range"); rangeJoinTable.set(n); n })
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmpCheckpoint("range"))
+      .option("checkpointLocation", tmp("ckpt_range"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -417,19 +420,16 @@ object Streaming {
     * through [[Slices.commit]]. Because the partials carry exact
     * decimal sums, ANY batch boundary placement yields a final tier
     * bit-identical to a full batch recompute — which is precisely what
-    * the oracle checks. The source is split into four files consumed
-    * one per trigger, so the merge path (not a single-batch shortcut)
-    * is what's exercised. */
+    * the oracle checks. The source is split into four slices by
+    * event_id mod 4, one per trigger, so the merge path (not a
+    * single-batch shortcut) is what's exercised. */
   def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.TimeSeries
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_tier_src").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_tier_store").toString
-    val sch = eventsSchema(spark, dir)
-    spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
-      .parquet(dir).repartition(4)
-      .write.mode("overwrite").parquet(srcDir)
-    val tierSchema = tierPartials(spark.read.schema(sch).parquet(srcDir), 300000L).schema
-    Slices.drainInto(spark, srcDir, sch, root) { (batch, snap) =>
+    val raw = rawEvents(spark, dir)
+    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("tier_src"))
+    val root = tmp("tier_store")
+    val tierSchema = tierPartials(raw, 300000L).schema
+    Slices.drainInto(spark, srcDir, raw.schema, root) { (batch, snap) =>
       Seq(ManifestStore.replaceTableOp("tier5m", "", () =>
         TimeSeries.mergeTierPartials(snap.read("tier5m", tierSchema),
           tierPartials(batch, 300000L))))
@@ -455,33 +455,45 @@ object Streaming {
     * live-enrichment shape of the reference's history lookups. As-of
     * against a static quote side decomposes per probe row, so ANY
     * micro-batch placement appends exactly the rows the one-shot join
-    * produces; the source is split into 3 files consumed one per
-    * trigger so the per-batch path is actually exercised. Oracle:
-    * the same DuckDB ASOF LEFT JOIN as sk_asof_join/sk_asof_native. */
-  def streamAsOf(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_asof_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_asof_out").toString + "/enriched"
-    val sch = eventsSchema(spark, dir)
-    spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
-      .parquet(dir).where(col("event_type") === "click").repartition(3)
-      .write.mode("overwrite").parquet(srcDir)
-    val quotes = withTsMs(spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
-      .parquet(dir).where(col("event_type") === "view"))
+    * produces; the clicks are split into 3 slices by event_id mod 3,
+    * one per trigger, so the per-batch path is actually exercised.
+    * Each trigger's rows append to the `enriched` table through
+    * [[Slices.commit]], so a re-delivered batch appends nothing.
+    * Oracle: the same DuckDB ASOF LEFT JOIN as
+    * sk_asof_join/sk_asof_native. */
+  def streamAsOf(spark: SparkSession, dir: String): DataFrame =
+    asOfInto(spark, dir, asOfStage(spark, dir), tmp("asof_store"))
+
+  /** Stage the clicks as three slices (three triggers); returns the
+    * source dir. */
+  private[graft] def asOfStage(spark: SparkSession, dir: String): String = withNanos(spark) {
+    Slices.stage(rawEvents(spark, dir).where(col("event_type") === "click"),
+      pmod(col("event_id"), lit(3)), 3, tmp("asof_src"))
+  }
+
+  /** Drain the staged clicks at `srcDir` into `root` and read the
+    * enriched rows back. `checkpoint` is caller-supplied so a crashed
+    * drain can restart on the same one. */
+  private[graft] def asOfInto(spark: SparkSession, dir: String, srcDir: String,
+      root: String, checkpoint: Option[String] = None): DataFrame = withNanos(spark) {
+    val raw = rawEvents(spark, dir)
+    val quotes = withTsMs(raw.where(col("event_type") === "view"))
       .select("user_id", "ts_ms", "value", "event_id")
-    Slices.drain(spark, srcDir, sch) { (batch, _) =>
+    def enrich(clicks: DataFrame): DataFrame =
       graft.plans.AsOfJoinNative.asOfJoin(
-        withTsMs(batch).select("event_id", "user_id", "ts_ms", "value"),
+        withTsMs(clicks).select("event_id", "user_id", "ts_ms", "value"),
         quotes, "user_id", "ts_ms", "value", "event_id")
-        .write.mode("append").parquet(outDir)
+    Slices.drainInto(spark, srcDir, raw.schema, root, checkpoint) { (batch, _) =>
+      Seq(ManifestStore.appendOp("enriched", "", () => Nil, () => enrich(batch)))
     }
-    spark.read.parquet(outDir).orderBy("event_id")
+    ManifestStore.readTable(spark, root, "enriched", enrich(raw).schema).orderBy("event_id")
   }
 
   // ------------------------------------------------------------- #42i
   /** Late-data tier correction as a STREAM — the streaming twin of
     * [[graft.operators.TimeSeries.tierCorrection]] and the live form
     * of the reference's lastProcessed rewind (aggregation-service.ts:
-    * 405-421): late raw events arrive over 3 triggers (split by
+    * 405-421): late raw events arrive over 3 triggers (sliced by
     * event_id mod 3, so triggers genuinely collide on buckets); each
     * trigger (a) merges
     * its partials into the 1 h `tier1h` table via the same touched-only
@@ -497,30 +509,23 @@ object Streaming {
     * published vs final store over all touched buckets) reuses the
     * BATCH operator's oracle verbatim. */
   def streamTierCorrection(spark: SparkSession, dir: String): DataFrame = {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_corr_src").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_corr_store").toString
+    val (srcDir, root) = (tmp("corr_src"), tmp("corr_store"))
     tierCorrectionInto(spark, srcDir, tierCorrectionStage(spark, dir, srcDir, root), root)
   }
 
   /** Publish the on-time 1 h tier at `root` as both `published` and the
     * working `tier1h`, and stage the late arrivals at `srcDir` as three
-    * files (three triggers); returns the staged files' schema. */
+    * slices (three triggers); returns the staged files' schema. */
   private[graft] def tierCorrectionStage(spark: SparkSession, dir: String,
       srcDir: String, root: String): StructType = withNanos(spark) {
     val isLate = col("event_id") % 17 === 3
-    val sch = eventsSchema(spark, dir)
-    val all = spark.read.option("pathGlobFilter", "events.parquet").schema(sch).parquet(dir)
+    val all = rawEvents(spark, dir)
     val onTime = tierPartials(all.where(!isLate), 3600000L).localCheckpoint()
     ManifestStore.publishOps(spark, root, Seq(
       ManifestStore.replaceTableOp("published", "", () => onTime),
       ManifestStore.replaceTableOp("tier1h", "", () => onTime)))
-    // one file per event_id residue mod 3, written in turn: three
-    // triggers, each carrying rows (a hash repartition on the residue
-    // can put two residues in one file and leave another empty)
-    for (r <- 0 until 3)
-      all.where(isLate && pmod(col("event_id"), lit(3)) === r)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-    sch
+    Slices.stage(all.where(isLate), pmod(col("event_id"), lit(3)), 3, srcDir)
+    all.schema
   }
 
   /** Drain the staged late arrivals into `root` and read the corrected
@@ -571,7 +576,7 @@ object Streaming {
   /** Streaming near-dup dedup: the [[graft.dedup.Dedup]] LSH pipeline
     * run per micro-batch against a persistent signature store — the
     * shape a crawl pipeline runs at every ingest. Each arriving batch
-    * (3 files, one per trigger) is (a) near-dup'd against ITSELF via
+    * (3 doc_id ranges, one per trigger) is (a) near-dup'd against ITSELF via
     * the full batch operator (signature collapse + 16×8 banding +
     * exact-Jaccard verify — [[graft.dedup.Dedup.minHashLshOn]]), and
     * (b) banded against the store of all earlier arrivals: the
@@ -598,13 +603,15 @@ object Streaming {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lshsrc").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_lshstore").toString
+    val base = tmp("lshstore")
     val bandsDir = base + "/bands"; val toksDir = base + "/toks"
     val outDir = base + "/pairs"
-    spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .repartitionByRange(3, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    // the slice is the doc_id range partition: the arrival split
+    // StreamingSpec recomputes to prove cross-trigger pairs occurred
+    val srcDir = Slices.stage(
+      spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
+        .repartitionByRange(3, col("doc_id")),
+      spark_partition_id(), 3, tmp("lshsrc"))
     val fs = graft.util.Fs.of(spark, base)
     Slices.drain(spark, srcDir, docSchema) { (batch, _) =>
       val sp = batch.sparkSession
@@ -687,7 +694,7 @@ object Streaming {
       .format("memory")
       .queryName({ val n = uniqueName("stream_session"); sessionTable.set(n); n })
       .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", tmpCheckpoint("session"))
+      .option("checkpointLocation", tmp("ckpt_session"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -714,16 +721,13 @@ object Streaming {
     */
   def streamHll(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.Hll
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_hll_src").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_hll_store").toString
-    val sch = eventsSchema(spark, dir)
-    spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
-      .parquet(dir).repartition(4)
-      .write.mode("overwrite").parquet(srcDir)
+    val raw = rawEvents(spark, dir)
+    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("hll_src"))
+    val root = tmp("hll_store")
     val pairSchema = StructType(Seq(
       StructField("event_type", StringType), StructField("user_id", LongType)))
     val regSchema = Hll.registers(spark.read.schema(pairSchema).parquet(srcDir)).schema
-    Slices.drainInto(spark, srcDir, sch, root) { (batch, snap) =>
+    Slices.drainInto(spark, srcDir, raw.schema, root) { (batch, snap) =>
       val ev = batch.select(col("event_type"), col("user_id"))
       // two independent read-merge-write jobs: they run concurrently
       Seq(
@@ -757,10 +761,9 @@ object Streaming {
   def streamCms(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.Cms
     graft.functions.NGrams.register(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cms_src").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_cms_store").toString
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    docs.repartition(4).write.mode("overwrite").parquet(srcDir)
+    val srcDir = Slices.stage(docs, pmod(col("doc_id"), lit(4)), 4, tmp("cms_src"))
+    val root = tmp("cms_store")
     val gramSchema = Cms.gramCounts(docs).schema
     val cntSchema = Cms.hashed(Cms.gramCounts(docs))
       .groupBy("salt", "idx").agg(sum("n").as("c")).schema

@@ -65,6 +65,19 @@ class ContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"gated queries without a §2 row: $missing")
   }
 
+  test("one stager: only Slices.scala stamps or writes a stream source dir") {
+    // every file-fed stream stages through Slices.stage — one job, one
+    // non-empty file per slice, replay order stamped in one place
+    val writesSrc = "\\.write(\\s*\\.\\w+\\([^)]*\\))*\\s*\\.parquet\\([^)]*[sS]rc".r
+    val offenders = new java.io.File("src/main/scala/graft/streaming").listFiles()
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "Slices.scala")
+      .filter { f =>
+        val text = java.nio.file.Files.readString(f.toPath)
+        text.contains("setLastModified") || writesSrc.findFirstIn(text).isDefined
+      }.map(_.getName).toSeq
+    assert(offenders.isEmpty, s"source-dir staging outside Slices.stage: $offenders")
+  }
+
   test("the gate is as wide as the round claims") {
     // 256 oracle-checked queries as of round 16 — every queries entry
     // ships an oracle, so both floors track together; a shrink in

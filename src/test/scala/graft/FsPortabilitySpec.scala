@@ -50,16 +50,11 @@ class FsPortabilitySpec extends SparkSpec {
     assert(fs.getUri.getScheme == "graftfs")
   }
 
-  test("HiveStore.compact + retentionSweep run on a non-default scheme") {
+  test("HiveStore.retentionSweep runs on a non-default scheme") {
     val root = graftRoot()
     HiveStore.write(liveSlice(sfDir), root)
     val fs = fsOf(root)
-    val nRows = HiveStore.read(spark, root).count()
-    assert(nRows > 0)
-    HiveStore.compact(spark, root)
-    // same rows after the rename-aside publish, no aside dir left
-    assert(HiveStore.read(spark, root).count() == nRows)
-    assert(!fs.exists(new Path(root + "_precompact")))
+    assert(HiveStore.read(spark, root).count() > 0)
     // retention: 1-day retention at a far-future "now" deletes all days
     val deleted = HiveStore.retentionSweep(spark, root,
       Map("raw" -> 1), nowMs = 4102444800000L)

@@ -18,17 +18,6 @@ class HiveStoreSpec extends SparkSpec {
     dir
   }
 
-  test("compact leaves one file per partition and preserves rows") {
-    val dir = freshStore("compact")
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val before = HiveStore.read(spark, dir).orderBy("id").collect()
-    HiveStore.compact(spark, dir)
-    val after = HiveStore.read(spark, dir).orderBy("id").collect()
-    assert(before.map(_.getAs[Long]("id")).toSeq == after.map(_.getAs[Long]("id")).toSeq)
-    val files = new java.io.File(dir).listFiles() // sanity: store still exists
-    assert(files != null && files.nonEmpty)
-  }
-
   test("retentionSweep deletes only partitions older than the tier cutoff, day-granular") {
     val dir = freshStore("retention")
     // "now" = 2024 day 41 at 18:00 UTC; raw retention 1 day →
