@@ -75,19 +75,6 @@ object History {
     }
   }
 
-  /** Angle → magnitude path pairs whose average should be
-    * magnitude-weighted (angular-paths.ts WEIGHTED_ANGULAR_PATHS; the
-    * weighted circular mean itself is
-    * [[graft.operators.Angular]]'s weighted operator). General
-    * angular-path detection is metadata-driven in the reference
-    * (units == "rad") — callers resolve their registry and pass it to
-    * [[values]] as `angularPaths`. */
-  val weightedAngularPaths: Map[String, String] = Map(
-    "environment.wind.directionTrue" -> "environment.wind.speedTrue",
-    "environment.wind.directionMagnetic" -> "environment.wind.speedOverGround",
-    "environment.wind.angleApparent" -> "environment.wind.speedApparent",
-    "environment.current.setTrue" -> "environment.current.drift")
-
   /** Resolved [from, to) in epoch millis — the five standard SignalK
     * time-range patterns (HistoryAPI.ts getRequestParams). `now` is a
     * parameter (no wall-clock reads inside query planning). */
@@ -206,10 +193,8 @@ object History {
     * so it runs as one ordered scan; the aligned frame is bounded by
     * construction (the API picks resolution for ~500 buckets, see
     * [[autoResolutionMs]]), so a single partition is the right shape
-    * here. Unbounded per-series smoothing at scale lives in
-    * [[graft.operators.Smoothing.emaSeries]]. Null buckets pass
-    * through without updating the accumulator (the endpoint skips
-    * missing samples). */
+    * here. Null buckets pass through without updating the
+    * accumulator (the endpoint skips missing samples). */
   private def emaOver(df: DataFrame, emaSpecs: Seq[PathSpec]): DataFrame = {
     if (emaSpecs.isEmpty) return df
     val schema = df.schema

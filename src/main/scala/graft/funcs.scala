@@ -54,13 +54,10 @@ object funcs {
     round(c * lit(p), 0) / lit(p)
   }
 
-  /** Millisecond time bucket: FLOOR(epoch_ms / res) * res — mirrors the
-    * reference's bucketing (HistoryAPI.ts:826). Emitted as BIGINT so the
-    * value hashes identically across engines. */
-  def bucketMs(ts: Column, resolutionMs: Long): Column =
-    floor(unix_millis(ts) / lit(resolutionMs)).cast("long") * lit(resolutionMs)
-
-  /** Same bucketing over an epoch-millis BIGINT column. */
+  /** Millisecond time bucket over an epoch-millis BIGINT column:
+    * FLOOR(ts_ms / res) * res — mirrors the reference's bucketing
+    * (HistoryAPI.ts:826). Emitted as BIGINT so the value hashes
+    * identically across engines. */
   def bucketOfMs(tsMs: Column, resolutionMs: Long): Column =
     floor(tsMs / lit(resolutionMs)).cast("long") * lit(resolutionMs)
 
@@ -98,12 +95,6 @@ object funcs {
   def vectorAvg(c: Column): Column =
     atan2(davg(round(sin(c), 6), 6), davg(round(cos(c), 6), 6))
 
-  /** Normalize an angle to [0, 360) — angle-converter.ts:normalizeDegrees. */
-  def normalizeDeg(deg: Column): Column = pmod(deg, lit(360.0))
-
-  /** Normalize an angle to [0, 2π) — angle-converter.ts:normalizeRadians. */
-  def normalizeRad(rad: Column): Column = pmod(rad, lit(2.0 * math.Pi))
-
   /** Shortest signed angular difference a1→a2 in degrees, range
     * [-180, 180) — angle-converter.ts:angularDifferenceDegrees
     * (positive = clockwise). The reference's while-loop leaves an
@@ -111,13 +102,6 @@ object funcs {
     * heading, and branch-free for codegen. */
   def angularDiffDeg(a1: Column, a2: Column): Column =
     pmod(a2 - a1 + lit(180.0), lit(360.0)) - lit(180.0)
-
-  /** Wrapping sector test: is `a` inside the clockwise sector from
-    * `start` to `end` — angle-converter.ts:isAngleInRangeDegrees. */
-  def inAngularRangeDeg(a: Column, start: Column, end: Column): Column = {
-    val n = normalizeDeg(a); val s = normalizeDeg(start); val e = normalizeDeg(end)
-    when(s <= e, n >= s && n <= e).otherwise(n >= s || n <= e)
-  }
 
   /** Bounding-box containment with 180° meridian wrap — mirrors
     * geo-calculator.ts:isPointInBoundingBox. */

@@ -49,56 +49,6 @@ object Multimodal {
     }
   }
 
-  case class ImageFeature(doc_id: Long, width: Int, height: Int,
-      mean_luma: Double)
-
-  /** REAL image decode through the exact same seam as
-    * [[decodeFeatures]] — `javax.imageio` (pure JVM, no extra deps)
-    * replaces the stub inside the one-decoder-per-partition
-    * `mapPartitions` without the pipeline shape changing at all: the
-    * decoder instance (here the ImageIO reader context) is established
-    * per partition, records stream through it, typed features come
-    * out. This is the drop-in point a libjpeg/FFmpeg JNI decoder uses;
-    * MultimodalDecodeSpec drives real PNGs AND JPEGs (two codecs, one
-    * mixed partition) through it and asserts pixel-derived features. Payloads that are not decodable images
-    * yield a null-feature row (width -1) rather than poisoning the
-    * task — the per-record guard a 100 TB dirty corpus needs. */
-  def decodeImages(records: Dataset[MMRecord]): Dataset[ImageFeature] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      // per-partition decoder context: ImageIO scanners are cached
-      // statically by the JVM; a JNI decoder would init here
-      it.map { r =>
-        // NonFatal, not just IOException: imageio decoders throw
-        // RuntimeExceptions on malformed payloads too (CMMException
-        // for broken ICC profiles, IndexOutOfBounds in the JPEG
-        // reader) — all must degrade to the sentinel row, not kill
-        // the task.
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) ImageFeature(r.doc_id, -1, -1, -1.0)
-        else {
-          val (w, h) = (img.getWidth, img.getHeight)
-          var sum = 0.0
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
-              x += 1
-            }
-            y += 1
-          }
-          val mean = BigDecimal(sum / (w.toLong * h))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          ImageFeature(r.doc_id, w, h, mean)
-        }
-      }
-    }
-  }
-
   // --------------------------------------------------------------- #40
   /** documents.text → binary payload → batched decode → typed feature
     * frame. Oracle recomputes the same features relationally. */
@@ -242,8 +192,7 @@ object Multimodal {
   // -------------------------------------------------------------- #40v
   case class PHashRow(doc_id: Long, phash: Long)
 
-  /** 56-bit dHash layout shared by the stub and the real decoder: an
-    * 8×8 grayscale grid, bit r*7+c set iff g(r,c) > g(r,c+1) — seven
+  /** 56-bit dHash layout of the pHash: an 8×8 grayscale grid, bit r*7+c set iff g(r,c) > g(r,c+1) — seven
     * row-adjacent comparisons per row. 56 bits (not the canonical
     * 9×8 = 64) keeps the fingerprint clear of the BIGINT sign bit:
     * DuckDB refuses `1::BIGINT << 63`, and sign-free fingerprints
@@ -266,7 +215,8 @@ object Multimodal {
     * "grid" is 64 bytes sampled evenly from the payload (position
     * (idx·(n−1))/63) — deterministic byte math standing in for the
     * decode+downscale, so the whole dedup is SQL-expressible and
-    * oracle-checked. The REAL grid comes from [[imagePhash]]. */
+    * oracle-checked. A real decoder replaces the byte sampling with a
+    * block-averaged 8×8 luma grid; the dHash stays. */
   def phashStub(records: Dataset[MMRecord]): Dataset[PHashRow] = {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
@@ -278,52 +228,6 @@ object Multimodal {
           (p(((idx.toLong * (n - 1)) / 63).toInt) & 0xff).toDouble
         })
         PHashRow(r.doc_id, fp)
-      }
-    }
-  }
-
-  /** REAL perceptual hash through the decode seam: javax.imageio
-    * decode, block-averaged 8×8 luma grid, then the same 56-bit dHash
-    * as the stub — the drop-in the stub's pipeline shape promises.
-    * Undecodable payloads yield phash −1 (sentinel), mirroring
-    * [[decodeImages]]. MultimodalDecodeSpec asserts the hash is
-    * stable under a true 2:1 box-filter resize (the mm_resize
-    * semantics on real pixels). */
-  def imagePhash(records: Dataset[MMRecord]): Dataset[PHashRow] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.map { r =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) PHashRow(r.doc_id, -1L)
-        else {
-          val (w, h) = (img.getWidth, img.getHeight)
-          val grid = Array.ofDim[Double](8, 8)
-          var gr = 0
-          while (gr < 8) {
-            var gc = 0
-            while (gc < 8) {
-              val x0 = gc * w / 8; val x1 = math.max(x0 + 1, (gc + 1) * w / 8)
-              val y0 = gr * h / 8; val y1 = math.max(y0 + 1, (gr + 1) * h / 8)
-              var sum = 0.0
-              var y = y0
-              while (y < y1) {
-                var x = x0
-                while (x < x1) {
-                  val rgb = img.getRGB(math.min(x, w - 1), math.min(y, h - 1))
-                  sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
-                  x += 1
-                }
-                y += 1
-              }
-              grid(gr)(gc) = sum / ((x1 - x0) * (y1 - y0))
-              gc += 1
-            }
-            gr += 1
-          }
-          PHashRow(r.doc_id, dhash56((a, b) => grid(a)(b)))
-        }
       }
     }
   }
@@ -345,9 +249,7 @@ object Multimodal {
     * (median 1), ZERO cross pairs — the corpus's token-shuffle text
     * near-dups are correctly NOT matched (byte-position hashing is
     * the wrong tool for bag-of-words similarity, and the zero is the
-    * proof; token near-dup is minHashLsh/simHash's job). Resize
-    * robustness on real pixels is [[imagePhash]] + the
-    * MultimodalDecodeSpec box-filter test. */
+    * proof; token near-dup is minHashLsh/simHash's job). */
   def mmPhashDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = Tables.documents(spark, dir)

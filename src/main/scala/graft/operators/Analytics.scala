@@ -227,24 +227,10 @@ object Analytics {
     * Scale note: exact percentiles buffer a GROUP's values in one
     * aggregation row — fine for per-path rollups whose groups fit an
     * executor, a straight OOM for percentiles over huge groups (few
-    * event types × 100 TB). The operator therefore DEFAULTS to the
-    * mergeable `approx_percentile` sketch (map-side partial
-    * aggregation, state bounded by the sketch — same flip as
-    * [[graft.similarity.Embeddings.embedOutliers]]); the exact
-    * variant survives as [[percentilesExact]], the oracle-checked
-    * demo (DuckDB's quantile_cont is exact). */
-  def percentiles(spark: SparkSession, dir: String): DataFrame =
-    percentilesImpl(spark, dir, exact = false)
-
-  /** Exact-percentile variant, kept ONLY as the oracle demo. */
-  def percentilesExact(spark: SparkSession, dir: String): DataFrame =
-    percentilesImpl(spark, dir, exact = true)
-
-  private def percentilesImpl(spark: SparkSession, dir: String,
-      exact: Boolean): DataFrame = {
-    def pct(q: Double): Column =
-      if (exact) percentile(col("value"), lit(q))
-      else expr(s"approx_percentile(value, $q, 10000)")
+    * event types × 100 TB); there the mergeable `approx_percentile`
+    * sketch is the swap, at the price of the oracle's bit-equality. */
+  def percentilesExact(spark: SparkSession, dir: String): DataFrame = {
+    def pct(q: Double): Column = percentile(col("value"), lit(q))
     ev(spark, dir)
       .groupBy("event_type")
       .agg(
@@ -266,8 +252,6 @@ object Analytics {
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // oracle demo pins the exact percentiles; production default is
-    // the approx sketch (see percentiles' scaladoc)
     "sk_percentiles" -> (percentilesExact _),
     "sk_anomaly_zscore" -> (anomalyZscore _),
     "sk_trend_slope" -> (trendSlope _),

@@ -187,9 +187,8 @@ object Analytics2 {
     * per-path stats (5 paths here, one row per path at any scale)
     * broadcast back — the corpus itself never shuffles or sorts.
     * Exact interpolated percentiles here (bit-equal to the oracle's
-    * quantile_cont, as sk_percentiles proves); the production default
-    * at 100 TB swaps in approx_percentile exactly as documented on
-    * [[Analytics.percentiles]]. */
+    * quantile_cont, as sk_percentiles proves); at 100 TB the swap is
+    * approx_percentile, as documented on [[Analytics.percentilesExact]]. */
   def outlierMad(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select("event_type", "event_id", "ts_ms", "value")

@@ -28,7 +28,7 @@ object Embeddings {
   // vector is undefined (0/0 → NaN, where engine ordering/filter
   // semantics diverge). A production corpus should drop or re-embed
   // zero vectors upstream (`where(norm2 > 0)`) before these operators.
-  private[similarity] def vecs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def vecs(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.DotProduct.register(spark)
     vecsOf(Tables.embeddings(spark, dir))
   }
@@ -690,28 +690,13 @@ object Embeddings {
     * corpus is scanned twice but never shuffled (cos is a broadcast
     * equi-join on label, the threshold another).
     *
-    * Scale note (same caveat as sk_percentiles): an exact `percentile`
+    * Scale note (same caveat as sk_percentiles): the exact `percentile`
     * aggregate buffers a label's cos values in ONE group — labels are
     * few and huge at corpus scale, so that buffer is a straight OOM at
-    * 100 TB. The operator therefore defaults to
-    * `approx_percentile(cos, 0.1, 10000)`: a mergeable KLL-style
-    * sketch whose partial aggregation combines map-side, bounding
-    * per-group state by the sketch size, not the label size
-    * (PlanAuditSpec pins the partial-agg shape; SketchSpec bounds the
-    * sketch-vs-exact threshold disagreement). The exact variant
-    * survives only as [[embedOutliersExact]] — the oracle demo, since
-    * DuckDB's quantile_cont is exact. */
-  def embedOutliers(spark: SparkSession, dir: String): DataFrame =
-    embedOutliersImpl(spark, dir, exact = false)
-
-  /** Exact-percentile variant, kept ONLY as the oracle-checked demo
-    * (cross-engine bit-equality needs both engines exact). Production
-    * callers use [[embedOutliers]]. */
-  def embedOutliersExact(spark: SparkSession, dir: String): DataFrame =
-    embedOutliersImpl(spark, dir, exact = true)
-
-  private[graft] def embedOutliersImpl(spark: SparkSession, dir: String,
-      exact: Boolean): DataFrame = {
+    * 100 TB; there `approx_percentile(cos, 0.1, 10000)` is the swap, at
+    * the price of the oracle's bit-equality (DuckDB's quantile_cont is
+    * exact). */
+  def embedOutliersExact(spark: SparkSession, dir: String): DataFrame = {
     val cents = centroidsBase(spark, dir)
       .groupBy(col("label"))
       .agg(expr("graft_dense(transform(array_sort(collect_list(struct(dim, c))), s -> s.c))").as("vc"))
@@ -721,11 +706,8 @@ object Embeddings {
       .withColumn("cos", r6(
         expr("graft_dot(v, vc)") / (sqrt(col("norm2")) * sqrt(col("cnorm2")))))
       .select("vec_id", "label", "cos")
-    val p10agg =
-      if (exact) percentile(col("cos"), lit(0.1))
-      else expr("approx_percentile(cos, 0.1, 10000)")
     val thresholds = scored.groupBy("label")
-      .agg(r6(p10agg).as("p10"))
+      .agg(r6(percentile(col("cos"), lit(0.1))).as("p10"))
     scored.join(broadcast(thresholds), Seq("label"))
       .select(col("vec_id"), col("label"), col("cos"), col("p10"),
         (col("cos") < col("p10")).as("is_outlier"))
@@ -1145,8 +1127,6 @@ object Embeddings {
        |ORDER BY probe_id, rank""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the oracle-checked demo pins the EXACT percentile (DuckDB's
-    // quantile_cont is exact); production default is the approx sketch
     "embed_outliers" -> (embedOutliersExact _),
     "embed_quantize" -> (embedQuantize _),
     "ann_ivf_topk" -> (annIvfTopK _),

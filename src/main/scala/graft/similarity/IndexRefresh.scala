@@ -84,15 +84,6 @@ object IndexRefresh {
       .withColumn("norm2", expr("graft_dot(v, v)"))
   }
 
-  /** The original (pre-drift) window — the spec's v1 corpus. */
-  private[graft] def origVecs(spark: SparkSession, dir: String): DataFrame =
-    Embeddings.vecs(spark, dir)
-
-  /** The store's committed manifest version (0 = nothing published) —
-    * what the control spec pins unchanged across a quiet alarm. */
-  private[graft] def committedVersion(spark: SparkSession, root: String): Int =
-    graft.util.ManifestStore.committedVersion(spark, root)
-
   /** ROTATE: retrain the quantizers on `window` (gated on the store's
     * delete log — ids deleted from the serving version must not be
     * re-indexed from the new feed) and replace ALL FOUR index tables
@@ -126,7 +117,7 @@ object IndexRefresh {
       delVecs: DataFrame): Unit = {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
-    require(committedVersion(spark, root) > 0,
+    require(graft.util.ManifestStore.committedVersion(spark, root) > 0,
       s"no committed index version under $root")
     graft.util.ManifestStore.publishOps(spark, root,
       graft.util.DeleteLog.appendOp(spark, root, delVecs.select("vec_id"), "vec_id") +:
@@ -171,7 +162,7 @@ object IndexRefresh {
         else driftedVecs(spark, dir, shift)
       publishVersion(spark, root, window)
     }
-    committedVersion(spark, root)
+    graft.util.ManifestStore.committedVersion(spark, root)
   }
 
   /** The gated end-to-end flow: ship v1 on the original window, run

@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object HiveStore {
 
-  /** Sanitize a context/path value for use as a partition directory —
-    * mirrors hive-path-builder.ts (`.`→`__`, `:`→`-`). */
-  def sanitize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(regexp_replace(c, "\\.", "__"), ":", "-")
-
   /** Write records into the reference layout. Expects columns
     * `tier, context, path, year, day` plus payload.
     *

@@ -584,9 +584,11 @@ object Streaming {
     * table, candidates verify against store tokens semi-join-pruned
     * to candidate ids first (never the whole store —
     * the [[graft.dedup.Dedup.minHashLshIncremental]] discipline).
-    * Then the batch's bands + tokens APPEND to the store: in
-    * production the signature store is exactly this — computed once
-    * per doc at ingest, immutable, partitioned by band_key.
+    * Then the batch's pairs, bands and tokens APPEND to the store in
+    * one [[Slices.commit]], read by the next trigger through its
+    * snapshot, so a re-delivered batch appends nothing: in production
+    * the signature store is exactly this — computed once per doc at
+    * ingest, immutable.
     *
     * Batch equivalence is structural: an unordered pair is emitted
     * exactly once — by (a) if both docs share a trigger, by (b) when
@@ -595,7 +597,26 @@ object Streaming {
     * is the same exact O(n²) SQL. StreamingSpec additionally pins
     * set-equality against the one-shot batch run and that cross-
     * trigger pairs actually occurred (≥3 triggers exercised). */
-  def streamDedupLsh(spark: SparkSession, dir: String): DataFrame = {
+  def streamDedupLsh(spark: SparkSession, dir: String): DataFrame =
+    dedupLshInto(spark, dedupLshStage(spark, dir), tmp("lshstore"))
+
+  /** Stage the documents as three doc_id ranges (three triggers) — the
+    * arrival split StreamingSpec recomputes to prove cross-trigger
+    * pairs occurred; returns the source dir. */
+  private[graft] def dedupLshStage(spark: SparkSession, dir: String): String =
+    Slices.stage(
+      spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
+        .repartitionByRange(3, col("doc_id")),
+      spark_partition_id(), 3, tmp("lshsrc"))
+
+  private val lshPairsSchema = StructType(Seq(StructField("id_a", LongType),
+    StructField("id_b", LongType), StructField("jaccard", DoubleType)))
+
+  /** Drain the staged documents at `srcDir` into the store at `root`
+    * and read the pairs back. `checkpoint` is caller-supplied so a
+    * restarted drain can re-deliver a batch. */
+  private[graft] def dedupLshInto(spark: SparkSession, srcDir: String, root: String,
+      checkpoint: Option[String] = None): DataFrame = {
     import graft.dedup.Dedup
     graft.functions.PolyHash.register(spark)
     graft.functions.JaccardSim.register(spark)
@@ -603,63 +624,53 @@ object Streaming {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val base = tmp("lshstore")
-    val bandsDir = base + "/bands"; val toksDir = base + "/toks"
-    val outDir = base + "/pairs"
-    // the slice is the doc_id range partition: the arrival split
-    // StreamingSpec recomputes to prove cross-trigger pairs occurred
-    val srcDir = Slices.stage(
-      spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .repartitionByRange(3, col("doc_id")),
-      spark_partition_id(), 3, tmp("lshsrc"))
-    val fs = graft.util.Fs.of(spark, base)
-    Slices.drain(spark, srcDir, docSchema) { (batch, _) =>
-      val sp = batch.sparkSession
-      // the batch feeds three distinct plans (within-pairs, band
-      // keys, tokens) — pin it so the file scan runs once
-      val b = batch.select("doc_id", "text").localCheckpoint()
-      // unsorted pairs: the store sorts once at the final read — a
-      // per-trigger range exchange would be pure fixed cost
-      val within = Dedup.minHashLshPairs(b).select("id_a", "id_b", "jaccard")
-      val bBands = Dedup.bandRows(b)
-      val bToks = b.select(col("doc_id"), Dedup.tokens.as("toks"))
+    Slices.drain(spark, srcDir, docSchema, checkpoint) { (batch, batchId) =>
       // cands feeds two plans (the store-token semi-join prune and
       // the verify spine) — cached for the batch only: a long-running
       // stream must not accumulate one candidate table per
-      // micro-batch in executor memory, so the batch's writes run
-      // under try/finally and the cache is dropped once they land
+      // micro-batch in executor memory, so the cache is dropped once
+      // the trigger's commit lands
       var cached: Option[DataFrame] = None
-      try {
-        val cross = if (fs.exists(new org.apache.hadoop.fs.Path(bandsDir))) {
-          val storeBands = sp.read.parquet(bandsDir)
-          val cands = broadcast(bBands.toDF("batch_id", "band_idx", "band_key"))
-            .join(storeBands.toDF("store_id", "band_idx", "band_key"),
-              Seq("band_idx", "band_key"))
-            .select("batch_id", "store_id").distinct().cache()
-          cached = Some(cands)
-          val storeToks = sp.read.parquet(toksDir)
-            .join(broadcast(cands.select("store_id").distinct()),
-              col("doc_id") === col("store_id"), "leftsemi")
-            .toDF("store_id", "toks_b")
-          cands
-            .join(broadcast(bToks.toDF("batch_id", "toks_a")), "batch_id")
-            .join(broadcast(storeToks), "store_id")
-            // same slack size-ratio prefilter as minHashLsh
-            .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-              lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-            .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
-            .where(col("jaccard") >= 0.95)
-            .select(least(col("batch_id"), col("store_id")).as("id_a"),
-              greatest(col("batch_id"), col("store_id")).as("id_b"),
-              col("jaccard"))
-        } else within.limit(0)
-        within.unionAll(cross).write.mode("append").parquet(outDir)
-        // ingest: the batch joins the store
-        bBands.write.mode("append").parquet(bandsDir)
-        bToks.write.mode("append").parquet(toksDir)
+      try Slices.commit(batch.sparkSession, root, batchId) { snap =>
+        // the batch feeds three distinct plans (within-pairs, band
+        // keys, tokens) — pin it so the file scan runs once
+        val b = batch.select("doc_id", "text").localCheckpoint()
+        // unsorted pairs: the store sorts once at the final read — a
+        // per-trigger range exchange would be pure fixed cost
+        val within = Dedup.minHashLshPairs(b).select("id_a", "id_b", "jaccard")
+        val bBands = Dedup.bandRows(b)
+        val bToks = b.select(col("doc_id"), Dedup.tokens.as("toks"))
+        val cands = broadcast(bBands.toDF("batch_id", "band_idx", "band_key"))
+          .join(snap.read("bands", bBands.schema).toDF("store_id", "band_idx", "band_key"),
+            Seq("band_idx", "band_key"))
+          .select("batch_id", "store_id").distinct().cache()
+        cached = Some(cands)
+        val storeToks = snap.read("toks", bToks.schema)
+          .join(broadcast(cands.select("store_id").distinct()),
+            col("doc_id") === col("store_id"), "leftsemi")
+          .toDF("store_id", "toks_b")
+        val cross = cands
+          .join(broadcast(bToks.toDF("batch_id", "toks_a")), "batch_id")
+          .join(broadcast(storeToks), "store_id")
+          // same slack size-ratio prefilter as minHashLsh
+          .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
+            lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
+          .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
+          .where(col("jaccard") >= 0.95)
+          .select(least(col("batch_id"), col("store_id")).as("id_a"),
+            greatest(col("batch_id"), col("store_id")).as("id_b"),
+            col("jaccard"))
+        // ingest: the batch's pairs and signatures join the store. The
+        // pairs keep the verify stage's parallelism: appendOp's
+        // one-file write would run every Jaccard check in one task
+        Seq(
+          ManifestStore.TableOp("pairs", "", Some(() => Nil), replace = false,
+            dir => within.unionAll(cross).write.mode("append").parquet(dir)),
+          ManifestStore.appendOp("bands", "", () => Nil, () => bBands),
+          ManifestStore.appendOp("toks", "", () => Nil, () => bToks))
       } finally cached.foreach(_.unpersist())
     }
-    spark.read.parquet(outDir).orderBy("id_a", "id_b")
+    ManifestStore.readTable(spark, root, "pairs", lshPairsSchema).orderBy("id_a", "id_b")
   }
 
   // --------------------------------------------------------------- #56

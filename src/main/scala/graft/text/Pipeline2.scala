@@ -193,24 +193,15 @@ object Pipeline2 {
     *
     * Scale shape: the LM is a term-frequency table (vocabulary-sized →
     * broadcast); scoring is one pass over the exploded token stream
-    * with map-side partial aggregation; the tercile thresholds DEFAULT
-    * to the mergeable approx_percentile sketch — the exact global
-    * percentile buffers every doc score in ONE aggregation row, which
-    * is corpus-sized at 100 TB (the same flip as sk_percentiles /
-    * embed_outliers; plan-pinned, SketchSpec bounds the drift). The
-    * exact variant survives as [[perplexityBucketsExact]], the
-    * oracle-checked demo. Transcendental determinism: each -log p is
-    * rounded to 6 dp before the exact decimal per-doc mean (see
-    * [[graft.funcs.dsum]]), so the bucket cuts are bit-stable. */
-  def perplexityBuckets(spark: SparkSession, dir: String): DataFrame =
-    perplexityBucketsImpl(spark, dir, exact = false)
-
-  /** Exact-tercile variant, kept ONLY as the oracle demo. */
-  def perplexityBucketsExact(spark: SparkSession, dir: String): DataFrame =
-    perplexityBucketsImpl(spark, dir, exact = true)
-
-  private def perplexityBucketsImpl(spark: SparkSession, dir: String,
-      exact: Boolean): DataFrame = {
+    * with map-side partial aggregation; the tercile thresholds are the
+    * exact global percentile, which buffers every doc score in ONE
+    * aggregation row — corpus-sized at 100 TB, where the mergeable
+    * approx_percentile sketch is the swap (the same caveat as
+    * sk_percentiles / embed_outliers). Transcendental determinism:
+    * each -log p is rounded to 6 dp before the exact decimal per-doc
+    * mean (see [[graft.funcs.dsum]]), so the bucket cuts are
+    * bit-stable. */
+  def perplexityBucketsExact(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     val total = toks.count().toDouble
@@ -220,9 +211,7 @@ object Pipeline2 {
     val scored = toks.join(broadcast(lm), "term")
       .groupBy("doc_id")
       .agg(r6(davg(col("nlogp"))).as("score"))
-    def cut(q: String): Column =
-      if (exact) expr(s"percentile(score, $q)")
-      else expr(s"approx_percentile(score, $q, 10000)")
+    def cut(q: String): Column = expr(s"percentile(score, $q)")
     val cuts = scored.agg(cut("1.0D / 3").as("c1"), cut("2.0D / 3").as("c2"))
     scored.join(broadcast(cuts))
       .withColumn("bucket",
@@ -351,8 +340,6 @@ object Pipeline2 {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_end_to_end" -> (pipelineEndToEnd _),
-    // oracle demo pins the exact terciles; production default is the
-    // approx sketch (see perplexityBuckets' scaladoc)
     "text_perplexity" -> (perplexityBucketsExact _),
     "decontaminate_ngram" -> (decontaminate _),
     "quality_repetition" -> (qualityRepetition _),

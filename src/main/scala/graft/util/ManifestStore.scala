@@ -96,11 +96,9 @@ import org.apache.spark.sql.types.StructType
   * read, or rewritten, warm or COLD: a one-dir publish on a 10⁶-dir
   * store reads a bounded handful of shard files (spec-pinned via the
   * [[shardDiskReads]] counter). Cold snapshot RESOLUTION is
-  * O(dirs) by nature (every dir's shard must be read once); below
-  * [[resolveJobThreshold]] misses it runs on a small parallel fetch
-  * pool, above it as a SPARK JOB over the shard files — a 10⁶-dir
-  * cold reader's reads scale with the cluster, not one JVM's thread
-  * pool. The scheduled compaction sweep is INCREMENTAL: index lines
+  * O(dirs) by nature (every dir's shard must be read once); it runs
+  * on a small parallel fetch pool. The scheduled compaction sweep is
+  * INCREMENTAL: index lines
   * carry per-dir file counts, so [[compactOp]] selects its hot dirs
   * from O(index buckets) metadata reads and rewrites O(hot) dirs —
   * the one remaining O(store)-by-nature publishes are blue/green
@@ -533,48 +531,8 @@ object ManifestStore {
       val t = new Thread(r, "manifest-io"); t.setDaemon(true); t
     })
 
-  /** Above this many cache-missed shards, cold resolution runs as a
-    * SPARK JOB over the shard files instead of through the driver's
-    * 16-thread pool (the Delta-checkpoint move, r20 verdict item 3): a
-    * 10⁶-dir cold reader must not funnel O(dirs) small reads through
-    * one JVM. Below it, the pool wins (no job-launch latency).
-    * Spec-overridable. */
-  private[graft] var resolveJobThreshold = 4096
-
-  /** Count of Spark-job resolutions (spec surface: proves the job path
-    * actually ran, and that the small-store path never pays it). */
-  private[graft] val resolveJobRuns = new java.util.concurrent.atomic.AtomicLong
-
-  /** Resolve many shard files as a Spark job: each task opens its
-    * shards through the store's FileSystem with [[readLines]], so
-    * contents return exactly as the serial path reads them (the driver
-    * holds the resolved snapshot either way — this distributes the
-    * READS, not the list). Shard names travel as data, never as a path
-    * string, so any root resolves as it does serially. A missing shard
-    * is left out. Falls back to the pool when no session is active. */
-  private def fetchShardsJob(fs: FileSystem, root: String,
-      misses: Seq[String]): Option[Map[String, Seq[String]]] =
-    SparkSession.getActiveSession.map { sp =>
-      resolveJobRuns.incrementAndGet()
-      // qualified against the STORE's filesystem, not the session default
-      val dir = fs.makeQualified(shardsDir(root))
-      val conf = new org.apache.spark.util.SerializableConfiguration(fs.getConf)
-      val parts = math.min(misses.size,
-        math.max(sp.sparkContext.defaultParallelism, 1))
-      val got = sp.sparkContext.parallelize(misses, parts).mapPartitions { names =>
-        val dfs = dir.getFileSystem(conf.value)
-        names.flatMap { s =>
-          try Some(s -> readLines(dfs, new Path(dir, s)))
-          catch { case _: java.io.FileNotFoundException => None }
-        }
-      }.collect()
-      shardDiskReads.addAndGet(misses.size)
-      got.toMap
-    }
-
-  /** Read many shards, fetching cache misses in parallel — on the
-    * bounded driver pool, or (above [[resolveJobThreshold]]) as a
-    * Spark job. Returns a LOCAL map (immune to LRU eviction
+  /** Read many shards, fetching cache misses in parallel on the
+    * bounded driver pool. Returns a LOCAL map (immune to LRU eviction
     * mid-resolution), preserving the caller's read order and
     * strict-miss semantics. */
   private def fetchShards(fs: FileSystem, root: String,
@@ -586,27 +544,14 @@ object ManifestStore {
       if (misses.size <= 1)
         misses.map(s => s -> shardFiles(fs, root, s)).toMap
       else {
-        val viaJob = if (misses.size >= resolveJobThreshold)
-          fetchShardsJob(fs, root, misses) else None
-        viaJob match {
-          case Some(m) =>
-            // a shard the job did not return is a real missing file —
-            // same loud failure the serial path raises
-            for (s <- misses if !m.contains(s))
-              throw new java.io.FileNotFoundException(
-                new Path(shardsDir(root), s).toString)
-            m.foreach { case (s, ls) => c.put(s, ls) }
-            m
-          case None =>
-            val futs = misses.map(s => s -> ioPool.submit(
-              new java.util.concurrent.Callable[Seq[String]] {
-                def call(): Seq[String] = shardLinesOpt(fs, root, s, lax = false).get
-              }))
-            futs.map { case (s, f) =>
-              s -> (try f.get()
-              catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-            }.toMap
-        }
+        val futs = misses.map(s => s -> ioPool.submit(
+          new java.util.concurrent.Callable[Seq[String]] {
+            def call(): Seq[String] = shardLinesOpt(fs, root, s, lax = false).get
+          }))
+        futs.map { case (s, f) =>
+          s -> (try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+        }.toMap
       }
     got.map { case (s, hit) => s -> (if (hit != null) hit else fetched(s)) }.toMap
   }

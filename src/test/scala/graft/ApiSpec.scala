@@ -40,7 +40,7 @@ class ApiSpec extends SparkSpec {
     // (floor(range/500) >= range/1000 once range >= 500; below that
     // the 1 ms resolution floor caps buckets at the range itself). A
     // caller that bypasses autoResolutionMs with a tiny resolution owns
-    // an unbounded frame and must use operators.Smoothing instead.
+    // an unbounded frame.
     val ranges = Seq(1L, 499L, 999L, 250001L, 3600000L,
       86400000L * 365, Long.MaxValue / 4)
     for (r <- ranges) {
@@ -225,13 +225,5 @@ class ApiSpec extends SparkSpec {
     assert(ctxs.nonEmpty && ctxs.forall(_.startsWith("vessels.urn-")))
     val ps = History.paths(s, ctxs.head, 0L, Long.MaxValue).collect().map(_.getString(0))
     assert(ps.toSet.subsetOf(Set("click", "error", "purchase", "signup", "view")))
-  }
-
-  test("hive sanitize mirrors the reference path encoding") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val out = Seq("vessels.urn:mrn:imo:mmsi:368396230").toDF("c")
-      .select(graft.sources.HiveStore.sanitize(col("c"))).head().getString(0)
-    assert(out == "vessels__urn-mrn-imo-mmsi-368396230")
   }
 }

@@ -132,7 +132,7 @@ class FsPortabilitySpec extends SparkSpec {
     assert(out.nonEmpty)
     assert(fsOf(root).isInstanceOf[GraftTestFs])
     // the rotation committed v2 on the graftfs root (marker = the swap)
-    assert(graft.similarity.IndexRefresh.committedVersion(spark, root) == 2)
+    assert(graft.util.ManifestStore.committedVersion(spark, root) == 2)
   }
 
   test("DeleteRepair touched-partition publishes run on a non-default scheme") {

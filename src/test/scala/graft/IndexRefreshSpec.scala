@@ -1,6 +1,6 @@
 package graft
 
-import graft.similarity.{IndexRefresh, StoredIndex}
+import graft.similarity.{Embeddings, IndexRefresh, StoredIndex}
 import graft.util.ManifestStore
 import org.apache.spark.sql.functions._
 
@@ -16,10 +16,10 @@ class IndexRefreshSpec extends SparkSpec {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bg_spec").toString
-    val orig = IndexRefresh.origVecs(spark, sfDir)
+    val orig = Embeddings.vecs(spark, sfDir)
     val probes = orig.where(col("vec_id") < 5)
     IndexRefresh.publishVersion(spark, root, orig)
-    assert(IndexRefresh.committedVersion(spark, root) == 1)
+    assert(ManifestStore.committedVersion(spark, root) == 1)
     val before = IndexRefresh.searchCommitted(spark, root, probes)
       .collect().map(_.toString).toSeq
     assert(before.nonEmpty)
@@ -36,7 +36,7 @@ class IndexRefreshSpec extends SparkSpec {
         IndexRefresh.driftedVecs(spark, sfDir))
     }
     ManifestStore.crashPoint = None
-    assert(IndexRefresh.committedVersion(spark, root) == 1)
+    assert(ManifestStore.committedVersion(spark, root) == 1)
     val during = IndexRefresh.searchCommitted(spark, root, probes)
       .collect().map(_.toString).toSeq
     assert(during == before, "a mid-re-stage read saw the uncommitted store")
@@ -46,7 +46,7 @@ class IndexRefreshSpec extends SparkSpec {
     // the re-run rotation completes; its marker IS the swap
     IndexRefresh.publishVersion(spark, root,
       IndexRefresh.driftedVecs(spark, sfDir))
-    assert(IndexRefresh.committedVersion(spark, root) == 2)
+    assert(ManifestStore.committedVersion(spark, root) == 2)
     val driftedProbes = IndexRefresh.driftedVecs(spark, sfDir)
       .where(col("vec_id") < 5)
     val after = IndexRefresh.searchCommitted(spark, root, driftedProbes)
@@ -58,7 +58,7 @@ class IndexRefreshSpec extends SparkSpec {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bg_ctrl").toString
-    IndexRefresh.publishVersion(spark, root, IndexRefresh.origVecs(spark, sfDir))
+    IndexRefresh.publishVersion(spark, root, Embeddings.vecs(spark, sfDir))
     // shift 0 = the DriftMonitorSpec control (KL ≈ sampling noise)
     assert(IndexRefresh.refreshIfDrifted(spark, sfDir, root, 0.0) == 1,
       "in-distribution window rotated the index")

@@ -79,7 +79,7 @@ class LiveDeleteSpec extends SparkSpec {
 
   test("blue/green GC: after rotations the store holds at most two versions' files; crash mid-GC self-heals") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_gc").toString
-    val orig = IndexRefresh.origVecs(spark, sfDir)
+    val orig = Embeddings.vecs(spark, sfDir)
     IndexRefresh.publishVersion(spark, root, orig)
     val v1Lists = diskTableFiles(root, "lists")
     IndexRefresh.publishVersion(spark, root, orig)
@@ -93,7 +93,7 @@ class LiveDeleteSpec extends SparkSpec {
       IndexRefresh.publishVersion(spark, root, orig)
     }
     ManifestStore.crashPoint = None
-    assert(IndexRefresh.committedVersion(spark, root) == 3)
+    assert(ManifestStore.committedVersion(spark, root) == 3)
     val probes = orig.where(col("vec_id") < 5)
     assert(IndexRefresh.searchCommitted(spark, root, probes).count() > 0)
     // the next publish collects the backlog: v1's files are gone and
@@ -111,10 +111,10 @@ class LiveDeleteSpec extends SparkSpec {
   test("blue/green composition: a delete logged BEFORE a rotation is excluded from the rotated version (the staging gate)") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_mid").toString
     val drifted = IndexRefresh.driftedVecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, IndexRefresh.origVecs(spark, sfDir))
+    IndexRefresh.publishVersion(spark, root, Embeddings.vecs(spark, sfDir))
     // the delete lands as ONE atomic publish: log + serving-version repair
     IndexRefresh.deleteCommitted(spark, root,
-      IndexRefresh.origVecs(spark, sfDir).where(DeleteRepair.delVecPred))
+      Embeddings.vecs(spark, sfDir).where(DeleteRepair.delVecPred))
     // the serving version already excludes the deleted ids
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty)
@@ -139,7 +139,7 @@ class LiveDeleteSpec extends SparkSpec {
 
   test("a delete AFTER a rotation repairs the rotated version; the log survives every later rotation's gate") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_race").toString
-    val orig = IndexRefresh.origVecs(spark, sfDir)
+    val orig = Embeddings.vecs(spark, sfDir)
     IndexRefresh.publishVersion(spark, root, orig)
     IndexRefresh.publishVersion(spark, root, orig) // the rotation
     IndexRefresh.deleteCommitted(spark, root,
@@ -186,7 +186,7 @@ class LiveDeleteSpec extends SparkSpec {
 
   test("the delete log's file count stays bounded across a long delete sequence (fold-at-threshold)") {
     val root = java.nio.file.Files.createTempDirectory("graft_dellog_bound").toString
-    val orig = IndexRefresh.origVecs(spark, sfDir)
+    val orig = Embeddings.vecs(spark, sfDir)
     IndexRefresh.publishVersion(spark, root, orig)
     val ids = orig.where(pmod(col("vec_id"), lit(17L)) === 14L)
       .select("vec_id").limit(12).collect().map(_.getLong(0))

@@ -650,36 +650,6 @@ class ManifestStoreSpec extends SparkSpec {
     } finally ManifestStore.indexBucketTarget = savedTarget
   }
 
-  test("cold resolution above the threshold runs as a SPARK JOB and is bit-identical to the serial path") {
-    // r20 verdict item 3: a 10⁶-dir cold reader funneled O(dirs) small
-    // reads through one JVM's 16-thread pool. Above resolveJobThreshold
-    // cache misses, the shard files are read by a Spark job instead —
-    // the reads scale with the cluster. Same contents either way.
-    val root = tmp()
-    ManifestStore.append(spark, root, "b",
-      df((0 until 96).map(i => (i.toLong, i.toDouble, i)): _*))
-    // serial (pool) resolution: threshold far above the store
-    val savedThr = ManifestStore.resolveJobThreshold
-    try {
-      ManifestStore.resolveJobThreshold = Int.MaxValue
-      ManifestStore.clearShardCache()
-      val jobsBefore = ManifestStore.resolveJobRuns.get()
-      val serialFiles = ManifestStore.files(spark, root)
-      val serialRows = rows(root)
-      assert(ManifestStore.resolveJobRuns.get() == jobsBefore,
-        "the small-store path paid a Spark job")
-      // job resolution: threshold below the store's shard count
-      ManifestStore.resolveJobThreshold = 8
-      ManifestStore.clearShardCache()
-      val jobFiles = ManifestStore.files(spark, root)
-      assert(ManifestStore.resolveJobRuns.get() > jobsBefore,
-        "cold resolution above the threshold did not use the job path")
-      assert(jobFiles == serialFiles,
-        "job-path snapshot differs from the serial path")
-      assert(rows(root) == serialRows)
-    } finally ManifestStore.resolveJobThreshold = savedThr
-  }
-
   test("stranded shards: the per-trigger path never pays the O(store) sweep; sweepStrandedShards and growth publishes collect the residue") {
     // ADVICE r20 #2: crash residue stranded between a fence and a
     // manifest write is referenced by NO manifest. Partition-scoped
@@ -776,23 +746,14 @@ class ManifestStoreSpec extends SparkSpec {
     assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,1]"))
   }
 
-  test("cold job-path resolution of a root holding ',' and '[' is bit-identical to the pool path") {
+  test("cold resolution of a root holding ',' and '[' equals the warm file list") {
     val root = tmp() + "/a,b[1]"
     ManifestStore.append(spark, root, "b",
       df((0 until 24).map(i => (i.toLong, i.toDouble, i)): _*))
-    val savedThr = ManifestStore.resolveJobThreshold
-    try {
-      ManifestStore.resolveJobThreshold = Int.MaxValue
-      ManifestStore.clearShardCache()
-      val serialFiles = ManifestStore.files(spark, root)
-      ManifestStore.resolveJobThreshold = 8
-      ManifestStore.clearShardCache()
-      val jobsBefore = ManifestStore.resolveJobRuns.get()
-      val jobFiles = ManifestStore.files(spark, root)
-      assert(ManifestStore.resolveJobRuns.get() > jobsBefore,
-        "cold resolution above the threshold did not use the job path")
-      assert(serialFiles.size == 24)
-      assert(jobFiles == serialFiles, "job-path snapshot differs from the pool path")
-    } finally ManifestStore.resolveJobThreshold = savedThr
+    val warmFiles = ManifestStore.files(spark, root)
+    ManifestStore.clearShardCache()
+    val coldFiles = ManifestStore.files(spark, root)
+    assert(warmFiles.size == 24)
+    assert(coldFiles == warmFiles, "cold pool resolution differs from the warm file list")
   }
 }

@@ -169,28 +169,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }
 
-  test("text_perplexity default cuts terciles with the sketch") {
-    val p = planStr(graft.text.Pipeline2.perplexityBuckets(spark, sfDir))
-    assert(p.contains("partial_approx_percentile"), p.take(3000))
-    assert(!p.contains("partial_percentile("), p.take(3000))
-  }
-
-  test("sk_percentiles default partial-aggregates the sketch") {
-    val p = planStr(graft.operators.Analytics.percentiles(spark, sfDir))
-    assert(p.contains("partial_approx_percentile"), p.take(3000))
-    assert(!p.contains("partial_percentile("), p.take(3000))
-  }
-
-  test("embed_outliers default threshold leg partial-aggregates the sketch") {
-    // the approx_percentile sketch must combine map-side (bounded
-    // per-group state), unlike the exact percentile that buffers a
-    // whole label's cosines in one reduce-side group — this is what
-    // makes the default variant survive few-labels/huge-labels corpora
-    val p = planStr(graft.similarity.Embeddings.embedOutliers(spark, sfDir))
-    assert(p.contains("partial_approx_percentile"), p.take(3000))
-    assert(!p.contains("partial_percentile("), p.take(3000))
-  }
-
   test("scrub audit is a single partial-aggregated pass") {
     val p = planStr(graft.text.Scrub.piiScrub(spark, sfDir))
     assert(p.contains("partial_"), p.take(3000))

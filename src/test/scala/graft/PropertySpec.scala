@@ -99,14 +99,9 @@ class PropertySpec extends SparkSpec {
     val gen = Gen.listOfN(200, Gen.choose(-720.0, 720.0))
     val angles = sample(gen, 7L)
     val df = angles.zipWithIndex.map(_.swap).toDF("i", "deg")
-      .withColumn("norm", graft.funcs.normalizeDeg(col("deg")))
       .withColumn("self_diff", graft.funcs.angularDiffDeg(col("deg"), col("deg")))
-    val rows = df.select("deg", "norm", "self_diff").as[(Double, Double, Double)].collect()
-    rows.foreach { case (deg, norm, selfDiff) =>
-      assert(norm >= 0.0 && norm < 360.0, s"norm($deg) = $norm")
-      assert(math.abs((norm - deg) % 360.0) < 1e-9 || math.abs(math.abs((norm - deg) % 360.0) - 360.0) < 1e-9)
-      assert(selfDiff == 0.0)
-    }
+    val rows = df.select("deg", "self_diff").as[(Double, Double)].collect()
+    rows.foreach { case (deg, selfDiff) => assert(selfDiff == 0.0, s"diff($deg, $deg) = $selfDiff") }
   }
 
   test("proximity geo cells: any pair within 2 km lands in the same or an adjacent cell") {

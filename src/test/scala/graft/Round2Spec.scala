@@ -125,18 +125,11 @@ class Round2Spec extends SparkSpec {
       (370.0, 350.0, 10.0),  // wrap forward
       (0.0, 90.0, 270.0))
       .toDF("a", "x", "y")
-      .select(
-        round(normalizeDeg(col("a")), 6).as("na"),
-        round(angularDiffDeg(col("x"), col("y")), 6).as("d"),
-        inAngularRangeDeg(lit(5.0), col("x"), col("y")).as("in_range"))
+      .select(round(angularDiffDeg(col("x"), col("y")), 6).as("d"))
       .collect()
-    assert(df(0).getDouble(0) == 330.0)
-    assert(df(0).getDouble(1) == -20.0)  // 10 -> 350 shortest is -20 (counter-clockwise)
-    assert(df(0).getBoolean(2) == false) // 5 not in [10, 350]
-    assert(df(1).getDouble(0) == 10.0)
-    assert(df(1).getDouble(1) == 20.0)   // 350 -> 10 crosses 0 clockwise
-    assert(df(1).getBoolean(2) == true)  // wrapping sector 350..10 contains 5
-    assert(df(2).getDouble(1) == -180.0) // 90 -> 270 is exactly opposite: closed form picks -180
+    assert(df(0).getDouble(0) == -20.0)  // 10 -> 350 shortest is -20 (counter-clockwise)
+    assert(df(1).getDouble(0) == 20.0)   // 350 -> 10 crosses 0 clockwise
+    assert(df(2).getDouble(0) == -180.0) // 90 -> 270 is exactly opposite: closed form picks -180
   }
 
   test("quality_gopher keep flag matches its own emitted metrics") {

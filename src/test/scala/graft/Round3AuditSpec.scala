@@ -18,7 +18,7 @@ class Round3AuditSpec extends SparkSpec {
   }
 
   test("percentiles: one shuffle, partial aggregation on the scan side") {
-    val p = plan(graft.operators.Analytics.percentiles(spark, sfDir))
+    val p = plan(graft.operators.Analytics.percentilesExact(spark, sfDir))
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(hashEx == 1, s"expected 1 hash exchange, got $hashEx")
     assert(p.contains("partial_"), p.take(2000))
@@ -32,7 +32,7 @@ class Round3AuditSpec extends SparkSpec {
   }
 
   test("perplexity: the unigram LM joins broadcast, token stream never sort-merges") {
-    val p = plan(graft.text.Pipeline2.perplexityBuckets(spark, sfDir))
+    val p = plan(graft.text.Pipeline2.perplexityBucketsExact(spark, sfDir))
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }

@@ -98,7 +98,7 @@ class Round5Spec extends SparkSpec {
   }
 
   test("embed outliers: ~10% flagged per label, all below the label p10") {
-    val rows = graft.similarity.Embeddings.embedOutliers(spark, sfDir).collect()
+    val rows = graft.similarity.Embeddings.embedOutliersExact(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getInt(1)).foreach { case (_, rs) =>
       val n = rs.length

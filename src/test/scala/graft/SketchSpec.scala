@@ -25,37 +25,6 @@ class SketchSpec extends SparkSpec {
     }
   }
 
-  test("embed_outliers default (approx) threshold tracks the exact p10") {
-    // the operator default is the mergeable approx_percentile sketch
-    // (the exact variant survives only as the oracle demo): per label,
-    // the sketch's p10 must sit within the cosine spread's tail — and
-    // the flagged set must stay ~the bottom decile either way
-    // rank-based bound — the sketch's actual guarantee: its p10 is an
-    // element whose RANK is within the accuracy budget of 0.1·n, so it
-    // must land inside the exact [p5, p15] value bracket (a %-of-value
-    // bound would be wrong in a sparse tail where one inter-element
-    // gap is large)
-    val exact = graft.similarity.Embeddings.embedOutliersExact(spark, sfDir)
-      .groupBy("label").agg(
-        percentile(col("cos"), lit(0.05)).as("p05"),
-        percentile(col("cos"), lit(0.15)).as("p15"))
-    val approx = graft.similarity.Embeddings.embedOutliers(spark, sfDir)
-      .groupBy("label").agg(max("p10").as("p_approx"),
-        count(lit(1)).as("n"),
-        count(when(col("is_outlier"), 1)).as("n_out"))
-    val rows = exact.join(approx, "label")
-      .select("p05", "p15", "p_approx", "n", "n_out")
-      .as[(Double, Double, Double, Long, Long)].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (lo, hi, a, n, nOut) =>
-      assert(a >= lo - 1e-6 && a <= hi + 1e-6, s"approx=$a not in [$lo, $hi]")
-      // the flag still selects ~the bottom decile; the sketch's
-      // element cut can include a couple more than the interpolated cut
-      assert(nOut <= (n * 0.15).toInt + 2, s"n=$n flagged=$nOut")
-      assert(nOut > 0 || n < 10, s"n=$n flagged=$nOut")
-    }
-  }
-
   test("ivfpq recall against exhaustive ADC is nontrivial") {
     // IVFADC searches nprobe/K of the corpus; its top-5 must still
     // overlap the exhaustive-ADC top-5 substantially — the candidate

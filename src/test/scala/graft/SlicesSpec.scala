@@ -124,4 +124,29 @@ class SlicesSpec extends SparkSpec {
     assert(restarted == oneShot)
     assert(Slices.committedBatch(ManifestStore.snapshot(spark, root)) == Some(2L))
   }
+
+  test("stream_dedup_lsh re-delivered after its commit appends no pair twice") {
+    val src = Streaming.dedupLshStage(spark, sfDir)
+    val (root, ckpt) = (tmp("lsh_store"), tmp("lsh_ckpt"))
+    def pairs(): Seq[(Long, Long)] = Streaming.dedupLshInto(spark, src, root, Some(ckpt))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val once = pairs()
+    // the replayed trigger must have found pairs for a repeat to show
+    val lastIds = spark.read.parquet(sliceFiles(src).last.toString)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(once.exists { case (_, b) => lastIds(b) }, "the last trigger found no pair")
+    // forget the last trigger in Spark's commit log, as a crash after
+    // the sink's commit but before Spark's own does: the restart
+    // re-delivers that batch under the same id
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.matches("\\d+")).maxBy(_.toInt)
+    assert(new java.io.File(commits, last).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    val replayed = pairs()
+    assert(replayed == once, s"replay changed the pairs: ${replayed.diff(once).take(5)}")
+    val oneShot = graft.dedup.Dedup.minHashLsh(spark, sfDir)
+      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    assert(once.toSet == oneShot && once.distinct.size == once.size)
+    assert(Slices.committedBatch(ManifestStore.snapshot(spark, root)) == Some(last.toLong))
+  }
 }
