@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.funcs._
+import graft.sources.Staging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,7 +81,7 @@ object Relational5 {
     // spec (count/keys/columns) would otherwise silently reuse the
     // stale staged table — bump the layout token with the spec
     def stage(table: String, src: String, layout: String, write: => Unit): Unit = {
-      val fp = layout + "|" + sourceFingerprint(dir, src)
+      val fp = layout + "|" + Staging.sourceFingerprint(dir, src)
       val loc = new java.io.File(warehouse, table.toLowerCase)
       // leading-underscore files are invisible to Spark's file listing,
       // so the sidecar can live inside the table location (and is
@@ -90,7 +91,7 @@ object Relational5 {
         new String(java.nio.file.Files.readAllBytes(fpFile.toPath)) == fp
       if (!fresh) {
         spark.sql(s"DROP TABLE IF EXISTS $table")
-        deleteRecursively(loc) // stale location from a previous JVM
+        Staging.deleteRecursively(loc) // stale location from a previous JVM
         write
         java.nio.file.Files.write(fpFile.toPath, fp.getBytes)
       }
@@ -114,21 +115,6 @@ object Relational5 {
         .saveAsTable(tLine)
     })
     (tOrders, tLine)
-  }
-
-  /** name/size/mtime of the source parquet — cheap staleness key for
-    * the staged layouts (the testdata can be regenerated between
-    * rounds; a content hash would re-read the data being staged). */
-  private def sourceFingerprint(dir: String, table: String): String = {
-    val f = new java.io.File(dir, s"$table.parquet")
-    val parts = if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq else Seq(f)
-    parts.map(p => s"${p.getName}:${p.length}:${p.lastModified}").mkString("|")
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 
   /** The un-aggregated bucketed join, for the plan audit: both scans
@@ -178,32 +164,18 @@ object Relational5 {
   }
 
   /** Stage the month-partitioned lineitem store once per (fingerprint,
-    * sf dir); partition values are `yyyy-MM` strings. Idempotent via a
-    * `_STAGED` marker whose CONTENT is the source fingerprint, so a
-    * regenerated testdata dir invalidates the staging instead of being
-    * silently shadowed by a stale store from a previous run. */
-  private[graft] def stageMonthStore(spark: SparkSession, dir: String): String = {
-    val sfTag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-    val root = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft_dpp_store_$sfTag")
-    val marker = new java.io.File(root, "_STAGED")
-    // layout token, same rationale as stageBucketedTables
-    val fp = "v1:month:l_extendedprice,l_discount|" + sourceFingerprint(dir, "lineitem")
-    val fresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fp
-    if (!fresh) {
-      deleteRecursively(root)
+    * sf dir) through [[Staging.stagedDir]]; partition values are
+    * `yyyy-MM` strings. */
+  private[graft] def stageMonthStore(spark: SparkSession, dir: String): String =
+    Staging.stagedDir("graft_dpp_store", dir, "v1:month:l_extendedprice,l_discount", "lineitem") { root =>
       Tables.lineitem(spark, dir)
         .select(col("l_extendedprice"), col("l_discount"),
           date_format(col("l_shipdate"), "yyyy-MM").as("l_month"))
         // one writer task per month dir (see HiveStore.write)
         .repartition(col("l_month"))
-        .write.mode("overwrite").partitionBy("l_month")
-        .parquet(root.getAbsolutePath)
-      java.nio.file.Files.write(marker.toPath, fp.getBytes)
+        .write.partitionBy("l_month")
+        .parquet(root)
     }
-    root.getAbsolutePath
-  }
 
   val dppOracle: String =
     """WITH m AS (

@@ -83,8 +83,6 @@ object Bm25Store {
     ManifestStore.readTable(spark, base, "postings", postingsSchema)
   private[graft] def readDl(spark: SparkSession, base: String): DataFrame =
     ManifestStore.readTable(spark, base, "dl", dlSchema)
-  private[graft] def readStats(spark: SparkSession, base: String): DataFrame =
-    ManifestStore.readTable(spark, base, "stats", statsSchema)
 
   /** A doc batch's (t, doc_id, tf, tb) posting rows. */
   private def tokensOf(docs: DataFrame): DataFrame =
@@ -126,14 +124,10 @@ object Bm25Store {
 
   /** Clone a staged (immutable, fingerprint-shared) store into a
     * mutable root — one commit. */
-  private[graft] def cloneStore(spark: SparkSession, staged: String): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_mut").toString
-    ManifestStore.publishOps(spark, base, Seq(
-      ManifestStore.replaceTableOp("postings", "tb", () => readPostings(spark, staged)),
-      ManifestStore.replaceTableOp("dl", "db", () => readDl(spark, staged)),
-      ManifestStore.replaceTableOp("stats", "db", () => readStats(spark, staged))))
-    base
-  }
+  private[graft] def cloneStore(spark: SparkSession, staged: String): String =
+    ManifestStore.cloneTables(spark, staged, "graft_bm25_mut", Seq(
+      ("postings", "tb", postingsSchema), ("dl", "db", dlSchema),
+      ("stats", "db", statsSchema)))
 
   // ---------------------------------------------------------------
   // live maintenance

@@ -4,7 +4,6 @@ import graft.Tables
 import graft.sources.Staging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
 /** Deletion with DERIVED-INDEX REPAIR — the missing half of retention.
   * The event store already has `sk_retention_sweep` (the reference's
@@ -39,7 +38,7 @@ import org.apache.hadoop.fs.Path
   *   - repair is EXACT, not tombstoning: the contract (and the
   *     oracle) is that every post-delete answer equals a FRESH build
   *     from the surviving corpus. That holds bit-for-bit because the
-  *     quantizers/codebooks are frozen functions of a fixed training
+  *     quantizers and codebooks are frozen functions of a fixed training
   *     slice that the delete set is disjoint from (the FAISS
   *     `remove_ids` discipline: deletion drops index entries, it
   *     never retrains — a drifted survivor distribution is the
@@ -86,96 +85,16 @@ object DeleteRepair {
     df.select(col(c).cast("int")).distinct().collect().map(_.getInt(0)).sorted.toSeq
 
   // ------------------------------------------------------------- #117
-  // IVFADC: drop the deleted vectors' rows from their cells only
-  // ---------------------------------------------------------------
-
-  /** The IVFADC repair's table ops — shared by the live store (plain
-    * frozen-quantizer dirs) and the blue/green store (quantizers are
-    * manifest tables), so both compose the SAME repair into their own
-    * atomic publish. Assign the deleted VECTORS (not the store)
-    * against the frozen centroids to find the touched cells, then
-    * rewrite only those `bucket=` dirs of `lists` and `codes` — all
-    * store reads (including `cents`) are forced INSIDE the publish,
-    * i.e. under the store lease. */
-  private[graft] def ivfRepairOps(spark: SparkSession, base: String,
-      delVecs: DataFrame, cents: () => DataFrame)
-      : Seq[graft.util.ManifestStore.TableOp] = {
-    import graft.util.ManifestStore
-    lazy val assigned = Embeddings.ivfAssign(delVecs, cents(), 1)
-      .select(col("vec_id").as("neighbor_id"), col("cent_id").cast("int").as("bucket"))
-      .localCheckpoint() // delete-batch-sized
-    lazy val touched = collectInts(assigned, "bucket").map(v => v: Any)
-    def repaired(t: String, sch: org.apache.spark.sql.types.StructType) =
-      ManifestStore.readTable(spark, base, t, sch)
-        .where(col("bucket").isin(touched: _*))
-        .join(broadcast(assigned.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
-    Seq(
-      ManifestStore.rewriteOp("lists", "bucket", () => touched,
-        () => repaired("lists", StoredIndex.listsSchema)),
-      ManifestStore.rewriteOp("codes", "bucket", () => touched,
-        () => repaired("codes", StoredIndex.codesSchema)))
-  }
-
-  /** Apply the delete set to a live IVFADC store at `base`: ONE atomic
-    * publish carrying the [[graft.util.DeleteLog]] append (durability
-    * against later ingest) AND both tables' touched-cell rewrites — a
-    * crash anywhere leaves the delete entirely un-happened (the caller
-    * re-runs it; re-deleting absent rows is a no-op), and a reader at
-    * any instant sees either the full pre-delete or the full
-    * post-delete store across lists, codes and the log. */
-  private[graft] def deleteFromIvfPq(spark: SparkSession, base: String,
-      delVecs: DataFrame): Unit = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    graft.util.ManifestStore.publishOps(spark, base,
-      graft.util.DeleteLog.appendOp(spark, base, delVecs.select("vec_id"), "vec_id") +:
-        ivfRepairOps(spark, base, delVecs, () =>
-          spark.read.parquet(s"$base/centroids")
-            .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))))
-  }
-
   /** Gated end-to-end: clone the staged IVFADC index into a mutable
-    * root, apply the delete with touched-cell repair, search. Must
-    * equal the fresh-build oracle on the surviving corpus — exact
-    * because the frozen quantizers are disjoint from the delete set,
-    * so fresh lists/codes over survivors ARE the old tables minus the
-    * deleted rows. */
+    * root, apply the delete with touched-cell repair
+    * ([[StoredIndex.delete]]), search. Must equal the fresh-build
+    * oracle on the surviving corpus — exact because the frozen
+    * quantizers are disjoint from the delete set, so fresh lists/codes
+    * over survivors ARE the old tables minus the deleted rows. */
   def storeDeleteIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    val staged = StoredIndex.stageIvfPq(spark, dir)
-    val base = cloneIvfPq(spark, staged)
-    deleteFromIvfPq(spark, base, Embeddings.vecs(spark, dir).where(delVecPred))
-    searchIvfPq(spark, dir, base)
-  }
-
-  /** Clone the staged (immutable, fingerprint-shared) IVFADC index
-    * into a mutable store root — quantizers copied plain, lists+codes
-    * published as one manifest commit. */
-  private[graft] def cloneIvfPq(spark: SparkSession, staged: String): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_del_ivf").toString
-    for (t <- Seq("centroids", "codebook"))
-      spark.read.parquet(s"$staged/$t").write.mode("overwrite").parquet(s"$base/$t")
-    graft.util.ManifestStore.publishOps(spark, base, Seq(
-      graft.util.ManifestStore.replaceTableOp("lists", "bucket", () =>
-        StoredIndex.readLists(spark, staged)),
-      graft.util.ManifestStore.replaceTableOp("codes", "bucket", () =>
-        StoredIndex.readCodes(spark, staged))))
-    base
-  }
-
-  /** The unchanged staged-read ADC search over a repaired store (the
-    * snapshot read serves the last committed version across both
-    * tables, whatever maintenance crashed before). */
-  private[graft] def searchIvfPq(spark: SparkSession, dir: String,
-      base: String): DataFrame = {
-    graft.functions.KnownNonNullElements.register(spark)
-    val centroids = spark.read.parquet(s"$base/centroids")
-      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))
-    val codebook = spark.read.parquet(s"$base/codebook")
-      .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs"))
-    val (lists, codes) = StoredIndex.readIndexSnap(spark, base)
-    StoredIndex.searchIndex(spark, dir, centroids, codebook, codes, lists)
+    val base = StoredIndex.cloneStore(spark, StoredIndex.stageIvfPq(spark, dir))
+    StoredIndex.delete(spark, base, Embeddings.vecs(spark, dir).where(delVecPred))
+    StoredIndex.search(spark, dir, base)
   }
 
   // ------------------------------------------------------------- #118
@@ -274,16 +193,10 @@ object DeleteRepair {
 
   /** Clone the staged directed-list store into a mutable store root —
     * both tables in one manifest commit. */
-  private[graft] def cloneGraph(spark: SparkSession, staged: String): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_del_knn").toString
-    graft.util.ManifestStore.publishOps(spark, base, Seq(
-      graft.util.ManifestStore.replaceTableOp("topk", "label", () =>
-        graft.streaming.GraphStream.readTopk(spark, staged)
-          .select("src_id", "dst_id", "cos", "rank", "label")),
-      graft.util.ManifestStore.replaceTableOp("vecs", "label", () =>
-        graft.streaming.GraphStream.readVecsRaw(spark, staged))))
-    base
-  }
+  private[graft] def cloneGraph(spark: SparkSession, staged: String): String =
+    graft.util.ManifestStore.cloneTables(spark, staged, "graft_del_knn", Seq(
+      ("topk", "label", graft.streaming.GraphStream.topkSchema),
+      ("vecs", "label", graft.streaming.GraphStream.vecsSchema)))
 
   // ------------------------------------------------------------- #119
   // BM25: touched-term-bucket postings repair + derived recounts —

@@ -176,11 +176,6 @@ object GraphStore {
         .dropDuplicates("label", "src_id", "dst_id"))
   }
 
-  /** The mutual filter over a maintained directed store — node-scale
-    * (the query-time cost of serving from the live graph). */
-  private[graft] def mutualFromTopk(topk: DataFrame): DataFrame =
-    KnnGraph.mutualEdges(topk)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "embed_knn_graph_stored" -> (knnGraphStored _),
     "graph_pagerank_stored" -> (pageRankStored _),

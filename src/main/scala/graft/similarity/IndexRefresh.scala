@@ -13,15 +13,13 @@ import org.apache.spark.sql.functions._
   * frozen per version, never mutated in place, so every version is
   * internally consistent).
   *
-  * The rotating store IS a [[graft.util.ManifestStore]] — the previous
-  * versioned-dir protocol (`root/v<N>/…` + its own marker/GC/replay
-  * choreography) is DELETED, converged onto the one publish primitive
-  * every mutable store shares: the store's tables are `centroids`,
+  * The rotating store IS the one IVFADC layout ([[StoredIndex]]): a
+  * [[graft.util.ManifestStore]] whose tables are `centroids`,
   * `codebook` (unpartitioned), `lists`, `codes` (`bucket=<cell>/`) and
-  * its [[graft.util.DeleteLog]], and a ROTATION IS ONE ATOMIC PUBLISH
-  * replacing all four index tables (a version manifest that lists all
-  * four tables' files is exactly blue/green). That buys, beyond the
-  * deleted code:
+  * its [[graft.util.DeleteLog]], and a ROTATION IS ONE
+  * [[StoredIndex.publish]] replacing all four index tables (a version
+  * manifest that lists all four tables' files is exactly blue/green).
+  * That buys:
   *   - reads during a re-stage serve the OLD committed version across
   *     ALL FOUR tables (a search can never pair new centroids with old
   *     codes — the torn-read risk the two-protocol design carried);
@@ -84,66 +82,6 @@ object IndexRefresh {
       .withColumn("norm2", expr("graft_dot(v, v)"))
   }
 
-  /** ROTATE: retrain the quantizers on `window` (gated on the store's
-    * delete log — ids deleted from the serving version must not be
-    * re-indexed from the new feed) and replace ALL FOUR index tables
-    * in one atomic manifest commit. Every window read, including the
-    * log gate, is forced inside the publish (under the store lease);
-    * readers keep resolving the previous version until the marker
-    * lands, and the retired version's files GC with the manifest's
-    * one-version grace window. Staging runs through the SAME
-    * single-sourced builder as the canonical staged store
-    * ([[StoredIndex.indexFrames]]), so a rotated version cannot
-    * diverge from a from-scratch re-index. */
-  private[graft] def publishVersion(spark: SparkSession, root: String,
-      window: DataFrame): Unit = {
-    import graft.util.ManifestStore
-    lazy val frames = StoredIndex.indexFrames(spark,
-      graft.util.DeleteLog.gate(spark, root, window, "vec_id"))
-    ManifestStore.publishOps(spark, root, Seq(
-      ManifestStore.replaceTableOp("centroids", "", () => frames._1),
-      ManifestStore.replaceTableOp("codebook", "", () => frames._2),
-      ManifestStore.replaceTableOp("lists", "bucket", () => frames._3),
-      ManifestStore.replaceTableOp("codes", "bucket", () => frames._4)))
-  }
-
-  /** Apply a delete to the blue/green store: ONE atomic publish
-    * carrying the log append and the touched-cell repair of the
-    * COMMITTED version's lists/codes — the cells resolve against the
-    * committed centroids, read under the same lease the repair
-    * publishes under, so a rotation can never slip between the
-    * assignment and the rewrite. */
-  private[graft] def deleteCommitted(spark: SparkSession, root: String,
-      delVecs: DataFrame): Unit = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    require(graft.util.ManifestStore.committedVersion(spark, root) > 0,
-      s"no committed index version under $root")
-    graft.util.ManifestStore.publishOps(spark, root,
-      graft.util.DeleteLog.appendOp(spark, root, delVecs.select("vec_id"), "vec_id") +:
-        DeleteRepair.ivfRepairOps(spark, root, delVecs, () =>
-          graft.util.ManifestStore.readTable(spark, root, "centroids",
-              StoredIndex.centroidsSchema)
-            .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))))
-  }
-
-  /** Search the CURRENTLY COMMITTED version with the supplied probe
-    * rows — ONE snapshot across all four tables, then the unchanged
-    * staged-read ADC (nprobe partition pruning intact). */
-  private[graft] def searchCommitted(spark: SparkSession, root: String,
-      probeVecs: DataFrame): DataFrame = {
-    graft.functions.KnownNonNullElements.register(spark)
-    val snap = graft.util.ManifestStore.snapshot(spark, root)
-    require(snap.version > 0, s"no committed index version under $root")
-    val centroids = snap.read("centroids", StoredIndex.centroidsSchema)
-      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))
-    val codebook = snap.read("codebook", StoredIndex.codebookSchema)
-      .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs"))
-    StoredIndex.searchIndexProbes(spark, probeVecs, centroids, codebook,
-      snap.read("codes", StoredIndex.codesSchema),
-      snap.read("lists", StoredIndex.listsSchema))
-  }
-
   /** Run the 42z alarm on the arriving window against the v1 reference
     * and rotate the index iff it fires; returns the manifest version
     * now serving. `shift` parameterizes the window so the spec can run
@@ -160,7 +98,7 @@ object IndexRefresh {
       // distribution the feed never had for any other shift)
       val window = if (shift == 0.0) Embeddings.vecs(spark, dir)
         else driftedVecs(spark, dir, shift)
-      publishVersion(spark, root, window)
+      StoredIndex.publish(spark, root, window)
     }
     graft.util.ManifestStore.committedVersion(spark, root)
   }
@@ -180,11 +118,9 @@ object IndexRefresh {
     * `graftfs:`). */
   private[graft] def annIndexRefreshAt(spark: SparkSession, dir: String,
       root: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    publishVersion(spark, root, Embeddings.vecs(spark, dir))
+    StoredIndex.publish(spark, root, Embeddings.vecs(spark, dir))
     refreshIfDrifted(spark, dir, root, 0.5)
-    searchCommitted(spark, root, driftedVecs(spark, dir).where(col("vec_id") < 5))
+    StoredIndex.searchProbes(spark, root, driftedVecs(spark, dir).where(col("vec_id") < 5))
   }
 
   /** The drifted-window twin of `SELECT … FROM embeddings` — the
@@ -238,13 +174,11 @@ object IndexRefresh {
 
   private[graft] def annRefreshDeleteAt(spark: SparkSession, dir: String,
       root: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    publishVersion(spark, root, Embeddings.vecs(spark, dir))
-    deleteCommitted(spark, root,
+    StoredIndex.publish(spark, root, Embeddings.vecs(spark, dir))
+    StoredIndex.delete(spark, root,
       Embeddings.vecs(spark, dir).where(DeleteRepair.delVecPred))
     refreshIfDrifted(spark, dir, root, 0.5)
-    searchCommitted(spark, root, driftedVecs(spark, dir).where(col("vec_id") < 5))
+    StoredIndex.searchProbes(spark, root, driftedVecs(spark, dir).where(col("vec_id") < 5))
   }
 
   /** The composed oracle: the UNCHANGED full-recompute IVFADC SQL over

@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.funcs.r6
 import graft.sources.Staging
+import graft.util.{DeleteLog, ManifestStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,9 +12,10 @@ import org.apache.spark.sql.functions._
   * (coarse cells, PQ codebook, codes) from the raw corpus on every
   * query; at 100 TB that rebuild IS the corpus scan the index exists
   * to avoid. Here the index is staged to parquet once at "ingest" —
-  * four tables: `centroids` (16 rows), `codebook` (128 rows), `lists`
-  * (one (neighbor_id, bucket) row per vector), `codes` (8 rows per
-  * vector, 4-bit codes) — and the query plan touches the RAW CORPUS
+  * four tables of one [[graft.util.ManifestStore]] manifest:
+  * `centroids` (16 rows), `codebook` (128 rows), `lists` (one
+  * (neighbor_id, bucket) row per vector), `codes` (8 rows per vector,
+  * 4-bit codes) — and the query plan touches the RAW CORPUS
   * FLOATS ONLY FOR THE PROBE ROWS (`vec_id < 5`, pushed to the
   * embeddings scan; StoredIndexSpec pins that every embeddings
   * FileScan carries that pushed filter). `codes`/`lists` are
@@ -30,6 +32,11 @@ import org.apache.spark.sql.functions._
   * [[Embeddings.ivfAssign]]/pqCodes compute) and parquet stores
   * BIGINT/DOUBLE losslessly. Oracle: the same full-recompute SQL as
   * `ann_ivfpq_topk` — the store must be result-invisible.
+  *
+  * That four-table store is the ONE IVFADC layout: the staged build,
+  * the live twin ([[graft.streaming.AnnStream]]), a delete clone and
+  * every blue/green version ([[IndexRefresh]]) all [[publish]],
+  * [[search]], [[delete]] and [[cloneStore]] through this object.
   *
   * Reference: signalk-parquet has no vector index; this is the
   * training-pipeline extension at its production composition (FAISS
@@ -54,29 +61,20 @@ object StoredIndex {
     StructField("sub", IntegerType), StructField("cent_id", LongType),
     StructField("cs", ArrayType(DoubleType))))
 
-  /** `lists` and `codes` are TABLES of one store-level
-    * [[graft.util.ManifestStore]] manifest at `root` (one commit spans
-    * both — a reader can never resolve lists and codes at different
-    * versions). Single-table convenience reads; a search resolves ONE
-    * [[graft.util.ManifestStore.snapshot]] and reads both tables from
-    * it. */
-  private[graft] def readLists(spark: SparkSession, root: String): DataFrame =
-    graft.util.ManifestStore.readTable(spark, root, "lists", listsSchema)
-  private[graft] def readCodes(spark: SparkSession, root: String): DataFrame =
-    graft.util.ManifestStore.readTable(spark, root, "codes", codesSchema)
-
-  /** One committed version of (lists, codes) — the cross-table
-    * snapshot every multi-table consumer must read through. */
-  private[graft] def readIndexSnap(spark: SparkSession,
-      root: String): (DataFrame, DataFrame) = {
-    val snap = graft.util.ManifestStore.snapshot(spark, root)
-    (snap.read("lists", listsSchema), snap.read("codes", codesSchema))
-  }
+  /** The one IVFADC layout: four tables of ONE
+    * [[graft.util.ManifestStore]] manifest — (name, partition column,
+    * schema). Every index store (the staged build, the live twin, a
+    * delete clone, each blue/green version) is exactly these tables, so
+    * a reader resolves one snapshot and can never pair quantizers,
+    * lists and codes from different versions. */
+  private val tables = Seq(
+    ("centroids", "", centroidsSchema), ("codebook", "", codebookSchema),
+    ("lists", "bucket", listsSchema), ("codes", "bucket", codesSchema))
 
   // ------------------------------------------------------------- #40ac
-  /** Stage the four index tables once per (fingerprint, sf dir).
-    * `lists` and `codes` are written PARTITIONED BY the coarse cell
-    * (`bucket=<cent_id>/`) — the physical layout the scaladoc of
+  /** Stage the index once per (fingerprint, sf dir) through
+    * [[publish]]. `lists` and `codes` are PARTITIONED BY the coarse
+    * cell (`bucket=<cent_id>/`) — the physical layout the scaladoc of
     * `ann_ivfpq_topk` promises ("at warehouse scale the code table is
     * PARTITIONED BY cell and the pruning is partition pruning"), made
     * real: the query's nprobe cell selection reaches both scans as a
@@ -85,110 +83,138 @@ object StoredIndex {
     * probes' cells is never read — not filtered after the read,
     * never listed into the scan. */
   private[graft] def stageIvfPq(spark: SparkSession, dir: String): String =
-    Staging.stagedDir("graft_ivfpq_store", dir, "v4:ivf16:pq8x16:store-manifest", "embeddings") { root =>
-      writeIndexTables(spark, Embeddings.vecs(spark, dir), root)
+    Staging.stagedDir("graft_ivfpq_store", dir, "v5:ivf16:pq8x16:store-manifest", "embeddings") { root =>
+      publish(spark, root, Embeddings.vecs(spark, dir))
     }
 
-  /** THE four-table IVFADC materialization from a corpus frame —
-    * single-sourced so every index build (the staged store here, each
-    * version of [[IndexRefresh]]'s blue/green rotation) shares one
-    * assignment discipline and cannot drift: training-slice centroids
-    * (vectors 100–115 of the WINDOW), the per-subspace PQ codebook
-    * from the same slice, the ingest-side full-corpus cell assignment
-    * (map-side min_by collapse, keep = 1 — paid once here, never at
-    * query time; one writer task per cell dir, the HiveStore.write
-    * fanout rule), and codes inheriting their vector's cell from the
-    * persisted lists (read back, not recomputed) so the ADC scan
-    * prunes by cell too. */
-  /** The four index frames from a corpus — the ONE materialization
-    * discipline every builder shares (the staged store, the streaming
-    * twin's bootstrap, each blue/green version): training-slice
-    * centroids, the per-subspace PQ codebook from the same slice, the
-    * full-corpus cell assignment (map-side min_by collapse, keep = 1),
-    * and codes inheriting their vector's cell from the SAME lists
-    * frame (checkpointed once; forcing any frame forces the
-    * assignment). */
-  private[graft] def indexFrames(spark: SparkSession, corpus: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.functions.L2Distance.register(spark)
-    val centroids = corpus.where(col("vec_id") >= 100 && col("vec_id") < 116)
-      .select(col("vec_id").as("cent_id"), col("v").as("v_c"))
-    val subs = Embeddings.pqSubsOf(corpus)
-    val codebook = Embeddings.pqCodebook(subs)
-    val lists = Embeddings.ivfAssign(corpus, centroids, 1)
-      .select(col("vec_id").as("neighbor_id"), col("cent_id").as("bucket"))
-      .localCheckpoint()
-    val codes = Embeddings.pqCodes(subs, codebook).join(lists, "neighbor_id")
-    (centroids, codebook, lists, codes)
+  /** The frozen quantizers, trained once at index creation: coarse
+    * centroids (vectors 100-115 of the corpus) and the per-subspace PQ
+    * codebook from the same training slice. Production IVF maintenance
+    * NEVER retrains these per append — they are the fixed quantizers
+    * every ingest batch is assigned against
+    * ([[graft.streaming.AnnStream]]). */
+  private[graft] def quantizers(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val train = corpus.where(col("vec_id") >= 100 && col("vec_id") < 116)
+    (train.select(col("vec_id").as("cent_id"), col("v").as("v_c")),
+      Embeddings.pqCodebook(Embeddings.pqSubsOf(train)))
   }
 
-  /** Stage a store from [[indexFrames]]: frozen quantizers as plain
-    * immutable dirs, lists/codes as tables of ONE store manifest from
-    * birth (one discipline for the staged build and the live twin) —
-    * committed in ONE publish, so even the initial materialization is
-    * never readable half-staged. */
-  private[graft] def writeIndexTables(spark: SparkSession,
-      corpus: DataFrame, root: String): Unit = {
-    val (centroids, codebook, lists, codes) = indexFrames(spark, corpus)
-    centroids.write.parquet(s"$root/centroids")
-    codebook.write.parquet(s"$root/codebook")
-    graft.util.ManifestStore.publishOps(spark, root, Seq(
-      graft.util.ManifestStore.replaceTableOp("lists", "bucket", () => lists),
-      graft.util.ManifestStore.replaceTableOp("codes", "bucket", () => codes)))
+  /** The quantizers committed at `snap`, vector columns `graft_dense`d:
+    * the file source forces containsNull=true, which would put a
+    * per-element null branch inside the graft_l2sq loops (see
+    * [[Embeddings.vecs]]). Callers register `graft_dense`. */
+  private[graft] def quantizersAt(snap: ManifestStore.Snapshot)
+      : (DataFrame, DataFrame) = {
+    require(snap.tableFiles("centroids").nonEmpty && snap.tableFiles("codebook").nonEmpty,
+      s"no IVFADC quantizers committed at version ${snap.version}")
+    (snap.read("centroids", centroidsSchema)
+      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c")),
+      snap.read("codebook", codebookSchema)
+        .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs")))
   }
 
-  /** The frozen index metadata, trained once at index creation: coarse
-    * centroids (vectors 100-115) and the per-subspace PQ codebook from
-    * the same training slice. Production IVF maintenance NEVER retrains
-    * these per append — they are the fixed quantizers every ingest
-    * batch is assigned against ([[graft.streaming.AnnStream]]). */
-  private[graft] def trainIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.L2Distance.register(spark)
-    val e = Embeddings.vecs(spark, dir)
-      .where(col("vec_id") >= 100 && col("vec_id") < 116)
-    val centroids = e.select(col("vec_id").as("cent_id"), col("v").as("v_c"))
-    val codebook = Embeddings.pqCodebook(Embeddings.pqSubsOf(e))
-    (centroids, codebook)
-  }
-
-  /** One ingest batch's index delta against the FROZEN quantizers:
-    * (lists rows, codes rows), both carrying the coarse `bucket` the
-    * store partitions by. Per-vector argmins — independent of how the
-    * corpus is sliced into batches, which is exactly why the streamed
-    * store is bit-identical to the one-shot build. */
+  /** Index a batch of vectors against FROZEN quantizers: (lists rows,
+    * codes rows), both carrying the coarse `bucket` the store
+    * partitions by. The assignment (map-side min_by collapse, keep = 1)
+    * is checkpointed once, and codes inherit their vector's cell from
+    * it, so forcing either frame forces it once. Per-vector argmins —
+    * independent of how the corpus is sliced into batches, which is
+    * exactly why the streamed store is bit-identical to the one-shot
+    * build. */
   private[graft] def indexDelta(batchVecs: DataFrame, centroids: DataFrame,
       codebook: DataFrame): (DataFrame, DataFrame) = {
     val lists = Embeddings.ivfAssign(batchVecs, centroids, 1)
       .select(col("vec_id").as("neighbor_id"), col("cent_id").as("bucket"))
+      .localCheckpoint()
     val codes = Embeddings.pqCodes(Embeddings.pqSubsOf(batchVecs), codebook)
       .join(lists, "neighbor_id")
     (lists, codes)
   }
 
-  /** The ADC scoring stage over (staged or streamed) index tables:
-    * same output contract as `ann_ivfpq_topk`
-    * (probe_id, neighbor_id, adist2, rank). */
-  private[graft] def searchIndex(spark: SparkSession, dir: String,
-      centroids: DataFrame, codebook: DataFrame,
-      codes: DataFrame, lists: DataFrame): DataFrame = {
+  /** Build the whole index from `corpus` at `root` in ONE publish
+    * replacing all four tables — the staged store's build and each
+    * blue/green rotation. The corpus is first gated on the store's
+    * [[graft.util.DeleteLog]] (ids deleted from the serving version
+    * must not be re-indexed from a new feed; a fresh root has no log).
+    * Every read, the gate included, is forced inside the publish (under
+    * the store lease); readers keep resolving the previous version
+    * until the marker lands. */
+  private[graft] def publish(spark: SparkSession, root: String,
+      corpus: DataFrame): Unit = {
     graft.functions.L2Distance.register(spark)
-    // the ONLY raw-corpus touch: probe rows (vec_id < 5, pushed down)
-    searchIndexProbes(spark,
-      Embeddings.vecs(spark, dir).where(col("vec_id") < 5),
-      centroids, codebook, codes, lists)
+    lazy val frames = {
+      val live = DeleteLog.gate(spark, root, corpus, "vec_id")
+      val (centroids, codebook) = quantizers(live)
+      val (lists, codes) = indexDelta(live, centroids, codebook)
+      Seq(centroids, codebook, lists, codes)
+    }
+    ManifestStore.publishOps(spark, root, tables.zipWithIndex.map {
+      case ((t, partCol, _), i) => ManifestStore.replaceTableOp(t, partCol, () => frames(i))
+    })
   }
 
-  /** The same ADC search with the probe frame supplied by the caller —
-    * the seam [[IndexRefresh]] uses to search a re-staged index with
-    * probes drawn from the NEW (drifted) window. */
-  private[graft] def searchIndexProbes(spark: SparkSession,
-      probeVecs: DataFrame, centroids: DataFrame, codebook: DataFrame,
-      codes: DataFrame, lists: DataFrame): DataFrame = {
+  /** Copy the committed index at `staged` (immutable,
+    * fingerprint-shared) into a fresh mutable root — one commit. */
+  private[graft] def cloneStore(spark: SparkSession, staged: String): String =
+    ManifestStore.cloneTables(spark, staged, "graft_del_ivf", tables)
+
+  /** Apply a delete to the index at `root`: ONE atomic publish carrying
+    * the [[graft.util.DeleteLog]] append (durability against later
+    * ingest and rotations) and the touched-cell repair. The deleted
+    * VECTORS (not the store) are assigned against the store's own
+    * committed centroids to find the touched cells; only those
+    * `bucket=` dirs of `lists` and `codes` are rewritten, so the nprobe
+    * DPP layout survives. Every store read is forced inside the
+    * publish, under the lease, so a rotation can never slip between
+    * the assignment and the rewrite. A crash anywhere leaves the delete
+    * un-happened (the caller re-runs it; re-deleting absent rows is a
+    * no-op), and a reader sees the full pre- or post-delete store. */
+  private[graft] def delete(spark: SparkSession, root: String,
+      delVecs: DataFrame): Unit = {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
-    // probeCells' bucket is cast to the partition column's inferred
-    // INT so the equi-join key is the BARE partition column on the
-    // index side — the shape dynamic partition pruning matches.
+    require(ManifestStore.committedVersion(spark, root) > 0,
+      s"no committed index version under $root")
+    lazy val snap = ManifestStore.snapshot(spark, root)
+    lazy val assigned = Embeddings.ivfAssign(delVecs, quantizersAt(snap)._1, 1)
+      .select(col("vec_id").as("neighbor_id"), col("cent_id").cast("int").as("bucket"))
+      .localCheckpoint() // delete-batch-sized
+    lazy val touched: Seq[Any] = assigned.select("bucket").distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    def repaired(t: String, sch: StructType) = snap.read(t, sch)
+      .where(col("bucket").isin(touched: _*))
+      .join(broadcast(assigned.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
+    ManifestStore.publishOps(spark, root, Seq(
+      DeleteLog.appendOp(spark, root, delVecs.select("vec_id"), "vec_id"),
+      ManifestStore.rewriteOp("lists", "bucket", () => touched,
+        () => repaired("lists", listsSchema)),
+      ManifestStore.rewriteOp("codes", "bucket", () => touched,
+        () => repaired("codes", codesSchema))))
+  }
+
+  /** IVFADC top-5 of the standard probes (vec_id < 5 of `dir`'s
+    * corpus) over the index committed at `root` — same output contract
+    * as `ann_ivfpq_topk` (probe_id, neighbor_id, adist2, rank). */
+  private[graft] def search(spark: SparkSession, dir: String, root: String): DataFrame =
+    // the ONLY raw-corpus touch: probe rows (vec_id < 5, pushed down)
+    searchProbes(spark, root, Embeddings.vecs(spark, dir).where(col("vec_id") < 5))
+
+  /** The ADC search with the probe frame supplied by the caller (the
+    * seam [[IndexRefresh]] uses to search a rotated index with probes
+    * from the drifted window). All four tables come off ONE snapshot,
+    * so whatever maintenance crashed before, the search serves the last
+    * committed version. */
+  private[graft] def searchProbes(spark: SparkSession, root: String,
+      probeVecs: DataFrame): DataFrame = {
+    graft.functions.L2Distance.register(spark)
+    graft.functions.KnownNonNullElements.register(spark)
+    val snap = ManifestStore.snapshot(spark, root)
+    val (centroids, codebook) = quantizersAt(snap)
+    val lists = snap.read("lists", listsSchema)
+    val codes = snap.read("codes", codesSchema)
+    // probeCells' bucket is cast to the partition column's INT so the
+    // equi-join key is the BARE partition column on the index side —
+    // the shape dynamic partition pruning matches.
     val probeCells = Embeddings.ivfAssign(probeVecs, centroids, 4)
       .select(col("vec_id").as("probe_id"), col("cent_id").cast("int").as("bucket"))
     val probes = Embeddings.pqSubsOf(probeVecs)
@@ -215,20 +241,8 @@ object StoredIndex {
   }
 
   /** IVFADC top-5 from the STAGED index. */
-  def annIvfPqStored(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
-    val root = stageIvfPq(spark, dir)
-    // graft_dense on every parquet-loaded vector column: the file
-    // source forces containsNull=true, which would put a per-element
-    // null branch inside the graft_l2sq loops (see Embeddings.vecs)
-    val centroids = spark.read.parquet(s"$root/centroids")
-      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))
-    val codebook = spark.read.parquet(s"$root/codebook")
-      .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs"))
-    val (lists, codes) = readIndexSnap(spark, root)
-    searchIndex(spark, dir, centroids, codebook, codes, lists)
-  }
+  def annIvfPqStored(spark: SparkSession, dir: String): DataFrame =
+    search(spark, dir, stageIvfPq(spark, dir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ann_ivfpq_stored" -> (annIvfPqStored _))

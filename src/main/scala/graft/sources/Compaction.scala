@@ -167,25 +167,18 @@ object Compaction {
   /** Unified read over (live ∪ archive) with the COMMITTED cutoff as
     * the precedence rule: days < cutoff come from the archive, days ≥
     * cutoff from the live store. Precedence is taken from the archive's
-    * `_commit_*` marker, NOT the caller's argument (which is only a
-    * fallback for marker-less archives) — so the result is identical
-    * before, during, and after any compaction step: uncommitted archive
-    * files are excluded by the day predicate and their days still read
-    * from live; after commit the (possibly not-yet-cleaned) live copies
-    * are excluded instead. Both scans stay partition-pruned; no shuffle
-    * is added. An absent/empty archive reads as empty. */
-  def compactedRead(spark: SparkSession, liveDir: String, archiveDir: String,
-      cutoffDay: String): DataFrame = {
+    * `_commit_*` marker alone — so the result is identical before,
+    * during, and after any compaction step: uncommitted archive files
+    * (a crashed run's, first run included) are excluded by the day
+    * predicate and their days still read from live; after commit the
+    * (possibly not-yet-cleaned) live copies are excluded instead. Both
+    * scans stay partition-pruned; no shuffle is added. An absent, empty
+    * or never-committed archive reads as empty. */
+  def compactedRead(spark: SparkSession, liveDir: String, archiveDir: String): DataFrame = {
     val fs = fsOf(spark, archiveDir)
-    val hasArchiveData = fs.exists(new Path(archiveDir)) &&
+    val cutoff = archivedCutoff(spark, archiveDir)
+    val hasArchiveData = cutoff != "000" &&
       fs.listStatus(new Path(archiveDir)).exists(_.getPath.getName.startsWith("tier="))
-    val committed = archivedCutoff(spark, archiveDir)
-    // Marker wins; a marker-less archive with data trusts the caller
-    // (pre-marker layout); no archive at all → everything is live.
-    val cutoff =
-      if (committed != "000") committed
-      else if (hasArchiveData) cutoffDay
-      else "000"
     val live = HiveStore.withConf(spark,
       "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
       HiveStore.read(spark, liveDir)
@@ -224,7 +217,7 @@ object Compaction {
     val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
     HiveStore.write(slice, live)
     compactDays(spark, live, archive, cutoffDay = "016")
-    compactedRead(spark, live, archive, cutoffDay = "016")
+    compactedRead(spark, live, archive)
       .groupBy("context", "path", "year")
       .agg(
         count(lit(1)).as("n_records"),
@@ -234,16 +227,6 @@ object Compaction {
       .withColumn("year", col("year").cast("int"))
       .orderBy("context")
   }
-
-  // NOTE: the flat/partitioned append-store sweeps that used to live
-  // here (compactStore / compactPartitionedStore, whole-root
-  // rename-aside) are superseded by [[graft.util.ManifestStore
-  // .compact]] — the manifest commit removes the two-rename window a
-  // concurrent reader could observe. The live index stores (IVFADC
-  // lists/codes, kNN-graph topk/vecs, BM25 buckets) all compact
-  // through it now; this object keeps the EVENT-store day→year
-  // archival compaction above, whose marker-based read precedence
-  // ([[compactedRead]]) was already snapshot-safe.
 
   val compactionOracle: String =
     """SELECT 'vessels__urn-' || CAST(user_id AS VARCHAR) AS context,

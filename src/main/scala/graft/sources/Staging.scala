@@ -3,11 +3,10 @@ package graft.sources
 /** Shared ingest-time staging for derived stores (bucketed tables,
   * partitioned month stores, persisted ANN/LSH indexes): an idempotent
   * write-once directory keyed by a `_STAGED` marker whose CONTENT is a
-  * (layout token | source fingerprint) pair — the pattern proven by
-  * [[graft.operators.Relational5]]'s q_bucketed_join/q_dpp_join
-  * staging. A regenerated testdata dir (new mtime/size) or a changed
-  * layout spec invalidates the staging instead of being silently
-  * shadowed by a stale store from a previous JVM.
+  * (layout token | source fingerprint) pair. A regenerated testdata
+  * dir (new mtime/size) or a changed layout spec invalidates the
+  * staging instead of being silently shadowed by a stale store from a
+  * previous JVM.
   *
   * This is the "computed once at ingest, persisted, scanned at query
   * time" seam a 100 TB pipeline runs on: the staged write pays its

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Shape: the append-merge class ([[KmvStream.streamBm25Postings]]'s
   * postings discipline, SURVEY 42s) applied to a vector index.
-  *   - The quantizers are TRAINED ONCE and frozen
-  *     ([[StoredIndex.trainIndex]]: coarse centroids + PQ codebook from
-  *     the training slice) — production IVF maintenance never retrains
+  *   - The quantizers are TRAINED ONCE and frozen ([[bootstrap]]:
+  *     coarse centroids + PQ codebook from the training slice, committed
+  *     once as store tables) — production IVF maintenance never retrains
   *     per append, it assigns new vectors against the fixed quantizers
   *     (FAISS `add` vs `train`; Jégou et al. 2011 §IV).
   *   - Each micro-batch reduces to its OWN index delta
@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
   *     output against [[StoredIndex.annIvfPqStored]]) and the
   *     full-recompute `ann_ivfpq_topk` oracle carries over verbatim.
   *
-  * Both tables are TABLES OF ONE [[graft.util.ManifestStore]] manifest
-  * at the store root: every append/sweep is a single snapshot-isolated
-  * commit spanning lists AND codes, so a query between (or DURING)
+  * The store is the one IVFADC layout ([[StoredIndex]]): quantizers,
+  * lists and codes are TABLES OF ONE [[graft.util.ManifestStore]]
+  * manifest at the store root, and every append/sweep is a single
+  * snapshot-isolated commit spanning lists AND codes, so a query between (or DURING)
   * maintenance operations reads one committed index state across both
   * tables — never a half-appended batch, never a mid-compaction
   * window, never lists at v+1 with codes at v (a vector whose
@@ -59,30 +60,37 @@ object AnnStream {
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
       spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_ann_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_ann_store").toString
-    buildStore(spark, dir, srcDir, emb.schema, base)
-    searchStore(spark, dir, base)
+    bootstrap(spark, dir, base)
+    buildStore(spark, srcDir, emb.schema, base)
+    StoredIndex.search(spark, dir, base)
   }
 
-  /** Drain `srcDir` into a fresh index store at `base`: frozen
-    * quantizers staged once, then per-trigger delta appends. Exposed
-    * separately so the spec can compare the drained store against the
-    * one-shot build file-for-file. Every path (`base`, `srcDir`,
-    * `checkpoint`) is written through Spark's Hadoop filesystem layer,
-    * so the store may live on any registered scheme —
-    * FsPortabilitySpec drains this builder over a non-default
+  /** Bootstrap a live index store at `base`: the frozen quantizers,
+    * trained once on `dir`'s training slice
+    * ([[StoredIndex.quantizers]]), committed as the store's `centroids`
+    * and `codebook` tables — the trained index metadata a real
+    * deployment ships before ingest starts. Run once per store; every
+    * later drain assigns against these committed tables. */
+  private[graft] def bootstrap(spark: SparkSession, dir: String, base: String): Unit = {
+    val (centroids, codebook) = StoredIndex.quantizers(Embeddings.vecs(spark, dir))
+    ManifestStore.publishOps(spark, base, Seq(
+      ManifestStore.replaceTableOp("centroids", "", () => centroids),
+      ManifestStore.replaceTableOp("codebook", "", () => codebook)))
+  }
+
+  /** Drain `srcDir` into the bootstrapped store at `base`: one delta
+    * append per trigger. Exposed separately so the spec can compare
+    * the drained store against the one-shot build file-for-file. Every
+    * path (`base`, `srcDir`, `checkpoint`) is written through Spark's
+    * Hadoop filesystem layer, so the store may live on any registered
+    * scheme — FsPortabilitySpec drains this builder over a non-default
     * `graftfs:` root. */
-  private[graft] def buildStore(spark: SparkSession, dir: String,
-      srcDir: String, schema: org.apache.spark.sql.types.StructType,
-      base: String, checkpoint: Option[String] = None): Unit = {
-    val (centroids, codebook) = StoredIndex.trainIndex(spark, dir)
-    // freeze the quantizers into the store (the trained index
-    // metadata a real deployment ships before ingest starts)
-    centroids.write.mode("overwrite").parquet(s"$base/centroids")
-    codebook.write.mode("overwrite").parquet(s"$base/codebook")
+  private[graft] def buildStore(spark: SparkSession, srcDir: String,
+      schema: org.apache.spark.sql.types.StructType, base: String,
+      checkpoint: Option[String] = None): Unit =
     Slices.drain(spark, srcDir, schema, checkpoint) { (batch, _) =>
       ingestBatch(batch.sparkSession, base, batch)
     }
-  }
 
   /** One trigger's ingest — ONE atomic publish spanning lists AND
     * codes, IDEMPOTENT under micro-batch re-delivery and durable
@@ -113,37 +121,30 @@ object AnnStream {
     graft.functions.L2Distance.register(sp)
     graft.functions.DotProduct.register(sp)
     graft.functions.KnownNonNullElements.register(sp)
-    val cents = sp.read.parquet(s"$base/centroids")
-      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))
-    val cb = sp.read.parquet(s"$base/codebook")
-      .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs"))
     // forced lazily — on first touch the publish already holds the
-    // lease, so the gate reads see the version this commit supersedes.
-    // The assignment is checkpointed ONCE; the re-delivery anti-join
-    // is deliberately not (the two write jobs run in parallel and each
+    // lease, so every store read (the committed quantizers, the gate
+    // reads) sees the version this commit supersedes. The assignment is
+    // checkpointed ONCE inside indexDelta; the re-delivery anti-join is
+    // deliberately not (the two write jobs run in parallel and each
     // re-derives it from the checkpointed delta — cheaper than another
     // materialization job on the per-trigger hot path).
     lazy val prepared = {
+      val snap = ManifestStore.snapshot(sp, base)
+      val (cents, cb) = StoredIndex.quantizersAt(snap)
       val live = DeleteLog.gate(sp, base, batch, "vec_id")
-      val (lists, codes) = StoredIndex.indexDelta(
-        Embeddings.vecsOf(live), cents, cb)
-      val deltaL = lists.localCheckpoint() // reused: buckets, gate, codes join
+      val (deltaL, codes) = StoredIndex.indexDelta(Embeddings.vecsOf(live), cents, cb)
       val bkts = deltaL.select("bucket").distinct().collect()
         .map(_.get(0)).toSeq
-      (bkts, deltaL, codes)
+      val gatedL =
+        if (bkts.isEmpty) deltaL
+        else deltaL.join(snap.read("lists", StoredIndex.listsSchema)
+          .where(col("bucket").isin(bkts: _*)).select("neighbor_id"),
+          Seq("neighbor_id"), "left_anti")
+      (bkts, gatedL, codes.join(gatedL.select("neighbor_id"), Seq("neighbor_id"), "left_semi"))
     }
-    def gatedL =
-      if (prepared._1.isEmpty) prepared._2
-      else prepared._2.join(
-        StoredIndex.readLists(sp, base)
-          .where(col("bucket").isin(prepared._1: _*)).select("neighbor_id"),
-        Seq("neighbor_id"), "left_anti")
     ManifestStore.publishOps(sp, base, Seq(
-      ManifestStore.appendOp("lists", "bucket", () => prepared._1,
-        () => gatedL),
-      ManifestStore.appendOp("codes", "bucket", () => prepared._1,
-        () => prepared._3.join(gatedL.select("neighbor_id"),
-          Seq("neighbor_id"), "left_semi"))))
+      ManifestStore.appendOp("lists", "bucket", () => prepared._1, () => prepared._2),
+      ManifestStore.appendOp("codes", "bucket", () => prepared._1, () => prepared._3)))
   }
 
   // ------------------------------------------------------------- #113b
@@ -167,9 +168,10 @@ object AnnStream {
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
       spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_annc_src").toString)
     val base = java.nio.file.Files.createTempDirectory("graft_annc_store").toString
-    buildStore(spark, dir, srcDir, emb.schema, base)
+    bootstrap(spark, dir, base)
+    buildStore(spark, srcDir, emb.schema, base)
     compactIndexStore(spark, base)
-    searchStore(spark, dir, base)
+    StoredIndex.search(spark, dir, base)
   }
 
   /** The scheduled small-file sweep over a live index store: each cell
@@ -185,20 +187,6 @@ object AnnStream {
       (if (ManifestStore.tableFiles(spark, base, DeleteLog.Table).nonEmpty)
         Seq(DeleteLog.foldOp(spark, base, "vec_id")) else Seq.empty)
     ManifestStore.publishOps(spark, base, ops)
-  }
-
-  /** The unchanged staged-read search over a live-maintained store —
-    * the manifest read serves the committed snapshot, so no recovery
-    * step is needed regardless of what maintenance crashed before. */
-  private[graft] def searchStore(spark: SparkSession, dir: String,
-      base: String): DataFrame = {
-    graft.functions.KnownNonNullElements.register(spark)
-    val centroids = spark.read.parquet(s"$base/centroids")
-      .select(col("cent_id"), expr("graft_dense(v_c)").as("v_c"))
-    val codebook = spark.read.parquet(s"$base/codebook")
-      .select(col("sub"), col("cent_id"), expr("graft_dense(cs)").as("cs"))
-    val (lists, codes) = StoredIndex.readIndexSnap(spark, base)
-    StoredIndex.searchIndex(spark, dir, centroids, codebook, codes, lists)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

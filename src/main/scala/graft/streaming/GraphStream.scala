@@ -76,7 +76,7 @@ object GraphStream {
     val base = java.nio.file.Files.createTempDirectory("graft_graph_store").toString
     buildStore(spark, dir, srcDir, emb.schema, base)
     // serve from the maintained store: mutual filter + presentation sort
-    GraphStore.mutualFromTopk(readTopk(spark, base))
+    KnnGraph.mutualEdges(readTopk(spark, base))
       .orderBy("id_a", "id_b")
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.similarity.{Bm25Store, DeleteRepair, Embeddings, GraphStore}
+import graft.similarity.{Bm25Store, DeleteRepair, Embeddings, KnnGraph, StoredIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,11 +48,12 @@ object LiveDelete {
   }
 
   // -------------------------------------------------------------- #122
-  /** IVFADC: two trigger batches → delete (touched-cell repair + log)
+  /** IVFADC: quantizers bootstrapped once → two trigger batches →
+    * delete (touched-cell repair + log)
     * → the remaining batch (its deleted ids gated out) → per-cell
     * compaction sweep → ADC search ≡ fresh index on the survivors. */
   def streamAnnIvfPqDeleted(spark: SparkSession, dir: String): DataFrame =
-    AnnStream.searchStore(spark, dir, builtAnnDeletedStore(spark, dir))
+    StoredIndex.search(spark, dir, builtAnnDeletedStore(spark, dir))
 
   /** The store builder, exposed so the spec can assert on the final
     * store state (post-delete arrivals gated, compaction carried). */
@@ -65,11 +66,12 @@ object LiveDelete {
     val ckpt = Some(tmp("graft_lived_ann_ckpt"))
     val (before, after) = arrivals(emb, "vec_id")
     Slices.stage(before.repartitionByRange(2, col("vec_id")), spark_partition_id(), 2, srcDir)
-    AnnStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
-    DeleteRepair.deleteFromIvfPq(spark, base,
+    AnnStream.bootstrap(spark, dir, base)
+    AnnStream.buildStore(spark, srcDir, emb.schema, base, ckpt)
+    StoredIndex.delete(spark, base,
       Embeddings.vecsOf(graft.Tables.embeddings(spark, dir)).where(DeleteRepair.delVecPred))
     Slices.stage(after, lit(0), 1, srcDir)
-    AnnStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
+    AnnStream.buildStore(spark, srcDir, emb.schema, base, ckpt)
     AnnStream.compactIndexStore(spark, base)
     base
   }
@@ -96,7 +98,7 @@ object LiveDelete {
     Slices.stage(after, lit(0), 1, srcDir)
     GraphStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
     GraphStream.compactGraphStore(spark, base)
-    GraphStore.mutualFromTopk(GraphStream.readTopk(spark, base))
+    KnnGraph.mutualEdges(GraphStream.readTopk(spark, base))
       .orderBy("id_a", "id_b")
   }
 

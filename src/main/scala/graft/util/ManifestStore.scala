@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.StructType
   * rewritten in place (the kNN-graph trigger swap, the IVFADC/BM25
   * delete repairs, live-index compaction, the blue/green rotation).
   *
-  * A store is ONE manifest spanning ALL of its tables: the IVFADC store
-  * commits `lists` + `codes` (+ its delete log) in one version, the
-  * BM25 store `postings` + `dl` + `stats` (+ log), the rotating index
-  * `centroids` + `codebook` + `lists` + `codes` (+ log). That closes
+  * A store is ONE manifest spanning ALL of its tables: every IVFADC
+  * store (staged, live, cloned or rotating) commits `centroids` +
+  * `codebook` + `lists` + `codes` (+ its delete log), the BM25 store
+  * `postings` + `dl` + `stats` (+ log). That closes
   * the cross-TABLE torn-read window the per-table manifests of the
   * previous protocol left open (a reader resolving lists@v+1 with
   * codes@v served a state that was neither committed version), and it
@@ -614,6 +614,19 @@ object ManifestStore {
   def readTable(spark: SparkSession, root: String, table: String,
       schema: StructType): DataFrame =
     snapshot(spark, root).read(table, schema)
+
+  /** Copy the committed `tables` — (name, partition column, schema) —
+    * of the store at `src` into a fresh temp root named `prefix…`, all
+    * in one commit, all read off one snapshot; returns the new root.
+    * The mutable-clone step of every staged (immutable, shared) store. */
+  def cloneTables(spark: SparkSession, src: String, prefix: String,
+      tables: Seq[(String, String, StructType)]): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val snap = snapshot(spark, src)
+    publishOps(spark, root, tables.map { case (t, partCol, schema) =>
+      replaceTableOp(t, partCol, () => snap.read(t, schema)) })
+    root
+  }
 
   /** The committed file list (root-relative). */
   def files(spark: SparkSession, root: String): Seq[String] =

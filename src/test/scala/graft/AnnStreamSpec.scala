@@ -16,7 +16,8 @@ class AnnStreamSpec extends SparkSpec {
     emb.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
     val streamed = java.nio.file.Files.createTempDirectory("graft_annspec_store").toString
-    AnnStream.buildStore(spark, sfDir, srcDir, emb.schema, streamed)
+    AnnStream.bootstrap(spark, sfDir, streamed)
+    AnnStream.buildStore(spark, srcDir, emb.schema, streamed)
     // exactly 3 triggers ran (one appended file set per source file)
     val staged = StoredIndex.stageIvfPq(spark, sfDir)
     for (t <- Seq("lists", "codes")) {
@@ -29,7 +30,7 @@ class AnnStreamSpec extends SparkSpec {
       assert(s.count() == o.count(), s"$t count")
     }
     // search over the drained store ≡ the staged twin ≡ inline rebuild
-    val live = AnnStream.searchStore(spark, sfDir, streamed).collect()
+    val live = StoredIndex.search(spark, sfDir, streamed).collect()
     val inline = Embeddings.annIvfPqTopK(spark, sfDir).collect()
     assert(live.nonEmpty)
     assert(live.map(_.toString).toSeq == inline.map(_.toString).toSeq)
@@ -41,7 +42,8 @@ class AnnStreamSpec extends SparkSpec {
     emb.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
     val base = java.nio.file.Files.createTempDirectory("graft_anncspec_store").toString
-    AnnStream.buildStore(spark, sfDir, srcDir, emb.schema, base)
+    AnnStream.bootstrap(spark, sfDir, base)
+    AnnStream.buildStore(spark, srcDir, emb.schema, base)
     def manifestFiles(t: String): Seq[String] = ManifestStore.tableFiles(spark, base, t)
     def buckets(t: String): Set[String] =
       manifestFiles(t).map(_.takeWhile(_ != '/')).toSet
@@ -51,11 +53,11 @@ class AnnStreamSpec extends SparkSpec {
     // crash INSIDE the sweep's publish window (rewritten files on disk,
     // manifest not committed): a concurrent reader must keep serving
     // the PRE-sweep snapshot — then the re-run sweep completes
-    val preSweep = AnnStream.searchStore(spark, sfDir, base).collect()
+    val preSweep = StoredIndex.search(spark, sfDir, base).collect()
     ManifestStore.crashPoint = Some("publish")
     intercept[IllegalStateException] { AnnStream.compactIndexStore(spark, base) }
     ManifestStore.crashPoint = None
-    val midCrash = AnnStream.searchStore(spark, sfDir, base).collect()
+    val midCrash = StoredIndex.search(spark, sfDir, base).collect()
     assert(midCrash.map(_.toString).toSeq == preSweep.map(_.toString).toSeq,
       "a reader saw a crashed sweep's uncommitted state")
     AnnStream.compactIndexStore(spark, base)
@@ -65,7 +67,7 @@ class AnnStreamSpec extends SparkSpec {
         s"$t not compacted to one file per cell dir: ${manifestFiles(t).size}")
     }
     // result-invisible AND the nprobe DPP shape survives the rewrite
-    val df = AnnStream.searchStore(spark, sfDir, base)
+    val df = StoredIndex.search(spark, sfDir, base)
     val plan = df.queryExecution.executedPlan.toString
     val idxScans = plan.split("FileScan").toSeq.drop(1)
       .filter(s => s.contains("graft_anncspec_store") &&
@@ -83,11 +85,9 @@ class AnnStreamSpec extends SparkSpec {
     // foreachBatch is at-least-once — a crash after the appends but
     // before the checkpoint commit re-runs the same batch
     val emb = Tables.embeddings(spark, sfDir)
-    val (centroids, codebook) = StoredIndex.trainIndex(spark, sfDir)
     def mkStore(): String = {
       val b = java.nio.file.Files.createTempDirectory("graft_redeliver").toString
-      centroids.write.mode("overwrite").parquet(s"$b/centroids")
-      codebook.write.mode("overwrite").parquet(s"$b/codebook")
+      AnnStream.bootstrap(spark, sfDir, b)
       b
     }
     val once = mkStore()
@@ -117,31 +117,31 @@ class AnnStreamSpec extends SparkSpec {
     // re-deliver and verify the invariant codes = 8 × lists with
     // matching id sets.
     val emb = Tables.embeddings(spark, sfDir)
-    val (centroids, codebook) = StoredIndex.trainIndex(spark, sfDir)
     val base = java.nio.file.Files.createTempDirectory("graft_atomic").toString
-    centroids.write.mode("overwrite").parquet(s"$base/centroids")
-    codebook.write.mode("overwrite").parquet(s"$base/codebook")
+    AnnStream.bootstrap(spark, sfDir, base)
     val firstHalf = emb.where(col("vec_id") < 50)
     AnnStream.ingestBatch(spark, base, firstHalf)
     def invariantHolds(): Unit = {
-      val (lists, codes) = StoredIndex.readIndexSnap(spark, base)
+      val snap = ManifestStore.snapshot(spark, base)
+      val (lists, codes) = (snap.read("lists", StoredIndex.listsSchema),
+        snap.read("codes", StoredIndex.codesSchema))
       assert(codes.count() == 8 * lists.count(), "codes != 8 x lists")
       assert(lists.select("neighbor_id")
         .exceptAll(codes.select("neighbor_id").distinct()).isEmpty,
         "a vector has a lists row without codes")
     }
     invariantHolds()
-    val before = StoredIndex.readLists(spark, base).count()
+    val before = ManifestStore.readTable(spark, base, "lists", StoredIndex.listsSchema).count()
     ManifestStore.crashPoint = Some("publish")
     intercept[IllegalStateException] { AnnStream.ingestBatch(spark, base, emb) }
     ManifestStore.crashPoint = None
     // the crashed trigger is invisible across BOTH tables
-    assert(StoredIndex.readLists(spark, base).count() == before)
+    assert(ManifestStore.readTable(spark, base, "lists", StoredIndex.listsSchema).count() == before)
     invariantHolds()
     // the re-delivered trigger lands the remainder exactly once
     AnnStream.ingestBatch(spark, base, emb)
     invariantHolds()
-    assert(StoredIndex.readLists(spark, base).count() == emb.count())
+    assert(ManifestStore.readTable(spark, base, "lists", StoredIndex.listsSchema).count() == emb.count())
   }
 
   test("appends land inside bucket partitions — the nprobe pruning shape survives maintenance") {

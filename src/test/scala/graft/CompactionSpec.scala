@@ -52,12 +52,12 @@ class CompactionSpec extends SparkSpec {
   test("second scheduled run preserves previously archived days (append-only archive)") {
     val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
     HiveStore.write(liveSlice(sfDir), live)
-    val expected = Compaction.compactedRead(spark, live, archive, "000")
+    val expected = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
     Compaction.compactDays(spark, live, archive, cutoffDay = "010")
     Compaction.compactDays(spark, live, archive, cutoffDay = "020")
     Compaction.compactDays(spark, live, archive, cutoffDay = "020") // same-cutoff re-run: no-op
-    val after = Compaction.compactedRead(spark, live, archive, "020")
+    val after = Compaction.compactedRead(spark, live, archive)
     val ids = after.select("event_id").as[Long].collect().sorted.toSeq
     assert(ids == expected, s"${expected.size} rows in, ${ids.size} rows out")
     // days < 10 must have survived the second run inside the archive
@@ -70,7 +70,7 @@ class CompactionSpec extends SparkSpec {
   test("crash between publish and commit loses nothing; rerun completes idempotently") {
     val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
     HiveStore.write(liveSlice(sfDir), live)
-    val expected = Compaction.compactedRead(spark, live, archive, "000")
+    val expected = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
     Compaction.compactDays(spark, live, archive, cutoffDay = "010")
     // Crash the second run after its publish step: data files for the
@@ -82,15 +82,35 @@ class CompactionSpec extends SparkSpec {
     } finally Compaction.crashPoint = None
     assert(Compaction.archivedCutoff(spark, archive) == "010")
     // Reads still see every row exactly once (window days come from live).
-    val mid = Compaction.compactedRead(spark, live, archive, "016")
+    val mid = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
     assert(mid == expected, "mid-crash read lost or duplicated rows")
     // Re-running the same compaction completes the publish.
     Compaction.compactDays(spark, live, archive, cutoffDay = "016")
-    val fin = Compaction.compactedRead(spark, live, archive, "016")
+    val fin = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
     assert(fin == expected)
     assert(Compaction.archivedCutoff(spark, archive) == "016")
+  }
+
+  test("a crashed FIRST run leaves the read equal to the pre-compaction rows") {
+    // no marker was ever committed, so the crashed run's archive files
+    // are uncommitted and every day still reads from live — whatever
+    // cutoff a later run is scheduled with
+    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    HiveStore.write(liveSlice(sfDir), live)
+    def ids(): Seq[Long] = Compaction.compactedRead(spark, live, archive)
+      .select("event_id").as[Long].collect().sorted.toSeq
+    val expected = ids()
+    Compaction.crashPoint = Some("commit")
+    try intercept[IllegalStateException] {
+      Compaction.compactDays(spark, live, archive, cutoffDay = "016")
+    } finally Compaction.crashPoint = None
+    assert(Compaction.archivedCutoff(spark, archive) == "000")
+    assert(fs.globStatus(new Path(archive, "tier=*/context=*/path=*/year=*/c016_*")).nonEmpty,
+      "the crashed run left no uncommitted archive files — nothing exercised")
+    val mid = ids()
+    assert(mid == expected, s"${expected.size} rows before, ${mid.size} after a crashed first run")
   }
 
   test("compactedRead is identical mid-crash (archive published, source not yet cleaned)") {
@@ -99,9 +119,9 @@ class CompactionSpec extends SparkSpec {
     HiveStore.write(liveSlice(sfDir), live)
     HiveStore.write(liveSlice(sfDir), liveDirty) // = live store before cleanup
     Compaction.compactDays(spark, live, archive, cutoffDay = "016")
-    val clean = Compaction.compactedRead(spark, live, archive, "016")
+    val clean = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
-    val dirty = Compaction.compactedRead(spark, liveDirty, archive, "016")
+    val dirty = Compaction.compactedRead(spark, liveDirty, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
     assert(clean == dirty && clean.nonEmpty)
   }

@@ -35,10 +35,8 @@ class ConcurrentReaderSpec extends SparkSpec {
     graft.functions.DotProduct.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
-    val (centroids, codebook) = StoredIndex.trainIndex(spark, sfDir)
     val base = java.nio.file.Files.createTempDirectory("graft_stress").toString
-    centroids.write.mode("overwrite").parquet(s"$base/centroids")
-    codebook.write.mode("overwrite").parquet(s"$base/codebook")
+    AnnStream.bootstrap(spark, sfDir, base)
     // bootstrap so the reader never legitimately sees an empty store
     AnnStream.ingestBatch(spark, base, emb.where(col("vec_id") < 30))
 
@@ -83,7 +81,7 @@ class ConcurrentReaderSpec extends SparkSpec {
       // the production maintenance sequence, live under the reader
       AnnStream.ingestBatch(spark, base,
         emb.where(col("vec_id") >= 30 && col("vec_id") < 60))
-      DeleteRepair.deleteFromIvfPq(spark, base,
+      StoredIndex.delete(spark, base,
         Embeddings.vecsOf(emb).where(DeleteRepair.delVecPred))
       AnnStream.ingestBatch(spark, base, emb.where(col("vec_id") >= 60))
       AnnStream.compactIndexStore(spark, base)
@@ -94,7 +92,9 @@ class ConcurrentReaderSpec extends SparkSpec {
     assert(torn.isEmpty, s"isolation violations: ${torn.toArray.mkString("; ")}")
     assert(reads.get() > 0, "the reader never completed a read — nothing exercised")
     // final state sanity: the delete survived the whole sequence
-    val (lists, codes) = StoredIndex.readIndexSnap(spark, base)
+    val snap = ManifestStore.snapshot(spark, base)
+    val (lists, codes) = (snap.read("lists", StoredIndex.listsSchema),
+      snap.read("codes", StoredIndex.codesSchema))
     assert(lists.where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty)
     assert(codes.count() == 8 * lists.count())
   }

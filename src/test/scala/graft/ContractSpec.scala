@@ -65,6 +65,18 @@ class ContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"gated queries without a §2 row: $missing")
   }
 
+  test("one IVFADC layout: no main source names a plain quantizer dir") {
+    // the quantizers are tables of the index store's manifest; a
+    // `/centroids` or `/codebook` path is a second layout beside it
+    val quantizerDir = "/(centroids|codebook)\\b".r
+    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => quantizerDir.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.toString).toSeq
+    assert(offenders.isEmpty, s"quantizer dirs outside the manifest: $offenders")
+  }
+
   test("one stager: only Slices.scala stamps or writes a stream source dir") {
     // every file-fed stream stages through Slices.stage — one job, one
     // non-empty file per slice, replay order stamped in one place

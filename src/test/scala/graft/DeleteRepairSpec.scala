@@ -32,21 +32,26 @@ class DeleteRepairSpec extends SparkSpec {
     b.result()
   }
 
+  private def lists(base: String) =
+    ManifestStore.readTable(spark, base, "lists", StoredIndex.listsSchema)
+  private def codes(base: String) =
+    ManifestStore.readTable(spark, base, "codes", StoredIndex.codesSchema)
+
   private def survivors = Embeddings.vecsOf(Tables.embeddings(spark, sfDir))
     .where(!(pmod(col("vec_id"), lit(17L)) === 14L))
 
   test("IVFADC single-vector delete rewrites only its cell and drops exactly its rows") {
-    val base = DeleteRepair.cloneIvfPq(spark, StoredIndex.stageIvfPq(spark, sfDir))
-    val cell = StoredIndex.readLists(spark, base)
+    val base = StoredIndex.cloneStore(spark, StoredIndex.stageIvfPq(spark, sfDir))
+    val cell = lists(base)
       .where(col("neighbor_id") === 14L).head().getInt(1)
-    val nLists = StoredIndex.readLists(spark, base).count()
-    val nCodes = StoredIndex.readCodes(spark, base).count()
+    val nLists = lists(base).count()
+    val nCodes = codes(base).count()
     val before = inv(s"$base/lists") ++ inv(s"$base/codes")
     val beforeM = ManifestStore.tableFiles(spark, base, "lists").map("lists/" + _).toSet ++
       ManifestStore.tableFiles(spark, base, "codes").map("codes/" + _).toSet
     val delVec = Embeddings.vecsOf(Tables.embeddings(spark, sfDir))
       .where(col("vec_id") === 14L)
-    DeleteRepair.deleteFromIvfPq(spark, base, delVec)
+    StoredIndex.delete(spark, base, delVec)
     val after = inv(s"$base/lists") ++ inv(s"$base/codes")
     val afterM = ManifestStore.tableFiles(spark, base, "lists").map("lists/" + _).toSet ++
       ManifestStore.tableFiles(spark, base, "codes").map("codes/" + _).toSet
@@ -60,25 +65,19 @@ class DeleteRepairSpec extends SparkSpec {
     // the touched cell was republished (no old manifest entry survives)
     assert(afterM.filter(_.contains(s"bucket=$cell/"))
       .intersect(beforeM.filter(_.contains(s"bucket=$cell/"))).isEmpty)
-    assert(StoredIndex.readLists(spark, base)
+    assert(lists(base)
       .where(col("neighbor_id") === 14L).isEmpty)
-    assert(StoredIndex.readCodes(spark, base)
+    assert(codes(base)
       .where(col("neighbor_id") === 14L).isEmpty)
-    assert(StoredIndex.readLists(spark, base).count() == nLists - 1)
-    assert(StoredIndex.readCodes(spark, base).count() == nCodes - 8)
+    assert(lists(base).count() == nLists - 1)
+    assert(codes(base).count() == nCodes - 8)
   }
 
   test("IVFADC repaired search equals a fresh index built from the survivors") {
     val repaired = DeleteRepair.storeDeleteIvfPq(spark, sfDir).collect()
-    val (cents, cb) = StoredIndex.trainIndex(spark, sfDir)
-    val (lists, codes) = StoredIndex.indexDelta(survivors, cents, cb)
     val fresh = tmp("graft_delspec_fresh")
-    cents.write.parquet(s"$fresh/centroids")
-    cb.write.parquet(s"$fresh/codebook")
-    ManifestStore.publishOps(spark, fresh, Seq(
-      ManifestStore.replaceTableOp("lists", "bucket", () => lists),
-      ManifestStore.replaceTableOp("codes", "bucket", () => codes)))
-    val expected = DeleteRepair.searchIvfPq(spark, sfDir, fresh).collect()
+    StoredIndex.publish(spark, fresh, survivors)
+    val expected = StoredIndex.search(spark, sfDir, fresh).collect()
     assert(repaired.nonEmpty)
     assert(repaired.map(_.toString).toSeq == expected.map(_.toString).toSeq)
   }
@@ -151,23 +150,18 @@ class DeleteRepairSpec extends SparkSpec {
     val srcDir = tmp("graft_delspec_live_src")
     emb.repartitionByRange(3, col("vec_id")).write.mode("overwrite").parquet(srcDir)
     val base = tmp("graft_delspec_live")
-    graft.streaming.AnnStream.buildStore(spark, sfDir, srcDir, emb.schema, base)
+    graft.streaming.AnnStream.bootstrap(spark, sfDir, base)
+    graft.streaming.AnnStream.buildStore(spark, srcDir, emb.schema, base)
     val listFiles = ManifestStore.tableFiles(spark, base, "lists")
     val cells = listFiles.map(_.takeWhile(_ != '/')).toSet
     assert(listFiles.size > cells.size,
       "expected the per-trigger fan-out (several files per cell)")
-    DeleteRepair.deleteFromIvfPq(spark, base,
+    StoredIndex.delete(spark, base,
       Embeddings.vecsOf(emb).where(pmod(col("vec_id"), lit(17L)) === 14L))
-    val repaired = DeleteRepair.searchIvfPq(spark, sfDir, base).collect()
-    val (cents, cb) = StoredIndex.trainIndex(spark, sfDir)
-    val (lists, codes) = StoredIndex.indexDelta(survivors, cents, cb)
+    val repaired = StoredIndex.search(spark, sfDir, base).collect()
     val fresh = tmp("graft_delspec_live_fresh")
-    cents.write.parquet(s"$fresh/centroids")
-    cb.write.parquet(s"$fresh/codebook")
-    ManifestStore.publishOps(spark, fresh, Seq(
-      ManifestStore.replaceTableOp("lists", "bucket", () => lists),
-      ManifestStore.replaceTableOp("codes", "bucket", () => codes)))
-    val expected = DeleteRepair.searchIvfPq(spark, sfDir, fresh).collect()
+    StoredIndex.publish(spark, fresh, survivors)
+    val expected = StoredIndex.search(spark, sfDir, fresh).collect()
     assert(repaired.nonEmpty)
     assert(repaired.map(_.toString).toSeq == expected.map(_.toString).toSeq)
   }

@@ -85,7 +85,7 @@ class FsPortabilitySpec extends SparkSpec {
     val fs = fsOf(live)
     assert(fs.globStatus(new Path(live, "tier=*/context=*/path=*/year=*/day=*"))
       .forall(_.getPath.getName.stripPrefix("day=") >= "016"))
-    assert(Compaction.compactedRead(spark, live, archive, "016").count() == before)
+    assert(Compaction.compactedRead(spark, live, archive).count() == before)
   }
 
   test("AnnStream live IVFADC store drains, compacts and serves on a non-default scheme") {
@@ -94,14 +94,15 @@ class FsPortabilitySpec extends SparkSpec {
     e.repartitionByRange(2, col("vec_id")).write.parquet(srcDir)
     val base = graftRoot() + "/store"
     val ckpt = graftRoot() + "/ckpt"
-    graft.streaming.AnnStream.buildStore(spark, sfDir, srcDir, e.schema,
+    graft.streaming.AnnStream.bootstrap(spark, sfDir, base)
+    graft.streaming.AnnStream.buildStore(spark, srcDir, e.schema,
       base, Some(ckpt))
     // the whole store tree lives behind graftfs:, not local file:
     assert(fsOf(base).isInstanceOf[GraftTestFs])
     assert(fsOf(base).exists(new Path(base + "/lists")))
     // the scheduled sweep's manifest publish runs on the same scheme
     graft.streaming.AnnStream.compactIndexStore(spark, base)
-    val live = graft.streaming.AnnStream.searchStore(spark, sfDir, base).collect()
+    val live = graft.similarity.StoredIndex.search(spark, sfDir, base).collect()
     val inline = graft.similarity.Embeddings.annIvfPqTopK(spark, sfDir).collect()
     assert(live.nonEmpty)
     assert(live.map(_.toString).toSeq == inline.map(_.toString).toSeq)
@@ -117,8 +118,8 @@ class FsPortabilitySpec extends SparkSpec {
       base, Some(ckpt))
     assert(fsOf(base).isInstanceOf[GraftTestFs])
     assert(fsOf(base).exists(new Path(base + "/topk")))
-    val live = graft.similarity.GraphStore
-      .mutualFromTopk(graft.streaming.GraphStream.readTopk(spark, base))
+    val live = graft.similarity.KnnGraph
+      .mutualEdges(graft.streaming.GraphStream.readTopk(spark, base))
       .orderBy("id_a", "id_b").collect()
     val inline = graft.similarity.KnnGraph.knnGraph(spark, sfDir).collect()
     assert(live.nonEmpty)

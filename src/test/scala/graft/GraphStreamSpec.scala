@@ -30,7 +30,7 @@ class GraphStreamSpec extends SparkSpec {
     assert(maintained.nonEmpty)
     assert(maintained.map(_.toString).toSeq == oneShot.map(_.toString).toSeq)
     // mutual edges ≡ the inline twin, bit for bit
-    val live = graft.similarity.GraphStore.mutualFromTopk(
+    val live = KnnGraph.mutualEdges(
       GraphStream.readTopk(spark, base)).orderBy("id_a", "id_b").collect()
     val inline = KnnGraph.knnGraph(spark, sfDir).collect()
     assert(live.map(_.toString).toSeq == inline.map(_.toString).toSeq)
@@ -124,7 +124,7 @@ class GraphStreamSpec extends SparkSpec {
       beforeManifest.filterNot(_.startsWith(s"label=$lastLabel/")),
       "untouched labels' manifest entries changed")
     // and the maintained store still equals the full rebuild, bit for bit
-    val live = graft.similarity.GraphStore.mutualFromTopk(
+    val live = KnnGraph.mutualEdges(
       GraphStream.readTopk(spark, base)).orderBy("id_a", "id_b").collect()
     val inline = KnnGraph.knnGraph(spark, sfDir).collect()
     assert(live.map(_.toString).toSeq == inline.map(_.toString).toSeq)

@@ -18,9 +18,9 @@ class IndexRefreshSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_spec").toString
     val orig = Embeddings.vecs(spark, sfDir)
     val probes = orig.where(col("vec_id") < 5)
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     assert(ManifestStore.committedVersion(spark, root) == 1)
-    val before = IndexRefresh.searchCommitted(spark, root, probes)
+    val before = StoredIndex.searchProbes(spark, root, probes)
       .collect().map(_.toString).toSeq
     assert(before.nonEmpty)
     val centsBefore = ManifestStore.readTable(spark, root, "centroids",
@@ -32,24 +32,24 @@ class IndexRefreshSpec extends SparkSpec {
     // two-protocol design risked: new centroids over old codes)
     ManifestStore.crashPoint = Some("publish")
     intercept[IllegalStateException] {
-      IndexRefresh.publishVersion(spark, root,
+      StoredIndex.publish(spark, root,
         IndexRefresh.driftedVecs(spark, sfDir))
     }
     ManifestStore.crashPoint = None
     assert(ManifestStore.committedVersion(spark, root) == 1)
-    val during = IndexRefresh.searchCommitted(spark, root, probes)
+    val during = StoredIndex.searchProbes(spark, root, probes)
       .collect().map(_.toString).toSeq
     assert(during == before, "a mid-re-stage read saw the uncommitted store")
     assert(ManifestStore.readTable(spark, root, "centroids",
       StoredIndex.centroidsSchema).collect().map(_.toString).toSet == centsBefore,
       "a mid-re-stage read saw retrained quantizers")
     // the re-run rotation completes; its marker IS the swap
-    IndexRefresh.publishVersion(spark, root,
+    StoredIndex.publish(spark, root,
       IndexRefresh.driftedVecs(spark, sfDir))
     assert(ManifestStore.committedVersion(spark, root) == 2)
     val driftedProbes = IndexRefresh.driftedVecs(spark, sfDir)
       .where(col("vec_id") < 5)
-    val after = IndexRefresh.searchCommitted(spark, root, driftedProbes)
+    val after = StoredIndex.searchProbes(spark, root, driftedProbes)
       .collect().map(_.toString).toSeq
     assert(after != before, "rotation was result-invisible on a drifted window")
   }
@@ -58,7 +58,7 @@ class IndexRefreshSpec extends SparkSpec {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bg_ctrl").toString
-    IndexRefresh.publishVersion(spark, root, Embeddings.vecs(spark, sfDir))
+    StoredIndex.publish(spark, root, Embeddings.vecs(spark, sfDir))
     // shift 0 = the DriftMonitorSpec control (KL ≈ sampling noise)
     assert(IndexRefresh.refreshIfDrifted(spark, sfDir, root, 0.0) == 1,
       "in-distribution window rotated the index")
@@ -74,8 +74,8 @@ class IndexRefreshSpec extends SparkSpec {
     // fresh build: stage directly from the drifted corpus, search it
     val root = java.nio.file.Files.createTempDirectory("graft_bg_fresh").toString
     val drifted = IndexRefresh.driftedVecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, drifted)
-    val fresh = IndexRefresh.searchCommitted(spark, root,
+    StoredIndex.publish(spark, root, drifted)
+    val fresh = StoredIndex.searchProbes(spark, root,
       drifted.where(col("vec_id") < 5)).collect().map(_.toString).toSeq
     assert(refreshed.nonEmpty)
     assert(refreshed == fresh)

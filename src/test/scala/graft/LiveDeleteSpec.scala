@@ -42,8 +42,9 @@ class LiveDeleteSpec extends SparkSpec {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_lds_src").toString
     emb.repartitionByRange(3, col("vec_id")).write.mode("overwrite").parquet(srcDir)
     val atd = java.nio.file.Files.createTempDirectory("graft_lds_store").toString
-    AnnStream.buildStore(spark, sfDir, srcDir, emb.schema, atd)
-    DeleteRepair.deleteFromIvfPq(spark, atd,
+    AnnStream.bootstrap(spark, sfDir, atd)
+    AnnStream.buildStore(spark, srcDir, emb.schema, atd)
+    StoredIndex.delete(spark, atd,
       Embeddings.vecsOf(Tables.embeddings(spark, sfDir)).where(DeleteRepair.delVecPred))
     AnnStream.compactIndexStore(spark, atd)
     for ((t, sch) <- Seq("lists" -> StoredIndex.listsSchema,
@@ -55,10 +56,24 @@ class LiveDeleteSpec extends SparkSpec {
       assert(a.select(cols: _*).exceptAll(b.select(cols: _*)).isEmpty, s"$t diverged")
     }
     // and both serve the survivors answer
-    val x = AnnStream.searchStore(spark, sfDir, dta).collect()
-    val y = AnnStream.searchStore(spark, sfDir, atd).collect()
+    val x = StoredIndex.search(spark, sfDir, dta).collect()
+    val y = StoredIndex.search(spark, sfDir, atd).collect()
     assert(x.nonEmpty)
     assert(x.map(_.toString).toSeq == y.map(_.toString).toSeq)
+  }
+
+  test("live IVFADC: the quantizers are trained and published once — the bootstrap's files serve every later trigger, delete and sweep") {
+    val base = LiveDelete.builtAnnDeletedStore(spark, sfDir)
+    assert(ManifestStore.committedVersion(spark, base) > 1, "nothing published after the bootstrap")
+    // a dir's shard file is named for the version that wrote it and is
+    // carried verbatim by every publish that leaves the dir alone: a
+    // v1 shard means the committed files are the bootstrap's
+    val shards = ManifestStore.shardIndex(spark, base).toMap
+    for (t <- Seq("centroids", "codebook")) {
+      assert(shards.contains(t), s"no committed $t table")
+      assert(shards(t).startsWith(s"${t}_v1_"),
+        s"$t republished after the bootstrap: ${shards(t)}")
+    }
   }
 
   /** Data files of one table on disk (the manifest may reference fewer
@@ -80,9 +95,9 @@ class LiveDeleteSpec extends SparkSpec {
   test("blue/green GC: after rotations the store holds at most two versions' files; crash mid-GC self-heals") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_gc").toString
     val orig = Embeddings.vecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     val v1Lists = diskTableFiles(root, "lists")
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     // grace: v1's files are retired from the manifest but still on disk
     assert(v1Lists.subsetOf(diskTableFiles(root, "lists")),
       "grace copy dropped too early")
@@ -90,30 +105,30 @@ class LiveDeleteSpec extends SparkSpec {
     // its GC — the commit stands, serving is unaffected
     ManifestStore.crashPoint = Some("gc")
     intercept[IllegalStateException] {
-      IndexRefresh.publishVersion(spark, root, orig)
+      StoredIndex.publish(spark, root, orig)
     }
     ManifestStore.crashPoint = None
     assert(ManifestStore.committedVersion(spark, root) == 3)
     val probes = orig.where(col("vec_id") < 5)
-    assert(IndexRefresh.searchCommitted(spark, root, probes).count() > 0)
+    assert(StoredIndex.searchProbes(spark, root, probes).count() > 0)
     // the next publish collects the backlog: v1's files are gone and
     // the disk holds at most the grace version + the live one
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     assert(v1Lists.intersect(diskTableFiles(root, "lists")).isEmpty,
       "retired version's files never GC'd")
     val live = ManifestStore.tableFiles(spark, root, "lists").size
     assert(diskTableFiles(root, "lists").size <= 2 * live,
       "more than two versions' files on disk")
     // both the live and the grace version stay fully readable
-    assert(IndexRefresh.searchCommitted(spark, root, probes).count() > 0)
+    assert(StoredIndex.searchProbes(spark, root, probes).count() > 0)
   }
 
   test("blue/green composition: a delete logged BEFORE a rotation is excluded from the rotated version (the staging gate)") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_mid").toString
     val drifted = IndexRefresh.driftedVecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, Embeddings.vecs(spark, sfDir))
+    StoredIndex.publish(spark, root, Embeddings.vecs(spark, sfDir))
     // the delete lands as ONE atomic publish: log + serving-version repair
-    IndexRefresh.deleteCommitted(spark, root,
+    StoredIndex.delete(spark, root,
       Embeddings.vecs(spark, sfDir).where(DeleteRepair.delVecPred))
     // the serving version already excludes the deleted ids
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
@@ -121,17 +136,17 @@ class LiveDeleteSpec extends SparkSpec {
     // the rotation stages from the drifted feed, gated on the log
     // (read under the rotation's own lease): deleted ids must not be
     // re-indexed even though the feed still carries them
-    IndexRefresh.publishVersion(spark, root, drifted)
+    StoredIndex.publish(spark, root, drifted)
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty,
       "the rotation re-indexed deleted ids")
     // post-rotation search == fresh build on the drifted SURVIVORS
-    val served = IndexRefresh.searchCommitted(spark, root,
+    val served = StoredIndex.searchProbes(spark, root,
       drifted.where(col("vec_id") < 5)).collect()
     val freshRoot = java.nio.file.Files.createTempDirectory("graft_bg_midf").toString
-    IndexRefresh.publishVersion(spark, freshRoot,
+    StoredIndex.publish(spark, freshRoot,
       drifted.where(!DeleteRepair.delVecPred))
-    val fresh = IndexRefresh.searchCommitted(spark, freshRoot,
+    val fresh = StoredIndex.searchProbes(spark, freshRoot,
       drifted.where(col("vec_id") < 5)).collect()
     assert(served.nonEmpty)
     assert(served.map(_.toString).toSeq == fresh.map(_.toString).toSeq)
@@ -140,15 +155,15 @@ class LiveDeleteSpec extends SparkSpec {
   test("a delete AFTER a rotation repairs the rotated version; the log survives every later rotation's gate") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_race").toString
     val orig = Embeddings.vecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, orig)
-    IndexRefresh.publishVersion(spark, root, orig) // the rotation
-    IndexRefresh.deleteCommitted(spark, root,
+    StoredIndex.publish(spark, root, orig)
+    StoredIndex.publish(spark, root, orig) // the rotation
+    StoredIndex.delete(spark, root,
       orig.where(DeleteRepair.delVecPred))
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty)
     // the log survives for every FUTURE rotation's staging gate
     assert(DeleteLog.ids(spark, root, "vec_id").exists(_.count() > 0))
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty,
       "a later rotation re-indexed deleted ids")
@@ -187,13 +202,13 @@ class LiveDeleteSpec extends SparkSpec {
   test("the delete log's file count stays bounded across a long delete sequence (fold-at-threshold)") {
     val root = java.nio.file.Files.createTempDirectory("graft_dellog_bound").toString
     val orig = Embeddings.vecs(spark, sfDir)
-    IndexRefresh.publishVersion(spark, root, orig)
+    StoredIndex.publish(spark, root, orig)
     val ids = orig.where(pmod(col("vec_id"), lit(17L)) === 14L)
       .select("vec_id").limit(12).collect().map(_.getLong(0))
     assert(ids.length >= 10, "need a long enough delete sequence")
     import spark.implicits._
     for (id <- ids)
-      IndexRefresh.deleteCommitted(spark, root,
+      StoredIndex.delete(spark, root,
         orig.where(col("vec_id") === id))
     val logFiles = ManifestStore.tableFiles(spark, root, DeleteLog.Table)
     assert(logFiles.nonEmpty)
