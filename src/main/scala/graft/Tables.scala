@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Confs.withConfs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
@@ -61,26 +62,17 @@ object Tables {
     }
   }
 
-  /** Run `body` with the legacy nanos-as-long conf set, restoring the
-    * previous value after. The conf is consumed when a parquet relation
-    * resolves its schema, so scoping it to the plan-building step keeps
-    * demo reads from permanently mutating shared session state; it is a
-    * no-op for micros-typed files. */
-  private[graft] def withNanosConf[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The legacy nanos-as-long conf, for [[graft.util.Confs.withConfs]].
+    * It is consumed when a parquet relation resolves its schema, so a
+    * batch read scopes it to the plan-building step; it is a no-op for
+    * micros-typed files. */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
   /** The events table with `ts_ms` (BIGINT epoch ms) appended. Raw `ts`
     * is kept alongside in its native type: time-range predicates belong
     * on the physical column (see [[tsRange]]) so they reach the parquet
     * scan; `ts_ms` is for bucketing arithmetic. */
-  def events(spark: SparkSession, dir: String): DataFrame = withNanosConf(spark) {
+  def events(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     val raw = table(spark, dir, "events")
     raw.withColumn("ts_ms", tsMillis(raw.schema("ts").dataType))
   }

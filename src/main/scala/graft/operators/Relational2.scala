@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Confs.withConfs
 import graft.Tables
 import graft.funcs._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -100,17 +101,6 @@ object Relational2 {
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
       |  COUNT(*) AS n_rows
       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Scoped session confs: set, run, restore — the conf must hold at
-    * EXECUTION time, so callers materialize inside the scope. */
-  private[graft] def withConfs[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** The conf scope under which [[skewJoinPlan]] runs: broadcast off
     * (a broadcast join would sidestep the skew instead of

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Confs.withConfs
 import graft.Tables
 import graft.funcs._
 import graft.sources.Staging
@@ -43,7 +44,7 @@ object Relational5 {
     */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val (tOrders, tLine) = stageBucketedTables(spark, dir)
-    Relational2.withConfs(spark,
+    withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.table(tOrders)
         .join(spark.table(tLine), col("o_orderkey") === col("l_orderkey"))

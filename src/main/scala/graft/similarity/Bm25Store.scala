@@ -54,9 +54,10 @@ import org.apache.spark.sql.types._
   *     inflate N/avgdl (the ADVICE r17 hole in the per-table
   *     (db, batch_key) stats gate);
   *   - every store-derived frame (the delete-log gate, the presence
-  *     anti-join, the repair reads) is forced INSIDE the publish,
-  *     under the store's writer lease: read-modify-write serializes
-  *     against any concurrent maintenance.
+  *     anti-join, the repair reads) is built from the publish
+  *     builder's snapshot, under the store's writer lease:
+  *     read-modify-write serializes against any concurrent
+  *     maintenance.
   *
   * Reference: signalk-parquet has no lexical index; this is the
   * LLM-pipeline retrieval leg at its operational composition.
@@ -78,11 +79,6 @@ object Bm25Store {
   private def tbOf(t: org.apache.spark.sql.Column) = pmod(hash(t), lit(Buckets))
   private def dbOf(d: org.apache.spark.sql.Column) =
     pmod(d, lit(Buckets.toLong)).cast("int")
-
-  private[graft] def readPostings(spark: SparkSession, base: String): DataFrame =
-    ManifestStore.readTable(spark, base, "postings", postingsSchema)
-  private[graft] def readDl(spark: SparkSession, base: String): DataFrame =
-    ManifestStore.readTable(spark, base, "dl", dlSchema)
 
   /** A doc batch's (t, doc_id, tf, tb) posting rows. */
   private def tokensOf(docs: DataFrame): DataFrame =
@@ -139,46 +135,40 @@ object Bm25Store {
     * [[DeleteLog]] gate). Cost: O(|batch|) deltas + one bucket-pruned
     * gate read. */
   private[graft] def appendBatch(sp: SparkSession, base: String,
-      batchDocs: DataFrame, batchKey: Long): Unit = {
-    // the ONE re-delivery gate: dl is the presence table (atomic
-    // commits guarantee a doc's postings/stats landed iff its dl row
-    // did), so docs the store already holds drop out here — and
-    // everything below derives from the gated set, which is what
-    // keeps stats exact even for a duplicate doc_id under a fresh
-    // batch_key. Deliberately NOT checkpointed: the three write jobs
-    // run in parallel and each re-derives this batch-sized frame —
-    // cheaper than an extra materialization job on the per-trigger
-    // hot path.
-    def gated = {
-      val live = DeleteLog.gate(sp, base, batchDocs, "doc_id")
-      // the gate read prunes to the batch's own db buckets (static
-      // partition pruning on the dl store's db column)
-      live.join(readDl(sp, base).where(col("db").isin(prepared._1: _*))
-        .select("doc_id"), Seq("doc_id"), "left_anti")
-        .select("doc_id", "text")
-    }
-    // forced lazily — on first touch the publish already holds the
-    // lease, so every store read sees the version this commit
-    // supersedes. ONE driver pass collects both touched-bucket sets
-    // (the only data-dependent facts the choreography needs); tb/db of
-    // deleted or re-delivered docs are a harmless superset.
-    lazy val prepared: (Seq[Any], Seq[Any]) = {
-      val touched = DeleteLog.gate(sp, base, batchDocs, "doc_id")
+      batchDocs: DataFrame, batchKey: Long): Unit =
+    ManifestStore.publishOps(sp, base) { snap =>
+      val live = DeleteLog.gate(snap, batchDocs, "doc_id")
+      // ONE driver pass collects both touched-bucket sets (the only
+      // data-dependent facts the choreography needs); tb/db of
+      // re-delivered docs are a harmless superset
+      val touched = live
         .select(col("doc_id"), split(col("text"), " ").as("ts"))
         .select(dbOf(col("doc_id")).as("db"),
           array_distinct(transform(col("ts"), t => pmod(hash(t), lit(Buckets)))).as("tbs"))
         .groupBy("db").agg(array_distinct(flatten(collect_list("tbs"))).as("tbs"))
         .collect()
-      (touched.map(_.getInt(0)).toSeq.sorted.map(v => v: Any),
-        touched.flatMap(_.getSeq[Int](1)).distinct.sorted.toSeq.map(v => v: Any))
+      val dbs: Seq[Any] = touched.map(_.getInt(0)).toSeq.sorted
+      val tbs: Seq[Any] = touched.flatMap(_.getSeq[Int](1)).distinct.sorted.toSeq
+      // the ONE re-delivery gate: dl is the presence table (atomic
+      // commits guarantee a doc's postings/stats landed iff its dl row
+      // did), so docs the store already holds drop out here — and
+      // everything below derives from the gated set, which is what
+      // keeps stats exact even for a duplicate doc_id under a fresh
+      // batch_key. The read prunes to the batch's own db buckets
+      // (static partition pruning on the dl store's db column).
+      // Deliberately NOT checkpointed: the three write jobs run in
+      // parallel and each re-derives this batch-sized frame — cheaper
+      // than an extra materialization job on the per-trigger hot path.
+      val gated = live.join(snap.read("dl", dlSchema).where(col("db").isin(dbs: _*))
+        .select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("doc_id", "text")
+      val toks = tokensOf(gated)
+      val dl = dlOf(gated, toks, batchKey)
+      Seq(
+        ManifestStore.appendOp("postings", "tb", () => tbs, () => toks),
+        ManifestStore.appendOp("dl", "db", () => dbs, () => dl),
+        ManifestStore.appendOp("stats", "db", () => dbs, () => statsOf(dl)))
     }
-    def toks = tokensOf(gated)
-    def dl = dlOf(gated, toks, batchKey)
-    ManifestStore.publishOps(sp, base, Seq(
-      ManifestStore.appendOp("postings", "tb", () => prepared._2, () => toks),
-      ManifestStore.appendOp("dl", "db", () => prepared._1, () => dl),
-      ManifestStore.appendOp("stats", "db", () => prepared._1, () => statsOf(dl))))
-  }
 
   /** Apply a delete set — ONE atomic commit carrying the [[DeleteLog]]
     * append (durable against later ingest) and all three repairs:
@@ -197,39 +187,41 @@ object Bm25Store {
       .map(v => v: Any)
     val tbIn = col("tb").isin(touchedTb: _*)
     val dbIn = col("db").isin(touchedDb: _*)
-    // repaired dl shared by the dl rewrite AND the stats recount —
-    // forced (and checkpointed) under the lease
-    lazy val repairedDl = readDl(spark, base).where(dbIn)
-      .join(broadcast(delIds), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    ManifestStore.publishOps(spark, base, Seq(
-      DeleteLog.appendOp(spark, base, delIds, "doc_id"),
-      ManifestStore.rewriteOp("postings", "tb", () => touchedTb, () =>
-        readPostings(spark, base).where(tbIn)
-          .join(broadcast(delIds), Seq("doc_id"), "left_anti")),
-      ManifestStore.rewriteOp("dl", "db", () => touchedDb, () => repairedDl),
-      // recount (not subtract) the touched buckets' partials from the
-      // REPAIRED dl, batch keys preserved
-      ManifestStore.rewriteOp("stats", "db", () => touchedDb, () =>
-        statsOf(repairedDl))))
+    ManifestStore.publishOps(spark, base) { snap =>
+      // repaired dl shared by the dl rewrite AND the stats recount:
+      // checkpointed once by whichever of the two parallel write jobs
+      // gets there first, while the postings and log writes run
+      lazy val repairedDl = snap.read("dl", dlSchema).where(dbIn)
+        .join(broadcast(delIds), Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      Seq(
+        DeleteLog.appendOp(snap, delIds, "doc_id"),
+        ManifestStore.rewriteOp("postings", "tb", () => touchedTb, () =>
+          snap.read("postings", postingsSchema).where(tbIn)
+            .join(broadcast(delIds), Seq("doc_id"), "left_anti")),
+        ManifestStore.rewriteOp("dl", "db", () => touchedDb, () => repairedDl),
+        // recount (not subtract) the touched buckets' partials from the
+        // REPAIRED dl, batch keys preserved
+        ManifestStore.rewriteOp("stats", "db", () => touchedDb, () =>
+          statsOf(repairedDl)))
+    }
   }
 
   /** The scheduled small-file sweep (per-trigger appends leave one
     * file set per (trigger, bucket)): each bucket collapses to one
     * sorted file — all tables, and the delete log's fold, in ONE
     * snapshot flip. */
-  private[graft] def compact(spark: SparkSession, base: String): Unit = {
-    val ops = Seq(
-      ManifestStore.compactOp(spark, base, "postings", "tb",
-        Seq("t", "doc_id"), postingsSchema),
-      ManifestStore.compactOp(spark, base, "dl", "db",
-        Seq("doc_id"), dlSchema),
-      ManifestStore.compactOp(spark, base, "stats", "db",
-        Seq("batch_key"), statsSchema)) ++
-      (if (ManifestStore.tableFiles(spark, base, DeleteLog.Table).nonEmpty)
-        Seq(DeleteLog.foldOp(spark, base, "doc_id")) else Seq.empty)
-    ManifestStore.publishOps(spark, base, ops)
-  }
+  private[graft] def compact(spark: SparkSession, base: String): Unit =
+    ManifestStore.publishOps(spark, base) { snap =>
+      Seq(
+        ManifestStore.compactOp(spark, base, "postings", "tb",
+          Seq("t", "doc_id"), postingsSchema),
+        ManifestStore.compactOp(spark, base, "dl", "db",
+          Seq("doc_id"), dlSchema),
+        ManifestStore.compactOp(spark, base, "stats", "db",
+          Seq("batch_key"), statsSchema)) ++
+        DeleteLog.foldOps(snap, "doc_id")
+    }
 
   // ---------------------------------------------------------------
   // query

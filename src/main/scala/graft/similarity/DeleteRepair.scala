@@ -128,6 +128,7 @@ object DeleteRepair {
     graft.functions.BoundedTopK.register(spark)
     graft.functions.DotProduct.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
+    import graft.streaming.GraphStream
     import graft.util.{DeleteLog, ManifestStore}
     val del = delVecs.select("vec_id", "label").localCheckpoint()
     val touched = collectInts(del, "label").map(v => v: Any)
@@ -138,11 +139,11 @@ object DeleteRepair {
     // repair — a reader at any instant sees one committed version
     // across all three tables, and a crashed delete re-runs as a
     // whole (re-deleting absent rows and re-scoring already-repaired
-    // lists are no-ops). Store reads are forced inside the publish
+    // lists are no-ops). Store reads come off the builder's snapshot
     // (under the lease), so read-modify-write is serializable.
-    lazy val prepared = {
+    ManifestStore.publishOps(spark, base) { snap =>
       // the touched labels' stored lists, deleted sources dropped
-      val surv = graft.streaming.GraphStream.readTopk(spark, base).where(touchedOnly)
+      val surv = snap.read("topk", GraphStream.topkSchema).where(touchedOnly)
         .join(broadcast(delIds.withColumnRenamed("vec_id", "src_id")),
           Seq("src_id"), "left_anti")
         .select("label", "src_id", "dst_id", "cos", "rank")
@@ -155,8 +156,7 @@ object DeleteRepair {
       val carried = surv.join(broadcast(affected), Seq("label", "src_id"), "left_anti")
       // surviving block vectors of the touched labels (store-read arrays
       // re-densified for the scoring kernels)
-      val survVecsRaw = graft.streaming.GraphStream.readVecsRaw(spark, base)
-        .where(touchedOnly)
+      val survVecsRaw = snap.read("vecs", GraphStream.vecsSchema).where(touchedOnly)
         .join(broadcast(delIds), Seq("vec_id"), "left_anti")
         .localCheckpoint() // consumed by the rescore AND the vecs rewrite
       val survVecs = survVecsRaw.select(col("vec_id"), col("label"),
@@ -167,12 +167,12 @@ object DeleteRepair {
       val rescored = KnnGraph.directedTopk(KnnGraph.scoredPairs(
           KnnGraph.srcSide(affVecs), KnnGraph.dstSide(survVecs)))
         .select("label", "src_id", "dst_id", "cos", "rank")
-      (carried.unionByName(rescored), survVecsRaw)
+      Seq(
+        DeleteLog.appendOp(snap, delIds, "vec_id"),
+        ManifestStore.rewriteOp("topk", "label", () => touched, () =>
+          carried.unionByName(rescored)),
+        ManifestStore.rewriteOp("vecs", "label", () => touched, () => survVecsRaw))
     }
-    ManifestStore.publishOps(spark, base, Seq(
-      DeleteLog.appendOp(spark, base, delIds, "vec_id"),
-      ManifestStore.rewriteOp("topk", "label", () => touched, () => prepared._1),
-      ManifestStore.rewriteOp("vecs", "label", () => touched, () => prepared._2)))
   }
 
   /** Gated end-to-end: clone the staged directed store, delete with

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *   - retired-version GC is the manifest GC (one-version grace
   *     window), not a second hand-rolled collector;
   *   - deletes and rotations SERIALIZE on the store's fenced writer
-  *     lease, with every store read forced under it — the pre-/post-
+  *     lease, with every store read taken off the publish builder's
+  *     snapshot under it — the pre-/post-
   *     commit delete replays and the committed-version re-check loop
   *     the old protocol needed to close its interleavings are
   *     structurally unnecessary: a delete strictly before the rotation

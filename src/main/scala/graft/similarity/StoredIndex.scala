@@ -136,21 +136,20 @@ object StoredIndex {
     * blue/green rotation. The corpus is first gated on the store's
     * [[graft.util.DeleteLog]] (ids deleted from the serving version
     * must not be re-indexed from a new feed; a fresh root has no log).
-    * Every read, the gate included, is forced inside the publish (under
-    * the store lease); readers keep resolving the previous version
-    * until the marker lands. */
+    * The gate reads the publish builder's snapshot, under the store
+    * lease; readers keep resolving the previous version until the
+    * marker lands. */
   private[graft] def publish(spark: SparkSession, root: String,
       corpus: DataFrame): Unit = {
     graft.functions.L2Distance.register(spark)
-    lazy val frames = {
-      val live = DeleteLog.gate(spark, root, corpus, "vec_id")
+    ManifestStore.publishOps(spark, root) { snap =>
+      val live = DeleteLog.gate(snap, corpus, "vec_id")
       val (centroids, codebook) = quantizers(live)
       val (lists, codes) = indexDelta(live, centroids, codebook)
-      Seq(centroids, codebook, lists, codes)
+      tables.zip(Seq(centroids, codebook, lists, codes)).map {
+        case ((t, partCol, _), df) => ManifestStore.replaceTableOp(t, partCol, () => df)
+      }
     }
-    ManifestStore.publishOps(spark, root, tables.zipWithIndex.map {
-      case ((t, partCol, _), i) => ManifestStore.replaceTableOp(t, partCol, () => frames(i))
-    })
   }
 
   /** Copy the committed index at `staged` (immutable,
@@ -164,32 +163,33 @@ object StoredIndex {
     * VECTORS (not the store) are assigned against the store's own
     * committed centroids to find the touched cells; only those
     * `bucket=` dirs of `lists` and `codes` are rewritten, so the nprobe
-    * DPP layout survives. Every store read is forced inside the
-    * publish, under the lease, so a rotation can never slip between
-    * the assignment and the rewrite. A crash anywhere leaves the delete
-    * un-happened (the caller re-runs it; re-deleting absent rows is a
-    * no-op), and a reader sees the full pre- or post-delete store. */
+    * DPP layout survives. Every store read comes off the publish
+    * builder's snapshot, under the lease, so a rotation can never slip
+    * between the assignment and the rewrite. A crash anywhere leaves
+    * the delete un-happened (the caller re-runs it; re-deleting absent
+    * rows is a no-op), and a reader sees the full pre- or post-delete
+    * store. */
   private[graft] def delete(spark: SparkSession, root: String,
       delVecs: DataFrame): Unit = {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
-    require(ManifestStore.committedVersion(spark, root) > 0,
-      s"no committed index version under $root")
-    lazy val snap = ManifestStore.snapshot(spark, root)
-    lazy val assigned = Embeddings.ivfAssign(delVecs, quantizersAt(snap)._1, 1)
-      .select(col("vec_id").as("neighbor_id"), col("cent_id").cast("int").as("bucket"))
-      .localCheckpoint() // delete-batch-sized
-    lazy val touched: Seq[Any] = assigned.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    def repaired(t: String, sch: StructType) = snap.read(t, sch)
-      .where(col("bucket").isin(touched: _*))
-      .join(broadcast(assigned.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
-    ManifestStore.publishOps(spark, root, Seq(
-      DeleteLog.appendOp(spark, root, delVecs.select("vec_id"), "vec_id"),
-      ManifestStore.rewriteOp("lists", "bucket", () => touched,
-        () => repaired("lists", listsSchema)),
-      ManifestStore.rewriteOp("codes", "bucket", () => touched,
-        () => repaired("codes", codesSchema))))
+    ManifestStore.publishOps(spark, root) { snap =>
+      require(snap.version > 0, s"no committed index version under $root")
+      val assigned = Embeddings.ivfAssign(delVecs, quantizersAt(snap)._1, 1)
+        .select(col("vec_id").as("neighbor_id"), col("cent_id").cast("int").as("bucket"))
+        .localCheckpoint() // delete-batch-sized
+      val touched: Seq[Any] = assigned.select("bucket").distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      def repaired(t: String, sch: StructType) = snap.read(t, sch)
+        .where(col("bucket").isin(touched: _*))
+        .join(broadcast(assigned.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
+      Seq(
+        DeleteLog.appendOp(snap, delVecs.select("vec_id"), "vec_id"),
+        ManifestStore.rewriteOp("lists", "bucket", () => touched,
+          () => repaired("lists", listsSchema)),
+        ManifestStore.rewriteOp("codes", "bucket", () => touched,
+          () => repaired("codes", codesSchema)))
+    }
   }
 
   /** IVFADC top-5 of the standard probes (vec_id < 5 of `dir`'s

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.Confs.withConfs
 import graft.Tables
 import graft.funcs._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -114,8 +115,8 @@ object Compaction {
     val liveFs = fsOf(spark, liveDir)
     val prev = archivedCutoff(spark, archiveDir)
     if (cutoffDay > prev) {
-      val live = HiveStore.withConf(spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+      val live = withConfs(spark,
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
         HiveStore.read(spark, liveDir)
       }
       // Partition-column predicate → directory pruning: only the newly
@@ -179,16 +180,16 @@ object Compaction {
     val cutoff = archivedCutoff(spark, archiveDir)
     val hasArchiveData = cutoff != "000" &&
       fs.listStatus(new Path(archiveDir)).exists(_.getPath.getName.startsWith("tier="))
-    val live = HiveStore.withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    val live = withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       HiveStore.read(spark, liveDir)
     }
     val liveSide = live.where(col("day") >= cutoff).drop("day")
       .withColumn("src", lit("live"))
     if (!hasArchiveData) liveSide
     else {
-      val archive = HiveStore.withConf(spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+      val archive = withConfs(spark,
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
         HiveStore.read(spark, archiveDir)
       }
       val dayOf = lpad(dayofyear(timestamp_millis(col("ts_ms"))).cast("string"), 3, "0")

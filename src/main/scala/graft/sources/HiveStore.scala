@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.Confs.withConfs
 import graft.Tables
 import graft.funcs._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,19 +72,6 @@ object HiveStore {
     * partition, counted per (path, year, day). The oracle counts the
     * same slice relationally; the Spark side proves layout + pruning
     * (the read filter hits only `path=click` directories). */
-  /** Run `body` with a session conf set, restoring the previous value
-    * (or unsetting) afterwards — keeps demo queries from permanently
-    * mutating shared session state. */
-  private[sources] def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Unique per-run scratch dir (concurrent Verify/Bench runs on one
     * machine must not race on a shared path), deleted on JVM exit. */
   private[graft] def scratchDir(): String = {
@@ -116,8 +104,8 @@ object HiveStore {
     // Partition values stay strings on read-back (day "003" must not be
     // inferred back to int 3); conf is scoped to the eager file-index /
     // schema-inference step and restored immediately.
-    val readBack = withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    val readBack = withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       read(spark, out)
     }
     readBack
@@ -154,14 +142,14 @@ object HiveStore {
     val archivePath = new org.apache.hadoop.fs.Path(archive)
     val archiveHasData = fs.exists(archivePath) &&
       fs.listStatus(archivePath).exists(_.getPath.getName.startsWith("tier="))
-    val p = withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    val p = withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       read(spark, primary)
     }
     val missing =
       if (archiveHasData) {
-        val have = withConf(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+        val have = withConfs(spark,
+          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
           read(spark, archive)
         }.select(keys.map(col): _*).distinct()
         p.join(broadcast(have), keys, "left_anti")
@@ -197,8 +185,8 @@ object HiveStore {
     val first = backupSync(spark, primary, archive)
     val second = backupSync(spark, primary, archive)
     require(second == 0L, s"re-sync must copy nothing, copied $second")
-    withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       read(spark, archive)
     }
       .groupBy("context")
@@ -236,8 +224,8 @@ object HiveStore {
       .drop("ts2")
     write(df, out)
     retentionSweep(spark, out, Map("raw" -> 10), nowMs = 1706659200000L)
-    withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       read(spark, out)
     }
       .groupBy("context", "day")
@@ -295,8 +283,8 @@ object HiveStore {
     val (primary, archive) = (scratchDir(), scratchDir())
     write(slice(3, 0.0), primary)
     write(slice(5, 1000.0), archive)
-    val fed = withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    val fed = withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       federatedRead(spark, primary, archive)
     }
     fed.groupBy("context")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.Confs.withConfs
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,8 +61,8 @@ object Migration {
       fs.listStatus(targetPath).exists(_.getPath.getName.startsWith("tier="))
     val fresh0 =
       if (targetHasData) {
-        val existing = HiveStore.withConf(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+        val existing = withConfs(spark,
+          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
           spark.read.parquet(targetDir)
         }.select(keys.map(col): _*).distinct()
         recs.join(broadcast(existing), keys, "left_anti")
@@ -92,8 +93,8 @@ object Migration {
     writeFlat(slice, flat)
     migrate(spark, flat, target)
     migrate(spark, flat, target)
-    HiveStore.withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       spark.read.parquet(target)
     }
       .groupBy("path", "year", "day")

@@ -110,10 +110,11 @@ object AnnStream {
     *     protocol had to gate on (neighbor_id, sub) is structurally
     *     impossible — a crash anywhere leaves BOTH tables at the old
     *     version, and the re-run re-appends the whole vector);
-    *   - everything store-derived (the delete-log gate, the
-    *     re-delivery anti-join) is evaluated INSIDE the publish, i.e.
-    *     under the store lease: read-modify-write is serializable
-    *     against any concurrent maintenance.
+    *   - everything store-derived (the committed quantizers, the
+    *     delete-log gate, the re-delivery anti-join) is built from the
+    *     publish builder's snapshot, under the store lease:
+    *     read-modify-write is serializable against any concurrent
+    *     maintenance.
     * AnnStreamSpec pins double delivery ≡ single delivery and the
     * mid-publish-crash reader. */
   private[graft] def ingestBatch(sp: SparkSession, base: String,
@@ -121,30 +122,26 @@ object AnnStream {
     graft.functions.L2Distance.register(sp)
     graft.functions.DotProduct.register(sp)
     graft.functions.KnownNonNullElements.register(sp)
-    // forced lazily — on first touch the publish already holds the
-    // lease, so every store read (the committed quantizers, the gate
-    // reads) sees the version this commit supersedes. The assignment is
-    // checkpointed ONCE inside indexDelta; the re-delivery anti-join is
-    // deliberately not (the two write jobs run in parallel and each
-    // re-derives it from the checkpointed delta — cheaper than another
-    // materialization job on the per-trigger hot path).
-    lazy val prepared = {
-      val snap = ManifestStore.snapshot(sp, base)
+    ManifestStore.publishOps(sp, base) { snap =>
+      // The assignment is checkpointed ONCE inside indexDelta; the
+      // re-delivery anti-join is deliberately not (the two write jobs
+      // run in parallel and each re-derives it from the checkpointed
+      // delta — cheaper than another materialization job on the
+      // per-trigger hot path).
       val (cents, cb) = StoredIndex.quantizersAt(snap)
-      val live = DeleteLog.gate(sp, base, batch, "vec_id")
+      val live = DeleteLog.gate(snap, batch, "vec_id")
       val (deltaL, codes) = StoredIndex.indexDelta(Embeddings.vecsOf(live), cents, cb)
-      val bkts = deltaL.select("bucket").distinct().collect()
-        .map(_.get(0)).toSeq
+      val bkts = deltaL.select("bucket").distinct().collect().map(_.get(0)).toSeq
       val gatedL =
         if (bkts.isEmpty) deltaL
         else deltaL.join(snap.read("lists", StoredIndex.listsSchema)
           .where(col("bucket").isin(bkts: _*)).select("neighbor_id"),
           Seq("neighbor_id"), "left_anti")
-      (bkts, gatedL, codes.join(gatedL.select("neighbor_id"), Seq("neighbor_id"), "left_semi"))
+      val gatedC = codes.join(gatedL.select("neighbor_id"), Seq("neighbor_id"), "left_semi")
+      Seq(
+        ManifestStore.appendOp("lists", "bucket", () => bkts, () => gatedL),
+        ManifestStore.appendOp("codes", "bucket", () => bkts, () => gatedC))
     }
-    ManifestStore.publishOps(sp, base, Seq(
-      ManifestStore.appendOp("lists", "bucket", () => prepared._1, () => prepared._2),
-      ManifestStore.appendOp("codes", "bucket", () => prepared._1, () => prepared._3)))
   }
 
   // ------------------------------------------------------------- #113b
@@ -178,16 +175,15 @@ object AnnStream {
     * dir collapses to one file sorted by neighbor id (tight row-group
     * stats for the candidate equi-join), BOTH tables (and the delete
     * log's fold, when one exists) in one snapshot flip. */
-  private[graft] def compactIndexStore(spark: SparkSession, base: String): Unit = {
-    val ops = Seq(
-      ManifestStore.compactOp(spark, base, "lists", "bucket",
-        Seq("neighbor_id"), StoredIndex.listsSchema),
-      ManifestStore.compactOp(spark, base, "codes", "bucket",
-        Seq("neighbor_id", "sub"), StoredIndex.codesSchema)) ++
-      (if (ManifestStore.tableFiles(spark, base, DeleteLog.Table).nonEmpty)
-        Seq(DeleteLog.foldOp(spark, base, "vec_id")) else Seq.empty)
-    ManifestStore.publishOps(spark, base, ops)
-  }
+  private[graft] def compactIndexStore(spark: SparkSession, base: String): Unit =
+    ManifestStore.publishOps(spark, base) { snap =>
+      Seq(
+        ManifestStore.compactOp(spark, base, "lists", "bucket",
+          Seq("neighbor_id"), StoredIndex.listsSchema),
+        ManifestStore.compactOp(spark, base, "codes", "bucket",
+          Seq("neighbor_id", "sub"), StoredIndex.codesSchema)) ++
+        DeleteLog.foldOps(snap, "vec_id")
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_ann_ivfpq" -> (streamAnnIvfPq _),

@@ -84,11 +84,6 @@ object GraphStream {
     ManifestStore.readTable(spark, base, "topk", topkSchema)
       .select("label", "src_id", "dst_id", "cos", "rank")
 
-  /** The raw (vec_id, v, norm2, label) snapshot — `v` still the
-    * parquet-loaded nullable array (consumers `graft_dense` it). */
-  private[graft] def readVecsRaw(spark: SparkSession, base: String): DataFrame =
-    ManifestStore.readTable(spark, base, "vecs", vecsSchema)
-
   /** Drain `srcDir` into a live-maintained graph store at `base`:
     * per-trigger TOUCHED-LABEL directed-list repair (snapshot-isolated
     * manifest publish) + label-partitioned vector append. All
@@ -131,49 +126,47 @@ object GraphStream {
     // vector set that doesn't include the batch), and a crash
     // anywhere re-runs the whole trigger. Store-derived frames (the
     // delete-log gate, the touched stored partitions, the re-delivery
-    // anti-join) are forced INSIDE the publish, under the store lease.
-    lazy val prepared = {
-      val batchVecs = Embeddings.vecsOf(DeleteLog.gate(sp, base, batch, "vec_id"))
+    // anti-join) are built from the builder's snapshot, under the
+    // store lease.
+    ManifestStore.publishOps(sp, base) { snap =>
+      val batchVecs = Embeddings.vecsOf(DeleteLog.gate(snap, batch, "vec_id"))
       // the only lists a label-blocked candidate pass can change
       val touched = batchVecs.select("label").distinct()
         .collect().map(_.getInt(0)).sorted.toSeq.map(l => l: Any)
-      if (touched.isEmpty) (touched, null: DataFrame, null: DataFrame)
+      if (touched.isEmpty) Seq.empty
       else {
         val touchedOnly = col("label").isin(touched: _*)
         // static partition pruning: only touched label= files are read
         // (graft_dense on the parquet-loaded vectors — the file source
         // forces containsNull=true; see Embeddings.vecs)
-        val storedVecs = readVecsRaw(sp, base).where(touchedOnly)
-          .select(col("vec_id"), col("label"),
-            expr("graft_dense(v)").as("v"), col("norm2"))
-        val storedTopk = readTopk(sp, base).where(touchedOnly)
+        val storedRaw = snap.read("vecs", vecsSchema).where(touchedOnly)
+        val storedVecs = storedRaw.select(col("vec_id"), col("label"),
+          expr("graft_dense(v)").as("v"), col("norm2"))
+        val storedTopk = snap.read("topk", topkSchema).where(touchedOnly)
+          .select("label", "src_id", "dst_id", "cos", "rank")
         val repaired = GraphStore.repairedTopk(storedTopk, storedVecs, batchVecs)
         // re-delivery gate: only vectors the touched partitions don't
         // already hold append (ids are append-only, so the anti-join
         // drops exactly the re-delivered rows)
         val newVecs = batchVecs.select("vec_id", "v", "norm2", "label")
-          .join(readVecsRaw(sp, base).where(touchedOnly).select("vec_id"),
-            Seq("vec_id"), "left_anti")
-        (touched, repaired.select("src_id", "dst_id", "cos", "rank", "label"), newVecs)
+          .join(storedRaw.select("vec_id"), Seq("vec_id"), "left_anti")
+        Seq(
+          ManifestStore.rewriteOp("topk", "label", () => touched, () =>
+            repaired.select("src_id", "dst_id", "cos", "rank", "label")),
+          ManifestStore.appendOp("vecs", "label", () => touched, () => newVecs))
       }
     }
-    ManifestStore.publishOps(sp, base, Seq(
-      ManifestStore.rewriteOp("topk", "label", () => prepared._1, () => prepared._2),
-      ManifestStore.appendOp("vecs", "label", () => prepared._1, () => prepared._3)))
   }
 
   /** The scheduled small-file sweep over a live graph store: the
     * vector table collapses to one file per label (the topk table is
     * rewritten whole per touched label anyway), plus the delete log's
     * fold — one snapshot flip. */
-  private[graft] def compactGraphStore(spark: SparkSession, base: String): Unit = {
-    val ops = Seq(
-      ManifestStore.compactOp(spark, base, "vecs", "label",
-        Seq("vec_id"), vecsSchema)) ++
-      (if (ManifestStore.tableFiles(spark, base, DeleteLog.Table).nonEmpty)
-        Seq(DeleteLog.foldOp(spark, base, "vec_id")) else Seq.empty)
-    ManifestStore.publishOps(spark, base, ops)
-  }
+  private[graft] def compactGraphStore(spark: SparkSession, base: String): Unit =
+    ManifestStore.publishOps(spark, base) { snap =>
+      ManifestStore.compactOp(spark, base, "vecs", "label", Seq("vec_id"), vecsSchema) +:
+        DeleteLog.foldOps(snap, "vec_id")
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_knn_graph" -> (streamKnnGraph _))

@@ -62,8 +62,10 @@ object KmvStream {
     * path serves from: each micro-batch's (term, doc, tf) delta
     * appends into the term-hash buckets, its dl rows (every doc, 0 for
     * token-less) and per-(db, batch) stats partials into the doc
-    * buckets — full-row-key re-delivery gates per table, DeleteLog
-    * ingest gating, manifest-committed visibility. Documents are
+    * buckets — one re-delivery gate on the stored dl doc ids (dl is
+    * the presence table), DeleteLog ingest gating, all three tables in
+    * one manifest commit ([[graft.similarity.Bm25Store.appendBatch]]).
+    * Documents are
     * append-only, so the drained store answers bit-identically to the
     * one-shot batch build and the 40w8 oracle carries verbatim
     * (spec-pinned against [[Hybrid.bm25]]). Store growth is

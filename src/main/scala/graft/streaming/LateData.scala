@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 /** Watermark late-data semantics, made deterministic and
@@ -63,8 +63,7 @@ object LateData {
     val order = Seq(0, 2, 3, 1, 4)
     val staged = Replay.stage(spark, dir, startMs, endMs, sliceMs, order)
     try {
-      val name = s"graft_late_${System.nanoTime()}"
-      val q = Replay.replayStream(spark, staged)
+      val late = Replay.replayStream(spark, staged)
         .withColumn("event_time", timestamp_millis(col("ts_ms")))
         .withWatermark("event_time", "72 hours")
         .groupBy(window(col("event_time"), "2 hours"), col("event_type"))
@@ -74,15 +73,7 @@ object LateData {
           count(lit(1)).as("sample_count"))
         .select(unix_millis(col("window.start")).as("bucket_ms"),
           col("event_type"), col("value_avg"), col("sample_count"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_ckpt_late").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).orderBy("event_type", "bucket_ms")
+      Slices.toMemory(late, OutputMode.Append).orderBy("event_type", "bucket_ms")
         .localCheckpoint()
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged.dir))

@@ -98,19 +98,9 @@ object Replay {
 
   def streamReplay(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(spark, dir, ReplayStartMs, ReplayEndMs, ReplaySliceMs)
-    try {
-      val name = s"graft_replay_${System.nanoTime()}"
-      val q = bucketAgg(replayStream(spark, staged))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_ckpt_replay").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).orderBy("event_type", "bucket_ms")
-    } finally {
+    try Slices.toMemory(bucketAgg(replayStream(spark, staged)), OutputMode.Complete)
+      .orderBy("event_type", "bucket_ms")
+    finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged.dir))
     }
   }

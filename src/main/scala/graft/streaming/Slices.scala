@@ -3,14 +3,15 @@ package graft.streaming
 import graft.util.ManifestStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The one trigger-to-store path of the file-fed streams: [[stage]]
   * writes a frame as one slice file per trigger, [[source]] delivers
   * one file per micro-batch, [[drain]] runs a batch function over
-  * every file under Trigger.AvailableNow, and [[drainInto]] commits
-  * each trigger's store tables through [[commit]].
+  * every file under Trigger.AvailableNow, [[drainInto]] commits
+  * each trigger's store tables through [[commit]], and [[toMemory]]
+  * drains a streaming frame into a memory table.
   *
   * The store guarantee, stated once for every store-backed stream: a
   * trigger's tables AND its batch id land in ONE ManifestStore
@@ -20,9 +21,8 @@ import org.apache.spark.sql.types.StructType
   * at-least-once: a crash after the flip but before Spark's own commit
   * log re-delivers the same batch id on restart, and the gate finds
   * that id committed and skips the batch, so no sum doubles and no
-  * transition repeats. One store root belongs to one query (one
-  * checkpoint): the gate reads the snapshot outside the publish lease,
-  * which is safe because that query is the root's only writer.
+  * transition repeats. The gate and the trigger's ops read the one
+  * snapshot the publish resolves under its lease.
   */
 private[graft] object Slices {
 
@@ -91,6 +91,19 @@ private[graft] object Slices {
     q.awaitTermination()
   }
 
+  /** Run the streaming frame `df` under Trigger.AvailableNow into a
+    * fresh memory table in `mode` and return that table once the
+    * source is drained. */
+  def toMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+    val name = "graft_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    df.sparkSession.table(name)
+  }
+
   /** [[drain]] into the ManifestStore at `root`: each trigger's
     * `step(batch, snapshot)` returns its table ops, read against the
     * committed snapshot (an unpublished table reads as empty), and
@@ -104,14 +117,15 @@ private[graft] object Slices {
 
   /** One trigger's commit: unless `batchId` is already committed at
     * `root`, publish `ops(snapshot)` together with the batch record.
-    * `ops` runs only past the gate, so a skipped batch starts no
-    * Spark job. */
+    * Gate and ops run inside the publish builder, on the snapshot it
+    * resolved under the lease; `ops` runs only past the gate, so a
+    * skipped batch starts no Spark job and publishes nothing. */
   def commit(sp: SparkSession, root: String, batchId: Long)(
-      ops: ManifestStore.Snapshot => Seq[ManifestStore.TableOp]): Unit = {
-    val snap = ManifestStore.snapshot(sp, root)
-    if (committedBatch(snap).forall(_ < batchId))
-      ManifestStore.publishOps(sp, root, ops(snap) :+ batchOp(sp, batchId))
-  }
+      ops: ManifestStore.Snapshot => Seq[ManifestStore.TableOp]): Unit =
+    ManifestStore.publishOps(sp, root) { snap =>
+      if (committedBatch(snap).exists(_ >= batchId)) Seq.empty
+      else ops(snap) :+ batchOp(sp, batchId)
+    }
 
   /** The batch record is the name of the `batch` table's single empty
     * file, so writing and reading it start no Spark job. */

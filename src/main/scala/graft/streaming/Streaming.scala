@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Tables.NanosAsLong
+import graft.util.Confs.withConfs
 import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,21 +41,12 @@ object Streaming {
     graft.operators.TimeSeries.tierPartials(withTsMs(raw), resolutionMs)
       .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
 
-  /** Scoped nanosAsLong for a full stream run. Unlike the batch reader
-    * (Tables.events), a stream re-plans its parquet scan every
-    * micro-batch, so the conf must hold until awaitTermination
-    * returns — each operator wraps its whole body (build → run →
-    * drain) and the session conf is restored on exit, never leaked
-    * into subsequent batch work. */
-  private def withNanos[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  // Scoped nanosAsLong for a full stream run. Unlike the batch reader
+  // (Tables.events), a stream re-plans its parquet scan every
+  // micro-batch, so the conf must hold until awaitTermination returns
+  // — each operator wraps its whole body (build → run → drain) in
+  // withConfs(spark, NanosAsLong) and the session conf is restored on
+  // exit, never leaked into subsequent batch work.
 
   private def eventStream(spark: SparkSession, dir: String): DataFrame = {
     withTsMs(spark.readStream.schema(eventsSchema(spark, dir))
@@ -70,20 +63,11 @@ object Streaming {
     spark.read.option("pathGlobFilter", "events.parquet").schema(eventsSchema(spark, dir))
       .parquet(dir)
 
-  private val runCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  private def uniqueName(tag: String): String =
-    s"graft_${tag}_${runCounter.incrementAndGet()}"
-
-
-  private val bucketTable = new java.util.concurrent.atomic.AtomicReference[String]()
-  private val thresholdTable = new java.util.concurrent.atomic.AtomicReference[String]()
-
   // --------------------------------------------------------------- #41
   /** Streaming tier rollup: 1 h windowed avg/min/max/count per path.
     * Complete-mode memory sink for the verify round-trip; with a live
     * source this runs append-mode behind the 10 min watermark. */
-  def streamBucketAgg(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamBucketAgg(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     val agg = eventStream(spark, dir)
       .withWatermark("event_time", "10 minutes")
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
@@ -92,17 +76,10 @@ object Streaming {
         min("value").as("value_min"),
         max("value").as("value_max"),
         count(lit(1)).as("sample_count"))
-    val q = agg
+    val rows = agg
       .select(unix_millis(col("window.start")).as("bucket_ms"), col("event_type"),
         col("value_avg"), col("value_min"), col("value_max"), col("sample_count"))
-      .writeStream
-      .format("memory").queryName({ val n = uniqueName("stream_bucket"); bucketTable.set(n); n })
-      .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", tmp("ckpt_bucket"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(bucketTable.get()).orderBy("event_type", "bucket_ms")
+    Slices.toMemory(rows, OutputMode.Complete).orderBy("event_type", "bucket_ms")
   }
 
   val streamBucketAggOracle: String =
@@ -141,21 +118,13 @@ object Streaming {
       }
   }
 
-  def streamThreshold(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamThreshold(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import spark.implicits._
     val src = eventStream(spark, dir)
       .where(col("event_type") === "error")
       .select(col("user_id"), col("ts_ms"), col("value"))
       .as[ThresholdEvent]
-    val q = thresholdFlow(src).toDF()
-      .writeStream
-      .format("memory").queryName({ val n = uniqueName("stream_threshold"); thresholdTable.set(n); n })
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmp("ckpt_threshold"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(thresholdTable.get()).orderBy("user_id", "fire_ms")
+    Slices.toMemory(thresholdFlow(src).toDF(), OutputMode.Append).orderBy("user_id", "fire_ms")
   }
 
   val streamThresholdOracle: String =
@@ -172,7 +141,6 @@ object Streaming {
       |)
       |SELECT user_id, fire_ms FROM fires ORDER BY user_id, fire_ms""".stripMargin
 
-  private val dedupTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
   // --------------------------------------------------------------- #43
   /** Streaming dedup: collapse each series' 5-min burst to one row —
@@ -181,21 +149,14 @@ object Streaming {
     * O(active keys), not O(stream)). Which row of a burst survives is
     * racy under parallel read, so the verified output is the
     * deterministic part: the per-series count of distinct buckets. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     val deduped = eventStream(spark, dir)
       .withColumn("bucket_ms",
         (floor(col("ts_ms") / lit(300000L)).cast("long") * lit(300000L)))
       .withWatermark("event_time", "10 minutes")
       .dropDuplicates("user_id", "event_type", "bucket_ms")
       .select("user_id", "event_type", "bucket_ms")
-    val q = deduped.writeStream
-      .format("memory").queryName({ val n = uniqueName("stream_dedup"); dedupTable.set(n); n })
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmp("ckpt_dedup"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(dedupTable.get())
+    Slices.toMemory(deduped, OutputMode.Append)
       .groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n_unique_buckets"))
       .orderBy("user_id", "event_type")
@@ -206,7 +167,6 @@ object Streaming {
       |  COUNT(DISTINCT CAST(FLOOR(epoch_ms(ts) / 300000) * 300000 AS BIGINT)) AS n_unique_buckets
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  private val episodesTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
   // --------------------------------------------------------------- #44
   case class ClickEvent(user_id: Long, ts_ms: Long, event_id: Long, value: Double)
@@ -241,21 +201,13 @@ object Streaming {
       }
   }
 
-  def streamEpisodes(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamEpisodes(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import spark.implicits._
     val src = eventStream(spark, dir)
       .where(col("event_type") === "click")
       .select(col("user_id"), col("ts_ms"), col("event_id"), col("value"))
       .as[ClickEvent]
-    val q = episodeFlow(src).toDF()
-      .writeStream
-      .format("memory").queryName({ val n = uniqueName("stream_episodes"); episodesTable.set(n); n })
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmp("ckpt_episodes"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(episodesTable.get()).orderBy("user_id", "start_ms")
+    Slices.toMemory(episodeFlow(src).toDF(), OutputMode.Append).orderBy("user_id", "start_ms")
   }
 
   val streamEpisodesOracle: String =
@@ -288,7 +240,7 @@ object Streaming {
     * deliberately started twice on the same checkpoint, and the second
     * run exports nothing. Counts double (and the hash compare fails)
     * if recovery re-processes. */
-  def streamExportSink(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamExportSink(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     val out = tmp("export_sink")
     val ckpt = tmp("ckpt_export")
     def runOnce(): Unit = {
@@ -317,7 +269,6 @@ object Streaming {
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val staticDedupTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
   // --------------------------------------------------------------- #46
   /** Stream-static dedup — the shape an incremental training-data
@@ -341,15 +292,7 @@ object Streaming {
       .withColumn("fp", md5(col("text").cast("binary")))
       .join(broadcast(history.withColumn("is_dup", lit(1L))), Seq("fp"), "left")
       .select(col("lang"), coalesce(col("is_dup"), lit(0L)).as("is_dup"))
-    val q = arrivals.writeStream
-      .format("memory")
-      .queryName({ val n = uniqueName("stream_static_dedup"); staticDedupTable.set(n); n })
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmp("ckpt_static_dedup"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(staticDedupTable.get())
+    Slices.toMemory(arrivals, OutputMode.Append)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("is_dup").as("n_dups"))
       .orderBy("lang")
@@ -362,7 +305,6 @@ object Streaming {
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ------------------------------------------------------------- #42e
-  private val rangeJoinTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
   /** Stream-stream time-range join: each click joined to the same
     * user's error samples arriving within the following 48 h — the
@@ -372,7 +314,7 @@ object Streaming {
     * to watermark + range — Spark evicts older rows, so state is
     * O(rate·window) however long the stream runs. The batch oracle is
     * the same non-equi join over the finished input. */
-  def streamRangeJoin(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamRangeJoin(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     val clicks = eventStream(spark, dir)
       .where(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts_ms").as("click_ms"),
@@ -387,17 +329,10 @@ object Streaming {
       col("c_user") === col("e_user") &&
         col("e_time") >= col("c_time") &&
         col("e_time") <= col("c_time") + expr("INTERVAL 48 HOURS"))
-    val q = joined
+    val rows = joined
       .select(col("c_user").as("user_id"), col("click_ms"), col("error_ms"),
         col("error_value"))
-      .writeStream
-      .format("memory").queryName({ val n = uniqueName("stream_range"); rangeJoinTable.set(n); n })
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", tmp("ckpt_range"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(rangeJoinTable.get()).orderBy("user_id", "click_ms", "error_ms")
+    Slices.toMemory(rows, OutputMode.Append).orderBy("user_id", "click_ms", "error_ms")
   }
 
   val streamRangeJoinOracle: String =
@@ -423,7 +358,7 @@ object Streaming {
     * the oracle checks. The source is split into four slices by
     * event_id mod 4, one per trigger, so the merge path (not a
     * single-batch shortcut) is what's exercised. */
-  def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.TimeSeries
     val raw = rawEvents(spark, dir)
     val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("tier_src"))
@@ -466,7 +401,7 @@ object Streaming {
 
   /** Stage the clicks as three slices (three triggers); returns the
     * source dir. */
-  private[graft] def asOfStage(spark: SparkSession, dir: String): String = withNanos(spark) {
+  private[graft] def asOfStage(spark: SparkSession, dir: String): String = withConfs(spark, NanosAsLong) {
     Slices.stage(rawEvents(spark, dir).where(col("event_type") === "click"),
       pmod(col("event_id"), lit(3)), 3, tmp("asof_src"))
   }
@@ -475,7 +410,7 @@ object Streaming {
     * enriched rows back. `checkpoint` is caller-supplied so a crashed
     * drain can restart on the same one. */
   private[graft] def asOfInto(spark: SparkSession, dir: String, srcDir: String,
-      root: String, checkpoint: Option[String] = None): DataFrame = withNanos(spark) {
+      root: String, checkpoint: Option[String] = None): DataFrame = withConfs(spark, NanosAsLong) {
     val raw = rawEvents(spark, dir)
     val quotes = withTsMs(raw.where(col("event_type") === "view"))
       .select("user_id", "ts_ms", "value", "event_id")
@@ -517,7 +452,7 @@ object Streaming {
     * working `tier1h`, and stage the late arrivals at `srcDir` as three
     * slices (three triggers); returns the staged files' schema. */
   private[graft] def tierCorrectionStage(spark: SparkSession, dir: String,
-      srcDir: String, root: String): StructType = withNanos(spark) {
+      srcDir: String, root: String): StructType = withConfs(spark, NanosAsLong) {
     val isLate = col("event_id") % 17 === 3
     val all = rawEvents(spark, dir)
     val onTime = tierPartials(all.where(!isLate), 3600000L).localCheckpoint()
@@ -533,7 +468,7 @@ object Streaming {
     * can restart on the same one (the drainBm25Into seam). */
   private[graft] def tierCorrectionInto(spark: SparkSession, srcDir: String,
       schema: StructType, root: String,
-      checkpoint: Option[String] = None): DataFrame = withNanos(spark) {
+      checkpoint: Option[String] = None): DataFrame = withConfs(spark, NanosAsLong) {
     val keys = Seq("user_id", "event_type", "bucket_ms")
     val tierSchema = tierPartials(spark.read.schema(schema).parquet(srcDir), 3600000L).schema
     def avgCols(df: DataFrame, avg: String, n: String): DataFrame =
@@ -674,7 +609,6 @@ object Streaming {
   }
 
   // --------------------------------------------------------------- #56
-  private val sessionTable = new java.util.concurrent.atomic.AtomicReference[String]()
 
   /** Streaming gap sessionization: the SAME native `session_window`
     * expression as the batch [[graft.operators.Sessions.sessionWindows]]
@@ -689,9 +623,9 @@ object Streaming {
     * sessions `gap` behind the max event time and evicts their state —
     * the knob that bounds state at 100 TB is session count per
     * watermark horizon, not corpus size. */
-  def streamSessionWindow(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamSessionWindow(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import org.apache.spark.sql.types.DecimalType
-    val q = eventStream(spark, dir)
+    val rows = eventStream(spark, dir)
       .where(col("event_type") === "purchase")
       .groupBy(col("user_id"), session_window(col("event_time"), "12 hours").as("sw"))
       .agg(count(lit(1)).as("n_events"),
@@ -701,15 +635,7 @@ object Streaming {
         unix_millis(col("sw.start")).as("session_start_ms"),
         unix_millis(col("sw.end")).as("session_end_ms"),
         col("n_events"), col("value_avg"))
-      .writeStream
-      .format("memory")
-      .queryName({ val n = uniqueName("stream_session"); sessionTable.set(n); n })
-      .outputMode(OutputMode.Complete)
-      .option("checkpointLocation", tmp("ckpt_session"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sessionTable.get()).orderBy("user_id", "session_start_ms")
+    Slices.toMemory(rows, OutputMode.Complete).orderBy("user_id", "session_start_ms")
   }
 
   // ------------------------------------------------------------- #42k
@@ -730,7 +656,7 @@ object Streaming {
     * stream is never retained, the store is m rows per group, and
     * any historical slice question max-merges stored registers.
     */
-  def streamHll(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamHll(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.Hll
     val raw = rawEvents(spark, dir)
     val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("hll_src"))
@@ -769,7 +695,7 @@ object Streaming {
     * sketches over an unbounded stream cost a FIXED-size store and a
     * per-batch partial aggregation — never a rescan.
     */
-  def streamCms(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
+  def streamCms(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.Cms
     graft.functions.NGrams.register(spark)
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -799,17 +725,10 @@ object Streaming {
 
   /** Stateful demo streams pay per-PARTITION state-store overhead
     * (instances × per-commit files), not per-row: the range join took
-    * 8 s at 32 shuffle partitions and 3 s at 8 on identical data. Pin
-    * the demo streams to 8 (scoped: the conf is restored after the
-    * query starts — a stream reads it once at its first batch). At
+    * 8 s at 32 shuffle partitions and 3 s at 8 on identical data. Each
+    * query runs with 8 (scoped: the conf is restored after the query
+    * returns — a stream reads it once at its first batch). At
     * production volume the number is sized to throughput instead. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, (SparkSession, String) => DataFrame](
     "stream_range_join" -> (streamRangeJoin _),
     "stream_static_dedup" -> (streamStaticDedup _),
@@ -829,7 +748,8 @@ object Streaming {
     "stream_cms_topk" -> (streamCms _),
     "stream_session_window" -> (streamSessionWindow _)
   ).map { case (name, fn) =>
-    name -> ((s: SparkSession, d: String) => withStatePartitions(s, 8)(fn(s, d)))
+    name -> ((s: SparkSession, d: String) =>
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8")(fn(s, d)))
   }
 
   val oracles: Map[String, String] = Map(

@@ -36,17 +36,16 @@ object DeleteLog {
   private def schemaOf(idCol: String) =
     StructType(Seq(StructField(idCol, LongType)))
 
-  /** The deleted-id set, or None when nothing was ever deleted. */
-  def ids(spark: SparkSession, store: String, idCol: String): Option[DataFrame] = {
-    val snap = ManifestStore.snapshot(spark, store)
+  /** The deleted-id set at `snap`, or None when nothing was ever
+    * deleted. */
+  def ids(snap: ManifestStore.Snapshot, idCol: String): Option[DataFrame] =
     if (snap.tableFiles(Table).isEmpty) None
     else Some(snap.read(Table, schemaOf(idCol)).distinct())
-  }
 
-  /** Gate an ingest batch: drop every row whose `idCol` the log holds. */
-  def gate(spark: SparkSession, store: String, batch: DataFrame,
-      idCol: String): DataFrame =
-    ids(spark, store, idCol) match {
+  /** Gate an ingest batch: drop every row whose `idCol` the log at
+    * `snap` holds. */
+  def gate(snap: ManifestStore.Snapshot, batch: DataFrame, idCol: String): DataFrame =
+    ids(snap, idCol) match {
       case Some(del) => batch.join(
         org.apache.spark.sql.functions.broadcast(del), Seq(idCol), "left_anti")
       case None => batch
@@ -54,36 +53,32 @@ object DeleteLog {
 
   /** The log's contribution to a delete's atomic publish: append
     * `delIds` (a single-column frame) as one new file — or, when the
-    * log has reached [[FoldAt]] files, FOLD stored ∪ new into one
-    * (replace), keeping the file count bounded. The op is DEFERRED:
-    * the fold decision reads the committed count under the publish
-    * lease (not at op-construction time), so a publish by another
-    * process slipping in between cannot stale it — the [[FoldAt]]
-    * bound is exact, cross-process included. */
-  def appendOp(spark: SparkSession, store: String, delIds: DataFrame,
+    * log at `snap` has reached [[FoldAt]] files, FOLD stored ∪ new
+    * into one (replace), keeping the file count bounded. `snap` is the
+    * publish builder's snapshot, so the fold decision is taken under
+    * the lease and the [[FoldAt]] bound is exact, cross-process
+    * included. */
+  def appendOp(snap: ManifestStore.Snapshot, delIds: DataFrame,
       idCol: String): ManifestStore.TableOp =
-    ManifestStore.deferredOp(Table) { () =>
-      val nFiles = ManifestStore.tableFiles(spark, store, Table).size
-      if (nFiles + 1 > FoldAt)
-        ManifestStore.replaceTableOp(Table, "", () =>
-          ManifestStore.readTable(spark, store, Table, schemaOf(idCol))
-            .unionByName(delIds.toDF(idCol)).distinct())
-      else
-        ManifestStore.TableOp(Table, "", None, replace = false,
-          dir => delIds.toDF(idCol).distinct().coalesce(1)
-            .write.mode("append").parquet(dir))
-    }
+    if (snap.tableFiles(Table).size + 1 > FoldAt)
+      ManifestStore.replaceTableOp(Table, "", () =>
+        snap.read(Table, schemaOf(idCol)).unionByName(delIds.toDF(idCol)).distinct())
+    else
+      ManifestStore.TableOp(Table, "", None, replace = false,
+        dir => delIds.toDF(idCol).distinct().coalesce(1)
+          .write.mode("append").parquet(dir))
 
-  /** The sweep's fold op (include in a store compaction publish when
-    * the log is nonempty). */
-  def foldOp(spark: SparkSession, store: String, idCol: String): ManifestStore.TableOp =
-    ManifestStore.replaceTableOp(Table, "", () =>
-      ManifestStore.readTable(spark, store, Table, schemaOf(idCol)).distinct())
+  /** The sweep's fold: the log at `snap` rewritten as one file, or
+    * nothing when the store has no log. */
+  def foldOps(snap: ManifestStore.Snapshot, idCol: String): Seq[ManifestStore.TableOp] =
+    if (snap.tableFiles(Table).isEmpty) Seq.empty
+    else Seq(ManifestStore.replaceTableOp(Table, "", () =>
+      snap.read(Table, schemaOf(idCol)).distinct()))
 
   /** Record `ids` as deleted in a standalone publish (delete flows
     * that also repair tables fold [[appendOp]] into their own publish
     * instead, making log + repair one atomic commit). */
   def append(spark: SparkSession, store: String, delIds: DataFrame,
       idCol: String): Unit =
-    ManifestStore.publishOps(spark, store, Seq(appendOp(spark, store, delIds, idCol)))
+    ManifestStore.publishOps(spark, store)(snap => Seq(appendOp(snap, delIds, idCol)))
 }

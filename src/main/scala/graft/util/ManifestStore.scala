@@ -146,31 +146,19 @@ object ManifestStore {
     *
     * `table` "" means the store root itself is the (single) table.
     * `partCol` "" means the table is unpartitioned (its dir is the one
-    * "partition"). `touched` is evaluated UNDER the publish lease (so
-    * a thunk may read the committed store to decide what it touches);
+    * "partition"). `touched` is evaluated under the publish lease;
     * `None` means the whole table (every dir the manifest or the disk
     * knows). `write` receives the table dir and must create new
     * uniquely-named files inside the touched dirs (append-mode Spark
     * writes do). With `replace`, the touched dirs' previously
     * committed files are dropped from the next manifest (a touched
     * dir left empty disappears — durably; no recovery step can
-    * resurrect it); without it they are kept alongside the new files. */
+    * resurrect it); without it they are kept alongside the new files.
+    * An op that reads the store it changes is built by the
+    * [[publishOps]] builder from the snapshot handed to it. */
   final case class TableOp(table: String, partCol: String,
       touched: Option[() => Seq[Any]], replace: Boolean,
-      write: String => Unit, defer: Option[() => TableOp] = None)
-
-  /** An op whose concrete SHAPE (append vs replace, its write) is
-    * decided UNDER the publish lease: `make` runs after acquisition,
-    * so a decision that reads the committed store (the delete log's
-    * fold-vs-append threshold) cannot go stale against a publish that
-    * slips between op construction and lease acquisition. */
-  def deferredOp(table: String)(make: () => TableOp): TableOp =
-    TableOp(table, "", None, replace = false, _ => (), Some(() => {
-      val op = make()
-      require(op.table == table,
-        s"deferred op for table '$table' resolved to '${op.table}'")
-      op
-    }))
+      write: String => Unit)
 
   /** Append `delta()`'s rows into `touched` partitions of `table`. */
   def appendOp(table: String, partCol: String, touched: () => Seq[Any],
@@ -556,9 +544,9 @@ object ManifestStore {
     got.map { case (s, hit) => s -> (if (hit != null) hit else fetched(s)) }.toMap
   }
 
-  /** The root-relative data-file list of version `v`. */
-  private[graft] def filesAt(fs: FileSystem, root: String, v: Int): Seq[String] = {
-    val shards = indexIx(fs, root, v).map(_.shard)
+  /** The root-relative data-file list of a version's flattened index. */
+  private def filesOf(fs: FileSystem, root: String, index: Seq[IxLine]): Seq[String] = {
+    val shards = index.map(_.shard)
     val fetched = fetchShards(fs, root, shards)
     shards.flatMap(fetched)
   }
@@ -569,9 +557,13 @@ object ManifestStore {
 
   /** One committed version of the WHOLE store, resolved once: every
     * table read off a snapshot sees the same version — the cross-table
-    * isolation contract a multi-table reader must use. */
+    * isolation contract a multi-table reader must use. The file list
+    * is flattened on first use, so a publish whose builder never reads
+    * the store never flattens the index. */
   final class Snapshot private[ManifestStore] (spark: SparkSession,
-      root: String, val version: Int, val files: Seq[String]) {
+      root: String, val version: Int, resolve: => Seq[String]) {
+
+    lazy val files: Seq[String] = resolve
 
     def tableFiles(table: String): Seq[String] =
       if (table.isEmpty) files
@@ -600,7 +592,7 @@ object ManifestStore {
   def snapshot(spark: SparkSession, root: String): Snapshot = {
     val fs = Fs.of(spark, root)
     val v = committedVersion(fs, root)
-    new Snapshot(spark, root, v, filesAt(fs, root, v))
+    new Snapshot(spark, root, v, filesOf(fs, root, indexIx(fs, root, v)))
   }
 
   /** Read the committed snapshot of a single-table store (the root is
@@ -655,29 +647,19 @@ object ManifestStore {
 
   /** Atomic create-exclusive of `_lease` with a fresh writer token as
     * content; throws if a concurrent maintenance job holds the store.
-    * Returns the token the holder must fence every commit with.
-    *
-    * `waitMs` > 0 is the bounded-queue option for scheduled jobs whose
-    * collision with a live trigger is a normal event (a compaction
-    * sweep firing mid-trigger): acquisition retries until the holder
-    * releases or the bound expires — then the loud failure stands
-    * (a DEAD holder's lease never releases; waiting on one must end
-    * in the breakLease remedy, not an infinite queue). */
-  private[graft] def acquireLease(fs: FileSystem, root: String,
-      waitMs: Long = 0L): String = {
+    * Returns the token the holder must fence every commit with. */
+  private[graft] def acquireLease(fs: FileSystem, root: String): String = {
     fs.mkdirs(new Path(root))
-    val deadline = System.nanoTime() + waitMs * 1000000L
     val token = java.util.UUID.randomUUID().toString
-    // only an already-held lease is a retriable event; any OTHER
-    // IOException (permissions, connectivity) is a real FS error and
-    // must surface unchanged — retrying it for waitMs and then blaming
-    // a concurrent job steers operators toward breakLease for a
-    // problem that is not a stale lease. Contention is confirmed
-    // POSITIVELY (ADVICE r20 #1): a typed already-exists exception, or
-    // any IOException with the lease file actually present afterwards
-    // — never a message-phrasing heuristic ('does not exist' matched
-    // the old `contains("exist")`, and wrapped FS contention errors
-    // without the word surfaced raw).
+    // only an already-held lease is blamed on a concurrent job; any
+    // OTHER IOException (permissions, connectivity) is a real FS error
+    // and must surface unchanged — blaming a concurrent job steers
+    // operators toward breakLease for a problem that is not a stale
+    // lease. Contention is confirmed POSITIVELY (ADVICE r20 #1): a
+    // typed already-exists exception, or any IOException with the
+    // lease file actually present afterwards — never a message-phrasing
+    // heuristic ('does not exist' matched the old `contains("exist")`,
+    // and wrapped FS contention errors without the word surfaced raw).
     def leaseHeld(e: Throwable): Boolean = e match {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
       case _: java.nio.file.FileAlreadyExistsException => true
@@ -686,26 +668,16 @@ object ManifestStore {
         catch { case _: java.io.IOException => false }
       case _ => false
     }
-    var sleepMs = 50L // exponential backoff to a 500 ms cap: a 10 s
-    // bound must not hammer the namespace with 200 create-exclusive
-    // attempts (chatty and pointless against an object store)
-    var acquired = false
-    while (!acquired) {
-      try {
-        val out = fs.create(new Path(root, "_lease"), false)
-        try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        acquired = true
-      } catch {
-        case e: java.io.IOException if leaseHeld(e) =>
-          if (System.nanoTime() < deadline) {
-            Thread.sleep(sleepMs)
-            sleepMs = math.min(sleepMs * 2, 500L)
-          } else throw new IllegalStateException(
-            s"store $root is held by a concurrent maintenance job (_lease " +
-              "present); if its holder is dead, break it with " +
-              "ManifestStore.breakLease", e)
-      }
+    try {
+      val out = fs.create(new Path(root, "_lease"), false)
+      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    } catch {
+      case e: java.io.IOException if leaseHeld(e) =>
+        throw new IllegalStateException(
+          s"store $root is held by a concurrent maintenance job (_lease " +
+            "present); if its holder is dead, break it with " +
+            "ManifestStore.breakLease", e)
     }
     token
   }
@@ -750,11 +722,10 @@ object ManifestStore {
     * publishes opportunistically), never the per-trigger path. Runs
     * under the writer lease; concurrent readers are safe (only
     * unreferenced names are deleted). */
-  def sweepStrandedShards(spark: SparkSession, root: String,
-      leaseWaitMs: Long = 0L): Unit = {
+  def sweepStrandedShards(spark: SparkSession, root: String): Unit = {
     val fs = Fs.of(spark, root)
     if (!fs.exists(shardsDir(root))) return
-    val token = acquireLease(fs, root, leaseWaitMs)
+    val token = acquireLease(fs, root)
     try {
       // every manifest still on disk — committed, grace, or a crashed
       // publish's (its own cleanup belongs to the next publish, not
@@ -825,21 +796,34 @@ object ManifestStore {
     * Driver-side READ cost is O(touched + crashed-publish dirs) shard
     * files per publish, warm or cold — never O(store). The one
     * O(table) shape is a whole-table op (compaction, blue/green),
-    * whose touched set IS the table. */
-  def publishOps(spark: SparkSession, root: String, ops0: Seq[TableOp],
-      leaseWaitMs: Long = 0L): Unit = {
-    require(ops0.map(_.table).distinct.size == ops0.size,
-      s"one publish may carry at most one op per table: ${ops0.map(_.table)}")
+    * whose touched set IS the table.
+    *
+    * `build` is THE way a write reads the store it changes: it runs
+    * under the lease, once the versions are listed, and receives a
+    * [[Snapshot]] of the committed version this publish supersedes.
+    * Every store-derived frame its ops write (a delete-log gate, a
+    * re-delivery anti-join, a repair read) is built from that
+    * snapshot, so read-modify-write is serializable against any other
+    * writer and the store is resolved once per publish. The snapshot's
+    * file list is flattened only if `build` reads it. An empty result
+    * publishes nothing. */
+  def publishOps(spark: SparkSession, root: String)(
+      build: Snapshot => Seq[TableOp]): Unit = {
     val fs = Fs.of(spark, root)
-    val token = acquireLease(fs, root, leaseWaitMs)
+    val token = acquireLease(fs, root)
     try {
-      // deferred ops resolve their shape HERE, under the lease
-      val ops = ops0.map(o => o.defer.map(_()).getOrElse(o))
-
       // version state: one root listing, one manifest read per version
       val allVs = manifestVersions(fs, root)
       val committedVs = allVs.filter(w => fs.exists(markerPath(root, w)))
       val v = committedVs.maxOption.getOrElse(0)
+      // whole-table ops and snapshot reads are the shapes that flatten
+      // the index (lazily, so every partition-scoped publish stays
+      // O(touched))
+      lazy val curIndexFull: Seq[IxLine] = indexIx(fs, root, v)
+      val ops = build(new Snapshot(spark, root, v, filesOf(fs, root, curIndexFull)))
+      require(ops.map(_.table).distinct.size == ops.size,
+        s"one publish may carry at most one op per table: ${ops.map(_.table)}")
+      if (ops.isEmpty) return
       val committedMs: Map[Int, ManifestIx] =
         committedVs.map(w => w -> readManifest(fs, root, w)).toMap
       val curM = committedMs.getOrElse(v, EmptyManifest)
@@ -888,18 +872,13 @@ object ManifestStore {
             !allVs.contains(n.stripPrefix("_commit_v").toInt))
         fs.delete(new Path(root, n), false)
 
-      // 2. per-op: touched dirs + orphan sweep (sequential — touched
-      // thunks may force shared store reads under the lease), then the
+      // 2. per-op: touched dirs + orphan sweep (sequential), then the
       // WRITE JOBS IN PARALLEL (the tables' writes are independent —
       // only the commit must be atomic; on toy-scale triggers the
       // sequential-job latency, not the write work, was the cost of a
       // multi-table trigger), then new-file listing
       case class OpDone(op: TableOp, dirs: Seq[String],
           newByDir: Map[String, Seq[String]], wholeTable: Boolean)
-      // whole-table ops are the ONE shape whose touched set is the
-      // table itself; only they flatten the index (lazily, so every
-      // partition-scoped publish stays O(touched))
-      lazy val curIndexFull: Seq[IxLine] = indexIx(fs, root, v)
       def manifestDirsOf(table: String): Seq[String] =
         curIndexFull.map(_.dk).filter(dk =>
           if (table.isEmpty) true else dk == table || dk.startsWith(s"$table/"))
@@ -1130,6 +1109,10 @@ object ManifestStore {
         sweepShards(fs, root, Seq(v, vNew), _ => false)
     } finally releaseLease(fs, root, token)
   }
+
+  /** [[publishOps]] of ops that do not read the store they change. */
+  def publishOps(spark: SparkSession, root: String, ops: Seq[TableOp]): Unit =
+    publishOps(spark, root)(_ => ops)
 
   /** Retire version `w`: its index shards outside `liveIdx`, the dir
     * shards they list that `liveDirShard(dk, ds)` rejects with those

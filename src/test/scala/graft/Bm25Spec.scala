@@ -82,7 +82,7 @@ class Bm25Spec extends SparkSpec {
     val base = graft.streaming.KmvStream.drainBm25(spark, sfDir)
     def postingsFiles() = ManifestStore.tableFiles(spark, base, "postings")
     def buckets() = postingsFiles().map(_.takeWhile(_ != '/')).toSet
-    val before = Bm25Store.readPostings(spark, base)
+    val before = ManifestStore.readTable(spark, base, "postings", Bm25Store.postingsSchema)
       .orderBy("t", "doc_id").collect()
     assert(postingsFiles().size > buckets().size,
       "expected one appended file set per (trigger, bucket)")
@@ -91,7 +91,7 @@ class Bm25Spec extends SparkSpec {
     ManifestStore.crashPoint = Some("publish")
     intercept[IllegalStateException] { Bm25Store.compact(spark, base) }
     ManifestStore.crashPoint = None
-    val midCrash = Bm25Store.readPostings(spark, base)
+    val midCrash = ManifestStore.readTable(spark, base, "postings", Bm25Store.postingsSchema)
       .orderBy("t", "doc_id").collect()
     assert(midCrash.map(_.toString).toSeq == before.map(_.toString).toSeq,
       "a reader saw a crashed sweep's uncommitted state")
@@ -99,7 +99,7 @@ class Bm25Spec extends SparkSpec {
     // one file per bucket, identical rows
     assert(postingsFiles().size == buckets().size,
       s"postings not 1 file/bucket: ${postingsFiles().size}")
-    val after = Bm25Store.readPostings(spark, base)
+    val after = ManifestStore.readTable(spark, base, "postings", Bm25Store.postingsSchema)
       .orderBy("t", "doc_id").collect()
     assert(after.map(_.toString).toSeq == before.map(_.toString).toSeq)
   }

@@ -97,7 +97,7 @@ class DeleteRepairSpec extends SparkSpec {
       k._1.contains("/deletes/")) == untouched)
     val topk = GraphStream.readTopk(spark, base)
     assert(topk.where(col("src_id") === 14L || col("dst_id") === 14L).isEmpty)
-    assert(GraphStream.readVecsRaw(spark, base).where(col("vec_id") === 14L).isEmpty)
+    assert(ManifestStore.readTable(spark, base, "vecs", GraphStream.vecsSchema).where(col("vec_id") === 14L).isEmpty)
     // survivors that had 14 in their top-5 still have exactly 5
     // entries (the block is larger than k) — the rescore refilled them
     assert(topk.where(col("label") === label)
@@ -226,8 +226,8 @@ class DeleteRepairSpec extends SparkSpec {
     assert(a.nonEmpty)
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
     // primary rows identical too (batch keys aside)
-    val x = Bm25Store.readPostings(spark, atd)
-    val y = Bm25Store.readPostings(spark, dta)
+    val x = ManifestStore.readTable(spark, atd, "postings", Bm25Store.postingsSchema)
+    val y = ManifestStore.readTable(spark, dta, "postings", Bm25Store.postingsSchema)
     val cs = x.columns.sorted.map(col).toSeq
     assert(x.select(cs: _*).exceptAll(y.select(cs: _*)).isEmpty)
     assert(y.select(cs: _*).exceptAll(x.select(cs: _*)).isEmpty)

@@ -148,7 +148,7 @@ class FsPortabilitySpec extends SparkSpec {
         GraphStream.readTopk(spark, staged)
           .select("src_id", "dst_id", "cos", "rank", "label")),
       ManifestStore.replaceTableOp("vecs", "label", () =>
-        GraphStream.readVecsRaw(spark, staged))))
+        graft.util.ManifestStore.readTable(spark, staged, "vecs", GraphStream.vecsSchema))))
     assert(fsOf(base).isInstanceOf[GraftTestFs])
     val delVecs = graft.similarity.Embeddings
       .vecsOf(Tables.embeddings(spark, sfDir))

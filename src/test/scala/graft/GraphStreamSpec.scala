@@ -41,13 +41,13 @@ class GraphStreamSpec extends SparkSpec {
     def labels(fs: Seq[String]): Set[String] = fs.map(_.takeWhile(_ != '/')).toSet
     val before = vecFiles()
     assert(before.size > labels(before).size, "no per-trigger vec fan-out to compact")
-    val rowsBefore = GraphStream.readVecsRaw(spark, base)
+    val rowsBefore = ManifestStore.readTable(spark, base, "vecs", GraphStream.vecsSchema)
       .orderBy("vec_id").collect().map(_.toString).toSeq
     GraphStream.compactGraphStore(spark, base)
     val after = vecFiles()
     assert(labels(after) == labels(before), "compaction lost label partitions")
     assert(after.size == labels(after).size, s"vecs not 1 file/label: ${after.size}")
-    val rowsAfter = GraphStream.readVecsRaw(spark, base)
+    val rowsAfter = ManifestStore.readTable(spark, base, "vecs", GraphStream.vecsSchema)
       .orderBy("vec_id").collect().map(_.toString).toSeq
     assert(rowsAfter == rowsBefore, "vec store rows changed across compaction")
   }

@@ -162,7 +162,7 @@ class LiveDeleteSpec extends SparkSpec {
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty)
     // the log survives for every FUTURE rotation's staging gate
-    assert(DeleteLog.ids(spark, root, "vec_id").exists(_.count() > 0))
+    assert(DeleteLog.ids(ManifestStore.snapshot(spark, root), "vec_id").exists(_.count() > 0))
     StoredIndex.publish(spark, root, orig)
     assert(ManifestStore.readTable(spark, root, "lists", StoredIndex.listsSchema)
       .where(pmod(col("neighbor_id"), lit(17L)) === 14L).isEmpty,
@@ -170,30 +170,27 @@ class LiveDeleteSpec extends SparkSpec {
   }
 
   test("the log's fold decision is made UNDER the publish lease: a publish slipping in after op construction cannot stale the FoldAt bound") {
-    // r18 ADVICE (low): appendOp used to read the committed file count
-    // at op-CONSTRUCTION time, before publishOps acquired the lease —
-    // a cross-process publish in between could stale the decision to
-    // FoldAt+1 files. The op is now deferred: its shape resolves under
-    // the lease, so the bound holds exactly.
+    // The log op is built inside the publish builder from the snapshot
+    // resolved under the lease: a writer that tries to land an append
+    // between that decision and the commit is refused at the lease, so
+    // the decision cannot go stale and the FoldAt bound holds exactly.
     val root = java.nio.file.Files.createTempDirectory("graft_dellog_defer").toString
     import spark.implicits._
     def one(x: Long) = Seq(x).toDF("doc_id")
+    def logFiles = ManifestStore.tableFiles(spark, root, DeleteLog.Table).size
     for (i <- 1 to (DeleteLog.FoldAt - 1))
       DeleteLog.append(spark, root, one(i.toLong), "doc_id")
-    assert(ManifestStore.tableFiles(spark, root, DeleteLog.Table).size ==
-      DeleteLog.FoldAt - 1)
-    // construct the op now (it would see FoldAt-1 committed files and
-    // choose APPEND if decided eagerly)...
-    val op = DeleteLog.appendOp(spark, root, one(100L), "doc_id")
-    // ...then another writer lands one more append in between
+    assert(logFiles == DeleteLog.FoldAt - 1)
+    ManifestStore.publishOps(spark, root) { snap =>
+      // the interleaving writer: refused while this publish holds the lease
+      intercept[IllegalStateException](DeleteLog.append(spark, root, one(200L), "doc_id"))
+      Seq(DeleteLog.appendOp(snap, one(100L), "doc_id"))
+    }
+    assert(logFiles == DeleteLog.FoldAt, "FoldAt - 1 committed files must APPEND")
+    // the next append sees FoldAt committed files and folds
     DeleteLog.append(spark, root, one(200L), "doc_id")
-    assert(ManifestStore.tableFiles(spark, root, DeleteLog.Table).size ==
-      DeleteLog.FoldAt)
-    // the staletly-constructed op re-decides under the lease: FOLD
-    ManifestStore.publishOps(spark, root, Seq(op))
-    assert(ManifestStore.tableFiles(spark, root, DeleteLog.Table).size == 1,
-      "the fold decision went stale against the interleaved publish")
-    val logged = DeleteLog.ids(spark, root, "doc_id").get
+    assert(logFiles == 1, "FoldAt committed files must FOLD")
+    val logged = DeleteLog.ids(ManifestStore.snapshot(spark, root), "doc_id").get
       .collect().map(_.getLong(0)).toSet
     assert(((1L until DeleteLog.FoldAt) ++ Seq(100L, 200L)).forall(logged.contains),
       "the fold dropped logged ids")
@@ -215,7 +212,7 @@ class LiveDeleteSpec extends SparkSpec {
     assert(logFiles.size <= DeleteLog.FoldAt,
       s"delete log grew unbounded: ${logFiles.size} files after ${ids.length} deletes")
     // the folded log still gates: every id stays deleted
-    val logged = DeleteLog.ids(spark, root, "vec_id").get
+    val logged = DeleteLog.ids(ManifestStore.snapshot(spark, root), "vec_id").get
       .collect().map(_.getLong(0)).toSet
     assert(ids.toSet.subsetOf(logged), "a fold dropped logged ids")
   }

@@ -149,6 +149,32 @@ class ManifestStoreSpec extends SparkSpec {
     assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,0]"))
   }
 
+  test("the publish builder reads the version it supersedes; an empty build publishes nothing and leaves no lease") {
+    val root = tmp()
+    ManifestStore.append(spark, root, "b", df((1L, 1.0, 0)))
+    ManifestStore.append(spark, root, "b", df((2L, 2.0, 1)))
+    val fs = graft.util.Fs.of(spark, root)
+    var seen: Option[(Int, Set[String])] = None
+    ManifestStore.publishOps(spark, root) { snap =>
+      seen = Some((snap.version,
+        snap.read("", schema).collect().map(_.toString).toSet))
+      Seq(ManifestStore.appendOp("", "b", () => Seq(2), () => df((3L, 3.0, 2))))
+    }
+    assert(seen.contains((2, Set("[1,1.0,0]", "[2,2.0,1]"))),
+      s"builder saw $seen, not the superseded version 2")
+    assert(ManifestStore.committedVersion(fs, root) == 3)
+    assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,1]", "[3,3.0,2]"))
+    def names = fs.listStatus(new Path(root)).map(_.getPath.getName).toSet
+    val before = names
+    ManifestStore.publishOps(spark, root) { snap =>
+      assert(snap.version == 3)
+      Seq.empty
+    }
+    assert(ManifestStore.committedVersion(fs, root) == 3)
+    assert(names == before, s"an empty build changed the root: ${names.diff(before)}")
+    assert(!fs.exists(new Path(root, "_lease")), "an empty build left its lease behind")
+  }
+
   test("compact collapses each partition to one sorted file and is result-invisible; pruning survives") {
     val root = tmp()
     for (i <- 1 to 3)
@@ -410,36 +436,6 @@ class ManifestStoreSpec extends SparkSpec {
       val n = ManifestStore.shardCacheSize(root)
       assert(n == 4, s"cache not LRU-bounded at 4: size $n")
     } finally ManifestStore.shardCachePerStore = saved
-  }
-
-  test("bounded lease-wait: a publish colliding with a live holder queues within the bound; zero-wait keeps the loud failure") {
-    val root = tmp()
-    ManifestStore.append(spark, root, "b", df((1L, 1.0, 0)))
-    val fs = graft.util.Fs.of(spark, root)
-    val tok = ManifestStore.acquireLease(fs, root) // the colliding holder
-    // zero-wait (the default): loud, immediate
-    intercept[IllegalStateException] {
-      ManifestStore.append(spark, root, "b", df((2L, 2.0, 0)))
-    }
-    // bounded wait: the holder releases mid-wait and the publish lands
-    val releaser = new Thread(() => {
-      Thread.sleep(300); ManifestStore.releaseLease(fs, root, tok)
-    })
-    releaser.start()
-    ManifestStore.publishOps(spark, root,
-      Seq(ManifestStore.appendOp("", "b", () => Seq(0), () => df((2L, 2.0, 0)))),
-      leaseWaitMs = 10000)
-    releaser.join()
-    assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,0]"))
-    // a bound that expires against a still-held lease stays loud
-    ManifestStore.acquireLease(fs, root)
-    val e = intercept[IllegalStateException] {
-      ManifestStore.publishOps(spark, root,
-        Seq(ManifestStore.appendOp("", "b", () => Seq(0), () => df((3L, 3.0, 0)))),
-        leaseWaitMs = 200)
-    }
-    assert(e.getMessage.contains("concurrent maintenance"))
-    ManifestStore.breakLease(spark, root)
   }
 
   test("shard GC stays bounded across a long publish history: _shards holds only the live + grace versions' files") {

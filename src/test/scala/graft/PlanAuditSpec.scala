@@ -107,7 +107,7 @@ class PlanAuditSpec extends SparkSpec {
     // the broadcast threshold off (what "build side exceeds the
     // threshold" means at corpus scale) the same code plans shuffle
     // joins — no hint survives to force a corpus-sized broadcast.
-    Relational2.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    graft.util.Confs.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val pBig = planStr(graft.dedup.Dedup.minHashLsh(spark, sfDir))
       assert(!pBig.contains("BroadcastHashJoin"), pBig.take(3000))
       assert(pBig.contains("SortMergeJoin") || pBig.contains("ShuffledHashJoin"),
@@ -246,7 +246,7 @@ class PlanAuditSpec extends SparkSpec {
     import graft.operators.{Relational2, Relational5}
     // stage the bucketed tables, then audit the bare join's plan
     Relational5.bucketedJoin(spark, sfDir).count()
-    val p = Relational2.withConfs(spark,
+    val p = graft.util.Confs.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       planStr(Relational5.bucketedJoinPlan(spark, sfDir))
     }

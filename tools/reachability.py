@@ -77,7 +77,7 @@ KEEP = {
         "single-table primitive driving ManifestStore's own spec",
     "graft.util.ManifestStore$.partitionDirs":
         "single-table primitive driving ManifestStore's own spec",
-    "graft.similarity.DeleteLog$.append":
+    "graft.util.DeleteLog$.append":
         "single-call primitive driving the delete log's own spec",
     "graft.util.ManifestStore$.sweepStrandedShards":
         "documented operator API: the explicit stranded-shard deep clean",
