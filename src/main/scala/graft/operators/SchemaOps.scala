@@ -91,7 +91,7 @@ object SchemaOps {
     * The demo writes both generations from the events slice, repairs,
     * and aggregates per generation; the oracle recomputes from raw. */
   def skSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.sources.HiveStore.scratchDir()
+    val base = graft.util.Fs.scratch("schema_evolution")
     val ev = Tables.events(spark, dir).where(col("user_id") < 10)
     ev.where(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts_ms"),

@@ -121,7 +121,7 @@ object Bm25Store {
   /** Clone a staged (immutable, fingerprint-shared) store into a
     * mutable root — one commit. */
   private[graft] def cloneStore(spark: SparkSession, staged: String): String =
-    ManifestStore.cloneTables(spark, staged, "graft_bm25_mut", Seq(
+    ManifestStore.cloneTables(spark, staged, "bm25_mut", Seq(
       ("postings", "tb", postingsSchema), ("dl", "db", dlSchema),
       ("stats", "db", statsSchema)))
 

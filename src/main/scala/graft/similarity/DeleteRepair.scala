@@ -194,7 +194,7 @@ object DeleteRepair {
   /** Clone the staged directed-list store into a mutable store root —
     * both tables in one manifest commit. */
   private[graft] def cloneGraph(spark: SparkSession, staged: String): String =
-    graft.util.ManifestStore.cloneTables(spark, staged, "graft_del_knn", Seq(
+    graft.util.ManifestStore.cloneTables(spark, staged, "del_knn", Seq(
       ("topk", "label", graft.streaming.GraphStream.topkSchema),
       ("vecs", "label", graft.streaming.GraphStream.vecsSchema)))
 

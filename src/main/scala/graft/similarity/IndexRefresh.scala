@@ -110,7 +110,7 @@ object IndexRefresh {
     * on the drifted window (the oracle below). */
   def annIndexRefresh(spark: SparkSession, dir: String): DataFrame =
     annIndexRefreshAt(spark, dir,
-      java.nio.file.Files.createTempDirectory("graft_bluegreen").toString)
+      graft.util.Fs.scratch("bluegreen"))
 
   /** The same flow with a caller-supplied store root — every
     * stage/commit/read resolves its filesystem from the path
@@ -171,7 +171,7 @@ object IndexRefresh {
     * so the retrained quantizers equal the fresh build's. */
   def annRefreshDelete(spark: SparkSession, dir: String): DataFrame =
     annRefreshDeleteAt(spark, dir,
-      java.nio.file.Files.createTempDirectory("graft_bg_del").toString)
+      graft.util.Fs.scratch("bg_del"))
 
   private[graft] def annRefreshDeleteAt(spark: SparkSession, dir: String,
       root: String): DataFrame = {

@@ -48,7 +48,7 @@ object StoredIndex {
 
   /** Explicit store schemas (partition column included): manifest reads
     * pin the partition column's type against the shared session's
-    * `partitionColumnTypeInference` setting, and an empty store reads
+    * partition-type inference setting, and an empty store reads
     * as an empty frame of the right shape. */
   private[graft] val listsSchema = StructType(Seq(
     StructField("neighbor_id", LongType), StructField("bucket", IntegerType)))
@@ -155,7 +155,7 @@ object StoredIndex {
   /** Copy the committed index at `staged` (immutable,
     * fingerprint-shared) into a fresh mutable root — one commit. */
   private[graft] def cloneStore(spark: SparkSession, staged: String): String =
-    ManifestStore.cloneTables(spark, staged, "graft_del_ivf", tables)
+    ManifestStore.cloneTables(spark, staged, "del_ivf", tables)
 
   /** Apply a delete to the index at `root`: ONE atomic publish carrying
     * the [[graft.util.DeleteLog]] append (durability against later

@@ -47,8 +47,7 @@ object BufferUnion {
     * the listing-time exclusion works unchanged on HDFS/S3 stores —
     * the deployment this read path exists for. */
   private[graft] def eligibleFiles(spark: SparkSession, root: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.util.Fs.of(spark, root)
     def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
       fs.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) {
@@ -86,7 +85,7 @@ object BufferUnion {
       .where(col("event_type") === "view" && col("user_id") < 6)
       .withColumn("doy", dayofyear(timestamp_millis(col("ts_ms"))))
       .select("event_id", "ts_ms", "user_id", "value", "doy")
-    val store = HiveStore.scratchDir()
+    val store = graft.util.Fs.scratch("buffer_union")
     def put(df: DataFrame, sub: String): Unit =
       df.drop("doy").repartition(1).write.mode("overwrite")
         .parquet(s"$store/$sub")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.util.Confs.withConfs
+import graft.util.Fs
 import graft.Tables
 import graft.funcs._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *     sorted-by-timestamp file invariant AND gives parquet tight
   *     row-group min/max stats on the time column — the stats that
   *     make post-compaction time-range scans skip row groups,
-  *   - `maxRecordsPerFile` bounds file size at scale (a year of a hot
+  *   - [[MaxRecordsPerFile]] bounds file size at scale (a year of a hot
   *     path may exceed one sane file; the reference's single-file-per-
   *     year rule does not survive 100 TB),
   *   - publication is incremental and append-only: each run archives
@@ -48,8 +48,8 @@ object Compaction {
 
   import org.apache.hadoop.fs.{FileSystem, Path}
 
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    graft.util.Fs.of(spark, path)
+  /** Rows per archive file. */
+  private val MaxRecordsPerFile = 4000000L
 
   /** The durably-archived cutoff, read from the commit markers. The
     * marker file's NAME carries the value (`_commit_016`), so the commit
@@ -58,7 +58,7 @@ object Compaction {
     * (also the fresh-archive case). Underscore-prefixed, so Spark's
     * partition discovery ignores it. */
   def archivedCutoff(spark: SparkSession, archiveDir: String): String = {
-    val fs = fsOf(spark, archiveDir)
+    val fs = Fs.of(spark, archiveDir)
     val root = new Path(archiveDir)
     if (!fs.exists(root)) "000"
     else fs.listStatus(root).map(_.getPath.getName)
@@ -108,27 +108,24 @@ object Compaction {
     * leftovers — fully idempotent. A crash between commit and cleanup
     * re-runs cleanup only. */
   def compactDays(spark: SparkSession, liveDir: String, archiveDir: String,
-      cutoffDay: String, maxRecordsPerFile: Long = 4000000L): Unit = {
+      cutoffDay: String): Unit = {
     // Archive and live store may live on DIFFERENT filesystems (hot
     // local/HDFS live, cold S3 archive) — resolve each from its root.
-    val fs = fsOf(spark, archiveDir)
-    val liveFs = fsOf(spark, liveDir)
+    val fs = Fs.of(spark, archiveDir)
+    val liveFs = Fs.of(spark, liveDir)
     val prev = archivedCutoff(spark, archiveDir)
     if (cutoffDay > prev) {
-      val live = withConfs(spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-        HiveStore.read(spark, liveDir)
-      }
       // Partition-column predicate → directory pruning: only the newly
       // cold day dirs are ever opened.
-      val cold = live.where(col("day") >= prev && col("day") < cutoffDay).drop("day")
+      val cold = HiveStore.read(spark, liveDir)
+        .where(col("day") >= prev && col("day") < cutoffDay).drop("day")
       val keys = Seq("tier", "context", "path", "year")
       val tmp = archiveDir + s"_compacting_$cutoffDay"
       cold
         .repartition(32, keys.map(col): _*)
         .sortWithinPartitions((keys.map(col) :+ col("ts_ms")): _*)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .option("maxRecordsPerFile", MaxRecordsPerFile)
         .partitionBy(keys: _*)
         .parquet(tmp)
       // Clear leftovers of a crashed attempt at this same cutoff (they
@@ -176,24 +173,14 @@ object Compaction {
     * scans stay partition-pruned; no shuffle is added. An absent, empty
     * or never-committed archive reads as empty. */
   def compactedRead(spark: SparkSession, liveDir: String, archiveDir: String): DataFrame = {
-    val fs = fsOf(spark, archiveDir)
     val cutoff = archivedCutoff(spark, archiveDir)
-    val hasArchiveData = cutoff != "000" &&
-      fs.listStatus(new Path(archiveDir)).exists(_.getPath.getName.startsWith("tier="))
-    val live = withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      HiveStore.read(spark, liveDir)
-    }
-    val liveSide = live.where(col("day") >= cutoff).drop("day")
+    val liveSide = HiveStore.read(spark, liveDir).where(col("day") >= cutoff).drop("day")
       .withColumn("src", lit("live"))
-    if (!hasArchiveData) liveSide
+    if (cutoff == "000" || !HiveStore.hasData(spark, archiveDir)) liveSide
     else {
-      val archive = withConfs(spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-        HiveStore.read(spark, archiveDir)
-      }
       val dayOf = lpad(dayofyear(timestamp_millis(col("ts_ms"))).cast("string"), 3, "0")
-      liveSide.unionByName(archive.where(dayOf < cutoff).withColumn("src", lit("archive")))
+      liveSide.unionByName(HiveStore.read(spark, archiveDir)
+        .where(dayOf < cutoff).withColumn("src", lit("archive")))
     }
   }
 
@@ -206,17 +193,9 @@ object Compaction {
     * from raw events. File-count/sort invariants are spec-asserted
     * (CompactionSpec) — they are filesystem facts, not SQL. */
   def skCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val slice = Tables.events(spark, dir)
-      .where(col("event_type") === "purchase" && col("user_id") < 6)
-      .withColumn("tier", lit("raw"))
-      .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-      .withColumn("path", col("event_type"))
-      .withColumn("ts2", timestamp_millis(col("ts_ms")))
-      .withColumn("year", year(col("ts2")))
-      .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-      .drop("ts2")
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
-    HiveStore.write(slice, live)
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
+    HiveStore.write(HiveStore.layout(Tables.events(spark, dir)
+      .where(col("event_type") === "purchase" && col("user_id") < 6)), live)
     compactDays(spark, live, archive, cutoffDay = "016")
     compactedRead(spark, live, archive)
       .groupBy("context", "path", "year")

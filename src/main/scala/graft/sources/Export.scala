@@ -44,7 +44,7 @@ object Export {
     * sum and the total quoted-string length must all match the
     * original rows for BOTH formats. */
   def skExportFormats(spark: SparkSession, dir: String): DataFrame = {
-    val out = HiveStore.scratchDir()
+    val out = graft.util.Fs.scratch("export")
     exportFormats(slice(spark, dir), out)
     val csvBack = spark.read.schema(sliceSchema).option("header", "true").csv(s"$out/csv")
     val jsonBack = spark.read.schema(sliceSchema).json(s"$out/json")

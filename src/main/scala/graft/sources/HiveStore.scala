@@ -1,9 +1,10 @@
 package graft.sources
 
 import graft.util.Confs.withConfs
+import graft.util.Fs
 import graft.Tables
 import graft.funcs._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Hive-partitioned store mirroring the reference's layout
@@ -14,25 +15,78 @@ import org.apache.spark.sql.functions._
   */
 object HiveStore {
 
+  /** The partition keys of the layout, outermost first. */
+  private val Keys = Seq("tier", "context", "path", "year", "day")
+
   /** Write records into the reference layout. Expects columns
-    * `tier, context, path, year, day` plus payload.
-    *
-    * The repartition on the partition keys is load-bearing: without
-    * it every input task opens a writer per output partition
-    * (tasks × partitions file handles — the classic dynamic-partition
-    * small-file explosion); with it each output directory is written
-    * by exactly one task. */
-  def write(df: DataFrame, dir: String): Unit =
-    // Explicit partition count: AQE would otherwise coalesce the tiny
-    // pre-write shuffle to a handful of tasks and serialize the
-    // (per-file) filesystem calls.
+    * `tier, context, path, year, day` plus payload. */
+  def write(df: DataFrame, dir: String): Unit = writeParts(df, "overwrite", dir)
+
+  /** The one layout writer. The repartition on the partition keys is
+    * load-bearing: without it every input task opens a writer per
+    * output partition (tasks × partitions file handles — the classic
+    * dynamic-partition small-file explosion); with it each output
+    * directory is written by exactly one task. Explicit partition
+    * count: AQE would otherwise coalesce the tiny pre-write shuffle to
+    * a handful of tasks and serialize the (per-file) filesystem calls. */
+  private def writeParts(df: DataFrame, mode: String, dir: String): Unit =
     df.repartition(32, col("context"), col("path"), col("day"))
-      .write.mode("overwrite")
-      .partitionBy("tier", "context", "path", "year", "day")
+      .write.mode(mode)
+      .partitionBy(Keys: _*)
       .parquet(dir)
 
+  /** Read the layout at `dir`. Partition values stay strings under any
+    * session setting (day "003" must not be inferred back to int 3):
+    * the conf is scoped to the eager file-index / schema-inference step
+    * and restored immediately. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
+      spark.read.parquet(dir)
+    }
+
+  /** `df` (with a `ts_ms` column) as layout records: tier `raw`,
+    * `context` and `path` (by default those of an events row), and the
+    * UTC `year`/`day` of `ts_ms` as strings — the types [[read]]
+    * returns, so a partition-tuple join against a read lines up. */
+  def layout(df: DataFrame,
+      context: Column = concat(lit("vessels__urn-"), col("user_id")),
+      path: Column = col("event_type")): DataFrame = {
+    val ts = timestamp_millis(col("ts_ms"))
+    df.withColumn("tier", lit("raw"))
+      .withColumn("context", context)
+      .withColumn("path", path)
+      .withColumn("year", year(ts).cast("string"))
+      .withColumn("day", lpad(dayofyear(ts).cast("string"), 3, "0"))
+  }
+
+  /** Whether `dir` holds layout data — at least one `tier=…` dir; an
+    * existing but empty root (a fresh scratch dir) holds none. */
+  def hasData(spark: SparkSession, dir: String): Boolean = {
+    val fs = Fs.of(spark, dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    fs.exists(root) && fs.listStatus(root).exists(_.getPath.getName.startsWith("tier="))
+  }
+
+  /** Append to `target` exactly the partitions of `recs` it does not
+    * hold yet; returns the rows appended (0 on a re-run). The partition
+    * diff is a broadcast anti-join of `recs` against the target's
+    * partition tuples — metadata-sized however big the data is — and
+    * only the missing partitions' data is then scanned. Append-only, so
+    * a re-run after a crash copies nothing twice. */
+  def appendMissing(spark: SparkSession, recs: DataFrame, target: String): Long = {
+    val missing =
+      if (hasData(spark, target))
+        recs.join(broadcast(read(spark, target).select(Keys.map(col): _*).distinct()),
+          Keys, "left_anti")
+      else recs
+    // count + write both consume it: cut lineage once so the source
+    // scan + anti-join run once, not twice
+    val staged = missing.localCheckpoint(false)
+    val n = staged.count()
+    if (n > 0) writeParts(staged, "append", target)
+    n
+  }
 
   /** Retention sweep — aggregation-service.ts:cleanupOldData: delete
     * partitions whose day is older than the per-tier retention,
@@ -41,7 +95,7 @@ object HiveStore {
     * paths. */
   def retentionSweep(spark: SparkSession, dir: String,
       retentionDays: Map[String, Int], nowMs: Long): Seq[String] = {
-    val fs = graft.util.Fs.of(spark, dir)
+    val fs = Fs.of(spark, dir)
     val base = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(base)) return Seq.empty
     val midnight = nowMs - Math.floorMod(nowMs, 86400000L)
@@ -72,43 +126,15 @@ object HiveStore {
     * partition, counted per (path, year, day). The oracle counts the
     * same slice relationally; the Spark side proves layout + pruning
     * (the read filter hits only `path=click` directories). */
-  /** Unique per-run scratch dir (concurrent Verify/Bench runs on one
-    * machine must not race on a shared path), deleted on JVM exit. */
-  private[graft] def scratchDir(): String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_hive_store_")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p.toString
-  }
-
   def hiveWrite(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir()
+    val out = Fs.scratch("hive_store_")
     // The round-trip writes the slice the pruned read-back checks
     // (path=click): full layout fidelity, bounded file count — local
     // FS metadata calls shell out when the hadoop native lib is absent,
     // so file count, not bytes, dominates this demo's cost.
-    val df = Tables.events(spark, dir)
-      .where(col("event_type") === "click" && col("user_id") < 8)
-      .withColumn("tier", lit("raw"))
-      .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-      .withColumn("path", col("event_type"))
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-      .withColumn("year", year(col("ts")))
-      .withColumn("day", lpad(dayofyear(col("ts")).cast("string"), 3, "0"))
-      .drop("ts")
-    write(df, out)
-    // Partition values stay strings on read-back (day "003" must not be
-    // inferred back to int 3); conf is scoped to the eager file-index /
-    // schema-inference step and restored immediately.
-    val readBack = withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      read(spark, out)
-    }
-    readBack
+    write(layout(Tables.events(spark, dir)
+      .where(col("event_type") === "click" && col("user_id") < 8)), out)
+    read(spark, out)
       .where(col("tier") === "raw" && col("path") === "click")
       .groupBy("path", "year", "day")
       .agg(count(lit(1)).as("n_records"))
@@ -129,38 +155,10 @@ object HiveStore {
   /** Incremental backup sync — the write side of the reference's cloud
     * archive (README "Cloud Integration", utils/cloud-endpoint.ts):
     * copy to the archive exactly the hive partitions it does not hold
-    * yet. The partition diff is a broadcast anti-join of the primary's
-    * partition tuples against the archive's (metadata-sized both
-    * sides); only the missing partitions' data is then scanned —
-    * partition pruning makes a nightly 100 TB sync cost one listing
-    * plus the new day's bytes. Append-only, so a re-run after a crash
-    * copies nothing twice (same idempotence contract as
-    * [[Migration.migrate]]). */
-  def backupSync(spark: SparkSession, primary: String, archive: String): Long = {
-    val keys = Seq("tier", "context", "path", "year", "day")
-    val fs = graft.util.Fs.of(spark, archive)
-    val archivePath = new org.apache.hadoop.fs.Path(archive)
-    val archiveHasData = fs.exists(archivePath) &&
-      fs.listStatus(archivePath).exists(_.getPath.getName.startsWith("tier="))
-    val p = withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      read(spark, primary)
-    }
-    val missing =
-      if (archiveHasData) {
-        val have = withConfs(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-          read(spark, archive)
-        }.select(keys.map(col): _*).distinct()
-        p.join(broadcast(have), keys, "left_anti")
-      } else p
-    val staged = missing.localCheckpoint(false)
-    val copied = staged.count()
-    if (copied > 0)
-      staged.repartition(32, col("context"), col("path"), col("day"))
-        .write.mode("append").partitionBy(keys: _*).parquet(archive)
-    copied
-  }
+    * yet ([[appendMissing]]) — partition pruning makes a nightly 100 TB
+    * sync cost one listing plus the new day's bytes. */
+  def backupSync(spark: SparkSession, primary: String, archive: String): Long =
+    appendMissing(spark, read(spark, primary), archive)
 
   /** Round-trip: primary holds users < 6; the archive already holds a
     * stale backup of users < 2 (value+1000 marks it). One sync copies
@@ -168,27 +166,16 @@ object HiveStore {
     * never rewrites); a second sync copies nothing. The read-back
     * proves both via per-context counts and the stale marker. */
   def skBackupSync(spark: SparkSession, dir: String): DataFrame = {
-    def slice(maxUser: Int, shift: Double) =
-      Tables.events(spark, dir)
-        .where(col("event_type") === "signup" && col("user_id") < maxUser)
-        .withColumn("value", col("value") + shift)
-        .withColumn("tier", lit("raw"))
-        .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-        .withColumn("path", col("event_type"))
-        .withColumn("ts2", timestamp_millis(col("ts_ms")))
-        .withColumn("year", year(col("ts2")))
-        .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-        .drop("ts2")
-    val (primary, archive) = (scratchDir(), scratchDir())
+    def slice(maxUser: Int, shift: Double) = layout(Tables.events(spark, dir)
+      .where(col("event_type") === "signup" && col("user_id") < maxUser)
+      .withColumn("value", col("value") + shift))
+    val (primary, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     write(slice(6, 0.0), primary)
     write(slice(2, 1000.0), archive)
     val first = backupSync(spark, primary, archive)
     val second = backupSync(spark, primary, archive)
     require(second == 0L, s"re-sync must copy nothing, copied $second")
-    withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      read(spark, archive)
-    }
+    read(spark, archive)
       .groupBy("context")
       .agg(count(lit(1)).as("n_records"),
         sum(when(col("value") >= 1000.0, 1L).otherwise(0L)).as("n_stale"))
@@ -212,22 +199,11 @@ object HiveStore {
     * partition granularity — then count what survived. The oracle
     * applies the same day-of-year cutoff relationally. */
   def skRetention(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir()
-    val df = Tables.events(spark, dir)
-      .where(col("event_type") === "click" && col("user_id") < 4)
-      .withColumn("tier", lit("raw"))
-      .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-      .withColumn("path", col("event_type"))
-      .withColumn("ts2", timestamp_millis(col("ts_ms")))
-      .withColumn("year", year(col("ts2")))
-      .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-      .drop("ts2")
-    write(df, out)
+    val out = Fs.scratch("hive_store_")
+    write(layout(Tables.events(spark, dir)
+      .where(col("event_type") === "click" && col("user_id") < 4)), out)
     retentionSweep(spark, out, Map("raw" -> 10), nowMs = 1706659200000L)
-    withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      read(spark, out)
-    }
+    read(spark, out)
       .groupBy("context", "day")
       .agg(count(lit(1)).as("n_records"))
       .withColumn("day", col("day").cast("string"))
@@ -256,12 +232,9 @@ object HiveStore {
     * so it broadcasts; the data-bearing scans stay pruned and are never
     * shuffled. */
   def federatedRead(spark: SparkSession, primary: String, archive: String): DataFrame = {
-    val keys = Seq("tier", "context", "path", "year", "day")
     val p = read(spark, primary)
-    val a = read(spark, archive)
-    val pParts = p.select(keys.map(col): _*).distinct()
-    val archiveOnly = a.join(broadcast(pParts), keys, "left_anti")
-    p.unionByName(archiveOnly)
+    val pParts = p.select(Keys.map(col): _*).distinct()
+    p.unionByName(read(spark, archive).join(broadcast(pParts), Keys, "left_anti"))
   }
 
   /** Round-trip proving precedence: the primary holds users < 3, the
@@ -269,25 +242,14 @@ object HiveStore {
     * counts/averages must show original values for the overlap and
     * stale values only for the archive-only contexts (3–4). */
   def skFederatedRead(spark: SparkSession, dir: String): DataFrame = {
-    def slice(maxUser: Int, valueShift: Double) =
-      Tables.events(spark, dir)
-        .where(col("event_type") === "click" && col("user_id") < maxUser)
-        .withColumn("value", col("value") + valueShift)
-        .withColumn("tier", lit("raw"))
-        .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-        .withColumn("path", col("event_type"))
-        .withColumn("ts2", timestamp_millis(col("ts_ms")))
-        .withColumn("year", year(col("ts2")))
-        .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-        .drop("ts2")
-    val (primary, archive) = (scratchDir(), scratchDir())
+    def slice(maxUser: Int, valueShift: Double) = layout(Tables.events(spark, dir)
+      .where(col("event_type") === "click" && col("user_id") < maxUser)
+      .withColumn("value", col("value") + valueShift))
+    val (primary, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     write(slice(3, 0.0), primary)
     write(slice(5, 1000.0), archive)
-    val fed = withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      federatedRead(spark, primary, archive)
-    }
-    fed.groupBy("context")
+    federatedRead(spark, primary, archive)
+      .groupBy("context")
       .agg(count(lit(1)).as("n_records"), davg(col("value")).as("value_avg"))
       .orderBy("context")
   }

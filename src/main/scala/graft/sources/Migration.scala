@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.util.Confs.withConfs
+import graft.util.Fs
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,8 +31,6 @@ object Migration {
       .partitionBy("context", "path")
       .parquet(dir)
 
-  private val keys = Seq("tier", "context", "path", "year", "day")
-
   /** One migration pass: flat store → tiered target, append-only,
     * partitions already present in the target are skipped. Returns the
     * number of rows appended (0 on a re-run — idempotent). */
@@ -41,42 +39,9 @@ object Migration {
     // be recovered from the file path, exactly the reference's scanner
     // contract (migration-service.ts scan phase).
     val flat = spark.read.parquet(s"$flatDir/context=*/path=*")
-      .withColumn("context",
-        regexp_extract(col("_metadata.file_path"), "context=([^/]+)", 1))
-      .withColumn("path",
-        regexp_extract(col("_metadata.file_path"), "path=([^/]+)", 1))
-    val recs = flat
-      .withColumn("tier", lit("raw"))
-      .withColumn("ts2", timestamp_millis(col("ts_ms")))
-      // partition values are strings on disk; build them as strings so
-      // the skip-existing join keys line up with the read-back schema
-      .withColumn("year", year(col("ts2")).cast("string"))
-      .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-      .drop("ts2")
-    val fs = graft.util.Fs.of(spark, targetDir)
-    val targetPath = new org.apache.hadoop.fs.Path(targetDir)
-    // "has data" = has at least one tier=… partition dir — an existing
-    // but empty target (fresh scratch dir, first-ever run) is fresh
-    val targetHasData = fs.exists(targetPath) &&
-      fs.listStatus(targetPath).exists(_.getPath.getName.startsWith("tier="))
-    val fresh0 =
-      if (targetHasData) {
-        val existing = withConfs(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-          spark.read.parquet(targetDir)
-        }.select(keys.map(col): _*).distinct()
-        recs.join(broadcast(existing), keys, "left_anti")
-      } else recs
-    // count + write both consume fresh: cut lineage once so the flat
-    // scan + anti-join run once, not twice
-    val fresh = fresh0.localCheckpoint(false)
-    val appended = fresh.count()
-    if (appended > 0)
-      fresh.repartition(32, col("context"), col("path"), col("day"))
-        .write.mode("append")
-        .partitionBy(keys: _*)
-        .parquet(targetDir)
-    appended
+    HiveStore.appendMissing(spark, HiveStore.layout(flat,
+      regexp_extract(col("_metadata.file_path"), "context=([^/]+)", 1),
+      regexp_extract(col("_metadata.file_path"), "path=([^/]+)", 1)), targetDir)
   }
 
   // --------------------------------------------------------------- #52
@@ -84,7 +49,7 @@ object Migration {
     * nothing) → per-(path, year, day) counts. A non-idempotent second
     * pass would double every count and fail the hash compare. */
   def skFlatMigration(spark: SparkSession, dir: String): DataFrame = {
-    val (flat, target) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    val (flat, target) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     val slice = Tables.events(spark, dir)
       .where(col("event_type") === "signup" && col("user_id") < 6)
       .select(col("event_id"), col("user_id"), col("ts_ms"), col("value"),
@@ -93,10 +58,7 @@ object Migration {
     writeFlat(slice, flat)
     migrate(spark, flat, target)
     migrate(spark, flat, target)
-    withConfs(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
-      spark.read.parquet(target)
-    }
+    HiveStore.read(spark, target)
       .groupBy("path", "year", "day")
       .agg(count(lit(1)).as("n_records"))
       .withColumn("year", col("year").cast("int"))

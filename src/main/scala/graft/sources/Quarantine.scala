@@ -30,9 +30,13 @@ import org.apache.spark.sql.functions._
   * mistake shifts the oracle. */
 object Quarantine {
 
-  /** Validate every parquet file under `root` (size ≥ 100 bytes AND
-    * first record readable); move failures to `root/quarantine/<same
-    * subpath>` and log them. Returns the quarantined file count.
+  /** Validate the parquet files a reader of `root` scans, as listed by
+    * [[BufferUnion.eligibleFiles]]: files under any `processed/`,
+    * `quarantine/`, `failed/` or `repaired/` dir are skipped, because
+    * no read sees them. Each listed file is checked here (size ≥ 100
+    * bytes and first record readable); failures move to
+    * `root/quarantine/<same subpath>` and are logged. Returns the
+    * quarantined file count.
     *
     * Runs over the Hadoop FileSystem RESOLVED FROM THE PATH (not
     * hardcoded local), so the sweep works unchanged against HDFS/S3
@@ -42,19 +46,11 @@ object Quarantine {
   private[graft] def validateAndQuarantine(spark: SparkSession, root: String): Int = {
     import org.apache.hadoop.fs.Path
     val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) {
-          if (st.getPath.getName == "quarantine") Seq.empty
-          else files(st.getPath)
-        } else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Seq.empty
-      }
+    val fs = graft.util.Fs.of(spark, root)
     val rootUri = fs.makeQualified(rootP).toUri
     val logLines = scala.collection.mutable.ArrayBuffer[String]()
     var moved = 0
-    for (f <- files(rootP)) {
+    for (f <- BufferUnion.eligibleFiles(spark, root).map(new Path(_))) {
       val len = fs.getFileStatus(f).getLen
       val valid = len >= 100 && (try {
         // "first record readable" — one footer + one record, per file
@@ -86,7 +82,7 @@ object Quarantine {
 
   // --------------------------------------------------------------- #71
   def skQuarantineIngest(spark: SparkSession, dir: String): DataFrame = {
-    val store = HiveStore.scratchDir()
+    val store = graft.util.Fs.scratch("quarantine")
     Tables.events(spark, dir)
       .where(col("event_type") === "signup" && col("user_id") < 8)
       .select("event_id", "ts_ms", "user_id", "value")

@@ -58,8 +58,8 @@ object AnnStream {
     // three vec_id-range slices, one file per trigger (slice order is
     // immaterial: per-vector assignment is independent of batching)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_ann_src").toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_ann_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("ann_src"))
+    val base = graft.util.Fs.scratch("ann_store")
     bootstrap(spark, dir, base)
     buildStore(spark, srcDir, emb.schema, base)
     StoredIndex.search(spark, dir, base)
@@ -163,8 +163,8 @@ object AnnStream {
     graft.functions.KnownNonNullElements.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_annc_src").toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_annc_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("annc_src"))
+    val base = graft.util.Fs.scratch("annc_store")
     bootstrap(spark, dir, base)
     buildStore(spark, srcDir, emb.schema, base)
     compactIndexStore(spark, base)

@@ -43,7 +43,7 @@ object BandStream {
     val transSchema = ev.select(col("user_id"), col("ts_ms"),
       lit("").as("transition"), col("value")).schema
     val srcDir = Slices.stage(ev, "band", 3)
-    val root = java.nio.file.Files.createTempDirectory("graft_band_store").toString
+    val root = graft.util.Fs.scratch("band_store")
     Slices.drainInto(spark, srcDir, ev.schema, root) { (batch, snap) =>
       // carry-in: one pseudo-row per known user, sorting strictly
       // first (ts −1 < any epoch ts) and decisive AT the carried

@@ -34,7 +34,7 @@ object FunnelStream {
       .where(col("event_type").isin("view", "click", "purchase"))
       .select("user_id", "event_type", "ts_ms", "value")
     val srcDir = Slices.stage(ev, "funnel", 3)
-    val root = java.nio.file.Files.createTempDirectory("graft_funnel_store").toString
+    val root = graft.util.Fs.scratch("funnel_store")
     def staged(u: DataFrame): DataFrame = {
       val w = Window.partitionBy("user_id")
       u.withColumn("t1", min(when(col("event_type") === "view", col("ts_ms"))).over(w))

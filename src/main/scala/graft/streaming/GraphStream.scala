@@ -72,8 +72,8 @@ object GraphStream {
     graft.functions.DotProduct.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_graph_src").toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("graph_src"))
+    val base = graft.util.Fs.scratch("graph_store")
     buildStore(spark, dir, srcDir, emb.schema, base)
     // serve from the maintained store: mutual filter + presentation sort
     KnnGraph.mutualEdges(readTopk(spark, base))

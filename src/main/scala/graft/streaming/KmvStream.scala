@@ -36,8 +36,8 @@ object KmvStream {
     // streamDedupLsh staging; slice order is immaterial here — the
     // sketch union is fully order-free)
     val srcDir = Slices.stage(docs.repartitionByRange(3, col("doc_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_kmv_src").toString)
-    val root = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("kmv_src"))
+    val root = graft.util.Fs.scratch("kmv_store")
     val skSchema = KmvOverlap.sketches(docs).schema
     Slices.drainInto(spark, srcDir, docs.schema, root) { (batch, snap) =>
       val sp = batch.sparkSession
@@ -95,8 +95,8 @@ object KmvStream {
     graft.functions.BoundedTopK.register(spark)
     val docs = graft.Tables.documents(spark, dir)
     val srcDir = Slices.stage(docs.repartitionByRange(3, col("doc_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_bm25_src").toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_bm25_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("bm25_src"))
+    val base = graft.util.Fs.scratch("bm25_store")
     drainBm25Into(spark, srcDir, docs.schema, base)
     base
   }

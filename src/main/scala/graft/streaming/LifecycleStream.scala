@@ -35,7 +35,7 @@ object LifecycleStream {
     val transSchema = ev.select(col("user_id"), col("ts_ms"), lit("").as("transition"),
       lit("").as("trigger"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
-    val root = java.nio.file.Files.createTempDirectory("graft_lifecycle_store").toString
+    val root = graft.util.Fs.scratch("lifecycle_store")
     Slices.drainInto(spark, Slices.stage(ev, "lifecycle", 3), ev.schema, root) { (batch, snap) =>
       val carry = snap.read("carry", carrySchema)
       val ann = Sessions.lifecycleAnnotated(batch.localCheckpoint(), carry)
@@ -71,7 +71,7 @@ object LifecycleStream {
     val transSchema = ev.select(col("user_id"), lit("").as("watcher_id"), col("ts_ms"),
       lit("").as("transition"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
-    val root = java.nio.file.Files.createTempDirectory("graft_multithr_store").toString
+    val root = graft.util.Fs.scratch("multithr_store")
     Slices.drainInto(spark, Slices.stage(ev, "multithr", 3), ev.schema, root) { (batch, snap) =>
       val carry = snap.read("carry", carrySchema)
       val ann = Sessions.multiThresholdAnnotated(batch.localCheckpoint(), carry)

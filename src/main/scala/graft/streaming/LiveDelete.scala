@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.similarity.{Bm25Store, DeleteRepair, Embeddings, KnnGraph, StoredIndex}
+import graft.util.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,9 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object LiveDelete {
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   /** The arrival split around the delete: the lowest two thirds of
     * the ids arrive before it, the rest after it. */
   private def arrivals(df: DataFrame, idCol: String): (DataFrame, DataFrame) = {
@@ -61,9 +59,9 @@ object LiveDelete {
     graft.functions.L2Distance.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
-    val srcDir = tmp("graft_lived_ann_src")
-    val base = tmp("graft_lived_ann_store")
-    val ckpt = Some(tmp("graft_lived_ann_ckpt"))
+    val srcDir = Fs.scratch("lived_ann_src")
+    val base = Fs.scratch("lived_ann_store")
+    val ckpt = Some(Fs.scratch("lived_ann_ckpt"))
     val (before, after) = arrivals(emb, "vec_id")
     Slices.stage(before.repartitionByRange(2, col("vec_id")), spark_partition_id(), 2, srcDir)
     AnnStream.bootstrap(spark, dir, base)
@@ -87,9 +85,9 @@ object LiveDelete {
     graft.functions.DotProduct.register(spark)
     graft.functions.KnownNonNullElements.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
-    val srcDir = tmp("graft_lived_knn_src")
-    val base = tmp("graft_lived_knn_store")
-    val ckpt = Some(tmp("graft_lived_knn_ckpt"))
+    val srcDir = Fs.scratch("lived_knn_src")
+    val base = Fs.scratch("lived_knn_store")
+    val ckpt = Some(Fs.scratch("lived_knn_ckpt"))
     val (before, after) = arrivals(emb, "vec_id")
     Slices.stage(before.repartitionByRange(2, col("vec_id")), spark_partition_id(), 2, srcDir)
     GraphStream.buildStore(spark, dir, srcDir, emb.schema, base, ckpt)
@@ -111,9 +109,9 @@ object LiveDelete {
   def streamBm25Deleted(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.BoundedTopK.register(spark)
     val docs = graft.Tables.documents(spark, dir)
-    val srcDir = tmp("graft_lived_bm_src")
-    val base = tmp("graft_lived_bm_store")
-    val ckpt = Some(tmp("graft_lived_bm_ckpt"))
+    val srcDir = Fs.scratch("lived_bm_src")
+    val base = Fs.scratch("lived_bm_store")
+    val ckpt = Some(Fs.scratch("lived_bm_ckpt"))
     val (before, after) = arrivals(docs, "doc_id")
     Slices.stage(before.repartitionByRange(2, col("doc_id")), spark_partition_id(), 2, srcDir)
     KmvStream.drainBm25Into(spark, srcDir, docs.schema, base, ckpt)

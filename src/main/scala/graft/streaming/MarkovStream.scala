@@ -39,7 +39,7 @@ object MarkovStream {
     val countSchema = ev.select(col("event_type").as("from_type"),
       col("event_type").as("to_type"), col("event_id").as("n")).schema
     val srcDir = Slices.stage(ev, "markov", 3)
-    val root = java.nio.file.Files.createTempDirectory("graft_markov_store").toString
+    val root = graft.util.Fs.scratch("markov_store")
     Slices.drainInto(spark, srcDir, ev.schema, root) { (batch, snap) =>
       // carry-in rows sort strictly first per user (slice time
       // ranges are disjoint), so their own lag stays null and the

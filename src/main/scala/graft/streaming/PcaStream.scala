@@ -42,8 +42,8 @@ object PcaStream {
     graft.functions.DotProduct.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_pca_src").toString)
-    val root = java.nio.file.Files.createTempDirectory("graft_pca_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("pca_src"))
+    val root = graft.util.Fs.scratch("pca_store")
     val st = maintainMoments(spark, srcDir, emb.schema, root)
     // projection over the accumulated corpus with the STORE's moments
     val vecs = Embeddings.vecsOf(spark.read.parquet(srcDir))
@@ -105,8 +105,8 @@ object PcaStream {
     val ref = graft.Tables.embeddings(spark, dir)
       .where(pmod(col("vec_id"), lit(4L)) =!= 3L)
     val srcDir = Slices.stage(ref.repartitionByRange(3, col("vec_id")),
-      spark_partition_id(), 3, java.nio.file.Files.createTempDirectory("graft_drift_src").toString)
-    val root = java.nio.file.Files.createTempDirectory("graft_drift_store").toString
+      spark_partition_id(), 3, graft.util.Fs.scratch("drift_src"))
+    val root = graft.util.Fs.scratch("drift_store")
     val st = maintainMoments(spark, srcDir, ref.schema, root)
     graft.similarity.DriftMonitor.reportFromMoments(
       spark, dir, 0.5, st.getSeq[Long](0).toArray, st.getLong(1))

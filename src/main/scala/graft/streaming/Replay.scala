@@ -62,7 +62,7 @@ object Replay {
       graft.Tables.events(spark, dir).where(graft.Tables.tsRange(tsType, startMs, endMs))
         .select(col("ts_ms"), col("event_type"), col("value"), col("user_id")),
       element_at(lit(position.toArray), expr(s"(ts_ms - $startMs) div $sliceMs").cast("int") + 1),
-      nSlices, java.nio.file.Files.createTempDirectory("graft_replay_stage").toString)
+      nSlices, graft.util.Fs.scratch("replay_stage"))
     Staged(out, nSlices, sliceMs, startMs, endMs)
   }
 
@@ -98,11 +98,8 @@ object Replay {
 
   def streamReplay(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(spark, dir, ReplayStartMs, ReplayEndMs, ReplaySliceMs)
-    try Slices.toMemory(bucketAgg(replayStream(spark, staged)), OutputMode.Complete)
+    Slices.toMemory(bucketAgg(replayStream(spark, staged)), OutputMode.Complete)
       .orderBy("event_type", "bucket_ms")
-    finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged.dir))
-    }
   }
 
   // --------------------------------------------------------------- #52b
@@ -133,7 +130,7 @@ object Replay {
         .format("memory").queryName(name)
         .outputMode(OutputMode.Complete)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_ckpt_replay_live").toString)
+          graft.util.Fs.scratch("ckpt_replay_live"))
         .trigger(Trigger.ProcessingTime(s"$rateMs milliseconds"))
         .start()
       def committed = q.recentProgress.count(_.numInputRows > 0)

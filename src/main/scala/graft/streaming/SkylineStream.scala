@@ -31,8 +31,8 @@ object SkylineStream {
       .select(col("p_partkey"), col("p_retailprice").as("price"),
         col("p_size").as("size"))
     val srcDir = Slices.stage(p, pmod(col("p_partkey"), lit(3)), 3,
-      java.nio.file.Files.createTempDirectory("graft_sky_src").toString)
-    val root = java.nio.file.Files.createTempDirectory("graft_sky_store").toString
+      graft.util.Fs.scratch("sky_src"))
+    val root = graft.util.Fs.scratch("sky_store")
     Slices.drainInto(spark, srcDir, p.schema, root) { (batch, snap) =>
       Seq(ManifestStore.replaceTableOp("frontier", "", () =>
         Skyline.skylineOf(snap.read("frontier", p.schema).unionByName(batch))))

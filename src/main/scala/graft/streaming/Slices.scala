@@ -65,7 +65,7 @@ private[graft] object Slices {
     val bounds = df.agg(min("ts_ms"), max("ts_ms")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     stage(df, expr(s"(ts_ms - $lo) div ${(hi - lo) / nSlices + 1}"), nSlices,
-      java.nio.file.Files.createTempDirectory(s"graft_${tag}_src").toString)
+      graft.util.Fs.scratch(s"${tag}_src"))
   }
 
   /** One file of `srcDir` per micro-batch, oldest modification time
@@ -85,7 +85,7 @@ private[graft] object Slices {
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
       .option("checkpointLocation", checkpoint.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString))
+        graft.util.Fs.scratch("ckpt")))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -93,15 +93,18 @@ private[graft] object Slices {
 
   /** Run the streaming frame `df` under Trigger.AvailableNow into a
     * fresh memory table in `mode` and return that table once the
-    * source is drained. */
+    * source is drained. The sink's temp view is dropped once the
+    * returned frame is analyzed: the frame keeps the sink's rows, the
+    * session catalog does not. */
   def toMemory(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = "graft_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
     df.writeStream.format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+      .option("checkpointLocation", graft.util.Fs.scratch("ckpt"))
       .trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    df.sparkSession.table(name)
+    val out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    out
   }
 
   /** [[drain]] into the ManifestStore at `root`: each trigger's
@@ -136,7 +139,7 @@ private[graft] object Slices {
     snap.tableFiles(BatchTable).map(_.stripPrefix("batch-").toLong).maxOption
 
   private def batchOp(sp: SparkSession, batchId: Long): ManifestStore.TableOp =
-    ManifestStore.TableOp(BatchTable, "", None, replace = true, { dir =>
+    ManifestStore.TableOp(BatchTable, "", None, replace = true, { (_, dir) =>
       val p = new org.apache.hadoop.fs.Path(dir, s"batch-$batchId")
       graft.util.Fs.of(sp, dir).create(p, true).close()
     })

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables.NanosAsLong
 import graft.util.Confs.withConfs
-import graft.util.ManifestStore
+import graft.util.{Fs, ManifestStore}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -54,9 +54,6 @@ object Streaming {
       .parquet(dir))
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
   }
-
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
 
   /** The events table as a batch frame under the stream schema. */
   private def rawEvents(spark: SparkSession, dir: String): DataFrame =
@@ -241,8 +238,8 @@ object Streaming {
     * run exports nothing. Counts double (and the hash compare fails)
     * if recovery re-processes. */
   def streamExportSink(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
-    val out = tmp("export_sink")
-    val ckpt = tmp("ckpt_export")
+    val out = Fs.scratch("export_sink")
+    val ckpt = Fs.scratch("ckpt_export")
     def runOnce(): Unit = {
       val q = eventStream(spark, dir)
         .select("event_id", "user_id", "event_type", "ts_ms", "value")
@@ -361,8 +358,8 @@ object Streaming {
   def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.TimeSeries
     val raw = rawEvents(spark, dir)
-    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("tier_src"))
-    val root = tmp("tier_store")
+    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, Fs.scratch("tier_src"))
+    val root = Fs.scratch("tier_store")
     val tierSchema = tierPartials(raw, 300000L).schema
     Slices.drainInto(spark, srcDir, raw.schema, root) { (batch, snap) =>
       Seq(ManifestStore.replaceTableOp("tier5m", "", () =>
@@ -397,13 +394,13 @@ object Streaming {
     * Oracle: the same DuckDB ASOF LEFT JOIN as
     * sk_asof_join/sk_asof_native. */
   def streamAsOf(spark: SparkSession, dir: String): DataFrame =
-    asOfInto(spark, dir, asOfStage(spark, dir), tmp("asof_store"))
+    asOfInto(spark, dir, asOfStage(spark, dir), Fs.scratch("asof_store"))
 
   /** Stage the clicks as three slices (three triggers); returns the
     * source dir. */
   private[graft] def asOfStage(spark: SparkSession, dir: String): String = withConfs(spark, NanosAsLong) {
     Slices.stage(rawEvents(spark, dir).where(col("event_type") === "click"),
-      pmod(col("event_id"), lit(3)), 3, tmp("asof_src"))
+      pmod(col("event_id"), lit(3)), 3, Fs.scratch("asof_src"))
   }
 
   /** Drain the staged clicks at `srcDir` into `root` and read the
@@ -444,7 +441,7 @@ object Streaming {
     * published vs final store over all touched buckets) reuses the
     * BATCH operator's oracle verbatim. */
   def streamTierCorrection(spark: SparkSession, dir: String): DataFrame = {
-    val (srcDir, root) = (tmp("corr_src"), tmp("corr_store"))
+    val (srcDir, root) = (Fs.scratch("corr_src"), Fs.scratch("corr_store"))
     tierCorrectionInto(spark, srcDir, tierCorrectionStage(spark, dir, srcDir, root), root)
   }
 
@@ -533,7 +530,7 @@ object Streaming {
     * set-equality against the one-shot batch run and that cross-
     * trigger pairs actually occurred (≥3 triggers exercised). */
   def streamDedupLsh(spark: SparkSession, dir: String): DataFrame =
-    dedupLshInto(spark, dedupLshStage(spark, dir), tmp("lshstore"))
+    dedupLshInto(spark, dedupLshStage(spark, dir), Fs.scratch("lshstore"))
 
   /** Stage the documents as three doc_id ranges (three triggers) — the
     * arrival split StreamingSpec recomputes to prove cross-trigger
@@ -542,7 +539,7 @@ object Streaming {
     Slices.stage(
       spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
         .repartitionByRange(3, col("doc_id")),
-      spark_partition_id(), 3, tmp("lshsrc"))
+      spark_partition_id(), 3, Fs.scratch("lshsrc"))
 
   private val lshPairsSchema = StructType(Seq(StructField("id_a", LongType),
     StructField("id_b", LongType), StructField("jaccard", DoubleType)))
@@ -599,8 +596,8 @@ object Streaming {
         // pairs keep the verify stage's parallelism: appendOp's
         // one-file write would run every Jaccard check in one task
         Seq(
-          ManifestStore.TableOp("pairs", "", Some(() => Nil), replace = false,
-            dir => within.unionAll(cross).write.mode("append").parquet(dir)),
+          ManifestStore.TableOp("pairs", "", Some(_ => Nil), replace = false,
+            (_, dir) => within.unionAll(cross).write.mode("append").parquet(dir)),
           ManifestStore.appendOp("bands", "", () => Nil, () => bBands),
           ManifestStore.appendOp("toks", "", () => Nil, () => bToks))
       } finally cached.foreach(_.unpersist())
@@ -659,8 +656,8 @@ object Streaming {
   def streamHll(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.Hll
     val raw = rawEvents(spark, dir)
-    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, tmp("hll_src"))
-    val root = tmp("hll_store")
+    val srcDir = Slices.stage(raw, pmod(col("event_id"), lit(4)), 4, Fs.scratch("hll_src"))
+    val root = Fs.scratch("hll_store")
     val pairSchema = StructType(Seq(
       StructField("event_type", StringType), StructField("user_id", LongType)))
     val regSchema = Hll.registers(spark.read.schema(pairSchema).parquet(srcDir)).schema
@@ -699,8 +696,8 @@ object Streaming {
     import graft.operators.Cms
     graft.functions.NGrams.register(spark)
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val srcDir = Slices.stage(docs, pmod(col("doc_id"), lit(4)), 4, tmp("cms_src"))
-    val root = tmp("cms_store")
+    val srcDir = Slices.stage(docs, pmod(col("doc_id"), lit(4)), 4, Fs.scratch("cms_src"))
+    val root = Fs.scratch("cms_store")
     val gramSchema = Cms.gramCounts(docs).schema
     val cntSchema = Cms.hashed(Cms.gramCounts(docs))
       .groupBy("salt", "idx").agg(sum("n").as("c")).schema

@@ -64,9 +64,7 @@ object DeleteLog {
       ManifestStore.replaceTableOp(Table, "", () =>
         snap.read(Table, schemaOf(idCol)).unionByName(delIds.toDF(idCol)).distinct())
     else
-      ManifestStore.TableOp(Table, "", None, replace = false,
-        dir => delIds.toDF(idCol).distinct().coalesce(1)
-          .write.mode("append").parquet(dir))
+      ManifestStore.appendOp(Table, "", () => Nil, () => delIds.toDF(idCol).distinct())
 
   /** The sweep's fold: the log at `snap` rewritten as one file, or
     * nothing when the store has no log. */

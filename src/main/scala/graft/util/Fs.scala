@@ -20,4 +20,23 @@ object Fs {
   def of(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every [[scratch]] dir of this JVM; one shutdown hook deletes them
+    * all. */
+  private[graft] lazy val registered: java.util.Set[String] = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    sys.addShutdownHook(dirs.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
+    dirs
+  }
+
+  /** A fresh local dir `graft_<tag>…` for one run's scratch data
+    * (concurrent runs on one machine never share a path), deleted at
+    * JVM exit. Staged stores ([[graft.sources.Staging.stagedDir]]) are
+    * meant to outlive the JVM and never come from here. */
+  def scratch(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    registered.add(dir)
+    dir
+  }
 }

@@ -155,79 +155,62 @@ object ManifestStore {
     * dir left empty disappears — durably; no recovery step can
     * resurrect it); without it they are kept alongside the new files.
     * An op that reads the store it changes is built by the
-    * [[publishOps]] builder from the snapshot handed to it. */
+    * [[publishOps]] builder from the snapshot handed to it; `touched`
+    * and `write` also receive that snapshot, so an op built outside a
+    * builder ([[compactOp]]) reads the same resolution. */
   final case class TableOp(table: String, partCol: String,
-      touched: Option[() => Seq[Any]], replace: Boolean,
-      write: String => Unit)
+      touched: Option[Snapshot => Seq[Any]], replace: Boolean,
+      write: (Snapshot, String) => Unit)
 
   /** Append `delta()`'s rows into `touched` partitions of `table`. */
   def appendOp(table: String, partCol: String, touched: () => Seq[Any],
       delta: () => DataFrame): TableOp =
-    TableOp(table, partCol, Some(touched), replace = false,
-      dir => writePartitioned(delta(), partCol, dir))
+    TableOp(table, partCol, Some(_ => touched()), replace = false,
+      (_, dir) => writePartitioned(delta(), partCol, dir))
 
   /** Replace the `touched` partitions' content of `table` with
     * `repaired()` (whose rows must all belong to touched partitions). */
   def rewriteOp(table: String, partCol: String, touched: () => Seq[Any],
       repaired: () => DataFrame): TableOp =
-    TableOp(table, partCol, Some(touched), replace = true,
-      dir => writePartitioned(repaired(), partCol, dir))
+    TableOp(table, partCol, Some(_ => touched()), replace = true,
+      (_, dir) => writePartitioned(repaired(), partCol, dir))
 
   /** Replace the WHOLE table with `data()` (the blue/green rotation
     * move; `partCol` "" for an unpartitioned table). */
   def replaceTableOp(table: String, partCol: String,
       data: () => DataFrame): TableOp =
     TableOp(table, partCol, None, replace = true,
-      dir => writePartitioned(data(), partCol, dir))
+      (_, dir) => writePartitioned(data(), partCol, dir))
 
-  /** The scheduled small-file sweep for one table, INCREMENTAL: only
-    * the HOT dirs — more than `maxFiles` committed files — are read
-    * and collapsed to one `sortCols`-sorted file each; an already-
-    * compact dir is not read, not rewritten, and its shard + index
-    * line carry forward verbatim. The hot set is decided UNDER the
-    * publish lease from the manifest's per-dir file counts alone
-    * (O(index buckets) metadata reads, zero data reads), so the
-    * sweep's cost tracks the small-file PROBLEM — O(touched) — never
-    * the store size. A fully compact table publishes NOTHING (no
-    * version bump). An unpartitioned table keeps the whole-table shape
-    * (its one dir IS the table). */
+  /** The scheduled small-file sweep for one partitioned table,
+    * INCREMENTAL: only the HOT dirs — more than one committed file —
+    * are read and collapsed to one `sortCols`-sorted file each; an
+    * already-compact dir is not read, not rewritten, and its shard +
+    * index line carry forward verbatim. The hot set is decided UNDER
+    * the publish lease from the per-dir file counts of the index the
+    * publish resolved (O(index buckets) metadata reads, zero data
+    * reads), so the sweep's cost tracks the small-file PROBLEM —
+    * O(touched) — never the store size. A fully compact table
+    * publishes NOTHING (no version bump). */
   def compactOp(spark: SparkSession, root: String, table: String,
-      partCol: String, sortCols: Seq[String], schema: StructType,
-      maxFiles: Int = 1): TableOp =
-    if (partCol.isEmpty)
-      TableOp(table, partCol, None, replace = true, { dir =>
-        val snap = readTable(spark, root, table, schema)
-        val laid = snap.coalesce(1).sortWithinPartitions(sortCols.map(col): _*)
-        writeLaidOut(laid, partCol, dir)
+      partCol: String, sortCols: Seq[String], schema: StructType): TableOp = {
+    require(partCol.nonEmpty, s"compactOp needs a partitioned table: $table")
+    val fs = Fs.of(spark, root)
+    val prefix = if (table.isEmpty) s"$partCol=" else s"$table/$partCol="
+    def hot(snap: Snapshot): Seq[IxLine] =
+      snap.index.filter(l => l.dk.startsWith(prefix) && l.n > 1)
+    TableOp(table, partCol,
+      Some(snap => hot(snap).map(l => l.dk.stripPrefix(prefix): Any)),
+      replace = true, { (snap, dir) =>
+        val files = hot(snap).flatMap(l => shardFiles(fs, root, l.shard))
+        if (files.nonEmpty) {
+          val hotRows = spark.read.option("basePath", dir).schema(schema)
+            .parquet(files.map(f => s"$root/$f"): _*)
+          writeLaidOut(hotRows.repartition(col(partCol))
+            .sortWithinPartitions(sortCols.map(col): _*), partCol, dir)
+        }
       })
-    else {
-      val prefix = if (table.isEmpty) s"$partCol=" else s"$table/$partCol="
-      // forced by the touched thunk, i.e. under the publish lease
-      lazy val hot: Seq[String] = {
-        val fs = Fs.of(spark, root)
-        val v = committedVersion(fs, root)
-        indexIx(fs, root, v)
-          .filter(l => l.dk.startsWith(prefix) && l.n > maxFiles)
-          .map(_.dk)
-      }
-      TableOp(table, partCol,
-        Some(() => hot.map(dk => dk.stripPrefix(prefix): Any)),
-        replace = true, { dir =>
-          if (hot.nonEmpty) {
-            val fs = Fs.of(spark, root)
-            val m = readManifest(fs, root, committedVersion(fs, root))
-            // resolve ONLY the hot dirs' shards (index shards are warm
-            // from the hot-set scan above)
-            val files = hot.flatMap(dk =>
-              dirShardOf(fs, root, m, dk).toSeq
-                .flatMap(s => shardFiles(fs, root, s)))
-            val hotRows = spark.read.option("basePath", dir).schema(schema)
-              .parquet(files.map(f => s"$root/$f"): _*)
-            writeLaidOut(hotRows.repartition(col(partCol))
-              .sortWithinPartitions(sortCols.map(col): _*), partCol, dir)
-          }
-        })
-    }
+  }
 
   private def writePartitioned(df: DataFrame, partCol: String, dir: String): Unit =
     writeLaidOut(
@@ -561,9 +544,12 @@ object ManifestStore {
     * is flattened on first use, so a publish whose builder never reads
     * the store never flattens the index. */
   final class Snapshot private[ManifestStore] (spark: SparkSession,
-      root: String, val version: Int, resolve: => Seq[String]) {
+      fs: FileSystem, root: String, val version: Int) {
 
-    lazy val files: Seq[String] = resolve
+    /** The flattened index, read on first use. */
+    private[ManifestStore] lazy val index: Seq[IxLine] = indexIx(fs, root, version)
+
+    lazy val files: Seq[String] = filesOf(fs, root, index)
 
     def tableFiles(table: String): Seq[String] =
       if (table.isEmpty) files
@@ -575,7 +561,7 @@ object ManifestStore {
       * a whole-dir read — but the scan can never see a mid-publish
       * state. The caller supplies the full schema INCLUDING the
       * partition column, which also pins that column's type against
-      * the shared session's `partitionColumnTypeInference` setting.
+      * the shared session's partition-type inference setting.
       * An unpublished/empty table reads as an empty frame. */
     def read(table: String, schema: StructType): DataFrame = {
       val fl = tableFiles(table)
@@ -591,8 +577,7 @@ object ManifestStore {
 
   def snapshot(spark: SparkSession, root: String): Snapshot = {
     val fs = Fs.of(spark, root)
-    val v = committedVersion(fs, root)
-    new Snapshot(spark, root, v, filesOf(fs, root, indexIx(fs, root, v)))
+    new Snapshot(spark, fs, root, committedVersion(fs, root))
   }
 
   /** Read the committed snapshot of a single-table store (the root is
@@ -608,12 +593,13 @@ object ManifestStore {
     snapshot(spark, root).read(table, schema)
 
   /** Copy the committed `tables` — (name, partition column, schema) —
-    * of the store at `src` into a fresh temp root named `prefix…`, all
-    * in one commit, all read off one snapshot; returns the new root.
-    * The mutable-clone step of every staged (immutable, shared) store. */
-  def cloneTables(spark: SparkSession, src: String, prefix: String,
+    * of the store at `src` into a fresh [[Fs.scratch]] root tagged
+    * `tag`, all in one commit, all read off one snapshot; returns the
+    * new root. The mutable-clone step of every staged (immutable,
+    * shared) store. */
+  def cloneTables(spark: SparkSession, src: String, tag: String,
       tables: Seq[(String, String, StructType)]): String = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val root = Fs.scratch(tag)
     val snap = snapshot(spark, src)
     publishOps(spark, root, tables.map { case (t, partCol, schema) =>
       replaceTableOp(t, partCol, () => snap.read(t, schema)) })
@@ -816,11 +802,11 @@ object ManifestStore {
       val allVs = manifestVersions(fs, root)
       val committedVs = allVs.filter(w => fs.exists(markerPath(root, w)))
       val v = committedVs.maxOption.getOrElse(0)
-      // whole-table ops and snapshot reads are the shapes that flatten
-      // the index (lazily, so every partition-scoped publish stays
-      // O(touched))
-      lazy val curIndexFull: Seq[IxLine] = indexIx(fs, root, v)
-      val ops = build(new Snapshot(spark, root, v, filesOf(fs, root, curIndexFull)))
+      // whole-table ops, snapshot reads and compaction are the shapes
+      // that flatten the index (lazily, so every partition-scoped
+      // publish stays O(touched))
+      val snap = new Snapshot(spark, fs, root, v)
+      val ops = build(snap)
       require(ops.map(_.table).distinct.size == ops.size,
         s"one publish may carry at most one op per table: ${ops.map(_.table)}")
       if (ops.isEmpty) return
@@ -880,14 +866,14 @@ object ManifestStore {
       case class OpDone(op: TableOp, dirs: Seq[String],
           newByDir: Map[String, Seq[String]], wholeTable: Boolean)
       def manifestDirsOf(table: String): Seq[String] =
-        curIndexFull.map(_.dk).filter(dk =>
+        snap.index.map(_.dk).filter(dk =>
           if (table.isEmpty) true else dk == table || dk.startsWith(s"$table/"))
       val staged = ops.flatMap { op =>
         val wholeTable = op.touched.isEmpty
         val preDirs: Seq[String] =
           if (op.partCol.isEmpty) Seq(dirKeyOf(op.table, "", null))
           else op.touched match {
-            case Some(t) => t().map(x => dirKeyOf(op.table, op.partCol, x))
+            case Some(t) => t(snap).map(x => dirKeyOf(op.table, op.partCol, x))
             case None => (diskDirs(fs, root, op.table, op.partCol) ++
               manifestDirsOf(op.table)).distinct
           }
@@ -904,7 +890,7 @@ object ManifestStore {
         }
       }
       if (staged.isEmpty) return // nothing touched — no version bump
-      if (staged.size == 1) staged.head._1.write(tableDir(root, staged.head._1.table))
+      if (staged.size == 1) staged.head._1.write(snap, tableDir(root, staged.head._1.table))
       else {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -913,7 +899,7 @@ object ManifestStore {
         // released could leak its files into a successor publish's
         // new-file listing
         val jobs = staged.map { case (op, _, _) =>
-          Future(scala.util.Try(op.write(tableDir(root, op.table))))
+          Future(scala.util.Try(op.write(snap, tableDir(root, op.table))))
         }
         Await.result(Future.sequence(jobs), scala.concurrent.duration.Duration.Inf)
           .foreach(_.get)
@@ -1023,7 +1009,7 @@ object ManifestStore {
           // growth / first publish: one full re-bucket
           val changedSet = changedDirs.toSet
           val newIndex = scala.collection.mutable.LinkedHashMap[String, IxLine]()
-          for (l <- curIndexFull if !changedSet(l.dk))
+          for (l <- snap.index if !changedSet(l.dk))
             newIndex += l.dk -> l
           for (dk <- changedDirs) {
             val merged = mergedOf(dk)

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Intervals
 import graft.sources.{Compaction, HiveStore}
+import graft.util.Fs
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -13,19 +14,11 @@ class CompactionSpec extends SparkSpec {
   private def fs: FileSystem =
     FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
-  private def liveSlice(dir: String) =
-    Tables.events(spark, dir)
-      .where(col("event_type") === "purchase" && col("user_id") < 3)
-      .withColumn("tier", lit("raw"))
-      .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-      .withColumn("path", col("event_type"))
-      .withColumn("ts2", timestamp_millis(col("ts_ms")))
-      .withColumn("year", year(col("ts2")))
-      .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-      .drop("ts2")
+  private def liveSlice(dir: String) = HiveStore.layout(Tables.events(spark, dir)
+    .where(col("event_type") === "purchase" && col("user_id") < 3))
 
   test("compaction: one file per year group, cold day dirs removed, rows sorted by ts") {
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     HiveStore.write(liveSlice(sfDir), live)
     val before = fs.globStatus(new Path(live, "tier=*/context=*/path=*/year=*/day=*")).length
     assert(before > 3, s"expected several day dirs, got $before")
@@ -50,7 +43,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("second scheduled run preserves previously archived days (append-only archive)") {
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     HiveStore.write(liveSlice(sfDir), live)
     val expected = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
@@ -68,7 +61,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("crash between publish and commit loses nothing; rerun completes idempotently") {
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     HiveStore.write(liveSlice(sfDir), live)
     val expected = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
@@ -97,7 +90,7 @@ class CompactionSpec extends SparkSpec {
     // no marker was ever committed, so the crashed run's archive files
     // are uncommitted and every day still reads from live — whatever
     // cutoff a later run is scheduled with
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
     HiveStore.write(liveSlice(sfDir), live)
     def ids(): Seq[Long] = Compaction.compactedRead(spark, live, archive)
       .select("event_id").as[Long].collect().sorted.toSeq
@@ -114,8 +107,8 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compactedRead is identical mid-crash (archive published, source not yet cleaned)") {
-    val (live, archive) = (HiveStore.scratchDir(), HiveStore.scratchDir())
-    val (liveDirty, _) = (HiveStore.scratchDir(), ())
+    val (live, archive) = (Fs.scratch("hive_store_"), Fs.scratch("hive_store_"))
+    val (liveDirty, _) = (Fs.scratch("hive_store_"), ())
     HiveStore.write(liveSlice(sfDir), live)
     HiveStore.write(liveSlice(sfDir), liveDirty) // = live store before cleanup
     Compaction.compactDays(spark, live, archive, cutoffDay = "016")

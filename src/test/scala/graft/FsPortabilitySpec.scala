@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Compaction, HiveStore, Migration}
+import graft.util.Fs
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -28,21 +29,13 @@ class FsPortabilitySpec extends SparkSpec {
 
   /** A scratch root addressed through the non-default scheme. */
   private def graftRoot(): String =
-    "graftfs://" + HiveStore.scratchDir()
+    "graftfs://" + Fs.scratch("hive_store_")
 
   private def fsOf(p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def liveSlice(dir: String) =
-    Tables.events(spark, dir)
-      .where(col("event_type") === "purchase" && col("user_id") < 3)
-      .withColumn("tier", lit("raw"))
-      .withColumn("context", concat(lit("vessels__urn-"), col("user_id")))
-      .withColumn("path", col("event_type"))
-      .withColumn("ts2", timestamp_millis(col("ts_ms")))
-      .withColumn("year", year(col("ts2")))
-      .withColumn("day", lpad(dayofyear(col("ts2")).cast("string"), 3, "0"))
-      .drop("ts2")
+  private def liveSlice(dir: String) = HiveStore.layout(Tables.events(spark, dir)
+    .where(col("event_type") === "purchase" && col("user_id") < 3))
 
   test("graftfs scheme resolves to the test filesystem, not local") {
     val fs = fsOf("graftfs:///tmp/x")
@@ -64,7 +57,7 @@ class FsPortabilitySpec extends SparkSpec {
   }
 
   test("backupSync diffs and copies across schemes (local primary -> graftfs archive)") {
-    val primary = HiveStore.scratchDir()
+    val primary = Fs.scratch("hive_store_")
     val archive = graftRoot()
     HiveStore.write(liveSlice(sfDir), primary)
     val copied = HiveStore.backupSync(spark, primary, archive)
@@ -161,7 +154,7 @@ class FsPortabilitySpec extends SparkSpec {
   }
 
   test("Migration.migrate lands a flat store into a graftfs tiered target") {
-    val flat = HiveStore.scratchDir()
+    val flat = Fs.scratch("hive_store_")
     val target = graftRoot()
     Tables.events(spark, sfDir)
       .where(col("event_type") === "view" && col("user_id") < 3)

@@ -29,9 +29,19 @@ class HiveStoreSpec extends SparkSpec {
     assert(deleted.exists(_.contains("day=005")), deleted.mkString(","))
     assert(!deleted.exists(_.contains("day=040")))
     assert(!deleted.exists(_.contains("tier=5s")))
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     val remaining = HiveStore.read(spark, dir).select("id").as[Long].collect().toSet
     assert(remaining == Set(3L, 4L, 5L))
+  }
+
+  test("read returns string partition values even with type inference scoped on") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hs_strings").toString + "/store"
+    HiveStore.write(Seq(("raw", "c1", "p1", "2024", "003", 1L))
+      .toDF("tier", "context", "path", "year", "day", "id"), dir)
+    val back = graft.util.Confs.withConfs(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "true") {
+      HiveStore.read(spark, dir).select("year", "day").as[(String, String)].collect().toSeq
+    }
+    assert(back == Seq(("2024", "003")))
   }
 
   test("gpx parser extracts speed and converts course to radians") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Export, Migration}
+import graft.sources.{Export, HiveStore, Migration}
 import org.apache.spark.sql.functions._
 
 class MigrationSpec extends SparkSpec {
@@ -23,8 +23,7 @@ class MigrationSpec extends SparkSpec {
     val target = java.nio.file.Files.createTempDirectory("graft_mig_t1").toString + "/store"
     val appended = Migration.migrate(spark, flat, target)
     assert(appended == 4L)
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val back = spark.read.parquet(target)
+    val back = HiveStore.read(spark, target)
     val parts = back.select("tier", "context", "path", "year", "day").distinct()
       .as[(String, String, String, String, String)].collect().toSet
     assert(parts == Set(
@@ -39,8 +38,7 @@ class MigrationSpec extends SparkSpec {
     val target = java.nio.file.Files.createTempDirectory("graft_mig_t2").toString + "/store"
     assert(Migration.migrate(spark, flat, target) == 4L)
     assert(Migration.migrate(spark, flat, target) == 0L)
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    assert(spark.read.parquet(target).count() == 4L)
+    assert(HiveStore.read(spark, target).count() == 4L)
   }
 
   test("a partial target only receives the missing partitions") {
@@ -55,8 +53,7 @@ class MigrationSpec extends SparkSpec {
     }
     rm(gone)
     assert(Migration.migrate(spark, flat, target) == 1L)
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    assert(spark.read.parquet(target).count() == 4L)
+    assert(HiveStore.read(spark, target).count() == 4L)
   }
 
   test("csv and json exports round-trip values, quoting and nulls") {

@@ -32,4 +32,18 @@ class QuarantineSpec extends SparkSpec {
       graft.sources.BufferUnion.eligibleFiles(spark, root): _*).count()
     assert(rows == 2)
   }
+
+  test("files under a dir no reader scans (failed/) are neither validated nor moved") {
+    val root = graft.util.Fs.scratch("q_spec")
+    Seq((1L, 1.0)).toDF("id", "v").repartition(1).write.parquet(s"$root/good")
+    Seq((2L, 2.0)).toDF("id", "v").repartition(1).write.parquet(s"$root/failed/day=1")
+    val skipped = new java.io.File(s"$root/failed/day=1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val ch = java.nio.file.Files.newByteChannel(skipped.toPath,
+      java.nio.file.StandardOpenOption.WRITE)
+    ch.truncate(60); ch.close()
+    assert(Quarantine.validateAndQuarantine(spark, root) == 0)
+    assert(skipped.exists())
+    assert(!new java.io.File(s"$root/quarantine").exists())
+  }
 }

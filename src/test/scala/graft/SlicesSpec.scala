@@ -41,6 +41,14 @@ class SlicesSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("toMemory leaves no memory-sink view in the catalog; its frame keeps the rows") {
+    val dir = Slices.stage(spark.range(0, 6).toDF("id"), pmod(col("id"), lit(2)), 2, tmp("mem"))
+    val out = Slices.toMemory(Slices.source(spark, dir, spark.read.parquet(dir).schema),
+      org.apache.spark.sql.streaming.OutputMode.Append)
+    assert(spark.catalog.listTables().collect().forall(!_.name.startsWith("graft_mem_")))
+    assert(out.orderBy("id").collect().map(_.getLong(0)).toSeq == (0L until 6L))
+  }
+
   test("stage writes n non-empty slice files in replay order, rows partitioned exactly") {
     val df = spark.range(0, 200).select(col("id"), (col("id") * 3).as("v"))
     val dir = tmp("stage")

@@ -88,6 +88,21 @@ class TriggerResolutionSpec extends SparkSpec {
       Bm25Store.appendBatch(spark, root, docs.where(col("doc_id") >= 100), 1L)))
   }
 
+  test("a compaction sweep resolves its store once") {
+    val ann = countRoot("ann_compact")
+    AnnStream.bootstrap(spark, sfDir, ann)
+    AnnStream.ingestBatch(spark, ann, emb.where(col("vec_id") < 150))
+    AnnStream.ingestBatch(spark, ann, emb.where(col("vec_id") >= 150))
+    assertOneResolution("AnnStream.compactIndexStore",
+      CountingTestFs.listingsOf(ann)(AnnStream.compactIndexStore(spark, ann)))
+    val bm25 = countRoot("bm25_compact")
+    val docs = Tables.documents(spark, sfDir)
+    Bm25Store.appendBatch(spark, bm25, docs.where(col("doc_id") < 100), 0L)
+    Bm25Store.appendBatch(spark, bm25, docs.where(col("doc_id") >= 100), 1L)
+    assertOneResolution("Bm25Store.compact",
+      CountingTestFs.listingsOf(bm25)(Bm25Store.compact(spark, bm25)))
+  }
+
   test("a Slices.commit trigger resolves its store once, batch-id gate included") {
     val root = countRoot("commit")
     def trigger(batchId: Long): Unit = Slices.commit(spark, root, batchId) { snap =>

@@ -22,7 +22,7 @@ class ZOrderSkipSpec extends SparkSpec {
   }
 
   test("z-ordered layout skips row groups a time-sorted layout reads") {
-    val out = graft.sources.HiveStore.scratchDir()
+    val out = graft.util.Fs.scratch("hive_store_")
     val keyed = graft.spatial.Spatial.zorderKeys(spark, "/root/testdata/sf0.01")
       .select("event_id", "lat", "lon", "zkey")
     // tiny row groups so a ~2k-row table has many prunable units
