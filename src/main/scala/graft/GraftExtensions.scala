@@ -1,93 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BoundedTopK, DotProduct, JaccardSim, KnownNonNullElements, L2Distance, NGrams, OverlapCount, PolyHash}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.IntegerType
+import graft.functions.Native
 
 /** Session-extension entry point: configure
   * `spark.sql.extensions=graft.GraftExtensions` and every session
   * (including ones created by thrift/connect servers, where runtime
-  * registration hooks don't run) gets the graft-native expressions in
-  * its function registry — the deployment-grade alternative to the
-  * per-session [[graft.functions.PolyHash.register]] used by the demo
-  * queries.
+  * registration hooks don't run) gets the graft-native functions and
+  * planner strategies — the same [[graft.functions.Native]] table that
+  * `Native.register(spark)` installs on one session at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      (exprs: Seq[Expression]) => PolyHash(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[JaccardSim].getName, "graft_jaccard"),
-      (exprs: Seq[Expression]) => JaccardSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Distance].getName, "graft_l2sq"),
-      (exprs: Seq[Expression]) => L2Distance(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dense"),
-      // the dense-elements contract is an UNCHECKED assertion — spell
-      // it out where external callers (DESCRIBE FUNCTION) will see it
-      new ExpressionInfo(classOf[KnownNonNullElements].getName, null, "graft_dense",
-        "_FUNC_(arr) - Asserts the array's elements are non-null so " +
-          "downstream codegen drops per-element null checks. UNCHECKED: " +
-          "feeding an array that does contain nulls yields undefined " +
-          "values, not NULL. Exactly one argument.", ""),
-      (exprs: Seq[Expression]) => {
-        if (exprs.size != 1) throw new IllegalArgumentException(
-          s"graft_dense expects exactly 1 argument, got ${exprs.size}")
-        KnownNonNullElements(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGrams].getName, null, "graft_ngrams",
-        "_FUNC_(arr, n) - Space-joined n-grams of a string array in one " +
-          "codegen'd pass; n must be an INT literal (it shapes the " +
-          "generated loop). Null elements are skipped concat_ws-style: " +
-          "_FUNC_(array('a', NULL, 'c'), 3) yields array('a c').", ""),
-      (exprs: Seq[Expression]) => {
-        if (exprs.size != 2) throw new IllegalArgumentException(
-          s"graft_ngrams expects 2 arguments (tokens, n), got ${exprs.size}")
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => NGrams(exprs(0), v)
-          case other => throw new IllegalArgumentException(
-            s"graft_ngrams: n must be an INT literal, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_overlap"),
-      new ExpressionInfo(classOf[OverlapCount].getName, null, "graft_overlap",
-        "_FUNC_(a, b) - |A intersect B| of two SORTED-DISTINCT string " +
-          "arrays as BIGINT via one merge walk (the containment/overlap-" +
-          "coefficient primitive). Inputs must be array_sort(array_distinct(...)). " +
-          "Exactly two arguments.", ""),
-      (exprs: Seq[Expression]) => {
-        if (exprs.size != 2) throw new IllegalArgumentException(
-          s"graft_overlap expects 2 arguments, got ${exprs.size}")
-        OverlapCount(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[BoundedTopK].getName, null, "graft_topk",
-        "_FUNC_(score, id, k) - Aggregate: the k best (score DESC, id ASC) " +
-          "pairs per group as ARRAY<STRUCT<score, id>>, best-first; a " +
-          "k-bounded heap that partial-aggregates map-side. k must be a " +
-          "positive INT literal.", ""),
-      (exprs: Seq[Expression]) => {
-        if (exprs.size != 3) throw new IllegalArgumentException(
-          s"graft_topk expects 3 arguments (score, id, k), got ${exprs.size}")
-        BoundedTopK(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      }))
-    // whole-operator extension: plans graft.plans.AsOfJoin nodes
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    Native.functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
+    Native.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }

@@ -120,7 +120,7 @@ object Components {
     * summary ([[nearDupComponents]]) and the keeper policy
     * ([[resolveClusters]]). */
   def clusterAssignments(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     clusterAssignmentsOn(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         (col("n_chars") / 50).cast("long").as("size_bucket"),

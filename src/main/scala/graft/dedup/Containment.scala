@@ -35,7 +35,7 @@ object Containment {
   private val Tau = 0.8 // 1−τ = 1/5 exactly → prefix length in integers
 
   private def shingled(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.OverlapCount.register(spark)
+    graft.functions.Native.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 5)

@@ -26,9 +26,44 @@ object Dedup {
     * native merge-walk expression ([[graft.functions.JaccardSim]]) —
     * one O(|A|+|B|) codegen'd pass, no hash-set build, no interpreted
     * lambda, evaluated once. Callers must register it on the session
-    * first ([[graft.functions.JaccardSim.register]]). */
+    * first ([[graft.functions.Native.register]]). */
   private[graft] def jaccard(a: Column, b: Column): Column =
     graft.funcs.rN(call_function("graft_jaccard", a, b), 6)
+
+  /** The one near-dup verify step: candidate pairs carrying
+    * `toks_a`/`toks_b` gain a `jaccard` column and keep j ≥ 0.95.
+    * The size-ratio bound runs first: j ≥ t implies min(|A|,|B|) ≥
+    * t·max(|A|,|B|), so this integer prefilter prunes candidates
+    * before the O(n) intersection without changing the result set.
+    * The constant is slightly slack (0.9499, not 0.95) because the
+    * final compare is on round(j,6) — a pair with exact j in
+    * [0.9499995, 0.95) passes the rounded threshold and must not be
+    * pruned here. */
+  private[graft] def verifyNearDups(pairs: DataFrame): DataFrame =
+    pairs
+      .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
+        lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
+      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
+      .where(col("jaccard") >= 0.95)
+
+  /** The incremental paths' store probe: verifies (batch_id, store_id)
+    * candidates against (doc_id, toks) token tables of the batch and
+    * the store. The store side is semi-joined down to the candidate
+    * store_ids first (a broadcast semi-join — `cands` is tiny), so only
+    * O(matches) store token rows are ever broadcast; without the prune,
+    * broadcasting the store tokens would ship the whole corpus token
+    * table to every executor — O(|store|) per batch, contradicting the
+    * O(|batch| + matches) cost of an incremental dedup. */
+  private[graft] def verifyAgainstStore(cands: DataFrame, batchToks: DataFrame,
+      storeToks: DataFrame): DataFrame = {
+    val probed = storeToks
+      .join(broadcast(cands.select("store_id").distinct()),
+        col("doc_id") === col("store_id"), "leftsemi")
+      .toDF("store_id", "toks_b")
+    verifyNearDups(cands
+      .join(broadcast(batchToks.toDF("batch_id", "toks_a")), "batch_id")
+      .join(broadcast(probed), "store_id"))
+  }
 
   // --------------------------------------------------------------- #29
   /** Exact duplicate groups: md5(text) groupBy, keeper = min doc_id —
@@ -81,7 +116,7 @@ object Dedup {
   private val blockCap = 10000
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val wcap = org.apache.spark.sql.expressions.Window
       .partitionBy("lang", "size_bucket").orderBy("doc_id")
     val docs = Tables.documents(spark, dir)
@@ -101,15 +136,8 @@ object Dedup {
     val b = docs.select(col("lang"), col("size_bucket"),
       col("doc_id").as("id_b"), col("toks").as("toks_b"))
       .repartition(nPart, col("lang"), col("size_bucket"))
-    a.join(b, Seq("lang", "size_bucket"))
-      .where(col("id_a") < col("id_b"))
-      // size-ratio bound (see minHashLsh): prunes most pairs inside
-      // codegen before the interpreted set-intersection runs; slack
-      // constant covers the round(j,6) threshold window.
-      .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-        lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
-      .where(col("jaccard") >= 0.95)
+    verifyNearDups(a.join(b, Seq("lang", "size_bucket"))
+        .where(col("id_a") < col("id_b")))
       .select("id_a", "id_b", "jaccard")
       .orderBy("id_a", "id_b")
   }
@@ -233,7 +261,7 @@ object Dedup {
 
   private[graft] def lshIndex(docs: DataFrame): LshIndex = {
     val spark = docs.sparkSession
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     // localCheckpoint, not cache(): this runs per micro-batch inside
     // stream_dedup_lsh's foreachBatch, and a CacheManager entry would
     // outlive the batch (leaking one table per trigger). Checkpoint
@@ -291,7 +319,7 @@ object Dedup {
   /** Candidate generation + exact verify over (staged or inline) index
     * tables and a (doc_id, toks) token table. */
   private[graft] def pairsFromIndex(idx: LshIndex, toksById: DataFrame): DataFrame = {
-    graft.functions.JaccardSim.register(toksById.sparkSession)
+    graft.functions.Native.register(toksById.sparkSession)
     val membership = idx.membership
     // Pairs within one signature group match in every band by
     // construction (quadratic in the group size — inherent: those
@@ -334,19 +362,9 @@ object Dedup {
     // once — O(candidates + corpus), no 8 GB broadcast ceiling). A
     // forced broadcast() here would override the size check and ship
     // the whole corpus token table to every executor.
-    candidates
-      .join(toksById.withColumnRenamed("doc_id", "id_a").withColumnRenamed("toks", "toks_a"), "id_a")
-      .join(toksById.withColumnRenamed("doc_id", "id_b").withColumnRenamed("toks", "toks_b"), "id_b")
-      // size-ratio bound: j ≥ t implies min(|A|,|B|) ≥ t·max(|A|,|B|),
-      // so this integer prefilter prunes candidates before the O(n)
-      // intersection without changing the result set. The constant is
-      // slightly slack (0.9499, not 0.95) because the final compare is
-      // on round(j,6) — a pair with exact j in [0.9499995, 0.95) passes
-      // the rounded threshold and must not be pruned here.
-      .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-        lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
-      .where(col("jaccard") >= 0.95)
+    verifyNearDups(candidates
+        .join(toksById.withColumnRenamed("doc_id", "id_a").withColumnRenamed("toks", "toks_a"), "id_a")
+        .join(toksById.withColumnRenamed("doc_id", "id_b").withColumnRenamed("toks", "toks_b"), "id_b"))
       .select("id_a", "id_b", "jaccard")
   }
 
@@ -366,8 +384,7 @@ object Dedup {
     * permutation coefficients — §5a #24). Oracle: the exact
     * batch × store answer. */
   def minHashLshIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val docs = Tables.documents(spark, dir)
     val bands = bandRows(docs)
     val batch = bands.where(col("doc_id") < 50)
@@ -380,27 +397,16 @@ object Dedup {
     // production). Checkpoint blocks are GC-reclaimed with the plan.
     val cands = broadcast(batch).join(store, Seq("band_idx", "band_key"))
       .select("batch_id", "store_id").distinct().localCheckpoint()
+    incrementalPairs(docs, cands)
+  }
+
+  /** The batch (doc_id < 50) × store answer for (batch_id, store_id)
+    * candidates over `docs` — shared by [[minHashLshIncremental]] and
+    * [[LshStore.incrementalLshStored]], which differ only in where
+    * their candidates come from. */
+  private[graft] def incrementalPairs(docs: DataFrame, cands: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), tokens.as("toks"))
-    // Verify inputs are pruned to candidate ids BEFORE broadcasting:
-    // the batch token table is O(|batch|) by definition, and the store
-    // side is semi-joined down to candidate store_ids (a broadcast
-    // semi-join — cands is tiny), so only O(matches) store token rows
-    // are ever broadcast. Without the prune, broadcast(toks) would
-    // ship the whole corpus token table to every executor — O(|store|)
-    // per batch, contradicting the O(|batch| + matches) cost claim.
-    val batchToks = toks.where(col("doc_id") < 50).toDF("batch_id", "toks_a")
-    val storeToks = toks
-      .join(broadcast(cands.select("store_id").distinct()),
-        col("doc_id") === col("store_id"), "leftsemi")
-      .toDF("store_id", "toks_b")
-    cands
-      .join(broadcast(batchToks), "batch_id")
-      .join(broadcast(storeToks), "store_id")
-      // same slack size-ratio prefilter as minHashLsh (round-6 window)
-      .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-        lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
-      .where(col("jaccard") >= 0.95)
+    verifyAgainstStore(cands, toks.where(col("doc_id") < 50), toks)
       .select("batch_id", "store_id", "jaccard")
       .orderBy("batch_id", "store_id")
   }
@@ -438,7 +444,7 @@ object Dedup {
     * candidates provably include every qualifying pair. The oracle
     * computes the exact O(n²) answer with the same simhash. */
   def simHashDocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     // Same codegen-friendly shape as minHashLsh: explode per-token
     // hash pairs, 60 bit-balance SUM aggregates, then assemble the
     // 60-bit fingerprint — no interpreted higher-order folds.

@@ -56,9 +56,7 @@ object KmvOverlap {
   /** Pairwise (src_a < src_b) corpus overlap: union-sketch size
     * actually used, common-member count, and the Jaccard estimate. */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     estimator(sketches(Tables.documents(spark, dir)))
   }
 
@@ -159,9 +157,7 @@ object KmvOverlap {
     * ascending), so the division never degenerates; the estimate is
     * one exact-integer-derived double division, 6-dp rounded. */
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     Tables.documents(spark, dir)
       .select(col("source"), explode(expr(s"graft_ngrams(split(text, ' '), $N)")).as("g"))
       .select(col("source"), expr("graft_polyhash(g, 31)").as("h"))

@@ -39,7 +39,7 @@ object LshStore {
   /** Stage the store-side band table once per (fingerprint, sf dir). */
   private[graft] def stageBandStore(spark: SparkSession, dir: String): String =
     Staging.stagedDir("graft_lsh_bands", dir, "v1:minhash128:b16r8:store>=50", "documents") { root =>
-      graft.functions.PolyHash.register(spark)
+      graft.functions.Native.register(spark)
       Dedup.bandRows(Tables.documents(spark, dir).where(col("doc_id") >= 50))
         .toDF("store_id", "band_idx", "band_key")
         .write.parquet(root)
@@ -50,7 +50,7 @@ object LshStore {
     * query localCheckpoints it, which collapses the upstream into a
     * LogicalRDD and hides the scan from the visible plan). */
   private[graft] def candidates(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     val storeBands = spark.read.parquet(stageBandStore(spark, dir))
     // the ONLY signature computation in the plan: the new batch
     val batch = Dedup.bandRows(
@@ -65,28 +65,9 @@ object LshStore {
   /** Incremental near-dup dedup against the STORED index: same output
     * contract as `dedup_incremental_lsh` (batch_id, store_id, jaccard). */
   def incrementalLshStored(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.JaccardSim.register(spark)
-    val docs = Tables.documents(spark, dir)
-    val cands = candidates(spark, dir).localCheckpoint()
-    val toks = docs.select(col("doc_id"), Dedup.tokens.as("toks"))
-    val batchToks = toks.where(col("doc_id") < 50).toDF("batch_id", "toks_a")
-    // store text fetched by candidate id only — O(matches) rows (see
-    // minHashLshIncremental's prune note; same broadcast semi-join)
-    val storeToks = toks
-      .join(broadcast(cands.select("store_id").distinct()),
-        col("doc_id") === col("store_id"), "leftsemi")
-      .toDF("store_id", "toks_b")
-    cands
-      .join(broadcast(batchToks), "batch_id")
-      .join(broadcast(storeToks), "store_id")
-      // same slack size-ratio prefilter as minHashLsh (round-6 window)
-      .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-        lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-      .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
-      .where(col("jaccard") >= 0.95)
-      .select("batch_id", "store_id", "jaccard")
-      .orderBy("batch_id", "store_id")
+    graft.functions.Native.register(spark)
+    Dedup.incrementalPairs(Tables.documents(spark, dir),
+      candidates(spark, dir).localCheckpoint())
   }
 
   // --------------------------------------------------------------- #31c
@@ -99,7 +80,7 @@ object LshStore {
     * state). */
   private[graft] def stageFullLsh(spark: SparkSession, dir: String): String =
     Staging.stagedDir("graft_lsh_full", dir, "v1:minhash128:b16r8:membership+repbands+toks", "documents") { root =>
-      graft.functions.PolyHash.register(spark)
+      graft.functions.Native.register(spark)
       val docs = Tables.documents(spark, dir)
       val idx = Dedup.lshIndex(docs)
       idx.membership.write.parquet(s"$root/membership")
@@ -113,7 +94,7 @@ object LshStore {
     * scans membership/repbands/toks only (plan-pinned: no
     * graft_polyhash, no documents.parquet anywhere in the plan). */
   def minHashLshStored(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val root = stageFullLsh(spark, dir)
     val idx = Dedup.LshIndex(
       spark.read.parquet(s"$root/membership"),

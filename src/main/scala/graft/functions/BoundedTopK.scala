@@ -2,8 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -119,22 +117,4 @@ case class BoundedTopK(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BoundedTopK =
     copy(score = newChildren(0), id = newChildren(1), kExpr = newChildren(2))
-}
-
-object BoundedTopK {
-  /** Register `graft_topk(score, id, k)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_topk")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_topk",
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 3,
-            s"graft_topk expects 3 arguments (score, id, k), got ${exprs.size}")
-          BoundedTopK(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-        },
-        "built-in")
-    }
-  }
 }

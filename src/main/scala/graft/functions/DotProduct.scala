@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,22 +90,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Register `graft_dot(a, b)` (idempotent). `graft_dense` rides
-    * along: the dense-elements assertion is what lets this expression
-    * compile its branch-free loop on parquet-sourced arrays (file
-    * sources force containsNull=true on read). */
-  def register(spark: SparkSession): Unit = {
-    KnownNonNullElements.register(spark)
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_dot",
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -139,22 +137,4 @@ case class GramMatrix(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): GramMatrix =
     copy(child = newChildren(0))
-}
-
-object GramMatrix {
-  /** Register `graft_gram(v)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_gram")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_gram",
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 1,
-            s"graft_gram expects 1 argument (vector), got ${exprs.size}")
-          GramMatrix(exprs(0)).toAggregateExpression()
-        },
-        "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,18 +77,4 @@ case class JaccardSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSim =
     copy(left = newLeft, right = newRight)
-}
-
-object JaccardSim {
-  /** Register `graft_jaccard(sorted_a, sorted_b)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_jaccard")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_jaccard",
-        (exprs: Seq[Expression]) => JaccardSim(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -114,22 +112,4 @@ case class KmvSketch(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvSketch =
     copy(hash = newChildren(0), kExpr = newChildren(1))
-}
-
-object KmvSketch {
-  /** Register `graft_kmv(hash, k)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_kmv")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_kmv",
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 2,
-            s"graft_kmv expects 2 arguments (hash, k), got ${exprs.size}")
-          KmvSketch(exprs(0), exprs(1)).toAggregateExpression()
-        },
-        "built-in")
-    }
-  }
 }

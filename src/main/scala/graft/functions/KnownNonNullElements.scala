@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -53,18 +51,4 @@ case class KnownNonNullElements(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): KnownNonNullElements =
     copy(child = newChild)
-}
-
-object KnownNonNullElements {
-  /** Register `graft_dense(a)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_dense")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_dense",
-        (exprs: Seq[Expression]) => KnownNonNullElements(exprs.head),
-        "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,20 +89,4 @@ case class L2Distance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Distance =
     copy(left = newLeft, right = newRight)
-}
-
-object L2Distance {
-  /** Register `graft_l2sq(a, b)` (idempotent). `graft_dense` rides
-    * along — see [[DotProduct.register]]. */
-  def register(spark: SparkSession): Unit = {
-    KnownNonNullElements.register(spark)
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_l2sq")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_l2sq",
-        (exprs: Seq[Expression]) => L2Distance(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: space-joined n-grams of a token array —
@@ -91,25 +90,4 @@ object NGrams {
   /** DataFrame-side constructor. */
   def ngrams(tokens: Column, n: Int): Column =
     GraftBridge.column(NGrams(GraftBridge.expression(tokens), n))
-
-  /** Register `graft_ngrams(arr, n)` for SQL use; `n` must be an
-    * integer literal (it shapes the generated code). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_ngrams")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_ngrams",
-        (exprs: Seq[Expression]) => {
-          if (exprs.size != 2) throw new IllegalArgumentException(
-            s"graft_ngrams expects 2 arguments (tokens, n), got ${exprs.size}")
-          exprs(1) match {
-            case Literal(v: Int, IntegerType) => NGrams(exprs(0), v)
-            case other => throw new IllegalArgumentException(
-              s"graft_ngrams: n must be an INT literal, got $other")
-          }
-        },
-        "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,22 +63,4 @@ case class OverlapCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): OverlapCount =
     copy(left = newLeft, right = newRight)
-}
-
-object OverlapCount {
-  /** Register `graft_overlap(sorted_a, sorted_b)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_overlap")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_overlap",
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 2,
-            s"graft_overlap expects 2 arguments, got ${exprs.size}")
-          OverlapCount(exprs(0), exprs(1))
-        },
-        "built-in")
-    }
-  }
 }

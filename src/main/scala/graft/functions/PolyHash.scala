@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,20 +62,4 @@ case class PolyHash(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PolyHash =
     copy(left = newLeft, right = newRight)
-}
-
-object PolyHash {
-  /** Register `graft_polyhash(str, mult)` in the session's function
-    * registry (idempotent) so `expr("graft_polyhash(...)")` works
-    * without SparkSessionExtensions configuration. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier("graft_polyhash")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_polyhash",
-        (exprs: Seq[Expression]) => PolyHash(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
 }

@@ -152,7 +152,7 @@ object Multimodal {
     * whole-stage codegen — no shuffle, a 100 TB corpus fans out in
     * place exactly like [[frameSample]]. */
   def audioSegments(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     Tables.documents(spark, dir)
       // empty payload guard: sequence(0, -100, 100) THROWS in Spark
       // (start > stop with positive step) where DuckDB's

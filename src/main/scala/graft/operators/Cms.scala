@@ -67,7 +67,7 @@ object Cms {
     * count, min-over-rows estimate (≥ exact by construction), and the
     * collision overestimate. */
   def cmsTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGrams.register(spark) // codegen'd gram extraction
+    graft.functions.Native.register(spark)
     val counts = gramCounts(Tables.documents(spark, dir))
       .localCheckpoint() // feeds the sketch, the top-k, and the probes
     val counters = hashed(counts).groupBy("salt", "idx")

@@ -44,9 +44,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoin]] as [[AsOfJoinExec]]; injectable via
-  * `spark.experimental.extraStrategies` (runtime) or
-  * [[graft.GraftExtensions]] (spark.sql.extensions). */
+/** Plans [[AsOfJoin]] as [[AsOfJoinExec]]; listed in
+  * [[graft.functions.Native]], which installs it. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lts, rts, rv, rt, out) =>
@@ -132,13 +131,8 @@ case class AsOfJoinExec(
   }
 }
 
-/** DataFrame facade + runtime registration for the native as-of join. */
+/** DataFrame facade for the native as-of join. */
 object AsOfJoinNative {
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
   /** probes ⟕asof quotes on `key`, time column `ts`, emitting quotes'
     * `value` as `asof_value`; `tie` breaks equal-ts quote ties (max
@@ -147,7 +141,7 @@ object AsOfJoinNative {
   def asOfJoin(probes: DataFrame, quotes: DataFrame,
       key: String, ts: String, value: String, tie: String): DataFrame = {
     val spark = probes.sparkSession
-    register(spark)
+    graft.functions.Native.register(spark)
     val l = probes.queryExecution.analyzed
     // fresh exprIds on the quote side — self-joins would otherwise
     // carry duplicate attribute ids across the two children

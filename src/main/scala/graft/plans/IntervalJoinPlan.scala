@@ -44,6 +44,8 @@ case class IntervalJoin(
     copy(left = newLeft, right = newRight)
 }
 
+/** Plans [[IntervalJoin]] as [[IntervalJoinExec]]; listed in
+  * [[graft.functions.Native]], which installs it. */
 object IntervalJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case IntervalJoin(l, r, lk, rk, lts, rs, re, os, oe) =>
@@ -146,14 +148,8 @@ case class IntervalJoinExec(
   }
 }
 
-/** DataFrame facade + runtime registration for the native interval
-  * join. */
+/** DataFrame facade for the native interval join. */
 object IntervalJoinNative {
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
 
   /** points ⋈ intervals on `key` with `start <= ts < end`; emits the
     * point row plus the containing interval's bounds as
@@ -162,7 +158,7 @@ object IntervalJoinNative {
   def intervalJoin(points: DataFrame, intervals: DataFrame,
       key: String, ts: String, start: String, end: String): DataFrame = {
     val spark = points.sparkSession
-    register(spark)
+    graft.functions.Native.register(spark)
     val l = points.queryExecution.analyzed
     val r0 = intervals.queryExecution.analyzed
     val aliases = r0.output.map(a => Alias(a, a.name)())

@@ -181,7 +181,7 @@ object AnnCompact {
     * the (−score, id) total order makes heap and window answers
     * identical. */
   def topKAgg(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecs(spark, dir)
     val probes = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("v").as("v_a"), col("norm2").as("norm2_a"))

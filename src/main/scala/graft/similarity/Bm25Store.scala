@@ -238,7 +238,7 @@ object Bm25Store {
     * fully deleted) store scores to an empty ranking. */
   private[graft] def score(spark: SparkSession, dir: String,
       base: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val snap = ManifestStore.snapshot(spark, base)
     val st = snap.read("stats", statsSchema)
       .agg(coalesce(sum("n_docs"), lit(0L)), coalesce(sum("tot_tok"), lit(0L)))

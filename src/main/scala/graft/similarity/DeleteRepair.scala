@@ -108,8 +108,7 @@ object DeleteRepair {
     * built one-shot at ingest). */
   private[graft] def stageDirectedTopk(spark: SparkSession, dir: String): String =
     Staging.stagedDir("graft_knn_directed", dir, "v3:k5:store-manifest", "embeddings") { root =>
-      graft.functions.BoundedTopK.register(spark)
-      graft.functions.DotProduct.register(spark)
+      graft.functions.Native.register(spark)
       val e = Embeddings.vecs(spark, dir)
       graft.util.ManifestStore.publishOps(spark, root, Seq(
         graft.util.ManifestStore.replaceTableOp("topk", "label", () =>
@@ -125,9 +124,7 @@ object DeleteRepair {
     * rest carry through verbatim. */
   private[graft] def deleteFromGraph(spark: SparkSession, base: String,
       delVecs: DataFrame): Unit = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     import graft.streaming.GraphStream
     import graft.util.{DeleteLog, ManifestStore}
     val del = delVecs.select("vec_id", "label").localCheckpoint()
@@ -182,8 +179,7 @@ object DeleteRepair {
     * candidates outside a top-5 cannot change it, and other labels
     * because candidates never cross label blocks. */
   def storeDeleteKnn(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val staged = stageDirectedTopk(spark, dir)
     val base = cloneGraph(spark, staged)
     deleteFromGraph(spark, base, Embeddings.vecs(spark, dir).where(delVecPred))
@@ -212,7 +208,7 @@ object DeleteRepair {
     * rows, and df/idf re-derive from the probed posting lists and
     * (df, N) through the same expressions both builds share. */
   def storeDeleteBm25(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val base = Bm25Store.cloneStore(spark, Hybrid.stageBm25(spark, dir))
     Bm25Store.delete(spark, base, Tables.documents(spark, dir).where(delDocPred))
     Bm25Store.score(spark, dir, base)

@@ -60,7 +60,7 @@ object DriftMonitor {
     * in-distribution batch and fire on the shifted one). */
   private[graft] def reportWithShift(spark: SparkSession, dir: String,
       shift: Double): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     val ref = Embeddings.vecs(spark, dir).select("vec_id", "label", "v")
       .where(pmod(col("vec_id"), lit(4L)) =!= 3L)
     // reference moments: in production this row IS the 42r live store
@@ -75,7 +75,7 @@ object DriftMonitor {
     * zero-shuffle projection passes + 16-key histograms. */
   private[graft] def reportFromMoments(spark: SparkSession, dir: String,
       shift: Double, m: Array[Long], n: Long): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     val vecs = Embeddings.vecs(spark, dir).select("vec_id", "label", "v")
     val ref = vecs.where(pmod(col("vec_id"), lit(4L)) =!= 3L)
     // the seeded drifted batch: +shift (exact binary) on EVERY

@@ -29,7 +29,7 @@ object Embeddings {
   // semantics diverge). A production corpus should drop or re-embed
   // zero vectors upstream (`where(norm2 > 0)`) before these operators.
   private[graft] def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     vecsOf(Tables.embeddings(spark, dir))
   }
 
@@ -513,7 +513,7 @@ object Embeddings {
     * [[graft.dedup.Components.connectedComponents]]. Returns
     * (vec_id, cluster, cos). */
   def kmeansFit(vectors: DataFrame, k: Int, maxIters: Int = 10): DataFrame = {
-    graft.functions.DotProduct.register(vectors.sparkSession)
+    graft.functions.Native.register(vectors.sparkSession)
     val e = vectors.select(col("vec_id"), col("v"), col("norm2")).localCheckpoint()
     var cents = e.orderBy("vec_id").limit(k)
       .select(row_number().over(org.apache.spark.sql.expressions.Window
@@ -822,7 +822,7 @@ object Embeddings {
     * explodes to 8 subvector rows per vector in place and never
     * shuffles for the assignment. */
   def embedPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     val subs = pqSubs(spark, dir)
     val codebook = pqCodebook(subs)
     // argmin over the 16 codebook rows per (vector, subspace) as a
@@ -907,7 +907,7 @@ object Embeddings {
     * neighbor id; probes search the real corpus INCLUDING themselves
     * at distance ~0 — self-match excluded like [[annTopK]]. */
   def annPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     val subs = pqSubs(spark, dir)
     val codebook = pqCodebook(subs)
     // corpus side: codes only (the embedPq assignment), floats dropped
@@ -1019,8 +1019,7 @@ object Embeddings {
   }
 
   private[graft] def ivfPqCandidates(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     val e = vecs(spark, dir)
     // coarse quantizer: same fixed-slice centroids as annIvfTopK, but
     // assigned by SQUARED L2 — the metric ADC ranks by. FAISS's

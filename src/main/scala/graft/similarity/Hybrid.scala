@@ -40,8 +40,7 @@ object Hybrid {
 
   // --------------------------------------------------------------- #82
   def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.OverlapCount.register(spark)
+    graft.functions.Native.register(spark)
     // ---- lexical leg: docs sharing at least one term, ranked by
     // exact term-set overlap (merge walk over sorted-distinct tokens)
     val docs = Tables.documents(spark, dir)
@@ -149,7 +148,7 @@ object Hybrid {
     * through DECIMAL(18,9); all constants are written as exact
     * DOUBLE casts in both engines (§5a #28). */
   def bm25(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val docs = Tables.documents(spark, dir)
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
     val postings = toks.groupBy("t", "doc_id").agg(count(lit(1)).as("tf"))
@@ -322,7 +321,7 @@ object Hybrid {
     * construction time; that is the deliberate price of materializing
     * the ≤15-row candidate set exactly once. */
   def rerankCe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.OverlapCount.register(spark)
+    graft.functions.Native.register(spark)
     val bmCands = bm25Stored(spark, dir).select("probe_id", "doc_id")
     val annCands = StoredIndex.annIvfPqStored(spark, dir)
       .where(col("probe_id") < 3)

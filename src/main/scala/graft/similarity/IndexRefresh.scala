@@ -74,8 +74,7 @@ object IndexRefresh {
     * silently corrupt any cosine consumer handed this frame). */
   private[graft] def driftedVecs(spark: SparkSession, dir: String,
       shift: Double = 0.5): DataFrame = {
-    graft.functions.KnownNonNullElements.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     Embeddings.vecs(spark, dir).withColumn("v",
       when(pmod(col("vec_id"), lit(4L)) === 3L,
         expr(s"graft_dense(transform(v, x -> x + CAST($shift AS DOUBLE)))"))

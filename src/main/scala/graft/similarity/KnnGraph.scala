@@ -67,7 +67,7 @@ object KnnGraph {
     * unordered pair where BOTH endpoints rank each other top-5, with
     * the rounded cosine and both directed ranks. */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecs(spark, dir)
     mutualEdges(directedTopk(scoredPairs(srcSide(e), dstSide(e))))
       .orderBy("id_a", "id_b")

@@ -43,7 +43,7 @@ object Mmr {
     * split out so MmrSpec can compare the greedy trajectory against
     * plain top-k over the same rounded cosines. */
   private[graft] def relevancePool(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecs(spark, dir)
     val pool = e.where(col("vec_id") % 7 === 3).select("vec_id", "v", "norm2")
     val q = e.where(col("vec_id") === 0)

@@ -72,7 +72,7 @@ object Pca {
   /** Per-vector projection onto the dominant principal component:
     * (vec_id, label, pc1), pc1 = round₆(Σᵢ round₉(xᵢ−μᵢ)·pcᵢ). */
   def embedPca(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     val vecs = Embeddings.vecs(spark, dir).select("vec_id", "label", "v")
     // pass 1: fixed-size moment buffer (one shuffle of ~#tasks buffers)
     val row = vecs.agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
@@ -166,7 +166,7 @@ object Pca {
     * two-component trajectory hash-matches like the one-component one.
     * Requires a spectrum with λ₂ > 0 (any non-degenerate corpus). */
   def embedWhiten(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     val vecs = Embeddings.vecs(spark, dir).select("vec_id", "label", "v")
     val row = vecs.agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
     val (mu, cov) = momentsToCov(row.getSeq[Long](0).toArray, row.getLong(1))

@@ -141,7 +141,7 @@ object StoredIndex {
     * marker lands. */
   private[graft] def publish(spark: SparkSession, root: String,
       corpus: DataFrame): Unit = {
-    graft.functions.L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     ManifestStore.publishOps(spark, root) { snap =>
       val live = DeleteLog.gate(snap, corpus, "vec_id")
       val (centroids, codebook) = quantizers(live)
@@ -171,8 +171,7 @@ object StoredIndex {
     * store. */
   private[graft] def delete(spark: SparkSession, root: String,
       delVecs: DataFrame): Unit = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     ManifestStore.publishOps(spark, root) { snap =>
       require(snap.version > 0, s"no committed index version under $root")
       val assigned = Embeddings.ivfAssign(delVecs, quantizersAt(snap)._1, 1)
@@ -206,8 +205,7 @@ object StoredIndex {
     * committed version. */
   private[graft] def searchProbes(spark: SparkSession, root: String,
       probeVecs: DataFrame): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val snap = ManifestStore.snapshot(spark, root)
     val (centroids, codebook) = quantizersAt(snap)
     val lists = snap.read("lists", listsSchema)

@@ -34,7 +34,7 @@ object Triplets {
     * negative (a harder negative than positive — the informative
     * triplets!) so the oracle carries the +0.0 guard. */
   def triplets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecs(spark, dir)
     val anchors = e.where(col("vec_id") % 11 === 4)
       .select(col("vec_id").as("anchor_id"), col("label").as("a_label"),

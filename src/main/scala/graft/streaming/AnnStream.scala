@@ -52,8 +52,7 @@ object AnnStream {
 
   // -------------------------------------------------------------- #113
   def streamAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     // three vec_id-range slices, one file per trigger (slice order is
     // immaterial: per-vector assignment is independent of batching)
@@ -119,9 +118,7 @@ object AnnStream {
     * mid-publish-crash reader. */
   private[graft] def ingestBatch(sp: SparkSession, base: String,
       batch: DataFrame): Unit = {
-    graft.functions.L2Distance.register(sp)
-    graft.functions.DotProduct.register(sp)
-    graft.functions.KnownNonNullElements.register(sp)
+    graft.functions.Native.register(sp)
     ManifestStore.publishOps(sp, base) { snap =>
       // The assignment is checkpointed ONCE inside indexDelta; the
       // re-delivery anti-join is deliberately not (the two write jobs
@@ -159,8 +156,7 @@ object AnnStream {
     * Result-invisible by contract: the same full-recompute IVFADC
     * oracle gates the search over the compacted store. */
   def streamAnnIvfPqCompacted(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
       spark_partition_id(), 3, graft.util.Fs.scratch("annc_src"))

@@ -68,8 +68,7 @@ object GraphStream {
 
   // -------------------------------------------------------------- #114
   def streamKnnGraph(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
       spark_partition_id(), 3, graft.util.Fs.scratch("graph_src"))
@@ -94,9 +93,7 @@ object GraphStream {
   private[graft] def buildStore(spark: SparkSession, dir: String,
       srcDir: String, schema: org.apache.spark.sql.types.StructType,
       base: String, checkpoint: Option[String] = None): Unit = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     Slices.drain(spark, srcDir, schema, checkpoint) { (batch, _) =>
       ingestBatch(batch.sparkSession, base, batch)
     }
@@ -117,9 +114,7 @@ object GraphStream {
     * leaving both stores identical to single delivery. */
   private[graft] def ingestBatch(sp: SparkSession, base: String,
       batch: DataFrame): Unit = {
-    graft.functions.BoundedTopK.register(sp)
-    graft.functions.DotProduct.register(sp)
-    graft.functions.KnownNonNullElements.register(sp)
+    graft.functions.Native.register(sp)
     // ONE atomic publish spanning the list repair AND the vector
     // append: a reader concurrent with the trigger resolves one
     // committed version of topk+vecs (never repaired lists over a

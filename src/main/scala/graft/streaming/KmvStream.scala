@@ -28,9 +28,7 @@ object KmvStream {
 
   // -------------------------------------------------------------- #101
   def streamKmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     val docs = graft.Tables.documents(spark, dir)
     // three doc_id-range slices, one file per trigger (the
     // streamDedupLsh staging; slice order is immaterial here — the
@@ -41,9 +39,7 @@ object KmvStream {
     val skSchema = KmvOverlap.sketches(docs).schema
     Slices.drainInto(spark, srcDir, docs.schema, root) { (batch, snap) =>
       val sp = batch.sparkSession
-      graft.functions.NGrams.register(sp)
-      graft.functions.PolyHash.register(sp)
-      graft.functions.KmvSketch.register(sp)
+      graft.functions.Native.register(sp)
       // union-and-resketch: explode both ≤k-long arrays and fold them
       // back through graft_kmv — the bounded sketch union
       Seq(ManifestStore.replaceTableOp("sketches", "", () =>
@@ -92,7 +88,7 @@ object KmvStream {
     * and the specs can operate on the store between build and
     * serve). */
   private[graft] def drainBm25(spark: SparkSession, dir: String): String = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val docs = graft.Tables.documents(spark, dir)
     val srcDir = Slices.stage(docs.repartitionByRange(3, col("doc_id")),
       spark_partition_id(), 3, graft.util.Fs.scratch("bm25_src"))

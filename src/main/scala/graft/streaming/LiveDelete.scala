@@ -56,8 +56,7 @@ object LiveDelete {
   /** The store builder, exposed so the spec can assert on the final
     * store state (post-delete arrivals gated, compaction carried). */
   private[graft] def builtAnnDeletedStore(spark: SparkSession, dir: String): String = {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Fs.scratch("lived_ann_src")
     val base = Fs.scratch("lived_ann_store")
@@ -81,9 +80,7 @@ object LiveDelete {
     * carry), and the served mutual edges equal the fresh build on the
     * surviving corpus. */
   def streamKnnGraphDeleted(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Fs.scratch("lived_knn_src")
     val base = Fs.scratch("lived_knn_store")
@@ -107,7 +104,7 @@ object LiveDelete {
     * bucket compaction sweep, then scoring ≡ the fresh index on the
     * surviving docs. */
   def streamBm25Deleted(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val docs = graft.Tables.documents(spark, dir)
     val srcDir = Fs.scratch("lived_bm_src")
     val base = Fs.scratch("lived_bm_store")

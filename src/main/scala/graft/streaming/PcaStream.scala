@@ -34,12 +34,11 @@ object PcaStream {
 
   // -------------------------------------------------------------- #103
   def streamPcaMoments(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
+    // the OUTER session, registered before the stream starts:
     // foreachBatch runs on a CLONED session whose function registry is
-    // a snapshot — in-batch registrations don't propagate out, so the
-    // final projection's graft_dense/graft_dot need the OUTER session
-    // registered explicitly
-    graft.functions.DotProduct.register(spark)
+    // a snapshot, so an in-batch registration never reaches the final
+    // projection's graft_dense/graft_dot here
+    graft.functions.Native.register(spark)
     val emb = graft.Tables.embeddings(spark, dir)
     val srcDir = Slices.stage(emb.repartitionByRange(3, col("vec_id")),
       spark_partition_id(), 3, graft.util.Fs.scratch("pca_src"))
@@ -61,8 +60,7 @@ object PcaStream {
       schema: StructType, root: String): Row = {
     Slices.drainInto(spark, srcDir, schema, root) { (batch, snap) =>
       val sp = batch.sparkSession
-      graft.functions.GramMatrix.register(sp)
-      graft.functions.DotProduct.register(sp)
+      graft.functions.Native.register(sp)
       val row = Embeddings.vecsOf(batch).select("v")
         .agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
       val delta = row.getSeq[Long](0).toArray
@@ -100,8 +98,7 @@ object PcaStream {
     * (eigensolve → frozen-axis projections → histograms → KL) carries
     * the 40w10 batch oracle verbatim. */
   def streamDriftReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GramMatrix.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val ref = graft.Tables.embeddings(spark, dir)
       .where(pmod(col("vec_id"), lit(4L)) =!= 3L)
     val srcDir = Slices.stage(ref.repartitionByRange(3, col("vec_id")),

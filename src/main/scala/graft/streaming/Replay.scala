@@ -123,8 +123,8 @@ object Replay {
   private[graft] def runPaced(spark: SparkSession, dir: String, rateMs: Long,
       stopAfterSlices: Int): PacedRun = {
     val staged = stage(spark, dir, ReplayStartMs, ReplayEndMs, ReplaySliceMs)
+    val name = s"graft_replay_live_${System.nanoTime()}"
     try {
-      val name = s"graft_replay_live_${System.nanoTime()}"
       val q = bucketAgg(replayStream(spark, staged))
         .writeStream
         .format("memory").queryName(name)
@@ -160,6 +160,9 @@ object Replay {
         n,
         math.min(ReplayStartMs + n.toLong * ReplaySliceMs, ReplayEndMs))
     } finally {
+      // the rows are collected: the sink's view must not keep them in
+      // the session catalog for the JVM's life
+      spark.catalog.dropTempView(name)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged.dir))
     }
   }

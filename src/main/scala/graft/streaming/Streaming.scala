@@ -550,8 +550,7 @@ object Streaming {
   private[graft] def dedupLshInto(spark: SparkSession, srcDir: String, root: String,
       checkpoint: Option[String] = None): DataFrame = {
     import graft.dedup.Dedup
-    graft.functions.PolyHash.register(spark)
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -577,18 +576,7 @@ object Streaming {
             Seq("band_idx", "band_key"))
           .select("batch_id", "store_id").distinct().cache()
         cached = Some(cands)
-        val storeToks = snap.read("toks", bToks.schema)
-          .join(broadcast(cands.select("store_id").distinct()),
-            col("doc_id") === col("store_id"), "leftsemi")
-          .toDF("store_id", "toks_b")
-        val cross = cands
-          .join(broadcast(bToks.toDF("batch_id", "toks_a")), "batch_id")
-          .join(broadcast(storeToks), "store_id")
-          // same slack size-ratio prefilter as minHashLsh
-          .where(least(size(col("toks_a")), size(col("toks_b"))).cast("double") >=
-            lit(0.9499) * greatest(size(col("toks_a")), size(col("toks_b"))))
-          .withColumn("jaccard", Dedup.jaccard(col("toks_a"), col("toks_b")))
-          .where(col("jaccard") >= 0.95)
+        val cross = Dedup.verifyAgainstStore(cands, bToks, snap.read("toks", bToks.schema))
           .select(least(col("batch_id"), col("store_id")).as("id_a"),
             greatest(col("batch_id"), col("store_id")).as("id_b"),
             col("jaccard"))
@@ -694,7 +682,7 @@ object Streaming {
     */
   def streamCms(spark: SparkSession, dir: String): DataFrame = withConfs(spark, NanosAsLong) {
     import graft.operators.Cms
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
     val srcDir = Slices.stage(docs, pmod(col("doc_id"), lit(4)), 4, Fs.scratch("cms_src"))
     val root = Fs.scratch("cms_store")

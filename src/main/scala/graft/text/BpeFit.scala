@@ -68,7 +68,7 @@ object BpeFit {
     * vocabulary-sized checkpointed table. */
   private def fitState(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     // Empty-word guard (mirrored in both oracles): irregular
     // whitespace (leading/trailing/double spaces) splits into "" words,
     // and for those Spark's sequence(1, length(w)) = sequence(1, 0)

@@ -39,8 +39,7 @@ object Holdout {
   /** Exactly k doc_ids per language with their 1-based rank in the
     * deterministic hash order. */
   def holdoutK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"),
         expr(s"graft_polyhash(md5(concat(CAST(doc_id AS STRING), '$Salt')), 31)").as("h"))

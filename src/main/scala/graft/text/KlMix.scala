@@ -38,7 +38,7 @@ object KlMix {
   // -------------------------------------------------------------- #102
   /** (source, n_tokens, kl_from_corpus) per source, KL in nats. */
   def klReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     val counts = Tables.documents(spark, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("t"))
       .select(col("source"), pmod(expr("graft_polyhash(t, 31)"), lit(B.toLong)).as("b"))

@@ -28,7 +28,7 @@ object TextOps {
     * identical result for ASCII input, compiled to a byte loop. */
   def polyHashNative(spark: org.apache.spark.sql.SparkSession,
       colName: String, mult: Int): Column = {
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     expr(s"graft_polyhash($colName, $mult)")
   }
 

@@ -39,7 +39,7 @@ object WeightedSample {
   /** Exactly k docs per language, PPS by n_chars+1, with rank and the
     * selection key. */
   def weightedK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val u = (conv(substring(md5(concat(col("doc_id").cast("string"), lit(Salt))), 1, 4),
       16, 10).cast("double") + lit(0.5)) / lit(65536.0)
     Tables.documents(spark, dir)

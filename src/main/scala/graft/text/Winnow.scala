@@ -62,8 +62,7 @@ object Winnow {
   /** The fingerprint table without the presentation sort — the form
     * downstream joins consume. */
   private[graft] def fingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     // Each intermediate (the gram array, then the packed-hash array)
     // is BOUND ONCE per row via a single-element-array lambda —
     // `element_at(transform(array(e), v -> body), 1)` — because a

@@ -16,7 +16,7 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("partition-invariant: heap merge gives the same answer at any parallelism") {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     import spark.implicits._
     val rows = (1L to 997L).map(i => (i % 7, (i * 37 % 101).toDouble, i))
     for (parts <- Seq(1, 13)) {
@@ -43,7 +43,7 @@ class BoundedTopKSpec extends SparkSpec {
   }
 
   test("k bounds the buffer: groups smaller than k emit all their rows, best-first") {
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     import spark.implicits._
     val df = Seq((1L, 2.0, 10L), (1L, 3.0, 11L)).toDF("g", "score", "id")
       .groupBy("g").agg(expr("graft_topk(score, id, 5)").as("top"))

@@ -7,7 +7,7 @@ class BpeFitSpec extends SparkSpec {
   import spark.implicits._
 
   test("greedy merge fold: chains consume left-to-right, merged token carries on") {
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     // pair (a,a) over 'aaa' -> [aa, a]; over 'aaaa' -> [aa, aa]
     val df = Seq("aaa", "aaaa", "aba").toDF("w")
       .withColumn("syms", expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))

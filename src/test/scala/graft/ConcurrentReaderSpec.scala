@@ -31,9 +31,7 @@ class ConcurrentReaderSpec extends SparkSpec {
   }
 
   test("a reader looping snapshot reads during triggers + delete + compaction never observes a torn or empty store") {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val base = java.nio.file.Files.createTempDirectory("graft_stress").toString
     AnnStream.bootstrap(spark, sfDir, base)

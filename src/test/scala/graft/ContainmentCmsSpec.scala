@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class ContainmentCmsSpec extends SparkSpec {
 
   test("graft_overlap: merge-walk intersection count on sorted-distinct arrays") {
-    graft.functions.OverlapCount.register(spark)
+    graft.functions.Native.register(spark)
     val r = spark.sql(
       """SELECT graft_overlap(array('a','b','c','e'), array('b','c','d','e')) AS o1,
         |       graft_overlap(array('a'), array('b')) AS o2,

@@ -90,6 +90,25 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"source-dir staging outside Slices.stage: $offenders")
   }
 
+  test("one registry: graft functions and strategies install only through Native") {
+    // graft.functions.Native lists every native function and planner
+    // strategy once; a second hand-written registration drifts from it
+    val mains = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => f.getFileName.toString -> java.nio.file.Files.readString(f)).toSeq
+    def filesWith(word: String): Seq[String] =
+      mains.collect { case (name, text) if text.contains(word) => name }.sorted
+    assert(filesWith("createOrReplaceTempFunction").forall(_ == "Native.scala"))
+    assert(filesWith("extraStrategies") == Seq("Native.scala"))
+    assert(filesWith("def register(") == Seq("Native.scala"))
+    for (inject <- Seq("injectFunction", "injectPlannerStrategy")) {
+      assert(filesWith(inject) == Seq("GraftExtensions.scala"), inject)
+      val ext = mains.collect { case ("GraftExtensions.scala", t) => t }.head
+      assert(ext.split(inject, -1).length == 2, s"$inject outside the one loop")
+    }
+  }
+
   test("the gate is as wide as the round claims") {
     // 256 oracle-checked queries as of round 16 — every queries entry
     // ships an oracle, so both floors track together; a shrink in

@@ -164,7 +164,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("kmeans E-step: a zero-norm or NaN centroid never captures a row") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val e = Seq((1L, Seq(1.0, 0.0), 1.0), (2L, Seq(0.0, 1.0), 1.0))
       .toDF("vec_id", "v", "norm2")
     // cids 1 and 2 fold first: cid 1 has norm 0 (its cosine is 0/0),

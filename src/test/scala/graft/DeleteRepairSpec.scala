@@ -11,10 +11,7 @@ import org.apache.hadoop.fs.Path
   * crash re-runs. */
 class DeleteRepairSpec extends SparkSpec {
 
-  graft.functions.DotProduct.register(spark)
-  graft.functions.KnownNonNullElements.register(spark)
-  graft.functions.L2Distance.register(spark)
-  graft.functions.BoundedTopK.register(spark)
+  graft.functions.Native.register(spark)
 
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(p).toString

@@ -13,7 +13,7 @@ class DotProductSpec extends SparkSpec {
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
   test("native dot equals the HOF fold bit-for-bit on random vectors") {
-    DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val rnd = new scala.util.Random(42)
     val data = Seq.fill(200)((
       Seq.fill(64)(rnd.nextDouble() * 2 - 1),
@@ -28,7 +28,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("length mismatch yields NULL, matching zip_with's padding") {
-    DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val rows = Seq((Seq(1.0, 2.0), Seq(3.0))).toDF("a", "b")
       .select(expr("graft_dot(a, b)").as("native"), expr(fold).as("hof"))
       .collect()
@@ -36,7 +36,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("NULL element on either side propagates NULL, matching the fold") {
-    DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val rows = spark.sql(
       """SELECT graft_dot(array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 2.0D)) AS l,
         |       graft_dot(array(1.0D, 2.0D), array(CAST(NULL AS DOUBLE), 2.0D)) AS r,
@@ -49,7 +49,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("native dot participates in whole-stage codegen") {
-    DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val df = Tables.embeddings(spark, sfDir)
       .selectExpr("graft_dot(transform(embedding, x -> CAST(x AS DOUBLE)), " +
         "transform(embedding, x -> CAST(x AS DOUBLE))) AS n2")

@@ -1,10 +1,77 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The spark.sql.extensions entry point must give a fresh session the
-  * graft-native functions without any runtime register() call. */
+  * graft-native functions without any runtime register() call, and
+  * both install paths must read the one [[graft.functions.Native]]
+  * table: same functions, same strategies, same errors. */
 class ExtensionsSpec extends SparkSpec {
+
+  private val graftFunctions = Set("graft_polyhash", "graft_jaccard", "graft_dot",
+    "graft_l2sq", "graft_dense", "graft_ngrams", "graft_overlap", "graft_topk",
+    "graft_gram", "graft_kmv")
+
+  /** A fresh session built with the extension, and a fresh plain
+    * session (no extensions, its own registry) given Native.register. */
+  private lazy val paths: Seq[(String, SparkSession)] = {
+    val shared = spark
+    val plain = shared.newSession()
+    assert(plain.sessionState.functionRegistry.listFunction()
+      .forall(!_.funcName.startsWith("graft_")), "plain session starts without graft functions")
+    graft.functions.Native.register(plain)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val ext = SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-ext-paths")
+        .withExtensions(new GraftExtensions())
+        .getOrCreate()
+      Seq("extension" -> ext, "Native.register" -> plain)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("both install paths hold the same ten functions and both strategies") {
+    val seen = paths.map { case (path, s) =>
+      val registry = s.sessionState.functionRegistry
+      val fns = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
+      assert(fns == graftFunctions, s"$path: $fns")
+      val strategies = s.sessionState.planner.strategies
+      assert(strategies.contains(graft.plans.AsOfJoinStrategy), path)
+      assert(strategies.contains(graft.plans.IntervalJoinStrategy), path)
+      val usages = graftFunctions.toSeq.sorted
+        .map(f => registry.lookupFunction(FunctionIdentifier(f)).map(_.getUsage))
+      // every function resolves and evaluates: the same answers on both paths
+      val scalars = s.sql(
+        """SELECT graft_polyhash('abc', 31), graft_jaccard(array('a','b'), array('b','c')),
+          |  graft_dot(array(1D, 2D), array(3D, 4D)), graft_l2sq(array(1D, 2D), array(3D, 4D)),
+          |  graft_dense(array(1D, 2D)), graft_ngrams(array('a','b','c'), 2),
+          |  graft_overlap(array('a','b'), array('b','c'))""".stripMargin).head().toString
+      val aggs = s.sql(
+        """SELECT graft_topk(sc, id, 2), graft_gram(v), graft_kmv(id, 2) FROM VALUES
+          |  (1.0D, 1L, array(1.0D, 2.0D)), (3.0D, 2L, array(0.5D, 1.0D)),
+          |  (2.0D, 3L, array(0.25D, 4.0D)) AS t(sc, id, v)""".stripMargin).head().toString
+      (usages, scalars, aggs)
+    }
+    assert(seen.distinct.size == 1, s"the paths differ: $seen")
+    assert(seen.head._1.forall(_.exists(_.nonEmpty)))
+  }
+
+  test("a wrong-arity call fails with the arity message on both paths") {
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).toSeq
+    for ((path, s) <- paths; (call, want) <- Seq(
+        "graft_dense()" -> "graft_dense expects 1 argument (arr), got 0",
+        "graft_dot(array(1D))" -> "graft_dot expects 2 arguments (a, b), got 1")) {
+      val e = intercept[Exception] { s.sql(s"SELECT $call").collect() }
+      assert(messages(e).exists(_.contains(want)), s"$path $call: ${messages(e)}")
+    }
+  }
 
   test("GraftExtensions injects graft_polyhash into a new session") {
     val shared = spark // force shared session init first

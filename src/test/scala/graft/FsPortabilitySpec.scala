@@ -130,8 +130,7 @@ class FsPortabilitySpec extends SparkSpec {
   }
 
   test("DeleteRepair touched-partition publishes run on a non-default scheme") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     import graft.streaming.GraphStream
     import graft.util.ManifestStore
     val staged = graft.similarity.DeleteRepair.stageDirectedTopk(spark, sfDir)

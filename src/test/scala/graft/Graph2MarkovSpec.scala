@@ -61,7 +61,7 @@ class Graph2MarkovSpec extends SparkSpec {
       s"radii not non-increasing: ${radii.mkString(",")}")
     // round 2 = brute-force farthest point from the seed
     val first = out.head.getAs[Long]("vec_id")
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val pool = Tables.embeddings(spark, sfDir)
       .where(col("vec_id") % 3 === 1)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))

@@ -18,8 +18,7 @@ class GraphStreamSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_graphspec_store").toString
     GraphStream.buildStore(spark, sfDir, srcDir, emb.schema, base)
     // directed lists ≡ one-shot collapse over the whole corpus
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecsOf(Tables.embeddings(spark, sfDir))
     val oneShot = KnnGraph.directedTopk(
       KnnGraph.scoredPairs(KnnGraph.srcSide(e), KnnGraph.dstSide(e)))
@@ -140,8 +139,7 @@ class GraphStreamSpec extends SparkSpec {
     val n = emb.count()
     val firstSliceMax = emb.selectExpr("vec_id").orderBy("vec_id")
       .limit((n / 3).toInt).agg(max("vec_id")).head().getLong(0)
-    graft.functions.BoundedTopK.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val e = Embeddings.vecsOf(Tables.embeddings(spark, sfDir))
     val lists = KnnGraph.directedTopk(
       KnnGraph.scoredPairs(KnnGraph.srcSide(e), KnnGraph.dstSide(e)))

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 class IndexRefreshSpec extends SparkSpec {
 
   test("a crash mid-rotation leaves the OLD version serving across all four tables; the re-run's marker is the swap") {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bg_spec").toString
     val orig = Embeddings.vecs(spark, sfDir)
     val probes = orig.where(col("vec_id") < 5)
@@ -55,8 +54,7 @@ class IndexRefreshSpec extends SparkSpec {
   }
 
   test("the alarm gates the rotation: an in-distribution window does NOT rotate") {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bg_ctrl").toString
     StoredIndex.publish(spark, root, Embeddings.vecs(spark, sfDir))
     // shift 0 = the DriftMonitorSpec control (KL ≈ sampling noise)
@@ -67,8 +65,7 @@ class IndexRefreshSpec extends SparkSpec {
   }
 
   test("post-refresh search equals a FRESH one-shot build on the drifted window") {
-    graft.functions.L2Distance.register(spark)
-    graft.functions.KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val refreshed = IndexRefresh.annIndexRefresh(spark, sfDir)
       .collect().map(_.toString).toSeq
     // fresh build: stage directly from the drifted corpus, search it

@@ -7,7 +7,7 @@ class JaccardSimSpec extends SparkSpec {
   private def tok = array_sort(array_distinct(split(col("text"), " ")))
 
   test("graft_jaccard equals the array_intersect formula on corpus pairs") {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), tok.as("toks"))
     val pairs = docs.select(col("lang"), col("doc_id").as("id_a"), col("toks").as("ta"))
@@ -23,7 +23,7 @@ class JaccardSimSpec extends SparkSpec {
   }
 
   test("graft_jaccard edge cases: identical, disjoint, empty") {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq("a", "b", "c"), Seq("a", "b", "c")),
@@ -37,7 +37,7 @@ class JaccardSimSpec extends SparkSpec {
   }
 
   test("graft_jaccard agrees between codegen and interpreted eval") {
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     import spark.implicits._
     val base = Seq((Seq("apple", "pear", "plum"), Seq("apple", "plum", "quince")))
       .toDF("a", "b")

@@ -18,7 +18,7 @@ class KmvOverlapSpec extends SparkSpec {
   }
 
   test("graft_kmv keeps the k smallest distinct hashes, partition-invariantly") {
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     val df = Tables.documents(spark, sfDir)
       .select(col("source"), (col("doc_id") % 37).as("h"))
     def sketch(parts: Int) = df.repartition(parts)
@@ -37,8 +37,7 @@ class KmvOverlapSpec extends SparkSpec {
   }
 
   test("kmv distinct estimate tracks the exact distinct shingle count per source") {
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     val est = KmvOverlap.kmvDistinct(spark, sfDir).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_grams"), r.getAs[Long]("sketch_size"), r.getAs[Double]("distinct_est"))).toMap
@@ -59,8 +58,7 @@ class KmvOverlapSpec extends SparkSpec {
 
   test("the estimate tracks the exact shingle jaccard on the seeded mirror overlap") {
     // exact distinct-5-gram jaccard per pair (quadratic — spec scale only)
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
+    graft.functions.Native.register(spark)
     val sh = Tables.documents(spark, sfDir)
       .select(col("source"), explode(expr("graft_ngrams(split(text, ' '), 5)")).as("g"))
       .select(col("source"), expr("graft_polyhash(g, 31)").as("h")).distinct().cache()

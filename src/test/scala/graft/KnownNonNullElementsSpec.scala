@@ -13,7 +13,7 @@ class KnownNonNullElementsSpec extends SparkSpec {
   import spark.implicits._
 
   test("narrows containsNull to false and leaves values bit-identical") {
-    KnownNonNullElements.register(spark)
+    graft.functions.Native.register(spark)
     val df = Tables.embeddings(spark, sfDir)
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
     assert(df.schema("v").dataType == ArrayType(DoubleType, containsNull = true),
@@ -26,7 +26,7 @@ class KnownNonNullElementsSpec extends SparkSpec {
   }
 
   test("the dot-product hot loop compiles WITHOUT the per-element null branch") {
-    DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val dense = Tables.embeddings(spark, sfDir)
       .selectExpr("graft_dense(transform(embedding, x -> CAST(x AS DOUBLE))) AS v")
       .selectExpr("graft_dot(v, v) AS n2")

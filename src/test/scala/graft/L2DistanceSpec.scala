@@ -14,7 +14,7 @@ class L2DistanceSpec extends SparkSpec {
     "aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
   test("native l2sq equals the HOF fold bit-for-bit on random vectors") {
-    L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     val rnd = new scala.util.Random(7)
     val data = Seq.fill(200)((
       Seq.fill(8)(rnd.nextDouble() * 2 - 1),
@@ -29,7 +29,7 @@ class L2DistanceSpec extends SparkSpec {
   }
 
   test("identical arrays give exactly +0.0; length mismatch gives NULL") {
-    L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     val rows = Seq((Seq(1.5, -2.25), Seq(1.5, -2.25), Seq(1.0)))
       .toDF("a", "b", "c")
       .select(expr("graft_l2sq(a, b)").as("zero"), expr("graft_l2sq(a, c)").as("bad"))
@@ -40,7 +40,7 @@ class L2DistanceSpec extends SparkSpec {
   }
 
   test("NULL element on either side propagates NULL, matching the fold") {
-    L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     // build arrays with a null element via SQL literals (containsNull)
     val rows = spark.sql(
       s"""SELECT graft_l2sq(array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 2.0D)) AS l,
@@ -54,7 +54,7 @@ class L2DistanceSpec extends SparkSpec {
   }
 
   test("pq ADC recall against exact L2 brute force is nontrivial") {
-    L2Distance.register(spark)
+    graft.functions.Native.register(spark)
     // exact L2 top-5 per probe over full 64-dim vectors
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

@@ -14,10 +14,7 @@ import org.apache.spark.sql.functions._
   * committed, and the delete log's file count stays bounded. */
 class LiveDeleteSpec extends SparkSpec {
 
-  graft.functions.L2Distance.register(spark)
-  graft.functions.DotProduct.register(spark)
-  graft.functions.KnownNonNullElements.register(spark)
-  graft.functions.BoundedTopK.register(spark)
+  graft.functions.Native.register(spark)
 
   test("live IVFADC: delete-then-append equals append-then-delete, and late arrivals are gated") {
     val emb = Tables.embeddings(spark, sfDir)

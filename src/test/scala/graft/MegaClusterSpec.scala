@@ -47,7 +47,7 @@ class MegaClusterSpec extends SparkSpec {
 
   test("connected components label a k-doc identical cluster without array state") {
     import spark.implicits._
-    graft.functions.JaccardSim.register(spark)
+    graft.functions.Native.register(spark)
     val docs = megaDocs
       .select(col("doc_id"), lit("en").as("lang"), lit(0L).as("size_bucket"),
         graft.dedup.Dedup.tokens.as("toks"))

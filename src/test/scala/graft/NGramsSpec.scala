@@ -69,7 +69,7 @@ class NGramsSpec extends SparkSpec {
   }
 
   test("SQL registration enforces the literal-n contract") {
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     import spark.implicits._
     val got = Seq(Seq("p", "q", "r")).toDF("t")
       .selectExpr("graft_ngrams(t, 2) AS g").head.getSeq[String](0)

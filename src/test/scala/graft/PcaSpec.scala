@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class PcaSpec extends SparkSpec {
 
   private def gram(partitions: Int): Array[Long] = {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     val vecs = Tables.embeddings(spark, sfDir)
       .repartition(partitions)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))

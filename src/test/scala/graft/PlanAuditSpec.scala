@@ -359,7 +359,7 @@ class PlanAuditSpec extends SparkSpec {
     // — the r20 shape shuffled one corpus×(v) row set per round. Any
     // Exchange hashpartitioning in the step plan is the regression.
     import org.apache.spark.sql.functions.col
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val vecs = graft.similarity.Embeddings.vecsOf(graft.Tables.embeddings(spark, sfDir))
     val e = vecs.select(col("vec_id"), col("v"), col("norm2")).localCheckpoint()
     val cents = e.orderBy("vec_id").limit(4)
@@ -433,8 +433,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("pca moment fold partial-aggregates map-side: the exchange carries buffers, not rows") {
-    graft.functions.GramMatrix.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     import org.apache.spark.sql.functions._
     val agg = Tables.embeddings(spark, sfDir)
       .withColumn("v", expr("graft_dense(transform(embedding, x -> CAST(x AS DOUBLE)))"))
@@ -447,9 +446,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("kmv sketches partial-aggregate map-side; no (source,hash) pre-distinct exchange") {
-    graft.functions.NGrams.register(spark)
-    graft.functions.PolyHash.register(spark)
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     // audit the corpus-touching stage (the estimator's final plan
     // starts from the localCheckpointed sketch table)
     val p = graft.dedup.KmvOverlap.sketches(Tables.documents(spark, sfDir))

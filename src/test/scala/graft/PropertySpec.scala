@@ -134,7 +134,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("kmv sketch: mergeability — sketch(A ∪ B) = k-smallest-distinct(sketch(A) ∪ sketch(B))") {
-    graft.functions.KmvSketch.register(spark)
+    graft.functions.Native.register(spark)
     val genVals = Gen.listOfN(400, Gen.choose(0L, 300L)) // dense → heavy duplication
     def sketchOf(vs: Seq[Long]): Seq[Long] =
       vs.toDF("h").agg(expr("graft_kmv(h, 16)")).head().getSeq[Long](0).toSeq
@@ -150,7 +150,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_gram matches a BigDecimal reference on random signed doubles (ties included)") {
-    graft.functions.GramMatrix.register(spark)
+    graft.functions.Native.register(spark)
     import java.math.{BigDecimal => JBD, RoundingMode}
     // HALF_UP on the exact binary value == std::round(x*1e9) for
     // |x·1e9| < 2^53 — the contract the long accumulator must meet

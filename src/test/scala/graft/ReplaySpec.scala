@@ -97,6 +97,8 @@ class ReplaySpec extends SparkSpec {
     // (trigger scheduling jitter allowed; a drain would show ~0 gaps)
     assert(gaps.count(_ >= 200) >= 2, s"gaps not rate-paced: $gaps")
     assert(gaps.distinct.size >= 2, s"need >=2 distinct gaps: $gaps")
+    // the paced run's memory sink leaves no view behind
+    assert(spark.catalog.listTables().collect().forall(!_.name.startsWith("graft_replay_live_")))
   }
 
   test("LIVE mid-stream stop: accumulated table equals the batch answer over the replayed prefix") {
@@ -108,6 +110,7 @@ class ReplaySpec extends SparkSpec {
     assert(run.rows.nonEmpty)
     assert(run.rows.map(_.toString).toSeq == expected.map(_.toString).toSeq,
       s"prefix mismatch at ${run.slicesCommitted} slices")
+    assert(spark.catalog.listTables().collect().forall(!_.name.startsWith("graft_replay_live_")))
   }
 
   test("accumulated replay output equals the batch bucket query over the window") {

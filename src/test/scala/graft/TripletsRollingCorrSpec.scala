@@ -29,7 +29,7 @@ class TripletsRollingCorrSpec extends SparkSpec {
   }
 
   test("triplets' positive is the brute-force hardest same-label neighbor for one anchor") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Native.register(spark)
     val out = Triplets.triplets(spark, sfDir).orderBy("anchor_id").limit(1).head()
     val anchorId = out.getAs[Long]("anchor_id")
     val e = Tables.embeddings(spark, sfDir)

@@ -12,8 +12,7 @@ class WinnowParagraphHoldoutSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   private def winnowOf(texts: Seq[String]): Map[Long, Seq[(Long, Long)]] = {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.NGrams.register(spark)
+    graft.functions.Native.register(spark)
     val df = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
@@ -167,8 +166,7 @@ class WinnowParagraphHoldoutSpec extends SparkSpec {
   }
 
   test("sample_holdout_k is partition-layout invariant") {
-    graft.functions.PolyHash.register(spark)
-    graft.functions.BoundedTopK.register(spark)
+    graft.functions.Native.register(spark)
     val a = graft.text.Holdout.holdoutK(spark, sfDir).collect().toSeq
     // rerun against a deliberately re-partitioned view of the corpus:
     // hash selection must not depend on input layout
